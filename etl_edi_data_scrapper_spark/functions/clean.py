@@ -2,11 +2,17 @@
 
 Reference semantics: `src/Service/Mapper/Mapper.php:19-50` of the reference
 repo — `asinValidate` (:19-27), `cleanString` (:29-32), `cleanUpc` (:34-37),
-`cleanInteger` (:39-42), `cleanFloat` (:44-50). Re-expressed as pure
-`pyspark.sql.Column` expressions (JVM-side, whole-stage-codegen'd — NO Python
+`cleanInteger` (:39-42), `cleanFloat` (:44-50).
+
+Each cleaner maps SQL expression text to SQL expression text
+(``clean_upc("`UPC`")`` → ``substring(regexp_replace(CAST(`UPC` AS STRING),
+…), 1, 13)``), so the mapper parses a whole job's projection once. Built
+through the Column DSL the same tree costs one py4j round trip per node —
+about 50 per cleaned column; the parsed text yields the identical Catalyst
+tree. They stay pure JVM expressions (whole-stage-codegen'd — NO Python
 UDFs), so they vectorize and survive 100 TB scans.
 
-ANSI-proof: malformed casts use ``try_cast`` so semantics match PHP
+ANSI-proof: malformed casts use ``TRY_CAST`` so semantics match PHP
 (intval/floatval never throw) regardless of ``spark.sql.ansi.enabled``.
 
 PHP quirks reproduced deliberately:
@@ -19,54 +25,51 @@ PHP quirks reproduced deliberately:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from etl_edi_data_scrapper_spark.functions.hashing import sql_str
 
 # PHP /[^a-zа-я\d.]/ui — explicit both-case classes so the Java regex needs no
 # flags and an ANSI-SQL oracle can use the identical class.
-_CLEAN_KEEP_RE = r"[^a-zA-Zа-яА-Я0-9.]"
+_CLEAN_KEEP_RE = sql_str(r"[^a-zA-Zа-яА-Я0-9.]")
 # Leading-float extraction ≈ PHP floatval(): digits, optional dot, digits.
-_LEADING_FLOAT_RE = r"^([0-9]*\.?[0-9]*)"
+_LEADING_FLOAT_RE = sql_str(r"^([0-9]*\.?[0-9]*)")
 
 
-def _s(c: Column | str) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return c.cast("string")
+def _s(c: str) -> str:
+    return f"CAST({c} AS STRING)"
 
 
-def clean_string(c: Column | str) -> Column:
+def clean_string(c: str) -> str:
     """Strip every char except Latin/Cyrillic letters, digits and ``.``."""
-    return F.regexp_replace(_s(c), _CLEAN_KEEP_RE, "")
+    return f"regexp_replace({_s(c)}, {_CLEAN_KEEP_RE}, '')"
 
 
-def clean_upc(c: Column | str) -> Column:
+def clean_upc(c: str) -> str:
     """``cleanString`` then truncate to 13 chars (string-typed key)."""
-    return F.substring(clean_string(c), 1, 13)
+    return f"substring({clean_string(c)}, 1, 13)"
 
 
-def clean_integer(c: Column | str) -> Column:
+def clean_integer(c: str) -> str:
     """Strip non-digits → long; empty/overflow → 0 (PHP intval('') == 0)."""
-    digits = F.regexp_replace(_s(c), "[^0-9]", "")
-    return F.coalesce(digits.try_cast("long"), F.lit(0).cast("long"))
+    digits = f"regexp_replace({_s(c)}, '[^0-9]', '')"
+    return f"coalesce(TRY_CAST({digits} AS BIGINT), CAST(0 AS BIGINT))"
 
 
-def clean_float(c: Column | str) -> Column:
+def clean_float(c: str) -> str:
     """``,``→``.``, strip to ``[0-9.]``, parse leading float; empty → 0.0.
 
-    ``cast("double")`` alone would turn multi-dot strings (``"1.2.3"``) into
-    NULL where PHP floatval yields 1.2 — hence the leading-float extract.
+    ``CAST(… AS DOUBLE)`` alone would turn multi-dot strings (``"1.2.3"``)
+    into NULL where PHP floatval yields 1.2 — hence the leading-float extract.
     """
-    normalized = F.regexp_replace(
-        clean_string(F.translate(_s(c), ",", ".")), r"[^0-9.]", ""
-    )
-    leading = F.regexp_extract(normalized, _LEADING_FLOAT_RE, 1)
-    return F.coalesce(leading.try_cast("double"), F.lit(0.0))
+    dotted = f"translate({_s(c)}, ',', '.')"
+    normalized = f"regexp_replace({clean_string(dotted)}, '[^0-9.]', '')"
+    leading = f"regexp_extract({normalized}, {_LEADING_FLOAT_RE}, 1)"
+    return f"coalesce(TRY_CAST({leading} AS DOUBLE), 0.0D)"
 
 
-def asin_validate(c: Column | str) -> Column:
+def asin_validate(c: str) -> str:
     """Upper+trim; must match ``^[A-Z0-9]{10}$`` else NULL."""
-    t = F.upper(F.trim(_s(c)))
-    return F.when(t.rlike("^[A-Z0-9]{10}$"), t).otherwise(F.lit(None).cast("string"))
+    t = f"upper(trim({_s(c)}))"
+    return f"CASE WHEN {t} RLIKE '^[A-Z0-9]{{10}}$' THEN {t} ELSE CAST(NULL AS STRING) END"
 
 
 # Name-dispatched cleaning, mirroring the reference's `switch ($targetField)`
@@ -79,10 +82,7 @@ NAME_DISPATCH = {
 }
 
 
-def clean_for_target(target: str, c: Column | str) -> Column:
+def clean_for_target(target: str, c: str) -> str:
     """Apply the reference's per-target-name cleaning; default passthrough."""
     fn = NAME_DISPATCH.get(target)
-    if fn is None:
-        c = F.col(c) if isinstance(c, str) else c
-        return c
-    return fn(c)
+    return c if fn is None else fn(c)

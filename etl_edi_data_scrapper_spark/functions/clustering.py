@@ -22,6 +22,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+
 
 # below this many estimated bytes a single task finishes the argmin pass
 # faster than the repartition shuffle + 32-task scheduling it would buy
@@ -136,10 +138,6 @@ def _sqdist(vec: Column, centroid: list[float]) -> Column:
     )
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _dlit(x: float) -> str:
     """SQL double-literal text that parses back to the same IEEE double:
     repr() is the shortest round-trip decimal and Java's parseDouble is
@@ -221,7 +219,7 @@ def assign_clusters(
         return df.withColumn("cluster", _assign(F.col(vec_col)))
     if strategy != "expr":
         raise ValueError(f"unknown assign_clusters strategy {strategy!r}")
-    vec_sql = _quote(vec_col)
+    vec_sql = sql_ident(vec_col)
     scored = ",".join(
         f"named_struct('d', {_sqdist_sql(vec_sql, c)}, 'c', {i})"
         for i, c in enumerate(centroids)
@@ -339,7 +337,7 @@ def assign_clusters_ivf(
 
     # one parsed expression instead of per-element py4j DSL calls — same
     # tree, same values (see _sqdist_sql); construction cost only
-    vec_sql = _quote(vec_col)
+    vec_sql = sql_ident(vec_col)
     coarse_scored = ",".join(
         f"named_struct('d', {_sqdist_sql(vec_sql, c)}, 'c', {i})"
         for i, c in enumerate(coarse)
@@ -633,7 +631,7 @@ def prototype_prune(
 
     # one parsed expression instead of per-element py4j DSL calls — same
     # tree, same values (see _sqdist_sql); construction cost only
-    vec_sql, cl_sql = _quote(vec_col), _quote(cluster_col)
+    vec_sql, cl_sql = sql_ident(vec_col), sql_ident(cluster_col)
     dist_sql = "CAST(NULL AS DOUBLE)"
     for i, c in enumerate(centroids):
         dist_sql = (

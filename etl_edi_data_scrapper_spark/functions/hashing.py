@@ -2,7 +2,9 @@
 
 Everything here is expressible with identical semantics in any SQL engine
 (md5 + substring + instr arithmetic) so every operator built on top stays
-oracle-checkable — no dialect-specific conv/unhex/hash functions.
+oracle-checkable — no dialect-specific conv/unhex/hash functions. The
+SQL-text quoting helpers (``sql_str``, ``sql_ident``) live here too: every
+builder that emits parsed SQL instead of Column-DSL calls shares them.
 """
 
 from __future__ import annotations
@@ -27,16 +29,24 @@ def hex_word(h: Column, start: int) -> Column:
     return v
 
 
+def sql_str(s: str) -> str:
+    """A string literal as SQL text. Single quotes are doubled per the SQL
+    string-literal rule; backslashes are escaped because Spark's parser
+    treats them as escape introducers even inside single quotes."""
+    return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier (backticks
+    doubled): a header or config name stays one name inside parsed SQL
+    text, whatever dots, quotes or operators it contains."""
+    return "`" + str(name).replace("`", "``") + "`"
+
+
 def str_array_sql(values) -> str:
     """A string-array literal as SQL text (one parsed expression instead
-    of one py4j round trip per element — see hex_val_sql). Single quotes
-    are doubled per the SQL string-literal rule; backslashes are escaped
-    because Spark's parser treats them as escape introducers even inside
-    single quotes."""
-    def q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-    return "array(" + ",".join(q(str(v)) for v in values) + ")"
+    of one py4j round trip per element — see hex_val_sql)."""
+    return "array(" + ",".join(sql_str(v) for v in values) + ")"
 
 
 def hex_val_sql(c_sql: str) -> str:

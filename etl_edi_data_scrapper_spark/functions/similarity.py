@@ -82,8 +82,9 @@ def hyperplane_signature(
 
     if isinstance(vec, str):
         from etl_edi_data_scrapper_spark.functions.clustering import _dlit
+        from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
 
-        vec_sql = "`" + vec.replace("`", "``") + "`"
+        vec_sql = sql_ident(vec)
         bits_sql = []
         for p in range(plane_offset, plane_offset + n_planes):
             arr = "array(" + ",".join(_dlit(x) for x in plane_weights(p)) + ")"

