@@ -19,6 +19,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from etl_edi_data_scrapper_spark.functions.clustering import (
+    _np_fold_cosine,
+    _np_fold_sqdist,
+    _np_vectors,
+)
 from etl_edi_data_scrapper_spark.functions.dedup import dot_expr, norm_expr
 
 
@@ -202,19 +207,7 @@ def ivf_index(
                 F.col(c_vec).alias("centroid_vec"),
             )
         )
-    from etl_edi_data_scrapper_spark.functions.clustering import expr_exec_ok
-
-    return centroids, ivf_assign(
-        corpus, centroids, c_id=c_id, c_vec=c_vec,
-        # r15 size-aware gate (see clustering.expr_exec_ok): the known
-        # cell count still skips ivf_assign's LIMIT-bounded probe
-        strategy=(
-            "expr"
-            if n_centroids <= 64
-            and expr_exec_ok(corpus, work_multiplier=n_centroids / 8.0)
-            else "pandas"
-        ),
-    )
+    return centroids, ivf_assign(corpus, centroids, c_id=c_id, c_vec=c_vec)
 
 
 def ivf_assign(
@@ -222,100 +215,58 @@ def ivf_assign(
     centroids: DataFrame,
     c_id: str = "vec_id",
     c_vec: str = "embedding",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (argmax cosine, tie →
     lowest centroid_id). Shared by `ivf_index` (build time) and
     `append_to_ivfpq_index` (incremental adds against FROZEN centroids).
 
-    ``strategy='expr'``: one broadcast cross join + a per-vector windowed
-    argmax — map-side joined, exactly SQL-mirrorable (the gate-oracle
-    path, 16 cells). ``'pandas'``: the production-geometry path — the
-    cross join materializes corpus × n_centroids ROWS through a window
-    shuffle (25.6M rows at 100k × 256; corpus × 65536 at a FAISS-sized
-    cell count is a non-starter), where the Arrow path computes the same
-    argmax-cosine in numpy per batch with ZERO extra rows and NO
-    shuffle. Same tie rule: centroids are ordered by centroid_id and
-    argmax returns the first maximum. ``'auto'``: expr at or under 64
-    cells, pandas above (the cell count probed with a LIMIT-bounded
-    count so resolving the strategy never scans a big frame; callers
-    that know their cell count — `ivf_index`, `append_to_ivfpq_index` —
-    pass the strategy explicitly and skip the probe)."""
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
+    One Arrow-batched numpy kernel against the collected centroids: ZERO
+    extra rows and NO shuffle (a cross join would materialize corpus ×
+    n_centroids rows through a window — 25.6M rows at 100k × 256).
+    Cosines use `_np_fold_cosine`'s sequential-fold dots and norms, the
+    doubles of `dot_expr`/`norm_expr` and of the DuckDB oracles; centroids
+    are ordered by centroid_id and argmax returns the first maximum.
 
-        n_cells = centroids.limit(65).count()
-        strategy = (
-            "expr"
-            if n_cells <= 64
-            and expr_exec_ok(corpus, work_multiplier=n_cells / 8.0)
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
+    A zero-norm side has a null cosine in SQL (0/0), which a
+    ``sim desc nulls last, centroid_id`` window never picks: a zero-norm
+    centroid (e.g. a failed-embed row picked by train='sample')
+    never captures the corpus, and a zero-norm vector lands on the lowest
+    centroid_id. Centroid ids may be integral or string — train='sample'
+    reuses corpus ids."""
+    import numpy as np
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        # centroid ids inherit the corpus id type under literal training
-        # — carry strings as object arrays and emit the matching schema
-        # (the ADC kernels' r13 discipline)
-        cen_kind = _adc_id_kind(centroids, "centroid_id")
-        rows = sorted(
-            centroids.select("centroid_id", "centroid_vec").collect(),
-            key=lambda r: r.centroid_id,
-        )
-        ids_np = np.asarray(
-            [r.centroid_id for r in rows],
-            dtype=np.int64 if cen_kind != "string" else object,
-        )
-        cen_np = np.asarray(
-            [[float(x) for x in r.centroid_vec] for r in rows],
-            dtype=np.float64,
-        )
-        ncen = np.linalg.norm(cen_np, axis=1, keepdims=True)
-        # Zero-norm centroids (e.g. a failed-embed row sampled as a
-        # literal-train centroid) must mirror the expr path, where
-        # dot/(nv*ncen) is null and desc-nulls-last never picks them:
-        # mask their sim column to -inf instead of letting a NaN row in
-        # cen_unit poison argmax (which returns the first NaN index and
-        # silently routes EVERY vector to the degenerate centroid).
-        zero_cen = (ncen == 0.0).ravel()
-        ncen[zero_cen] = 1.0
-        cen_unit = cen_np / ncen
-
-        @pandas_udf(_ADC_ID_SQL[cen_kind])
-        def _route(vs: pd.Series) -> pd.Series:
-            x = np.asarray(vs.tolist(), dtype=np.float64)
-            nx = np.linalg.norm(x, axis=1, keepdims=True)
-            zero_vec = (nx == 0.0).ravel()
-            nx[nx == 0.0] = 1.0
-            sims = (x / nx) @ cen_unit.T
-            sims[:, zero_cen] = -np.inf
-            out = ids_np[sims.argmax(axis=1)]
-            # expr parity: a zero-norm vector has null sim everywhere →
-            # the window (sim desc nulls-last, centroid_id asc) picks the
-            # LOWEST centroid_id, including a degenerate one.
-            out[zero_vec] = ids_np[0]
-            return pd.Series(out)
-
-        return corpus.select(
-            F.col(c_id), F.col(c_vec), _route(F.col(c_vec)).alias("centroid_id")
-        )
-    if strategy != "expr":
-        raise ValueError(f"unknown ivf_assign strategy {strategy!r}")
-    cb = F.broadcast(centroids)
-    scored = corpus.withColumn("__nv", norm_expr(F.col(c_vec))).crossJoin(
-        cb.withColumn("__ncen", norm_expr(F.col("centroid_vec")))
+    cen_kind = _adc_id_kind(centroids, "centroid_id")
+    rows = sorted(
+        centroids.select("centroid_id", "centroid_vec").collect(),
+        key=lambda r: r.centroid_id,
     )
-    sim = dot_expr(F.col(c_vec), F.col("centroid_vec")) / (F.col("__nv") * F.col("__ncen"))
-    w = W.partitionBy(c_id).orderBy(F.col("__csim").desc(), F.col("centroid_id"))
-    return (
-        scored.withColumn("__csim", sim)
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select(corpus[c_id], corpus[c_vec], "centroid_id")
+    ids_np = np.asarray(
+        [r.centroid_id for r in rows],
+        dtype=np.int64 if cen_kind != "string" else object,
+    )
+    cen_np = np.asarray(
+        [[float(x) for x in r.centroid_vec] for r in rows],
+        dtype=np.float64,
+    )
+
+    @pandas_udf(_ADC_ID_SQL[cen_kind])
+    def _route(vs: pd.Series) -> pd.Series:
+        x = _np_vectors(vs, cen_np.shape[1])
+        best = np.empty(x.shape[0], dtype=np.int64)
+        # row-chunked so the (rows x n_centroids) intermediates stay
+        # bounded whatever the Arrow batch size
+        step = max(1, 12_500_000 // max(1, len(cen_np)))
+        for lo in range(0, x.shape[0], step):
+            sims = _np_fold_cosine(x[lo : lo + step], cen_np)
+            # NaN = the SQL null cosine of a zero-norm side: sorts last
+            sims[np.isnan(sims)] = -np.inf
+            best[lo : lo + step] = sims.argmax(axis=1)
+        return pd.Series(ids_np[best])
+
+    return corpus.select(
+        F.col(c_id), F.col(c_vec), _route(F.col(c_vec)).alias("centroid_id")
     )
 
 
@@ -550,8 +501,8 @@ def load_ivfpq_index(
 # quantized, so error enters once, not twice).
 #
 # Scale shape: codebooks are m_sub × n_codes rows — driver-resident by
-# design (the kmeans-centroid bounded-state pattern); ENCODE is a pure
-# per-row expression over a literal codebook (zero shuffle — the corpus
+# design (the kmeans-centroid bounded-state pattern); ENCODE is a per-row
+# Arrow kernel against the collected codebook (zero shuffle — the corpus
 # never moves); ADC top-k replaces cosine_topk's float dot products with
 # per-query table lookups over the 8-byte code arrays, and composes with
 # IVF routing (`ivfpq_topk`) so each query batch touches only
@@ -573,7 +524,7 @@ def sample_codebooks_local(
     collecting the DataFrame form (float→double widening is exact on both
     routes; parity pinned in tests/test_pq.py), but a single cheap job
     instead of an orderBy+window+explode plan. Use when the codebook is
-    consumed as a literal anyway (encode/ADC), e.g. `suite.q_ann_recall`."""
+    consumed driver-side anyway (encode/ADC), e.g. `suite.q_ann_recall`."""
     if dim % m_sub != 0:
         raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
     d = dim // m_sub
@@ -707,7 +658,7 @@ def _collect_codebooks(
 def _np_subspace_kmeans(xs, n_codes: int, n_iters: int):
     """Deterministic per-subspace Lloyd's for OPQ training: init = first
     ``n_codes`` rows of the (md5-ordered) sample, BLAS-expansion
-    distances (training picks centroids; cross-strategy ulp parity is
+    distances (training picks centroids; ulp parity with the oracles is
     an ENCODE concern, handled by pq_encode). Empty cells keep their
     previous centroid."""
     import numpy as np
@@ -1075,104 +1026,45 @@ def _sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-# auto-switch point for pq_encode/ivf_assign: at or under this many
-# model entries the pure-expression paths stay (zero-Python, exactly
-# SQL-mirrorable — the gate's oracle geometry is 8×16=128 / 16 cells);
-# above it the expression paths choke BOTH ways (r12 study: plan build
-# 2.0 → 14.2 → 42.5 s at 16/256/1024 codes — the nested literal's
-# conversion cost grows linearly — and execution is interpreted because
-# whole-stage codegen does not cover higher-order functions), so the
-# Arrow pandas path takes over with bit-compatible argmin semantics.
-_EXPR_MODEL_MAX_ENTRIES = 512
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame | list,
     c_vec: str = "embedding",
     out_col: str = "codes",
-    strategy: str = "auto",
 ) -> DataFrame:
     """corpus + ``out_col`` array<int>: per subspace, the id of the nearest
-    codebook entry (squared L2; ties → lowest code_id). ZERO shuffle on
-    every strategy — at 100 TB the corpus never moves, and the 8-byte
-    code column is what downstream ADC scans instead of the float
-    vectors.
+    codebook entry (squared L2; ties → lowest code_id). ZERO shuffle — at
+    100 TB the corpus never moves, and the 8-byte code column is what
+    downstream ADC scans instead of the float vectors.
 
-    ``strategy``: 'literal' inlines the collected codebook as ONE
-    nested-array literal + indexed transform (plan tree does not grow
-    with the code budget; pure expression, exactly replicable in SQL —
-    the gate-oracle path). 'pandas' is the production-geometry path
-    (FAISS-standard n_codes=256): an Arrow-batched pandas_udf computing
-    the same argmin in numpy — same tie rule (argmin returns the first
-    minimum = lowest code_id), float64 like the expression's doubles.
-    'auto' picks literal at or under 512 total entries, pandas above
-    (r12 study: at 8×256 the literal costs ~14 s of PLAN BUILD per
-    query plus interpreted per-row evaluation ~100× slower than Arrow
-    batches; at the gate's 8×16 the two paths agree bit-for-bit,
-    parity-tested)."""
-    cbs = _collect_codebooks(codebooks)
-    d_sub = len(cbs[0][0])
-    n_entries = len(cbs) * len(cbs[0])
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
+    One Arrow-batched numpy kernel against the collected codebook (the
+    plan does not grow with the code budget — an inlined nested-array
+    literal cost ~14 s of plan build per query at 8×256 and evaluated
+    interpreted). Distances are `_np_fold_sqdist`'s sequential left fold,
+    the doubles of `_sq_dist` and of the DuckDB oracles; argmin returns
+    the first minimum = the lowest code_id."""
+    import numpy as np
 
-        # r15: size-aware (interpreted per-row fold work is n_entries ×
-        # d_sub ops vs the 512-ops/row floor calibration — see
-        # clustering.expr_exec_ok and tools/arrow_expr_study.py)
-        strategy = (
-            "literal"
-            if n_entries <= _EXPR_MODEL_MAX_ENTRIES
-            and expr_exec_ok(
-                corpus, work_multiplier=(n_entries * d_sub) / 512.0
-            )
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            _np_fold_sqdist,
-        )
-        from pyspark.sql.functions import pandas_udf
+    cb_np = np.asarray(_collect_codebooks(codebooks), dtype=np.float64)
+    m_sub, n_codes, d_sub = cb_np.shape
 
-        cb_np = np.asarray(cbs, dtype=np.float64)  # (m, n, d_sub)
-        m_sub = cb_np.shape[0]
+    @pandas_udf("array<int>")
+    def _enc(vs: pd.Series) -> pd.Series:
+        x = _np_vectors(vs, m_sub * d_sub)
+        out = np.empty((x.shape[0], m_sub), dtype=np.int32)
+        # row-chunked so the (rows x n_codes) fold intermediate stays
+        # bounded whatever the Arrow batch size
+        step = max(1, 25_000_000 // n_codes)
+        for s in range(m_sub):
+            xs = x[:, s * d_sub : (s + 1) * d_sub]
+            for lo in range(0, xs.shape[0], step):
+                d2 = _np_fold_sqdist(xs[lo : lo + step], cb_np[s])
+                out[lo : lo + step, s] = d2.argmin(axis=1)
+        return pd.Series(list(out))
 
-        @pandas_udf("array<int>")
-        def _enc(vs: pd.Series) -> pd.Series:
-            x = np.asarray(vs.tolist(), dtype=np.float64)
-            out = np.empty((x.shape[0], m_sub), dtype=np.int32)
-            # row-chunked so the (rows x n_codes) fold intermediate stays
-            # bounded whatever the Arrow batch size
-            step = max(1, 200_000_000 // (cb_np.shape[1] * 8 or 1))
-            for s in range(m_sub):
-                xs = x[:, s * d_sub : (s + 1) * d_sub]
-                # _np_fold_sqdist accumulates (a−b)·(a−b) per dimension in
-                # index order — the literal path's exact fold, so argmin
-                # agrees to the last ulp even on near-tie codes (the ADC
-                # paths already use the same discipline)
-                for lo in range(0, xs.shape[0], step):
-                    d2 = _np_fold_sqdist(xs[lo : lo + step], cb_np[s])
-                    out[lo : lo + step, s] = d2.argmin(axis=1)
-            return pd.Series(list(out))
-
-        return corpus.withColumn(out_col, _enc(F.col(c_vec)))
-    if strategy != "literal":
-        raise ValueError(f"unknown pq_encode strategy {strategy!r}")
-
-    # one nested-array literal + indexed transform (s = subspace index)
-    # instead of m_sub × n_codes per-entry expression nodes: the plan tree
-    # stays tiny, so Catalyst analysis doesn't grow with the code budget
-    # (measured 2-3 s of pure plan-build at m=8/n=16 with unrolled nodes)
-    def per_sub(cb_s: Column, s: Column) -> Column:
-        sub = F.slice(F.col(c_vec), s * d_sub + 1, F.lit(d_sub))
-        dists = F.transform(cb_s, lambda cvec: _sq_dist(sub, cvec))
-        return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-    return corpus.withColumn(out_col, F.transform(F.expr(_darr_sql(cbs)), per_sub))
+    return corpus.withColumn(out_col, _enc(F.col(c_vec)))
 
 
 def pq_decode(
@@ -1197,47 +1089,11 @@ def pq_decode(
     )
 
 
-def _adc_tables(
-    queries: DataFrame,
-    cbs: list[list[list[float]]],
-    q_vec: str,
-) -> DataFrame:
-    """queries + ``__tab`` array<array<double>>: __tab[s][c] = squared L2
-    between the query's subvector s and codebook entry c — the ADC lookup
-    table, built map-side per query from the literal codebook."""
-    d_sub = len(cbs[0][0])
-
-    def tab_for(cb_s: Column, s: Column) -> Column:
-        # s is the OUTER transform's index = the subspace id (the inner
-        # per-code lambda stays single-parameter on purpose: a second
-        # parameter there would be the code index, not the subspace)
-        sub = F.slice(F.col(q_vec), s * d_sub + 1, F.lit(d_sub))
-        return F.transform(cb_s, lambda cvec: _sq_dist(sub, cvec))
-
-    return queries.withColumn("__tab", F.transform(F.expr(_darr_sql(cbs)), tab_for))
-
-
-def _adc_expr(m_sub: int, codes_col: str = "codes") -> Column:
-    """Σ_s __tab[s][codes[s]] — sequential in subspace order (the oracle
-    mirrors with list_sum over an ORDER BY sub list, so double addition
-    order is identical on both engines)."""
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at("__tab", s + 1),
-            F.element_at(F.col(codes_col), s + 1) + 1,
-        ),
-    )
-
-
 def _np_seq_sqdist_tables(q_np, cbs_np):
-    """ADC tables in numpy with the EXACT float discipline of
-    `_adc_tables`: per (subspace, code), a sequential left-fold of squared
-    differences over the sub-dimensions — bit-identical doubles to the
-    expression path (same IEEE ops in the same order), so the Arrow and
-    expression strategies agree to the last ulp, not merely closely."""
+    """ADC tables (Q, m, n): per (subspace, code), a sequential left fold
+    of squared differences over the sub-dimensions — the `_sq_dist`
+    discipline, so the doubles equal the DuckDB oracles' list_sum tables
+    to the last ulp (same IEEE ops in the same order)."""
     import numpy as np
 
     m, n, d = cbs_np.shape
@@ -1251,24 +1107,13 @@ def _np_seq_sqdist_tables(q_np, cbs_np):
 
 
 def _np_route(q_np, cen_np, nprobe):
-    """Query → nprobe nearest coarse cells by cosine, mirroring the
-    expression route bit-for-bit: dots and norms are sequential left
-    folds in index order (`dot_expr`/`norm_expr` discipline), ties break
-    (sim desc, centroid index asc). Returns (Q, nprobe) int indexes into
-    the centroid-id-sorted centroid array."""
+    """Query → nprobe nearest coarse cells by cosine (`_np_fold_cosine`),
+    ties break (sim desc, centroid index asc), null (NaN) cosines last.
+    Returns (Q, nprobe) int indexes into the centroid-id-sorted centroid
+    array."""
     import numpy as np
 
-    dim = q_np.shape[1]
-    qn = np.zeros(q_np.shape[0])
-    cn = np.zeros(cen_np.shape[0])
-    for j in range(dim):
-        qn += q_np[:, j] * q_np[:, j]
-        cn += cen_np[:, j] * cen_np[:, j]
-    qn, cn = np.sqrt(qn), np.sqrt(cn)
-    dots = np.zeros((q_np.shape[0], cen_np.shape[0]))
-    for j in range(dim):
-        dots += q_np[:, j : j + 1] * cen_np[None, :, j]
-    sims = dots / (qn[:, None] * cn[None, :])
+    sims = _np_fold_cosine(q_np, cen_np)
     idx = np.arange(cen_np.shape[0])
     out = np.empty((q_np.shape[0], min(nprobe, len(idx))), dtype=np.int64)
     for qi in range(q_np.shape[0]):
@@ -1281,17 +1126,17 @@ _ADC_ID_SQL = {"long": "long", "int": "int", "string": "string"}
 
 
 def _adc_id_kind(df: DataFrame, col: str) -> str:
-    """'long' | 'int' | 'string' for an id column the Arrow ADC kernels
-    can carry; raises a crisp error otherwise — the silent auto-switch
-    above 512 codebook entries must never turn a working expr-path
-    pipeline into a mis-cast (`.simpleString()` names like 'bigint')."""
+    """'long' | 'int' | 'string' for an id column the Arrow kernels
+    (`ivf_assign`, `pq_adc_topk`, `ivfpq_topk`) can carry; any other type
+    raises at plan-build time instead of mis-casting inside a worker
+    (`.simpleString()` names like 'bigint')."""
     t = df.schema[col].dataType.simpleString()
     kind = {"bigint": "long", "int": "int", "smallint": "int",
             "tinyint": "int", "string": "string"}.get(t)
     if kind is None:
         raise ValueError(
-            f"ADC pandas strategy supports integral or string id columns; "
-            f"{col!r} is {t}. Cast it (or pass strategy='expr')."
+            f"ANN kernels support integral or string id columns; {col!r} "
+            f"is {t}: cast it to a long or string."
         )
     return kind
 
@@ -1302,7 +1147,7 @@ def _adc_partition_topk(q_keys, k, c_id, codes_col, tab=None,
     """mapInPandas kernel factory: per-PARTITION ADC top-k per query —
     the map-side combine the window-over-everything plan lacks. Each
     batch's codes score via table lookups summed sequentially in
-    subspace order (the `_adc_expr` fold); per query only the k best
+    subspace order (the oracles' list_sum ORDER BY sub_id fold); per query only the k best
     (adc asc, id asc) survive across batches, so the shuffle carries
     ≤ partitions × Q × k rows instead of the full scored cross product.
 
@@ -1311,7 +1156,7 @@ def _adc_partition_topk(q_keys, k, c_id, codes_col, tab=None,
     tables differ per cell). None = full-scan mode with tab (Q, m, n).
     ``id_kind`` ('long'|'int'|'string', from `_adc_id_kind`) is the
     CORPUS id dtype; string ids ride numpy '<U' arrays so the lexsort
-    tie-break (adc asc, id asc) matches the expr window's ordering."""
+    tie-break (adc asc, id asc) matches the final window's ordering."""
     import numpy as np
     import pandas as _pd
 
@@ -1391,73 +1236,44 @@ def pq_adc_topk(
     q_vec: str = "q_vec",
     c_id: str = "vec_id",
     codes_col: str = "codes",
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Approximate top-k by ADC over the full encoded corpus: queries
-    (tiny, broadcast with their lookup tables) × code scan — the corpus
+    """Approximate top-k by ADC over the full encoded corpus: the corpus
     side reads 8-byte code arrays and does m_sub table lookups per row
     instead of a dim-wide float dot product. Ascending distance; ties →
     lowest corpus id.
 
-    ``strategy='expr'``: crossJoin + windowed top-k, exactly
-    SQL-mirrorable (the gate-oracle path) — but the window shuffles the
-    FULL Q × N scored cross product and the lookup fold evaluates
-    interpreted (62 s for 100 queries × 100k codes in
-    ANN_QUALITY_r12.json). ``'pandas'``: per-partition numpy top-k
-    (map-side combine — the shuffle carries ≤ partitions × Q × k rows)
-    + one tiny global window; tables and lookup sums use the exact
-    sequential-fold float discipline of the expression path, so results
-    are bit-identical, not merely close. ``'auto'``: expr at gate
-    geometry (≤ 512 codebook entries), pandas above."""
+    The queries (tiny) are collected and their lookup tables built on the
+    driver (`_np_seq_sqdist_tables`); the code scan runs a per-partition
+    numpy top-k (`_adc_partition_topk` — map-side combine, so the shuffle
+    carries ≤ partitions × Q × k rows, never the Q × N scored cross
+    product) and one small global window ranks the survivors. Tables and
+    lookup sums are sequential folds, so the ``adc`` doubles equal the
+    DuckDB oracle's. Query and corpus ids must be integral or string
+    (`_adc_id_kind`, checked at plan-build time)."""
+    import numpy as np
+
+    q_kind = _adc_id_kind(queries, q_id)
+    c_kind = _adc_id_kind(encoded, c_id)
     cbs = _collect_codebooks(codebooks)
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
-
-        # r15: size-aware — the expr path additionally shuffles the FULL
-        # Q × N scored cross product through its window, so a big encoded
-        # frame must route to the Arrow map-side-combine path
-        strategy = (
-            "expr"
-            if len(cbs) * len(cbs[0]) <= _EXPR_MODEL_MAX_ENTRIES
-            and expr_exec_ok(encoded, work_multiplier=float(len(cbs)))
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
-
-        q_kind = _adc_id_kind(queries, q_id)
-        c_kind = _adc_id_kind(encoded, c_id)
-        rows = queries.select(q_id, q_vec).collect()
-        q_keys = [r[0] for r in rows]
-        q_np = np.asarray(
-            [[float(x) for x in r[1]] for r in rows], dtype=np.float64
-        )
-        tab = _np_seq_sqdist_tables(q_np, np.asarray(cbs, dtype=np.float64))
-        kernel = _adc_partition_topk(
-            q_keys, k, c_id, codes_col, tab=tab, id_kind=c_kind
-        )
-        part = encoded.select(F.col(c_id), F.col(codes_col)).mapInPandas(
-            kernel,
-            schema=(
-                f"q_id {_ADC_ID_SQL[q_kind]}, "
-                f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
-            ),
-        ).withColumnRenamed("q_id", q_id)
-        w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
-        return (
-            part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    if strategy != "expr":
-        raise ValueError(f"unknown pq_adc_topk strategy {strategy!r}")
-    qt = F.broadcast(_adc_tables(queries.select(q_id, q_vec), cbs, q_vec))
-    scored = encoded.select(F.col(c_id), F.col(codes_col)).crossJoin(qt)
+    rows = queries.select(q_id, q_vec).collect()
+    q_keys = [r[0] for r in rows]
+    q_np = np.asarray(
+        [[float(x) for x in r[1]] for r in rows], dtype=np.float64
+    )
+    tab = _np_seq_sqdist_tables(q_np, np.asarray(cbs, dtype=np.float64))
+    kernel = _adc_partition_topk(
+        q_keys, k, c_id, codes_col, tab=tab, id_kind=c_kind
+    )
+    part = encoded.select(F.col(c_id), F.col(codes_col)).mapInPandas(
+        kernel,
+        schema=(
+            f"q_id {_ADC_ID_SQL[q_kind]}, "
+            f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
+        ),
+    ).withColumnRenamed("q_id", q_id)
     w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
     return (
-        scored.select(q_id, c_id, _adc_expr(len(cbs), codes_col).alias("adc"))
-        .withColumn("rank", F.row_number().over(w))
+        part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
@@ -1474,7 +1290,6 @@ def ivfpq_topk(
     c_id: str = "vec_id",
     codes_col: str = "codes",
     residual: bool = False,
-    strategy: str = "auto",
 ) -> DataFrame:
     """IVF routing + ADC scoring (FAISS's IVFADC): route each query to its
     ``nprobe`` nearest coarse centroids (exact float, query side only),
@@ -1493,122 +1308,70 @@ def ivfpq_topk(
     code budget buys a finer quantization grid. Cost shape is identical
     (the table build was already per routed row).
 
-    ``strategy`` as in :func:`pq_adc_topk`: 'expr' is the SQL-mirrorable
-    gate path; 'pandas' (auto above 512 codebook entries) routes in
-    numpy (same fold/tie discipline, bit-identical), prunes the code
-    scan to the probed cells with one `isin` literal filter (static
-    partition pruning on a `save_ivfpq_index` layout), and runs the
+    Routing is `_np_route` on the driver (sequential-fold cosines, ties
+    → lowest centroid_id, as the oracle's window); the code scan is pruned
+    to the probed cells with one `isin` literal filter (static partition
+    pruning on a `save_ivfpq_index` layout) and scored by the
     per-partition Arrow ADC top-k with per-(query, cell) tables — the
-    map-side combine that keeps the shuffle at partitions × Q × k
-    rows."""
+    map-side combine that keeps the shuffle at partitions × Q × k rows.
+    Ids as in :func:`pq_adc_topk`."""
+    import numpy as np
+
+    q_kind = _adc_id_kind(queries, q_id)
+    c_kind = _adc_id_kind(encoded_assigned, c_id)
     cbs = _collect_codebooks(codebooks)
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.functions.clustering import (
-            expr_exec_ok,
-        )
-
-        # r15: size-aware, same rationale as pq_adc_topk (the routed
-        # join still fans each probed cell's codes through the window)
-        strategy = (
-            "expr"
-            if len(cbs) * len(cbs[0]) <= _EXPR_MODEL_MAX_ENTRIES
-            and expr_exec_ok(
-                encoded_assigned, work_multiplier=float(len(cbs))
-            )
-            else "pandas"
-        )
-    if strategy == "pandas":
-        import numpy as np
-
-        q_kind = _adc_id_kind(queries, q_id)
-        c_kind = _adc_id_kind(encoded_assigned, c_id)
-        rows = queries.select(q_id, q_vec).collect()
-        q_keys = [r[0] for r in rows]
-        q_np = np.asarray(
-            [[float(x) for x in r[1]] for r in rows], dtype=np.float64
-        )
-        cen_rows = sorted(
-            centroids.select("centroid_id", "centroid_vec").collect(),
-            key=lambda r: r.centroid_id,
-        )
-        # centroid ids inherit the corpus id type under literal training
-        # (ivf_index train='literal' reuses corpus ids) — keep them as
-        # python values; the kernel matches them against the cell column
-        # generically
-        cen_ids = [r.centroid_id for r in cen_rows]
-        cen_np = np.asarray(
-            [[float(x) for x in r.centroid_vec] for r in cen_rows],
-            dtype=np.float64,
-        )
-        route = _np_route(q_np, cen_np, nprobe)
-        cbs_np = np.asarray(cbs, dtype=np.float64)
-        probe_cells = []
-        raw_tab_cache = None
-        for qi in range(len(q_keys)):
-            if not residual and raw_tab_cache is None:
-                raw_tab_cache = _np_seq_sqdist_tables(q_np, cbs_np)
-            tabs = {}
-            for ci in route[qi]:
-                if residual:
-                    t = _np_seq_sqdist_tables(
-                        (q_np[qi] - cen_np[ci])[None, :], cbs_np
-                    )[0]
-                else:
-                    t = raw_tab_cache[qi]  # raw tables don't vary by cell
-                tabs[cen_ids[ci]] = t
-            probe_cells.append(tabs)
-        probed = sorted({cid for t in probe_cells for cid in t})
-        cand = encoded_assigned.select(
-            F.col(c_id), F.col(codes_col), F.col("centroid_id")
-        ).filter(F.col("centroid_id").isin(probed))
-        kernel = _adc_partition_topk(
-            q_keys, k, c_id, codes_col, probe_cells=probe_cells,
-            id_kind=c_kind,
-        )
-        part = cand.mapInPandas(
-            kernel,
-            schema=(
-                f"q_id {_ADC_ID_SQL[q_kind]}, "
-                f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
-            ),
-        ).withColumnRenamed("q_id", q_id)
-        w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
-        return (
-            part.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-    if strategy != "expr":
-        raise ValueError(f"unknown ivfpq_topk strategy {strategy!r}")
-    cb = F.broadcast(
-        centroids.withColumn("__ncen", norm_expr(F.col("centroid_vec")))
+    rows = queries.select(q_id, q_vec).collect()
+    q_keys = [r[0] for r in rows]
+    q_np = np.asarray(
+        [[float(x) for x in r[1]] for r in rows], dtype=np.float64
     )
-    qn = queries.select(q_id, q_vec).withColumn("__nq", norm_expr(F.col(q_vec)))
-    qsim = dot_expr(F.col(q_vec), F.col("centroid_vec")) / (
-        F.col("__nq") * F.col("__ncen")
+    cen_rows = sorted(
+        centroids.select("centroid_id", "centroid_vec").collect(),
+        key=lambda r: r.centroid_id,
     )
-    wq = W.partitionBy(q_id).orderBy(F.col("__qsim").desc(), F.col("centroid_id"))
-    routed = (
-        qn.crossJoin(cb)
-        .withColumn("__qsim", qsim)
-        .withColumn("__rk", F.row_number().over(wq))
-        .filter(F.col("__rk") <= nprobe)
-        .select(q_id, q_vec, "centroid_id", "centroid_vec")
+    # centroid ids inherit the corpus id type under sample training
+    # (ivf_index train='sample' reuses corpus ids) — keep them as
+    # python values; the kernel matches them against the cell column
+    # generically
+    cen_ids = [r.centroid_id for r in cen_rows]
+    cen_np = np.asarray(
+        [[float(x) for x in r.centroid_vec] for r in cen_rows],
+        dtype=np.float64,
     )
-    if residual:
-        routed = routed.withColumn(
-            "__qres", residual_expr(F.col(q_vec), F.col("centroid_vec"))
-        )
-        routed = _adc_tables(routed, cbs, "__qres").drop(q_vec, "__qres")
-    else:
-        routed = _adc_tables(routed, cbs, q_vec).drop(q_vec)
-    routed = routed.drop("centroid_vec")
+    route = _np_route(q_np, cen_np, nprobe)
+    cbs_np = np.asarray(cbs, dtype=np.float64)
+    # raw tables don't vary by cell; residual ones are per (query, cell)
+    raw_tab = None if residual else _np_seq_sqdist_tables(q_np, cbs_np)
+    probe_cells = []
+    for qi in range(len(q_keys)):
+        tabs = {}
+        for ci in route[qi]:
+            if residual:
+                t = _np_seq_sqdist_tables(
+                    (q_np[qi] - cen_np[ci])[None, :], cbs_np
+                )[0]
+            else:
+                t = raw_tab[qi]
+            tabs[cen_ids[ci]] = t
+        probe_cells.append(tabs)
+    probed = sorted({cid for t in probe_cells for cid in t})
     cand = encoded_assigned.select(
         F.col(c_id), F.col(codes_col), F.col("centroid_id")
-    ).join(F.broadcast(routed), "centroid_id")
+    ).filter(F.col("centroid_id").isin(probed))
+    kernel = _adc_partition_topk(
+        q_keys, k, c_id, codes_col, probe_cells=probe_cells,
+        id_kind=c_kind,
+    )
+    part = cand.mapInPandas(
+        kernel,
+        schema=(
+            f"q_id {_ADC_ID_SQL[q_kind]}, "
+            f"{c_id} {_ADC_ID_SQL[c_kind]}, adc double"
+        ),
+    ).withColumnRenamed("q_id", q_id)
     w = W.partitionBy(q_id).orderBy(F.col("adc").asc(), F.col(c_id))
     return (
-        cand.select(q_id, c_id, _adc_expr(len(cbs), codes_col).alias("adc"))
-        .withColumn("rank", F.row_number().over(w))
+        part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
@@ -1798,7 +1561,7 @@ def append_to_ivfpq_index(
             f"index's {dim} (= m_sub {len(cbs)} × d_sub {len(cbs[0][0])}); "
             "refusing to append NULL codes"
         )
-    codebooks = cbs  # already collected: every op below inlines the literal
+    codebooks = cbs  # already collected: the ops below reuse it
     # an OPQ-built index (ann-index --opq) lives entirely in rotated
     # space — centroids AND codebooks; an unrotated batch would encode
     # against them silently wrong, and the id anti-join would make it

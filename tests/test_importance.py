@@ -222,3 +222,53 @@ def test_dsir_ratio_table_persistence_and_score_parity(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         load_dsir_ratios(spark, str(tmp_path / "absent"))
+
+
+def test_domain_mixture_dsir_thread_inherits_job_group_and_never_leaks(
+    spark, sf_dir, monkeypatch
+):
+    """`suite.q_domain_mixture` builds its DSIR leg on a worker thread. The
+    thread must carry the caller's job group (so its jobs are attributed
+    and cancellable with the caller's), and when the main-thread leg
+    raises while the DSIR leg is still running, no executor thread may
+    outlive the call."""
+    import threading
+
+    from etl_edi_data_scrapper_spark import suite
+    from etl_edi_data_scrapper_spark.functions import importance
+
+    started = threading.Event()
+    seen_groups = []
+
+    def slow_dsir(*args, **kwargs):
+        seen_groups.append(
+            spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        )
+        started.set()
+        threading.Event().wait(1.0)  # still running when the main leg fails
+        return None
+
+    def failing_sqrt(*args, **kwargs):
+        assert started.wait(30)
+        raise RuntimeError("main leg failed")
+
+    def pool_threads():
+        return {
+            t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor") and t.is_alive()
+        }
+
+    before = pool_threads()
+    monkeypatch.setattr(importance, "dsir_resample", slow_dsir)
+    monkeypatch.setattr(F, "sqrt", failing_sqrt)
+    sc = spark.sparkContext
+    sc.setJobGroup("domain-mixture-caller", "caller's group")
+    try:
+        with pytest.raises(RuntimeError, match="main leg failed"):
+            suite.q_domain_mixture(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert seen_groups == ["domain-mixture-caller"]
+    assert pool_threads() <= before

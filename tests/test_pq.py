@@ -10,6 +10,8 @@ never moves to be encoded).
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,6 +37,98 @@ def _queries(spark, vecs, ids=None):
     return spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
         "q_id long, q_vec array<float>",
+    )
+
+
+# --- pure-Python references ------------------------------------------------
+# Sequential left folds in index order with the lowest-id tie rule: the
+# discipline the DuckDB oracles state in SQL, written out independently of
+# the numpy kernels under test.
+
+
+def _h(i, d):
+    import hashlib
+
+    return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
+            / 32768.0) - 1.0
+
+
+def _stored(df, id_col="vec_id", vec_col="embedding"):
+    """{id: vector} as Spark stores it (array<float> rounds the inputs)."""
+    return {r[id_col]: [float(x) for x in r[vec_col]]
+            for r in df.select(id_col, vec_col).collect()}
+
+
+def _py_sqdist(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        acc += d * d
+    return acc
+
+
+def _py_cos(a, b):
+    """dot / (|a|·|b|) from sequential folds; None (SQL null) on 0/0."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += float(x) * float(y)
+        na += float(x) * float(x)
+        nb += float(y) * float(y)
+    den = math.sqrt(na) * math.sqrt(nb)
+    return None if den == 0.0 else dot / den
+
+
+def _py_argmin(dists):
+    return min(range(len(dists)), key=lambda i: (dists[i], i))
+
+
+def _py_route(vec, cents, nprobe=1):
+    """The nprobe nearest (centroid_id, vec) cells by cosine: null cosines
+    last, ties → lowest centroid_id."""
+    scored = [(_py_cos(vec, v), cid) for cid, v in cents]
+    scored.sort(key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
+    return [cid for _, cid in scored[:nprobe]]
+
+
+def _py_encode(vec, cbs):
+    d = len(cbs[0][0])
+    return [
+        _py_argmin([_py_sqdist(vec[s * d:(s + 1) * d], c) for c in cb])
+        for s, cb in enumerate(cbs)
+    ]
+
+
+def _py_adc(qvec, cbs, codes):
+    d = len(cbs[0][0])
+    acc = 0.0
+    for s, cb in enumerate(cbs):
+        acc += _py_sqdist(qvec[s * d:(s + 1) * d], cb[codes[s]])
+    return acc
+
+
+def _py_topk(queries, score, candidates, k):
+    """sorted (q_id, rank, id, adc) rows: per query, the k best of
+    ``candidates(q_id)`` by (score(q_vec, id) asc, id asc)."""
+    out = []
+    for qid, qvec in queries.items():
+        scored = sorted((score(qvec, i), i) for i in candidates(qid))
+        out += [(qid, r + 1, i, a) for r, (a, i) in enumerate(scored[:k])]
+    return sorted(out)
+
+
+def _py_ivfpq(queries, cents, cells, codes, cbs, k, nprobe, residual=False):
+    """IVFADC reference: route, score only the probed cells' codes (residual
+    tables against q − centroid)."""
+    cen = dict(cents)
+    probes = {q: _py_route(v, cents, nprobe) for q, v in queries.items()}
+
+    def score(qv, i):
+        c = cen[cells[i]]
+        v = [float(a) - float(b) for a, b in zip(qv, c)] if residual else qv
+        return _py_adc(v, cbs, codes[i])
+
+    return _py_topk(
+        queries, score, lambda q: [i for i in codes if cells[i] in probes[q]], k
     )
 
 
@@ -689,65 +783,95 @@ def test_fit_fraction_sampled_codebooks_ab_vs_full_fit(spark):
     assert cents_df.count() == 16 and enc.count() == 6000
 
 
-def test_pandas_strategies_match_expression_paths(spark):
-    """r12 (ANN study finding): at production geometry the literal/
-    expression model paths choke — plan build grows with the literal
-    (2.0/14.2/42.5 s at 16/256/1024 codes) and higher-order folds
-    evaluate interpreted — so `pq_encode`, `ivf_assign`, and
-    `assign_clusters` gained Arrow/numpy strategies with an auto switch
-    (expr at gate geometry, pandas above). The two strategies must agree
-    EXACTLY: same argmin/argmax, same lowest-id tie rule, float64 both
-    sides, direct-difference distances (no norm expansion) so near-tie
-    rounding can't flip a code."""
-    import hashlib
-
+def test_arrow_kernels_match_python_fold_reference(spark):
+    """`pq_encode`, `ivf_assign` and `assign_clusters` are Arrow/numpy
+    kernels (the interpreted SQL folds choked at production geometry: plan
+    build grew with the literal — 2.0/14.2/42.5 s at 16/256/1024 codes).
+    Each must equal the pure-Python sequential-fold reference EXACTLY:
+    same argmin/argmax, same lowest-id tie rule, float64 direct
+    differences (no norm expansion) so near-tie rounding can't flip a
+    code — 75 codes × 4 subspaces, 70 cells, 70 centroids."""
     from etl_edi_data_scrapper_spark.functions.clustering import (
         assign_clusters,
     )
     from etl_edi_data_scrapper_spark.functions.similarity import (
+        _collect_codebooks,
         ivf_assign,
-        pq_codebooks,
-        pq_encode,
     )
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(400)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(400)]
     corpus = _corpus(spark, vecs)
-    # 75 codes x 4 subspaces = 300 entries: auto resolves to pandas
-    cbs = pq_codebooks(corpus, m_sub=4, n_codes=75, dim=8, train="sample")
-    lit = {r.vec_id: list(r.codes) for r in
-           pq_encode(corpus, cbs, strategy="literal").collect()}
-    pnd = {r.vec_id: list(r.codes) for r in
-           pq_encode(corpus, cbs, strategy="pandas").collect()}
-    auto = {r.vec_id: list(r.codes) for r in
-            pq_encode(corpus, cbs).collect()}
-    assert pnd == lit and auto == lit
+    emb = _stored(corpus)
+    cbs = _collect_codebooks(
+        pq_codebooks(corpus, m_sub=4, n_codes=75, dim=8, train="sample")
+    )
+    got = {r.vec_id: list(r.codes) for r in pq_encode(corpus, cbs).collect()}
+    assert got == {i: _py_encode(v, cbs) for i, v in emb.items()}
 
-    from pyspark.sql import functions as F
-
-    centroids = corpus.limit(70).select(
+    centroids = corpus.filter(F.col("vec_id") < 70).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("centroid_vec"),
     )
-    expr = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="expr").collect()}
-    pnd = {r.vec_id: r.centroid_id for r in
-           ivf_assign(corpus, centroids, strategy="pandas").collect()}
-    auto = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids).collect()}  # 70 cells -> pandas
-    assert pnd == expr and auto == expr
+    cents = sorted(_stored(centroids, "centroid_id", "centroid_vec").items())
+    got = {r.vec_id: r.centroid_id for r in
+           ivf_assign(corpus, centroids).collect()}
+    assert got == {i: _py_route(v, cents)[0] for i, v in emb.items()}
 
     cents = [list(map(float, v)) for v in vecs[:70]]
-    e = {r.vec_id: r.cluster for r in
-         assign_clusters(corpus, "embedding", cents, strategy="expr").collect()}
-    pp = {r.vec_id: r.cluster for r in
-          assign_clusters(corpus, "embedding", cents, strategy="pandas").collect()}
-    a = {r.vec_id: r.cluster for r in
-         assign_clusters(corpus, "embedding", cents).collect()}
-    assert pp == e and a == e
+    got = {r.vec_id: r.cluster for r in
+           assign_clusters(corpus, "embedding", cents).collect()}
+    assert got == {
+        i: _py_argmin([_py_sqdist(v, c) for c in cents])
+        for i, v in emb.items()
+    }
+
+
+_OFF_PATH_SCRIPT = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from etl_edi_data_scrapper_spark import get_spark
+from etl_edi_data_scrapper_spark.functions.clustering import (
+    assign_clusters, assign_clusters_ivf)
+from etl_edi_data_scrapper_spark.functions.similarity import (
+    ivf_index, ivfpq_topk, pq_adc_topk, pq_encode)
+
+spark = get_spark("kernels-off-path", master="local[1]", shuffle_partitions=1)
+vecs = [[float((i * 7 + d * 3) % 11) for d in range(4)] for i in range(30)]
+corpus = spark.createDataFrame(
+    list(enumerate(vecs)), "vec_id long, embedding array<double>")
+queries = spark.createDataFrame(
+    [(0, vecs[0])], "q_id long, q_vec array<double>")
+cents = vecs[:9]
+cbs = [[v[:2] for v in vecs[:4]], [v[2:] for v in vecs[:4]]]
+centroids, assigned = ivf_index(corpus, n_centroids=3)
+enc = pq_encode(assigned, cbs)
+for df in (assign_clusters(corpus, "embedding", cents),
+           assign_clusters_ivf(corpus, "embedding", cents, n_probe=2),
+           enc,
+           pq_adc_topk(queries, cbs, enc, k=3),
+           ivfpq_topk(queries, centroids, enc, cbs, k=3, nprobe=2)):
+    assert df.count() > 0
+print("KERNELS-OK")
+"""
+
+
+def test_kernels_run_on_workers_that_cannot_import_the_package(tmp_path):
+    """The Arrow kernels' closures must not import this package on a Python
+    worker: a driver launched from another working directory, with no
+    PYTHONPATH entry for the checkout, starts workers that cannot. Runs
+    every kernel in a fresh local session from such a directory."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_LOCAL_DIRS"] = str(tmp_path / "spark-local")
+    out = subprocess.run(
+        [sys.executable, "-c", _OFF_PATH_SCRIPT, root],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert "KERNELS-OK" in out.stdout, out.stderr[-3000:]
 
 
 def test_ann_compact_bounds_files_and_preserves_answers(
@@ -818,177 +942,167 @@ def test_ann_compact_bounds_files_and_preserves_answers(
     assert answers() == pre
 
 
-def test_adc_pandas_strategies_bit_identical_to_expr(spark):
-    """r12 follow-up to the ANN study's flagged cost: `pq_adc_topk` and
-    `ivfpq_topk` gain the same expr/pandas auto-switch as the encode.
-    The Arrow path is BIT-identical, not approximately equal: ADC
-    tables, lookup sums, routing dots/norms are all sequential left
-    folds in index order (the `_adc_expr`/`dot_expr` discipline), ties
-    break (adc asc, id asc) / (sim desc, centroid asc) — asserted on
-    exact (id, rank, adc-to-the-double) tuples, raw AND residual, at a
-    k that forces tie-breaks, including the k-per-partition map-side
-    combine (repartitioned input)."""
-    import hashlib
-
+def test_adc_kernels_bit_identical_to_python_reference(spark):
+    """`pq_adc_topk` and `ivfpq_topk` score with Arrow kernels whose ADC
+    tables, lookup sums and routing dots/norms are sequential left folds
+    in index order, ties breaking (adc asc, id asc) / (sim desc,
+    centroid asc) — so they equal the pure-Python reference BIT for bit,
+    not approximately: asserted on exact (id, rank, adc-to-the-double)
+    tuples, raw AND residual, at a k that forces tie-breaks, including
+    the k-per-partition map-side combine (repartitioned input)."""
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        ivf_index,
+        _collect_codebooks,
         ivfpq_residual_index,
-        ivfpq_topk,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_encode,
     )
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(300)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(300)]
     corpus = _corpus(spark, vecs).repartition(7)
+    emb = _stored(corpus)
     queries = _queries(spark, [vecs[i] for i in (3, 77, 150)], ids=(3, 77, 150))
+    qs = _stored(queries, "q_id", "q_vec")
 
-    cbs = pq_codebooks(corpus, m_sub=4, n_codes=8, dim=8, train="sample")
-    enc = pq_encode(corpus, cbs, strategy="literal")
+    cbs = _collect_codebooks(
+        pq_codebooks(corpus, m_sub=4, n_codes=8, dim=8, train="sample")
+    )
+    enc = pq_encode(corpus, cbs)
+    codes = {r.vec_id: list(r.codes) for r in enc.collect()}
+    assert codes == {i: _py_encode(v, cbs) for i, v in emb.items()}
 
     def rows(df):
         return sorted(
             (r.q_id, r.rank, r.vec_id, r.adc) for r in df.collect()
         )
 
-    a = rows(pq_adc_topk(queries, cbs, enc, k=7, strategy="expr"))
-    b = rows(pq_adc_topk(queries, cbs, enc, k=7, strategy="pandas"))
-    assert a == b and len(a) == 21
+    a = rows(pq_adc_topk(queries, cbs, enc, k=7))
+    assert a == _py_topk(
+        qs, lambda qv, i: _py_adc(qv, cbs, codes[i]), lambda q: codes, 7
+    ) and len(a) == 21
 
     centroids, assigned = ivf_index(corpus, n_centroids=6)
-    enc_a = pq_encode(assigned, cbs, strategy="literal").select(
-        "vec_id", "codes", "centroid_id"
-    )
-    e = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=7, nprobe=3,
-                        strategy="expr"))
-    p = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=7, nprobe=3,
-                        strategy="pandas"))
-    assert e == p and len(e) == 21
+    cents = sorted(_stored(centroids, "centroid_id", "centroid_vec").items())
+    enc_a = pq_encode(assigned, cbs).select("vec_id", "codes", "centroid_id")
+    cells = {r.vec_id: r.centroid_id for r in enc_a.collect()}
+    assert cells == {i: _py_route(v, cents)[0] for i, v in emb.items()}
+    p = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=7, nprobe=3))
+    assert p == _py_ivfpq(qs, cents, cells, codes, cbs, 7, 3) and len(p) == 21
 
     rcen, renc, rcbs = ivfpq_residual_index(
         corpus, n_centroids=6, m_sub=4, n_codes=8, dim=8
     )
-    e = rows(ivfpq_topk(queries, rcen, renc, rcbs, k=7, nprobe=3,
-                        residual=True, strategy="expr"))
+    rcbs = _collect_codebooks(rcbs)
+    rcents = sorted(_stored(rcen, "centroid_id", "centroid_vec").items())
+    renc_rows = renc.collect()
+    rcells = {r.vec_id: r.centroid_id for r in renc_rows}
+    rcodes = {r.vec_id: list(r.codes) for r in renc_rows}
+    rc = dict(rcents)
+    assert rcodes == {
+        i: _py_encode([a - b for a, b in zip(v, rc[rcells[i]])], rcbs)
+        for i, v in emb.items()
+    }
     p = rows(ivfpq_topk(queries, rcen, renc, rcbs, k=7, nprobe=3,
-                        residual=True, strategy="pandas"))
-    assert e == p and len(e) == 21
+                        residual=True))
+    assert p == _py_ivfpq(
+        qs, rcents, rcells, rcodes, rcbs, 7, 3, residual=True
+    ) and len(p) == 21
+
 
 def test_ivf_assign_zero_norm_centroid_parity(spark):
     """r13 (ADVICE medium): a zero-norm centroid (e.g. a failed-embed
-    row sampled as a literal-train centroid) must never capture the
-    corpus. The expr path gets this for free (null sim sorts last); the
-    pandas path used to divide by a zero centroid norm — the NaN column
-    made np.argmax return the degenerate centroid for EVERY vector. Both
-    strategies must agree exactly, including the double-degenerate case
-    (zero-norm VECTOR too → lowest centroid_id, the expr window's
-    nulls-last + centroid_id-asc outcome)."""
-    import hashlib
-
+    row sampled as a train='sample' centroid) must never capture the
+    corpus. In SQL its cosine is null and a nulls-last window never picks
+    it; the kernel used to divide by a zero centroid norm — the NaN column
+    made np.argmax return the degenerate centroid for EVERY vector. The
+    kernel must equal the reference exactly, including the
+    double-degenerate case (zero-norm VECTOR too → lowest centroid_id, the
+    window's nulls-last + centroid_id-asc outcome)."""
     from etl_edi_data_scrapper_spark.functions.similarity import ivf_assign
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(100)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(100)]
     vecs[17] = [0.0] * 8  # a zero-norm corpus vector rides along
     corpus = _corpus(spark, vecs)
+    emb = _stored(corpus)
     cent_rows = [(0, [0.0] * 8)] + [  # centroid_id 0 is DEGENERATE
         (i + 1, [float(x) for x in vecs[i * 7]]) for i in range(9)
     ]
     centroids = spark.createDataFrame(
         cent_rows, "centroid_id long, centroid_vec array<double>"
     )
-    expr = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="expr").collect()}
-    pnd = {r.vec_id: r.centroid_id for r in
-           ivf_assign(corpus, centroids, strategy="pandas").collect()}
-    assert pnd == expr
-    assert 0 not in {c for v, c in expr.items() if v != 17}
-    assert expr[17] == 0  # zero vector: null sims everywhere -> lowest id
+    got = {r.vec_id: r.centroid_id for r in
+           ivf_assign(corpus, centroids).collect()}
+    assert got == {i: _py_route(v, cent_rows)[0] for i, v in emb.items()}
+    assert 0 not in {c for v, c in got.items() if v != 17}
+    assert got[17] == 0  # zero vector: null sims everywhere -> lowest id
     # and with no degenerate centroid, the zero VECTOR still agrees
     clean = spark.createDataFrame(
         cent_rows[1:], "centroid_id long, centroid_vec array<double>"
     )
-    e2 = {r.vec_id: r.centroid_id for r in
-          ivf_assign(corpus, clean, strategy="expr").collect()}
-    p2 = {r.vec_id: r.centroid_id for r in
-          ivf_assign(corpus, clean, strategy="pandas").collect()}
-    assert p2 == e2 and e2[17] == 1  # lowest centroid_id present
+    got = {r.vec_id: r.centroid_id for r in
+           ivf_assign(corpus, clean).collect()}
+    assert got == {i: _py_route(v, cent_rows[1:])[0] for i, v in emb.items()}
+    assert got[17] == 1  # lowest centroid_id present
 
 
 def test_adc_pandas_strategy_string_ids(spark):
-    """r13 (ADVICE): the expr ADC paths handle any id type, so the
-    silent auto-switch above 512 codebook entries must not crash (or
-    mis-cast) a string-id pipeline. String ids ride the Arrow kernels
-    and tie-break identically to the expr window (adc asc, id asc —
-    lexicographic for strings on both engines); unsupported id types
-    raise a crisp error instead of a numpy cast failure."""
-    import hashlib
-
-    import pytest as _pytest
-
+    """r13 (ADVICE): string ids ride the Arrow kernels (`pq_adc_topk`,
+    `ivfpq_topk`, `ivf_assign`) and tie-break like the SQL window (adc
+    asc, id asc — lexicographic for strings on both engines), equal to the
+    pure-Python reference. Any other id type raises a crisp error naming
+    the column and its type at PLAN-BUILD time, before a Spark job runs,
+    instead of a numpy cast failure inside a worker."""
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        ivf_index,
-        ivfpq_topk,
-        pq_adc_topk,
-        pq_codebooks,
-        pq_encode,
+        _collect_codebooks,
+        ivf_assign,
     )
 
-    def h(i, d):
-        return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
-                / 32768.0) - 1.0
-
-    vecs = [[10.0 * h(i, d) for d in range(8)] for i in range(120)]
+    vecs = [[10.0 * _h(i, d) for d in range(8)] for i in range(120)]
     corpus = spark.createDataFrame(
         [(f"doc-{i:04d}", [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id string, embedding array<float>",
     ).repartition(5)
+    emb = _stored(corpus)
     queries = spark.createDataFrame(
         [(f"q-{i}", [float(x) for x in vecs[i]]) for i in (3, 50)],
         "q_id string, q_vec array<float>",
     )
-    cbs = pq_codebooks(corpus, m_sub=4, n_codes=8, dim=8, train="sample",
-                       c_id="vec_id")
-    enc = pq_encode(corpus, cbs, strategy="literal")
+    qs = _stored(queries, "q_id", "q_vec")
+    cbs = _collect_codebooks(pq_codebooks(
+        corpus, m_sub=4, n_codes=8, dim=8, train="sample", c_id="vec_id"
+    ))
+    enc = pq_encode(corpus, cbs)
+    codes = {r.vec_id: list(r.codes) for r in enc.collect()}
+    assert codes == {i: _py_encode(v, cbs) for i, v in emb.items()}
 
     def rows(df):
         return sorted((r.q_id, r.rank, r.vec_id, r.adc) for r in df.collect())
 
-    a = rows(pq_adc_topk(queries, cbs, enc, k=5, strategy="expr"))
-    b = rows(pq_adc_topk(queries, cbs, enc, k=5, strategy="pandas"))
-    assert a == b and len(a) == 10
+    a = rows(pq_adc_topk(queries, cbs, enc, k=5))
+    assert a == _py_topk(
+        qs, lambda qv, i: _py_adc(qv, cbs, codes[i]), lambda q: codes, 5
+    ) and len(a) == 10
 
+    # ivf_assign carries string centroid ids the same way (train='sample'
+    # reuses corpus ids, so this is the default shape)
     centroids, assigned = ivf_index(corpus, n_centroids=4, c_id="vec_id")
-    enc_a = pq_encode(assigned, cbs, strategy="literal").select(
-        "vec_id", "codes", "centroid_id"
-    )
-    e = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=5, nprobe=2,
-                        strategy="expr"))
-    p = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=5, nprobe=2,
-                        strategy="pandas"))
-    assert e == p and len(e) == 10
-
-    # ivf_assign's Arrow path carries string centroid ids the same way
-    # (literal training reuses corpus ids, so this is the default shape)
-    from etl_edi_data_scrapper_spark.functions.similarity import ivf_assign
-
-    ia_e = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="expr").collect()}
-    ia_p = {r.vec_id: r.centroid_id for r in
-            ivf_assign(corpus, centroids, strategy="pandas").collect()}
-    assert ia_p == ia_e
+    cents = sorted(_stored(centroids, "centroid_id", "centroid_vec").items())
+    enc_a = pq_encode(assigned, cbs).select("vec_id", "codes", "centroid_id")
+    cells = {r.vec_id: r.centroid_id for r in enc_a.collect()}
+    assert cells == {i: _py_route(v, cents)[0] for i, v in emb.items()}
+    assert {r.vec_id: r.centroid_id for r in
+            ivf_assign(corpus, centroids).collect()} == cells
+    p = rows(ivfpq_topk(queries, centroids, enc_a, cbs, k=5, nprobe=2))
+    assert p == _py_ivfpq(qs, cents, cells, codes, cbs, 5, 2) and len(p) == 10
 
     bad = corpus.withColumn("vec_id", F.col("vec_id").cast("binary"))
-    with _pytest.raises(ValueError, match="integral or string id"):
-        pq_adc_topk(queries, cbs, pq_encode(bad, cbs, strategy="literal"),
-                    k=5, strategy="pandas")
+    bad_enc = pq_encode(bad, cbs)
+    bad_cells = enc_a.withColumn("vec_id", F.col("vec_id").cast("binary"))
+    sc = spark.sparkContext
+    jobs_before = len(sc.statusTracker().getJobIdsForGroup())
+    msg = "integral or string id columns; 'vec_id' is binary: cast it to a long"
+    with pytest.raises(ValueError, match=msg):
+        pq_adc_topk(queries, cbs, bad_enc, k=5)
+    with pytest.raises(ValueError, match=msg):
+        ivfpq_topk(queries, centroids, bad_cells, cbs, k=5, nprobe=2)
+    assert len(sc.statusTracker().getJobIdsForGroup()) == jobs_before
 
 
 def test_compaction_crash_leaves_recoverable_state(spark, tmp_path):
@@ -1125,7 +1239,7 @@ def test_apply_rotation_plan_is_zero_shuffle(spark, sf_dir):
     R = np.eye(dim).tolist()
     cbs = [[[0.0] * (dim // 8)] * 4 for _ in range(8)]
     plan = (
-        pq_encode(apply_rotation(emb, R), cbs, strategy="pandas")
+        pq_encode(apply_rotation(emb, R), cbs)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
@@ -1605,47 +1719,3 @@ def test_cli_ann_index_n_centroids_auto(spark, sf_dir, tmp_path, capsys):
         engine=eng,
     ) == 0
     assert spark.read.parquet(out).count() == 500 * 2
-
-
-def test_expr_exec_size_gate_routes_auto_strategies(spark, tmp_path):
-    """r15: the auto strategies are size-aware (tools/arrow_expr_study.py:
-    the interpreted fold measured 12-13x slower than Arrow at factor-300
-    geometry) — small inputs keep the zero-Python expr path, big ones
-    route to the bit-compatible Arrow path. A frame with UNKNOWN stats
-    (e.g. a local/Arrow-built relation) must read as huge → Arrow, the
-    safe side at scale."""
-    from etl_edi_data_scrapper_spark.functions import clustering
-    from etl_edi_data_scrapper_spark.functions.clustering import (
-        assign_clusters,
-        expr_exec_ok,
-    )
-
-    local = spark.createDataFrame(
-        [(i, [float(i), float(i % 3)]) for i in range(50)],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "gate_corpus.parquet")
-    local.write.parquet(path)
-    corpus = spark.read.parquet(path)  # scan stats = file bytes (tiny)
-    cents = [[0.0, 0.0], [10.0, 1.0]]
-    assert expr_exec_ok(corpus)
-    assert not expr_exec_ok(corpus, work_multiplier=1e12)
-
-    def has_python_eval(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
-
-    small_auto = assign_clusters(corpus, "embedding", cents, strategy="auto")
-    assert not has_python_eval(small_auto)  # small input -> expr
-
-    old = clustering._EXPR_EXEC_MAX_BYTES
-    clustering._EXPR_EXEC_MAX_BYTES = 0  # force the "big input" branch
-    try:
-        big_auto = assign_clusters(corpus, "embedding", cents, strategy="auto")
-        assert has_python_eval(big_auto)  # big input -> Arrow
-        # bit-compatible: same assignments either way
-        a = {(r.vec_id, r.cluster) for r in small_auto.collect()}
-        b = {(r.vec_id, r.cluster) for r in big_auto.collect()}
-        assert a == b
-    finally:
-        clustering._EXPR_EXEC_MAX_BYTES = old

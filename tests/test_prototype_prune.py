@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.clustering import (
     assign_clusters,
+    assign_clusters_ivf,
     prototype_prune,
 )
 
@@ -108,19 +109,47 @@ def test_boundary_window_sees_only_boundary_rows(spark):
     assert {r.vec_id for r in got if r.proto_keep} == _spec_keep(rows, 0.5, True)
 
 
-def test_assign_clusters_ivf_pandas_matches_expr(spark):
+def _py_sqdist(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        acc += d * d
+    return acc
+
+
+def _py_ivf_routes(vecs, cents, n_probe):
+    """{id: cluster} by pure-Python two-level routing with
+    `assign_clusters_ivf`'s documented rules: coarse centroids =
+    `_kmeans_driver` over the fine ones, empty cells dropped, the n_probe
+    nearest cells (ties → lowest cell), then the nearest fine centroid
+    among their members (ties → lowest index) — sequential-fold distances
+    throughout."""
+    from etl_edi_data_scrapper_spark.functions.clustering import (
+        _argmin_driver,
+        _kmeans_driver,
+    )
+
+    coarse = _kmeans_driver(cents, max(1, int(round(len(cents) ** 0.5))))
+    owner = [_argmin_driver(c, coarse) for c in cents]
+    live = sorted(set(owner))
+    out = {}
+    for vid, v in vecs.items():
+        d2c = {c: _py_sqdist(v, coarse[c]) for c in live}
+        probed = sorted(live, key=lambda c: (d2c[c], c))[:n_probe]
+        members = [i for i in range(len(cents)) if owner[i] in probed]
+        out[vid] = min(members, key=lambda i: (_py_sqdist(v, cents[i]), i))
+    return out
+
+
+def test_assign_clusters_ivf_matches_python_reference(spark):
     """r12: the factor-300 smoke OOM'd the driver building the k=2400
     CASE-routing expression (n_probe x k literal scoring nodes), so
-    `assign_clusters_ivf` gained the strategy switch: expr at k<=64
-    (gate-exact), Arrow/numpy above. Identical routing — same coarse
-    probe sets (stable argsort = lowest-cell ties), same fine winners
-    (lowest-index ties), sequential-fold float parity — asserted exact
-    on 90 fine centroids x 400 vectors at n_probe 1..3."""
+    `assign_clusters_ivf` routes in one Arrow/numpy kernel. Its routing
+    must equal the pure-Python reference exactly — same coarse probe sets
+    (lowest-cell ties), same fine winners (lowest-index ties),
+    sequential-fold float parity — on 90 fine centroids x 400 vectors at
+    n_probe 1..3."""
     import hashlib
-
-    from etl_edi_data_scrapper_spark.functions.clustering import (
-        assign_clusters_ivf,
-    )
 
     def h(i, d):
         return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
@@ -132,25 +161,38 @@ def test_assign_clusters_ivf_pandas_matches_expr(spark):
         [(i, v) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
+    emb = {r.vec_id: [float(x) for x in r.embedding] for r in df.collect()}
     for n_probe in (1, 2, 3):
-        e = {r.vec_id: r.cluster for r in assign_clusters_ivf(
-            df, "embedding", cents, n_probe=n_probe, strategy="expr"
-        ).collect()}
-        p = {r.vec_id: r.cluster for r in assign_clusters_ivf(
-            df, "embedding", cents, n_probe=n_probe, strategy="pandas"
-        ).collect()}
-        a = {r.vec_id: r.cluster for r in assign_clusters_ivf(
+        got = {r.vec_id: r.cluster for r in assign_clusters_ivf(
             df, "embedding", cents, n_probe=n_probe
-        ).collect()}  # 90 > 64 -> auto resolves to pandas
-        assert p == e and a == e
+        ).collect()}
+        assert got == _py_ivf_routes(emb, cents, n_probe)
+
+
+def test_assign_clusters_ivf_keeps_user_column_named_like_internal(spark):
+    """A user column named `__ivf_ranked` (the old expression routing's
+    helper column) survives `assign_clusters_ivf` with its values
+    unchanged."""
+    cents = [[float(i), float(i % 3)] for i in range(9)]
+    df = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 5)], f"user-{i}") for i in range(40)],
+        "vec_id long, embedding array<float>, __ivf_ranked string",
+    )
+    out = assign_clusters_ivf(df, "embedding", cents, n_probe=2)
+    assert "__ivf_ranked" in out.columns
+    assert {(r.vec_id, r["__ivf_ranked"]) for r in out.collect()} == {
+        (i, f"user-{i}") for i in range(40)
+    }
 
 
 def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
-    """r14 optimization: assign_clusters/prototype_prune build their
-    centroid-distance expressions as ONE parsed SQL string (construction
-    was one py4j round trip per centroid element — seconds of driver
-    chatter per kmeans_fit). The parsed tree must equal the Column-DSL
-    fold (`_sqdist`) to the last ulp, argmin tie rule included."""
+    """r14 optimization: prototype_prune builds its centroid-distance
+    expression as ONE parsed SQL string (construction was one py4j round
+    trip per centroid element — seconds of driver chatter). The parsed
+    tree must equal the Column-DSL fold (`_sqdist`) to the last ulp; and
+    `assign_clusters`' Arrow kernel must pick the same argmin as a
+    DSL-built reference on the same adversarial centroids, tie rule
+    included."""
     import hashlib
 
     from etl_edi_data_scrapper_spark.functions.clustering import (
@@ -179,14 +221,14 @@ def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
         for i in range(len(cents)):
             assert r[f"o{i}"] == r[f"n{i}"]
 
-    # the shipped argmin column vs a DSL-built reference argmin
+    # the Arrow argmin kernel vs a DSL-built reference argmin
     ref = F.array_sort(
         F.array(*[
             F.struct(_sqdist(F.col("embedding"), c).alias("d"), F.lit(i).alias("c"))
             for i, c in enumerate(cents)
         ])
     )[0]["c"]
-    got = assign_clusters(df, "embedding", cents, strategy="expr")
+    got = assign_clusters(df, "embedding", cents)
     mism = got.withColumn("ref", ref).filter("cluster <> ref").count()
     assert mism == 0
 
