@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 import zipfile
+import zlib
 
 from etl_edi_data_scrapper_spark.sources.biff import _fmt_num
 
@@ -53,8 +54,8 @@ def is_ods_zip(path: str) -> bool:
                     == ODS_MIMETYPE
                 )
             return "content.xml" in names
-    except Exception:
-        return False
+    except (zipfile.BadZipFile, zlib.error, EOFError, OSError):
+        return False  # not a readable zip: not an ODS file
 
 
 def _cell_text(cell: ET.Element) -> str | None:

@@ -18,9 +18,11 @@ from page 1 — same page contract, fan-out in executors.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import tempfile
 import time
+import urllib.error
 import urllib.request
 from dataclasses import dataclass, field
 from typing import Any, Callable
@@ -28,6 +30,8 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 Fetch = Callable[[str], str]  # url -> response body (JSON text)
+
+log = logging.getLogger(__name__)
 
 
 def _default_fetch(url: str, headers: dict[str, str] | None = None) -> str:
@@ -92,7 +96,11 @@ def paginate(
     max_pages: int = 100_000,
 ) -> list[list[dict[str, Any]]]:
     """Drive the page loop; returns row batches. Stop conditions mirror the
-    reference: meta.last_page reached, links.next absent, or empty data."""
+    reference: meta.last_page reached, links.next absent, or empty data.
+    An HTTP error status or a body that is not JSON stops the loop with a
+    logged warning (the reference's "≥400 → log + stop"); any other fetch
+    failure propagates, so a transport bug never publishes a silently
+    truncated feed."""
     pages = []
     page = 1
     while page <= max_pages:
@@ -100,13 +108,15 @@ def paginate(
         url = f"{base_url}{sep}{page_param}={page}&{size_param}={page_size}"
         try:
             body = fetch(url)
-        except Exception:
-            break  # ≥400 → stop (reference logs + returns null)
+        except urllib.error.HTTPError as e:
+            log.warning("REST page %s returned HTTP %s; stopping pagination", url, e.code)
+            break
         if not body:
             break
         try:
             payload = json.loads(body)
-        except json.JSONDecodeError:
+        except json.JSONDecodeError as e:
+            log.warning("REST page %s is not JSON (%s); stopping pagination", url, e)
             break
         data = payload.get("data")
         if not isinstance(data, list) or not data:

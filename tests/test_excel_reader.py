@@ -5,7 +5,12 @@ import zipfile
 
 import pytest
 
-from etl_edi_data_scrapper_spark.sources.files import read_excel
+from etl_edi_data_scrapper_spark.sources.files import (
+    _grid_to_table,
+    _parse_cell_ref,
+    normalize_excel_range,
+    read_excel,
+)
 
 
 def make_xlsx(path, sheets: dict[str, list[list]], shared_strings=True):
@@ -17,8 +22,16 @@ def make_xlsx(path, sheets: dict[str, list[list]], shared_strings=True):
 
     strings: list[str] = []
 
+    def col_letters(c):
+        letters = ""
+        while c >= 0:
+            c, rem = divmod(c, 26)
+            letters = chr(ord("A") + rem) + letters
+            c -= 1
+        return letters
+
     def cell_xml(r, c, v):
-        ref = f"{chr(ord('A') + c)}{r + 1}"
+        ref = f"{col_letters(c)}{r + 1}"
         if v is None:
             return ""
         if isinstance(v, (int, float)):
@@ -99,6 +112,39 @@ def test_xlsx_sheet_and_range(spark, tmp_path):
     df = read_excel(spark, str(p), range_="Data!A2:B")
     assert df.columns == ["UPC", "Qty"]
     assert {tuple(r) for r in df.collect()} == {("1", "2"), ("3", "4")}
+
+
+@pytest.mark.parametrize(
+    "ref,expect",
+    [
+        ("A1", (0, 0)),
+        ("Z9", (8, 25)),
+        ("AA10", (9, 26)),
+        ("XFD1048576", (1048575, 16383)),  # the last cell of an XLSX sheet
+        ("D", (0, 3)),  # letters-only: an open range end, row 0
+        ("b3", (2, 1)),
+    ],
+)
+def test_parse_cell_ref(ref, expect):
+    assert _parse_cell_ref(ref) == expect
+
+
+def test_sheet_range_filter_boxes_the_grid():
+    grid = {r: {c: f"{r},{c}" for c in range(6)} for r in range(5)}
+    _sheet, cells = normalize_excel_range("Sheet!B2:D", max_row=2**20)
+    header, rows = _grid_to_table(grid, cells)
+    assert header == ["1,1", "1,2", "1,3"]
+    assert rows == [[f"{r},{c}" for c in (1, 2, 3)] for r in (2, 3, 4)]
+
+
+def test_xlsx_columns_past_z(spark, tmp_path):
+    p = tmp_path / "wide.xlsx"
+    header = [f"c{i}" for i in range(30)]
+    make_xlsx(p, {"S": [header, [f"v{i}" for i in range(30)]]})
+    df = read_excel(spark, str(p))
+    assert df.columns == header
+    assert tuple(df.collect()[0]) == tuple(f"v{i}" for i in range(30))
+    assert read_excel(spark, str(p), range_="Z1:AB").columns == ["c25", "c26", "c27"]
 
 
 def test_xlsx_multi_file_union(spark, tmp_path):
@@ -649,3 +695,19 @@ def test_sheet_qualified_range_on_sheetless_format_raises(spark, tmp_path):
     h.write_text("<html><body><table><tr><th>k</th></tr><tr><td>v</td></tr></table></body></html>")
     with pytest.raises(ValueError, match="sheetless"):
         read_excel(spark, str(h), range_="Nope!A1:B2")
+
+
+def test_is_ods_zip_false_only_for_zip_and_io_errors(tmp_path, monkeypatch):
+    from etl_edi_data_scrapper_spark.sources import ods
+
+    p = tmp_path / "broken.ods"
+    p.write_bytes(b"PK\x03\x04" + b"\x00" * 64)
+    assert ods.is_ods_zip(str(p)) is False
+    assert ods.is_ods_zip(str(tmp_path / "missing.ods")) is False
+
+    def bug(*args, **kwargs):
+        raise RuntimeError("reader bug")
+
+    monkeypatch.setattr(ods.zipfile, "ZipFile", bug)
+    with pytest.raises(RuntimeError, match="reader bug"):
+        ods.is_ods_zip(str(p))

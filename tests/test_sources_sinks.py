@@ -28,6 +28,82 @@ def test_csv_drops_malformed_rows(spark, tmp_path):
     assert df.columns == ["upc", "qty", "price"]
 
 
+CSV_HEADER_CASES = {
+    "case_insensitive_duplicates": b"id,Name,NAME,name,x\n1,a,b,c,d\n2,e,f,g,h\n",
+    "blank_names": b"a,,b, ,\n1,2,3,4,5\n",
+    "quoted_comma": b'"last, first",qty\n"Doe, J",3\n',
+    "escaped_quote": b'"say \\"hi\\"",b\n1,2\n',
+    "univocity_dialect": b'x\\y,"q""r","a"b\n1,2,3\n',
+    "cyrillic": "Артикул,Цена,артикул\n1,2,3\n".encode(),
+    "utf8_bom": b"\xef\xbb\xbfupc,qty\n1,2\n",
+    "utf8_bom_then_blank_line": b"\xef\xbb\xbf\nupc,qty\n1,2\n",
+    "crlf": b"upc,qty\r\n1,2\r\n3,4\r\n",
+    "cr_only": b"upc,qty\r1,2\r3,4\r",
+    "leading_blank_lines": b"\n  \n\t\r\n\r\nupc,qty\n1,2\nbad\n",
+    "long_blank_prefix": b"   \n" * 20000 + b"upc,qty\n1,2\n",
+    "invalid_utf8": b"up\xffc,q\xe2\x82ty,\xc0\xafx,\xed\xa0\x80y,\xf4\x90\x80\x80\n1,2,3,4,5\n",
+    "header_only": b"upc,qty\n",
+    "empty": b"",
+}
+
+
+@pytest.mark.parametrize("case", sorted(CSV_HEADER_CASES))
+def test_csv_driver_header_matches_spark_inference(spark, tmp_path, case):
+    p = tmp_path / "feed.csv"
+    p.write_bytes(CSV_HEADER_CASES[case])
+    df = fmod.read_csv(spark, str(p))
+    assert df.schema == spark.read.option("header", True).csv(str(p)).schema
+    inferred = (
+        spark.read.option("header", True).option("mode", "DROPMALFORMED").csv(str(p))
+    )
+    assert df.collect() == inferred.collect()
+
+
+def test_csv_driver_header_follows_case_sensitive_session(spark, tmp_path):
+    p = tmp_path / "feed.csv"
+    p.write_bytes(CSV_HEADER_CASES["case_insensitive_duplicates"])
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        names = fmod.read_csv(spark, str(p)).columns
+        assert names == spark.read.option("header", True).csv(str(p)).columns
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+    assert names == ["id", "Name", "NAME", "name", "x"]
+
+
+def test_csv_local_file_read_starts_no_spark_job(spark, tmp_path):
+    p = tmp_path / "feed.csv"
+    p.write_text("upc,qty,Qty\n1,2,3\n")
+    sc = spark.sparkContext
+    sc.setJobGroup("csv-driver-header", "read_csv only")
+    try:
+        df = fmod.read_csv(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert df.columns == ["upc", "qty1", "Qty2"]
+    assert list(sc.statusTracker().getJobIdsForGroup("csv-driver-header")) == []
+
+
+def test_csv_glob_and_compressed_file_keep_spark_inference(spark, tmp_path):
+    import gzip
+
+    (tmp_path / "a.csv").write_text("upc,qty\n1,2\n")
+    df = fmod.read_csv(spark, str(tmp_path / "*.csv"))
+    assert df.columns == ["upc", "qty"] and df.count() == 1
+    gz = tmp_path / "feed.csv.gz"
+    gz.write_bytes(gzip.compress(b"upc,qty\n1,2\n"))
+    df = fmod.read_csv(spark, str(gz))
+    assert df.columns == ["upc", "qty"] and [tuple(r) for r in df.collect()] == [("1", "2")]
+
+
+def test_session_takes_serialized_shuffle_writer(spark):
+    # bypass merge would open one file per reduce partition in every map task
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.shuffle.sort.bypassMergeThreshold") == "0"
+
+
 # --- Morris XML ---------------------------------------------------------------
 
 
@@ -247,6 +323,35 @@ def test_paginate_skips_non_dict_rows():
 
     pages = paginate("u", fetch)
     assert pages == [[{"a": 1}]]
+
+
+@pytest.mark.parametrize("failure", ["http_500", "not_json"])
+def test_paginate_bad_page_stops_with_log(caplog, failure):
+    import urllib.error
+
+    ok = fake_api(3, 2)
+
+    def fetch(url):
+        if "page=2" not in url:
+            return ok(url)
+        if failure == "http_500":
+            raise urllib.error.HTTPError(url, 500, "Server Error", {}, None)
+        return "<html>maintenance</html>"
+
+    with caplog.at_level("WARNING", logger="etl_edi_data_scrapper_spark.sources.rest"):
+        pages = paginate("u", fetch)
+    assert len(pages) == 1
+    expect = "HTTP 500" if failure == "http_500" else "is not JSON"
+    assert any(expect in r.getMessage() and "page=2" in r.getMessage()
+               for r in caplog.records)
+
+
+def test_paginate_transport_bug_propagates():
+    def fetch(url):
+        raise ValueError("bad header value")
+
+    with pytest.raises(ValueError, match="bad header value"):
+        paginate("u", fetch)
 
 
 def test_read_rest_api_dataframe(spark, tmp_path):
