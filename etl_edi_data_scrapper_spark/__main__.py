@@ -460,11 +460,10 @@ def main(argv: list[str] | None = None, engine=None) -> int:
     psi = sub.add_parser(
         "store-info",
         help="identify and audit a persisted store (ivfpq-index, "
-        "url-store, bloom-store, neardup-store, stream-checkpoint): "
-        "prints the sidecar(s) + row/file counts as one JSON object; "
-        "refuses unknown layouts",
+        "ivf-index, neardup-store, fit artifacts): prints the sidecar(s) "
+        "+ row/file counts as one JSON object; refuses unknown layouts",
     )
-    psi.add_argument("--store", required=True, help="store/checkpoint dir")
+    psi.add_argument("--store", required=True, help="store dir or model file")
 
     pn.add_argument(
         "--residual",

@@ -1,13 +1,11 @@
 """Tiny text-file I/O through the Hadoop FileSystem API.
 
 Sidecar files that live NEXT TO Spark-written data (an index's
-`_meta.json`, a stream's `__incarnation__` stamp) must share the data's
-filesystem: driver-local ``open()`` silently diverges the moment the
-path is ``hdfs://`` / ``s3a://`` — the sidecar lands on the driver's
-local disk while the data goes remote, decoupling their lifecycles
-(r11 review: a recreated remote checkpoint dir kept its stale local
-stamp, resurrecting the exact epoch-0 blindness the stamp exists to
-prevent). These helpers route through ``Path.getFileSystem`` (the same
+`_meta.json`, a DSIR table's kind marker) and the JSON model files must
+share the data's filesystem: driver-local ``open()`` silently diverges
+the moment the path is ``hdfs://`` / ``s3a://`` — the sidecar lands on
+the driver's local disk while the data goes remote, decoupling their
+lifecycles. These helpers route through ``Path.getFileSystem`` (the same
 py4j surface `streaming/neardup_stream.py` and `operators/rollup.py`
 already use for renames), so local paths behave exactly as before and
 remote paths follow the data.
@@ -16,8 +14,7 @@ remote paths follow the data.
 atomic per filesystem; the delete+rename pair is the standard HDFS
 approximation (rename refuses an existing destination there). A crash
 between the two leaves NO sidecar — for every caller here the missing-
-file direction is the safe one (a stamp regenerates as a fresh
-incarnation, which screens MORE; a missing meta is a loud/default
+file direction is the safe one (a missing meta is a loud/default
 read, never a stale one).
 """
 
@@ -46,12 +43,12 @@ def read_text(spark, path: str) -> str | None:
 def write_text_atomic(spark, path: str, text: str) -> None:
     """Write-then-rename so a crash mid-write never leaves a partial
     file readable at ``path`` (a missing file must be safer for the
-    caller than a truncated one — true for stamps and meta sidecars)."""
+    caller than a truncated one — true for meta sidecars and model files)."""
     import uuid
 
     fs, dst = _fs(spark, path)
-    # uuid-suffixed tmp: two concurrent writers (e.g. two streams racing
-    # an incarnation stamp on one checkpoint dir) must not share a tmp
+    # uuid-suffixed tmp: two concurrent writers (e.g. two appenders
+    # racing one index's `_meta.json`) must not share a tmp
     # path, or one can rename the other's half-written file. Unique tmps
     # guarantee whatever lands at ``path`` is a COMPLETE file; they do
     # NOT serialize the race itself — Hadoop rename refuses an existing

@@ -77,32 +77,6 @@ def bloom_table(keys: DataFrame, key_col: str, m: int, k: int) -> DataFrame:
     return stacked.distinct()
 
 
-def flag_maybe_seen(
-    df: DataFrame,
-    bloom: DataFrame,
-    key_col: str,
-    m: int,
-    k: int,
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Add ``out_col``: true iff ALL k positions of ``key_col`` are set in
-    ``bloom`` (false ⇒ definitely never inserted; true ⇒ inserted OR a
-    false positive at the textbook rate). Compiles to k broadcast hash
-    joins on the bounded position table — ``df`` itself never shuffles."""
-    # materialize the (≤ m rows) position table once: without this each
-    # of the k joins embeds the full bloom-construction pipeline (distinct
-    # shuffle included) in its own broadcast build
-    bloom = bloom.localCheckpoint(eager=False)
-    # hash ONCE before the join chain: each join level would otherwise
-    # recompute md5(key) for its own position column (measured ~2x on the
-    # contamination probe at 30x scale)
-    w1, w2 = bloom_words(F.col(key_col))
-    out = df.withColumn("__bw1", w1).withColumn("__bw2", w2)
-    return _flag_from_words(out, bloom, "__bw1", "__bw2", m, k, out_col).drop(
-        "__bw1", "__bw2"
-    )
-
-
 def _flag_from_words(
     df: DataFrame,
     bloom: DataFrame,
@@ -112,8 +86,12 @@ def _flag_from_words(
     k: int,
     out_col: str = "maybe_seen",
 ) -> DataFrame:
-    """k-join probe given precomputed Carter-Wegman words. ``bloom`` must
-    already be materialization-safe (the public wrappers localCheckpoint
+    """k-join probe given precomputed Carter-Wegman words (`bloom_words`):
+    add ``out_col``, true iff ALL k positions are set in ``bloom`` (false
+    ⇒ definitely never inserted; true ⇒ inserted OR a false positive at
+    the textbook rate). Compiles to k broadcast hash joins on the bounded
+    position table — ``df`` itself never shuffles. ``bloom`` must already
+    be materialization-safe (`bloom_span_contamination` localCheckpoints
     it). Callers that only need flags/counts should project away the raw
     key BEFORE calling — the join chain then carries just the two longs."""
     out = df

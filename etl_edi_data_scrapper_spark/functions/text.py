@@ -35,10 +35,6 @@ def tokens(c: Column | str) -> Column:
     return F.split(c, " ")
 
 
-def token_count(c: Column | str) -> Column:
-    return F.size(tokens(c))
-
-
 def stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
     """# tokens found in a dictionary — the building block for both quality
     scoring and language ID. array_contains-free: filter + size (codegen'd).
@@ -281,75 +277,6 @@ def pii_counts(c: Column | str) -> dict[str, Column]:
         kind: F.regexp_count(c, F.lit(pattern)).cast("long")
         for kind, (pattern, _tag) in PII_PATTERNS.items()
     }
-
-
-# Credit-card candidates: 13-19 digits with optional single space/dash
-# separators, word-bounded. RE2/Java-parity syntax (no lookaround) like
-# PII_PATTERNS. Detection alone false-positives on any long digit run —
-# the Luhn checksum cut below is what makes the redaction surgical.
-CC_CANDIDATE_RE = r"\b\d(?:[ -]?\d){12,18}\b"
-CC_TAG = "[CARD]"
-
-
-def _luhn_sum(digits: Column) -> Column:
-    """Luhn checksum over a digit-only string: from the RIGHT, double
-    every second digit (subtracting 9 when it exceeds 9) and sum. Valid
-    numbers sum to 0 mod 10. A per-position fold — candidates are ≤ 19
-    chars, so the HOF re-evaluation cost is irrelevant here."""
-    rev = F.reverse(digits)
-    return F.aggregate(
-        F.sequence(F.lit(1), F.length(rev)),
-        F.lit(0),
-        lambda acc, i: acc
-        + F.when(
-            i % 2 == 0,
-            F.when(
-                rev.substr(i, F.lit(1)).cast("int") * 2 > 9,
-                rev.substr(i, F.lit(1)).cast("int") * 2 - 9,
-            ).otherwise(rev.substr(i, F.lit(1)).cast("int") * 2),
-        ).otherwise(rev.substr(i, F.lit(1)).cast("int")),
-    )
-
-
-def credit_card_matches(c: Column | str) -> Column:
-    """Array of the Luhn-VALID card-number candidates in the text (the
-    validation is what separates a card redactor from a digit-run
-    redactor — '4111 1111 1111 1112' is a candidate but not a card).
-    Pure Column expr: regexp_extract_all → per-candidate checksum fold."""
-    c = F.col(c) if isinstance(c, str) else c
-    cands = F.regexp_extract_all(c, F.lit(CC_CANDIDATE_RE), 0)
-    return F.filter(
-        cands,
-        lambda x: _luhn_sum(F.translate(x, " -", "")) % 10 == 0,
-    )
-
-
-def scrub_credit_cards(c: Column | str) -> Column:
-    """Replace every Luhn-valid card occurrence with ``[CARD]``,
-    POSITION-AWARE: the text is split on the candidate pattern and
-    rebuilt segment-by-segment, substituting the tag only at the match
-    position when that candidate passes the checksum. (A literal
-    global replace of each validated match — the previous form — would
-    also rewrite the same digits where they appear as a substring of a
-    longer, unmatched digit run elsewhere in the document.) ``split``
-    and ``regexp_extract_all`` run the identical regex, so segment i
-    is exactly the text between candidate i−1 and candidate i."""
-    c = F.col(c) if isinstance(c, str) else c
-    segs = F.split(c, CC_CANDIDATE_RE)  # n+1 segments around n candidates
-    cands = F.regexp_extract_all(c, F.lit(CC_CANDIDATE_RE), 0)
-    sub = lambda x: F.when(  # noqa: E731 - local expr builder
-        _luhn_sum(F.translate(x, " -", "")) % 10 == 0, F.lit(CC_TAG)
-    ).otherwise(x)
-    # guard the empty case explicitly: sequence(1, 0) DESCENDS in Spark
-    return F.when(F.size(cands) == 0, c).otherwise(
-        F.aggregate(
-            F.sequence(F.lit(1), F.size(cands)),
-            F.element_at(segs, 1),
-            lambda acc, i: F.concat(
-                acc, sub(F.element_at(cands, i)), F.element_at(segs, i + 1)
-            ),
-        )
-    )
 
 
 def normalize_text(c: Column | str) -> Column:

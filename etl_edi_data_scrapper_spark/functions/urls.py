@@ -108,8 +108,8 @@ def canonicalize_url(
     expression (a null-gated Arrow pandas_udf that only ever sees the
     non-ASCII minority; ASCII corpora produce byte-identical keys either
     way, pinned in tests) — and because flipping it on changes the
-    canonical keys of IDN rows: a URL-dedup STORE built without it must
-    be rebuilt (see streaming/url_stream.py)."""
+    canonical keys of IDN rows: keys persisted without it are not
+    comparable with keys computed with it."""
     c = F.col(c) if isinstance(c, str) else c
     u = F.regexp_replace(F.trim(c), "#.*$", "")  # 1. fragment off
     head = F.lower(_head(u))  # 2. lowercase scheme://authority

@@ -166,44 +166,6 @@ def merge_daily_rollup_idempotent(
     ).partitionBy("day", "batch_id").parquet(rollup_dir)
 
 
-def run_rollup_stream(
-    stream: DataFrame,
-    rollup_dir: str,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-    keys: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-):
-    """The DEFAULT serve-loop rollup wiring (r7): a streaming event frame
-    → ``foreachBatch(merge_daily_rollup_idempotent)`` with the stream's
-    REAL batch id, checkpointed — so a crash anywhere between the partial
-    write and the checkpoint commit replays the batch onto its own
-    (day, batch_id) partitions and can never double-count. Read the
-    maintained table with :func:`read_rollup`; fold history offline with
-    ``rollup-compact``. Returns the started StreamingQuery.
-
-    This is the exactly-once counterpart of the bare
-    ``foreachBatch(lambda df, _: merge_daily_rollup(...))`` wiring, which
-    is at-least-once on replay and should only be used behind an upstream
-    exactly-once sink."""
-    spark = stream.sparkSession
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: merge_daily_rollup_idempotent(
-                spark,
-                rollup_dir,
-                df,
-                bid,
-                ts_col=ts_col,
-                keys=keys,
-                value_col=value_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def read_rollup(
     spark: SparkSession, rollup_dir: str, keys: Sequence[str] = ("event_type",)
 ) -> DataFrame:

@@ -8,8 +8,29 @@ spark-submit) and AQE handles partition coalescing / skew at runtime.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_MAX_DRIVER_MEMORY_MB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset: half
+    of ``MemTotal`` in ``/proc/meminfo`` (the text is read when not given),
+    never above 24g. A heap sized past the host's RAM is never refused at
+    start-up; it fails later, when the OS kills the JVM. Where there is no
+    ``/proc/meminfo`` (or no ``MemTotal`` line in it) the default is 24g."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo", encoding="ascii") as f:
+                meminfo = f.read()
+        except FileNotFoundError:
+            meminfo = ""
+    total = re.search(r"^MemTotal:\s+(\d+)\s+kB", meminfo, re.MULTILINE)
+    if total is None:
+        return f"{_MAX_DRIVER_MEMORY_MB // 1024}g"
+    return f"{min(int(total.group(1)) // 2048, _MAX_DRIVER_MEMORY_MB)}m"
 
 
 def get_spark(
@@ -84,7 +105,10 @@ def get_spark(
         # holds several whole-stage-codegen units); evictions force Janino
         # recompiles of multi-hundred-KB classes on re-run
         .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # ParallelGC for the single-JVM local profile: G1 (the JDK 17
         # default) showed random 10-30x whole-query slowdowns on this
         # many-small-queries workload — all cores busy, identical plans, no

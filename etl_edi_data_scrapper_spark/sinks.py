@@ -118,83 +118,3 @@ def idempotent_batch_writer(base_path: str, partition_source: str | None = None)
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return write
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    n_files: int = 32,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet range-CLUSTERED on ``cluster_by``: global range
-    partitioning (sampled split points, no total sort) + an in-partition
-    sort, so each output file owns a DISJOINT interval of the cluster
-    key and every row group's parquet min/max stats are tight.
-
-    This is the data-layout lever for 100 TB scans: a selective predicate
-    on the cluster key then skips whole files/row groups at planning/scan
-    time (parquet stats pushdown) instead of reading and filtering —
-    typically the difference between touching 1/N of the table and all of
-    it. Equivalent in intent to Delta/Iceberg OPTIMIZE ... ZORDER for the
-    single-key case, expressed with plain Spark primitives:
-    ``repartitionByRange`` samples the key distribution (one pass, no
-    global sort barrier) and ``sortWithinPartitions`` orders rows inside
-    each file so row-group stats stay tight too.
-
-    ``n_files`` sizes the output: pick ceil(table_bytes / 128 MB) at
-    scale. Combine with ``partition_by`` for coarse directory pruning on a
-    second, low-cardinality key (date, tenant) — directory pruning first,
-    stats skipping within.
-    """
-    if not cluster_by:
-        raise ValueError("cluster_by must name at least one column")
-    out = df.repartitionByRange(n_files, *[F.col(c) for c in cluster_by])
-    # partition columns lead the sort: the file writer requires ordering on
-    # partition_by and would otherwise insert its own sort, voiding the
-    # documented tight-row-group contract on the cluster key
-    sort_cols = [*(partition_by or ()), *cluster_by]
-    out = out.sortWithinPartitions(*[F.col(c) for c in sort_cols])
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def zorder_value(a, b, bits: int = 16):
-    """Interleave the low ``bits`` bits of two non-negative int columns
-    into one Z-order (Morton) key: locality in EITHER dimension maps to
-    locality in the key, so range-clustering on it keeps parquet min/max
-    stats selective for predicates on BOTH columns — the two-key
-    generalization of single-key clustering (Delta/Iceberg ZORDER). Pure
-    JVM bit arithmetic, no UDF. Columns are clamped into [0, 2^bits).
-    """
-    a = F.least(F.greatest(F.col(a) if isinstance(a, str) else a, F.lit(0)), F.lit((1 << bits) - 1)).cast("long")
-    b = F.least(F.greatest(F.col(b) if isinstance(b, str) else b, F.lit(0)), F.lit((1 << bits) - 1)).cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i)
-            + F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        )
-    return z
-
-
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    n_files: int = 32,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Two-key layout optimization: range-cluster on the Z-order key of
-    ``cols`` so selective predicates on EITHER column skip most files via
-    parquet stats. The Z column itself is dropped from the output —
-    it only steers the layout."""
-    zcol = "__z"
-    out = df.withColumn(zcol, zorder_value(cols[0], cols[1], bits))
-    out = out.repartitionByRange(n_files, F.col(zcol)).sortWithinPartitions(F.col(zcol))
-    out.drop(zcol).write.mode(mode).parquet(path)

@@ -30,7 +30,6 @@ import re
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
@@ -528,8 +527,3 @@ def read_excel(spark: SparkSession, source: str, range_: str | None = None) -> D
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
     return out
-
-
-def pad_and_trim_header_rows(df: DataFrame) -> DataFrame:
-    """Sheets/Excel cell hygiene: trim strings (header trimmed at read)."""
-    return df.select(*[F.trim(F.col(c)).alias(c.strip()) for c in df.columns])

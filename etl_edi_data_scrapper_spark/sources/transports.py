@@ -17,18 +17,11 @@ the lib) and a local directory (tests). Structured Streaming's
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import tempfile
 import urllib.request
 from dataclasses import dataclass
 from typing import Protocol
-
-_URL_RE = re.compile(r"^https?://", re.IGNORECASE)
-
-
-def is_url(source: str) -> bool:
-    return bool(_URL_RE.match(source))
 
 
 def http_fetch(url: str, staging_dir: str | None = None) -> str:

@@ -1,16 +1,12 @@
 """Operational audit for persisted store layouts (r12 verdict #7).
 
-Three store families grew sidecar conventions — the URL dedup store's
-``_canon_meta.json`` (canonicalization regime), streaming checkpoints'
-``__incarnation__`` stamp (replay-epoch fencing), and the persisted
-ANN index's ``_meta.json`` (encoding flags), and the r14 fit artifacts
-(classifier / language models, DSIR ratio tables, unigram / bigram
-reference LMs) — each with its own ad-hoc
-reader. ``describe_store`` is the one audit surface over all of them:
+The persisted ANN indexes (``_meta.json`` encoding flags), the near-dup
+store and the r14 fit artifacts (classifier / language models, DSIR ratio
+tables, unigram / bigram reference LMs) each carry their own layout
+contract. ``describe_store`` is the one audit surface over all of them:
 it identifies the layout, reads the sidecar(s), and counts rows/files,
-so operational drift (a legacy regime, a stranded compaction, a
-foreign incarnation) is visible from the CLI (``store-info``) before a
-mismatched batch refuses at 2 a.m. Unknown layouts REFUSE (a crisp
+so operational drift (a stranded compaction, a drifted quantizer) is
+visible from the CLI (``store-info``). Unknown layouts REFUSE (a crisp
 error beats a half-parsed report that normalizes guessing).
 
 Detection is by the stores' own contracts, not path names:
@@ -18,18 +14,16 @@ Detection is by the stores' own contracts, not path names:
 - ``ivfpq-index``: `_meta.json` beside `centroids/` + `codes/` +
   `codebooks/` (`save_ivfpq_index` layout). Extras: cell count, codes
   per cell min/max, leftover compaction dirs (`codes__precompact` /
-  `codes__compacting` — a crashed `ann-compact`).
-- ``url-store``: parquet with a `canonical_url` column
-  (`screen_batch_against_url_store`). Extras: the idna regime
-  (legacy = absent sidecar = idna False by construction), epoch range.
-- ``bloom-store``: parquet with `pos` + `incarnation` columns
-  (`screen_batch_against_bloom_store`). Extras: incarnations present,
-  epoch range (a foreign incarnation in the list is EXPECTED history,
-  not corruption — the screen fences by stamp).
+  `codes__compacting` — a crashed `ann-compact`), quantizer drift.
+- ``classifier-model`` / ``lang-classifier-model``: a JSON model file
+  with its ``kind``.
+- ``dsir-ratios``: `_meta.json` kind + `ratios/`.
+- ``bigram-lm``: `uni/` + `big/` count tables; ``unigram-lm``: parquet
+  of exactly (`term`, `cnt`).
+- ``ivf-index``: `centroids/` + `assigned/` and no `codes/`
+  (`save_ivf_index` layout).
 - ``neardup-store``: parquet with `band`/`band_key`/doc-id columns
-  (`screen_batch_against_store`). Extras: band count, docs.
-- ``stream-checkpoint``: a directory carrying the `__incarnation__`
-  stamp (plus Spark's own offsets/commits dirs).
+  (`dedup_batch_against_store`). Extras: band count, docs.
 
 Everything reads through the Hadoop FileSystem API (the `fsutil`
 discipline) so `hdfs://`/`s3a://` stores audit identically to local
@@ -234,65 +228,18 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
         out["data_files"] = _data_files(spark, f"{path}/assigned")
         return out
 
-    # --- stream checkpoint: incarnation stamp --------------------------
-    stamp = fsutil.read_text(spark, f"{path}/__incarnation__")
-    df = _try_parquet(spark, path)
-    if stamp is not None and df is None:
-        out["type"] = "stream-checkpoint"
-        out["incarnation"] = stamp.strip()
-        out["has_offsets"] = _exists(spark, f"{path}/offsets")
-        out["has_commits"] = _exists(spark, f"{path}/commits")
-        return out
-
     # --- parquet-backed stores, told apart by their contract columns ---
-    canon_meta = _read_json_sidecar(spark, f"{path}/_canon_meta.json")
-    if df is None and canon_meta is None:
+    df = _try_parquet(spark, path)
+    if df is None:
         raise ValueError(
             f"{path!r} matches no known store layout (ivfpq-index, "
-            "ivf-index, url-store, bloom-store, neardup-store, "
-            "stream-checkpoint, classifier-model, lang-classifier-model, "
-            "dsir-ratios, unigram-lm, bigram-lm) — refusing to guess."
+            "ivf-index, neardup-store, classifier-model, "
+            "lang-classifier-model, dsir-ratios, unigram-lm, bigram-lm) "
+            "— refusing to guess."
         )
-    cols = set(df.columns) if df is not None else set()
+    cols = set(df.columns)
 
     from pyspark.sql import functions as F
-
-    if canon_meta is not None or "canonical_url" in cols:
-        out["type"] = "url-store"
-        out["canon_meta"] = canon_meta if canon_meta is not None else {
-            "idna": False,
-            "note": "legacy store (no _canon_meta.json) = idna=False "
-            "by construction",
-        }
-        if df is not None:
-            out["rows"] = df.count()
-            if "epoch" in cols:
-                rng = df.agg(
-                    F.min("epoch").alias("lo"), F.max("epoch").alias("hi")
-                ).first()
-                out["epochs"] = {"min": rng["lo"], "max": rng["hi"]}
-        else:
-            out["rows"] = 0
-        out["data_files"] = _data_files(spark, path)
-        return out
-
-    if {"pos", "incarnation"} <= cols:
-        out["type"] = "bloom-store"
-        out["rows"] = df.count()
-        incs = [
-            r["incarnation"]
-            for r in df.select("incarnation").distinct().collect()
-        ]
-        out["incarnations"] = sorted(
-            ("<legacy/null>" if i is None else i) for i in incs
-        )
-        if "epoch" in cols:
-            rng = df.agg(
-                F.min("epoch").alias("lo"), F.max("epoch").alias("hi")
-            ).first()
-            out["epochs"] = {"min": rng["lo"], "max": rng["hi"]}
-        out["data_files"] = _data_files(spark, path)
-        return out
 
     if {"band", "band_key"} <= cols:
         out["type"] = "neardup-store"

@@ -59,14 +59,17 @@ def _ship_package(spark: SparkSession) -> None:
     Needed only by queries that serialize module-level functions to workers
     (the REST Python DataSource, the multimodal mapInPandas kernel) —
     everything else is pure JVM expressions. The zip is built fresh once per
-    PROCESS into a private temp file (a fixed /tmp name could ship stale
-    code after an edit, race a concurrent run's half-written zip, or be
-    planted by another user); idempotence per session is keyed by
-    applicationId (id() of a GC'd context can be reused)."""
+    PROCESS into a private temp file, removed at process exit (a fixed /tmp
+    name could ship stale code after an edit, race a concurrent run's
+    half-written zip, or be planted by another user); idempotence per
+    session is keyed by applicationId (id() of a GC'd context can be
+    reused)."""
     key = spark.sparkContext.applicationId
     if key in _SHIPPED_SESSIONS:
         return
+    import atexit
     import os
+    import pathlib
     import tempfile
     import zipfile
 
@@ -86,6 +89,7 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
         _PKG_ZIP_PATH = zip_path
+        atexit.register(pathlib.Path(zip_path).unlink, missing_ok=True)
     spark.sparkContext.addPyFile(_PKG_ZIP_PATH)
     _SHIPPED_SESSIONS.add(key)
 

@@ -14,6 +14,21 @@ def _model_positions(key: str, m: int, k: int):
     return [((w1 + j * w2) % 2**32) % m for j in range(1, k + 1)]
 
 
+def _flag(df, bloom, m, k):
+    """The probe `bloom_span_contamination` runs: materialize the bounded
+    table once, hash each key once with `bloom_words`, then the k-join
+    chain of `_flag_from_words` over the two words."""
+    from etl_edi_data_scrapper_spark.functions.bloom import (
+        _flag_from_words,
+        bloom_words,
+    )
+
+    w1, w2 = bloom_words(F.col("key"))
+    words = df.withColumn("__w1", w1).withColumn("__w2", w2)
+    bloom = bloom.localCheckpoint(eager=False)
+    return _flag_from_words(words, bloom, "__w1", "__w2", m, k)
+
+
 def test_positions_match_python_model(spark):
     from etl_edi_data_scrapper_spark.functions.bloom import bloom_positions
 
@@ -27,10 +42,7 @@ def test_positions_match_python_model(spark):
 
 
 def test_no_false_negatives_and_bounded_table(spark):
-    from etl_edi_data_scrapper_spark.functions.bloom import (
-        bloom_table,
-        flag_maybe_seen,
-    )
+    from etl_edi_data_scrapper_spark.functions.bloom import bloom_table
 
     m, k = 512, 3  # deliberately tiny: the table bound must bind
     rng = random.Random(3)
@@ -38,15 +50,12 @@ def test_no_false_negatives_and_bounded_table(spark):
     keys = spark.createDataFrame(inserted, ["key"])
     bloom = bloom_table(keys, "key", m, k)
     assert bloom.count() <= m  # the whole point: bounded however many keys
-    flagged = flag_maybe_seen(keys, bloom, "key", m, k)
+    flagged = _flag(keys, bloom, m, k)
     assert flagged.filter(~F.col("maybe_seen")).count() == 0  # FN impossible
 
 
 def test_false_positive_rate_near_textbook(spark):
-    from etl_edi_data_scrapper_spark.functions.bloom import (
-        bloom_table,
-        flag_maybe_seen,
-    )
+    from etl_edi_data_scrapper_spark.functions.bloom import bloom_table
     import math
 
     m, k, n = 1 << 14, 5, 1000
@@ -54,7 +63,7 @@ def test_false_positive_rate_near_textbook(spark):
     probe = spark.createDataFrame([(f"out-{i}",) for i in range(4000)], ["key"])
     bloom = bloom_table(ins, "key", m, k)
     fp = (
-        flag_maybe_seen(probe, bloom, "key", m, k)
+        _flag(probe, bloom, m, k)
         .filter(F.col("maybe_seen"))
         .count()
     )
@@ -63,15 +72,12 @@ def test_false_positive_rate_near_textbook(spark):
 
 
 def test_flag_plan_is_broadcast_joins_no_shuffle_of_probe(spark):
-    from etl_edi_data_scrapper_spark.functions.bloom import (
-        bloom_table,
-        flag_maybe_seen,
-    )
+    from etl_edi_data_scrapper_spark.functions.bloom import bloom_table
 
     keys = spark.createDataFrame([(f"k{i}",) for i in range(50)], ["key"])
     bloom = bloom_table(keys, "key", 256, 3)
     plan = (
-        flag_maybe_seen(keys, bloom, "key", 256, 3)
+        _flag(keys, bloom, 256, 3)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

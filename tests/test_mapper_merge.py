@@ -305,33 +305,6 @@ def test_keyed_merge_auto_decision_and_equivalence(spark):
         keyed_merge_auto(df, "key", {"q": "bogus"})
 
 
-def test_asof_join_backward_operator(spark):
-    from etl_edi_data_scrapper_spark.operators.asof import asof_join_backward
-
-    quotes = spark.createDataFrame(
-        [("A", "2024-01-01 10:00:00", 100.0),
-         ("A", "2024-01-01 10:00:05", 101.0),
-         ("B", "2024-01-01 10:00:02", 50.0)],
-        "sym string, ts string, px double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    trades = spark.createDataFrame(
-        [(1, "A", "2024-01-01 10:00:03"),   # after 100, before 101
-         (2, "A", "2024-01-01 10:00:05"),   # equal ts → right wins (<=)
-         (3, "B", "2024-01-01 10:00:01"),   # before any quote → null
-         (4, "B", "2024-01-01 10:00:30")],  # old quote, test tolerance below
-        "trade_id long, sym string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    out = {r.trade_id: r.px for r in asof_join_backward(
-        trades, quotes, key="sym", values=["px"]).collect()}
-    assert out == {1: 100.0, 2: 101.0, 3: None, 4: 50.0}
-
-    # 5-second tolerance: trade 4 (28 s after B's quote) loses its match
-    tol = {r.trade_id: r.px for r in asof_join_backward(
-        trades, quotes, key="sym", values=["px"], tolerance_us=5_000_000).collect()}
-    assert tol == {1: 100.0, 2: 101.0, 3: None, 4: None}
-
-
 # Names that would break or rewrite a Column-DSL or unquoted SQL builder: a
 # space, a dot, a backtick, a single quote, a backslash and Cyrillic.
 KEY = "ключ No. `k` 'q' \\"

@@ -210,10 +210,12 @@ def test_rollup_maintained_from_a_stream(spark, tmp_path):
 
 
 def test_serve_loop_rollup_crash_replay_e2e(spark, tmp_path):
-    """run_rollup_stream (the r7 default serve-loop wiring): the rollup
-    store stays exactly-once across an injected crash BETWEEN the partial
-    write and the checkpoint commit — Structured Streaming replays the
-    batch with the same batch_id onto the same (day, batch_id) partitions.
+    """The serve-loop rollup wiring (a stream's ``foreachBatch`` into
+    `merge_daily_rollup_idempotent` with the stream's real batch id): the
+    rollup store stays exactly-once across an injected crash BETWEEN the
+    partial write and the checkpoint commit — Structured Streaming replays
+    the batch with the same batch_id onto the same (day, batch_id)
+    partitions.
     """
     import json as _json
 
@@ -221,7 +223,6 @@ def test_serve_loop_rollup_crash_replay_e2e(spark, tmp_path):
         full_rollup,
         merge_daily_rollup_idempotent,
         read_rollup,
-        run_rollup_stream,
     )
 
     src = tmp_path / "events"
@@ -242,9 +243,8 @@ def test_serve_loop_rollup_crash_replay_e2e(spark, tmp_path):
     schema = "ts timestamp, event_type string, value double"
     write_batch("b1.jsonl", [(1, 1, "view", 1.5), (2, 1, "click", 2.5)])
 
-    # first run: wrap the SAME merge the helper uses, crashing after the
-    # partial lands but before the checkpoint commits — the worst-case
-    # at-least-once window
+    # first run: wrap the merge, crashing after the partial lands but
+    # before the checkpoint commits — the worst-case at-least-once window
     crashed = {"done": False}
 
     def crash_after_merge(df, bid):
@@ -268,10 +268,15 @@ def test_serve_loop_rollup_crash_replay_e2e(spark, tmp_path):
     # the partial landed but the batch is uncommitted — the dangerous half
     assert spark.read.parquet(out).count() > 0
 
-    # restart on the SAME checkpoint with the production helper: batch 0
+    # restart on the SAME checkpoint with the plain wiring: batch 0
     # replays, overwrites exactly its own partitions; then feed more data
-    q = run_rollup_stream(
-        spark.readStream.schema(schema).json(str(src)), out, ckpt
+    q = (
+        spark.readStream.schema(schema).json(str(src))
+        .writeStream.foreachBatch(
+            lambda df, bid: merge_daily_rollup_idempotent(spark, out, df, bid)
+        )
+        .option("checkpointLocation", ckpt)
+        .start()
     )
     try:
         q.processAllAvailable()

@@ -104,6 +104,19 @@ def test_session_takes_serialized_shuffle_writer(spark):
     assert conf.get("spark.shuffle.sort.bypassMergeThreshold") == "0"
 
 
+def test_driver_heap_default_fits_the_host():
+    from etl_edi_data_scrapper_spark.session import default_driver_memory
+
+    # a 16 GB host gets half its RAM, not a 24g heap it cannot back
+    meminfo = "MemTotal:       16479424 kB\nMemFree:         9000000 kB\n"
+    assert default_driver_memory(meminfo) == "8046m"
+    # never above the 24g the engine was tuned with
+    assert default_driver_memory("MemTotal:  268435456 kB\n") == "24576m"
+    # no MemTotal line (no /proc/meminfo): the old default
+    assert default_driver_memory("") == "24g"
+    assert default_driver_memory("MemFree: 100 kB\n") == "24g"
+
+
 # --- Morris XML ---------------------------------------------------------------
 
 
@@ -539,122 +552,3 @@ def test_job_stream_message_flood_trips_guard(spark, tmp_path, monkeypatch):
         q.processAllAvailable()
         q.awaitTermination(10)
     q.stop()
-
-
-def test_write_range_clustered_files_own_disjoint_key_ranges(spark, tmp_path):
-    """The layout contract itself, asserted from the parquet footers: each
-    output file's [min, max] interval of the cluster key must not overlap
-    any other file's — that disjointness is exactly what lets a selective
-    scan skip whole files via stats pushdown at 100 TB."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from etl_edi_data_scrapper_spark.sinks import write_range_clustered
-
-    df = spark.range(0, 10_000).selectExpr(
-        "CAST(pmod(id * 2654435761, 10000) AS LONG) AS k",  # scrambled order
-        "id AS payload",
-    )
-    out = str(tmp_path / "clustered")
-    write_range_clustered(df, out, cluster_by=["k"], n_files=8)
-
-    intervals = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            assert col.path_in_schema == "k" and col.statistics is not None
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        intervals.append((min(mins), max(maxs)))
-    assert len(intervals) >= 4  # range partitioner actually spread the data
-    intervals.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(intervals, intervals[1:]):
-        assert hi1 <= lo2, f"files overlap: [{lo1},{hi1}] vs [{lo2},{hi2}]"
-
-    # rows survive the relayout and a selective filter stays correct
-    back = spark.read.parquet(out)
-    assert back.count() == 10_000
-    assert back.filter("k < 100").count() == df.filter("k < 100").count()
-
-    # partition_by path: stats must stay tight WITHIN each directory too
-    out2 = str(tmp_path / "clustered_part")
-    df2 = df.selectExpr("*", "CAST(pmod(payload, 2) AS INT) AS tenant")
-    write_range_clustered(df2, out2, cluster_by=["k"], n_files=4, partition_by=["tenant"])
-    for tenant_dir in glob.glob(out2 + "/tenant=*"):
-        ivs = []
-        for f in glob.glob(tenant_dir + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            stats = [md.row_group(rg).column(0).statistics for rg in range(md.num_row_groups)]
-            ivs.append((min(s.min for s in stats), max(s.max for s in stats)))
-        assert len(ivs) >= 2
-        ivs.sort()
-        for (lo1, hi1), (lo2, hi2) in zip(ivs, ivs[1:]):
-            assert hi1 <= lo2, f"{tenant_dir}: [{lo1},{hi1}] overlaps [{lo2},{hi2}]"
-    assert spark.read.parquet(out2).count() == 10_000
-
-    import pytest
-
-    with pytest.raises(ValueError, match="cluster_by"):
-        write_range_clustered(df, out, cluster_by=[])
-
-
-def test_write_zorder_clustered_bounds_both_dimensions(spark, tmp_path):
-    """Z-order layout: with a 100x100 grid written into 16 files, every
-    file's min/max span on BOTH columns must be a fraction of the full
-    domain (single-key clustering would leave the other column's span at
-    ~full domain in every file) — that two-dimensional stats tightness is
-    what makes predicates on either column skip files."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from etl_edi_data_scrapper_spark.sinks import write_zorder_clustered
-
-    df = spark.range(0, 10_000).selectExpr(
-        "CAST(pmod(id * 2654435761, 10000) AS LONG) AS cell"
-    ).selectExpr("cell % 100 AS x", "CAST(cell / 100 AS LONG) AS y", "cell AS payload")
-    out = str(tmp_path / "zorder")
-    write_zorder_clustered(df, out, cols=("x", "y"), n_files=16, bits=8)
-
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) >= 8
-    spans = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
-        d = {}
-        for name in ("x", "y"):
-            idx = schema_names.index(name)
-            stats = [md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups)]
-            d[name] = max(s.max for s in stats) - min(s.min for s in stats)
-        spans.append(d)
-    # full domain span is 99 per dimension. Clustering on x alone leaves
-    # EVERY file's y span at ~99; the z-curve keeps the MEAN span of both
-    # dimensions well under the domain (a few files straddle a major
-    # curve boundary and wrap the minor dimension — inherent to any
-    # linearized space-filling curve, so assert the mean, not the max)
-    mean_x = sum(d["x"] for d in spans) / len(spans)
-    mean_y = sum(d["y"] for d in spans) / len(spans)
-    assert mean_x <= 60, (mean_x, spans)
-    assert mean_y <= 60, (mean_y, spans)
-
-    back = spark.read.parquet(out)
-    assert back.count() == 10_000
-    assert "__z" not in back.columns  # layout key is not part of the data
-    assert back.filter("x = 7 AND y = 3").count() == df.filter("x = 7 AND y = 3").count()
-
-    # the point of the layout: a selective predicate on EITHER key alone
-    # touches a strict subset of the files (single-key clustering would
-    # concentrate only its own key; the z-curve concentrates both)
-    total_files = len(files)
-    for pred in ("x = 7", "y = 3"):
-        touched = (
-            back.filter(pred)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-        assert 0 < touched < total_files, (pred, touched, total_files)

@@ -53,56 +53,6 @@ def test_store_info_ivfpq_index(spark, tmp_path, capsys):
     assert json.loads(out)["crashed_compaction_dirs"] == ["codes__precompact"]
 
 
-def test_store_info_url_store_and_legacy_regime(spark, tmp_path, capsys):
-    from etl_edi_data_scrapper_spark.store_info import describe_store
-    from etl_edi_data_scrapper_spark.streaming.url_stream import (
-        screen_batch_against_url_store,
-    )
-
-    store = str(tmp_path / "urls")
-    batch = spark.createDataFrame(
-        [(1, "https://example.com/a"), (2, "https://example.com/b")],
-        "doc_id long, url string",
-    )
-    screen_batch_against_url_store(spark, batch, store, 3, idna=True).collect()
-    rc, out = _cli(spark, ["store-info", "--store", store], capsys)
-    assert rc == 0
-    info = json.loads(out)
-    assert info["type"] == "url-store"
-    assert info["canon_meta"] == {"idna": True}
-    assert info["rows"] == 2
-    assert info["epochs"] == {"min": 3, "max": 3}
-
-    # legacy store: same parquet, sidecar removed -> idna=False regime
-    import os
-
-    os.remove(f"{store}/_canon_meta.json")
-    info = describe_store(spark, store)
-    assert info["canon_meta"]["idna"] is False
-    assert "legacy" in info["canon_meta"]["note"]
-
-
-def test_store_info_bloom_store(spark, tmp_path, capsys):
-    from etl_edi_data_scrapper_spark.streaming.bloom_stream import (
-        screen_batch_against_bloom_store,
-    )
-
-    store = str(tmp_path / "bloom")
-    batch = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        "doc_id long, text string",
-    )
-    screen_batch_against_bloom_store(
-        spark, batch, store, 0, incarnation="inc-a"
-    ).collect()
-    rc, out = _cli(spark, ["store-info", "--store", store], capsys)
-    assert rc == 0
-    info = json.loads(out)
-    assert info["type"] == "bloom-store"
-    assert info["incarnations"] == ["inc-a"]
-    assert info["rows"] > 0 and info["epochs"]["min"] == 0
-
-
 def test_store_info_neardup_store(spark, tmp_path, capsys):
     from etl_edi_data_scrapper_spark.streaming.neardup_stream import (
         dedup_batch_against_store,
@@ -122,19 +72,7 @@ def test_store_info_neardup_store(spark, tmp_path, capsys):
     assert info["docs"] == 2 and info["bands"] >= 1
 
 
-def test_store_info_checkpoint_and_unknown_refusal(spark, tmp_path, capsys):
-    from etl_edi_data_scrapper_spark.streaming.bloom_stream import (
-        incarnation_stamp,
-    )
-
-    ckpt = str(tmp_path / "ckpt")
-    stamp = incarnation_stamp(ckpt, spark)
-    rc, out = _cli(spark, ["store-info", "--store", ckpt], capsys)
-    assert rc == 0
-    info = json.loads(out)
-    assert info["type"] == "stream-checkpoint"
-    assert info["incarnation"] == stamp
-
+def test_store_info_unknown_and_absent_refusal(spark, tmp_path, capsys):
     # unknown parquet layout refuses rather than guesses
     other = str(tmp_path / "other")
     spark.range(3).write.parquet(other)
@@ -146,6 +84,7 @@ def test_store_info_checkpoint_and_unknown_refusal(spark, tmp_path, capsys):
         spark, ["store-info", "--store", str(tmp_path / "absent")], capsys
     )
     assert rc == 1
+
 
 def test_store_info_ivf_flat_index(spark, tmp_path, capsys):
     from etl_edi_data_scrapper_spark.functions.similarity import (

@@ -2,13 +2,12 @@
 
     job-config messages (serve loop, `streaming/consumer.run_job_stream`)
       → per-batch plan compile + keyed merge → staged row stream
-      → change-data capture (`streaming/changes.emit_changes`)
       → exactly-once parquet (`sinks.idempotent_batch_writer`)
 
-with REPLAY SAFETY asserted the hard way: the CDC sink is crashed after its
-write but before the checkpoint commit, the stream is restarted on the same
-checkpoint, and Structured Streaming replays the batch with the same
-batch_id — the batch-id-partition overwrite must leave zero duplicates.
+with REPLAY SAFETY asserted the hard way: the staged-stream sink is crashed
+after its write but before the checkpoint commit, the stream is restarted on
+the same checkpoint, and Structured Streaming replays the batch with the
+same batch_id — the batch-id-partition overwrite must leave zero duplicates.
 """
 
 import json
@@ -42,16 +41,15 @@ def _job_msg(feed_path, version):
 OUT_SCHEMA = "upc string, qty bigint, price double, supplier_id bigint, version bigint"
 
 
-def test_job_stream_cdc_idempotent_replay(spark, tmp_path):
+def test_job_stream_staged_sink_idempotent_replay(spark, tmp_path):
     from etl_edi_data_scrapper_spark.sinks import idempotent_batch_writer
     from etl_edi_data_scrapper_spark.sources.registry import read_local
-    from etl_edi_data_scrapper_spark.streaming.changes import emit_changes
     from etl_edi_data_scrapper_spark.streaming.consumer import run_job_stream
 
     msg_dir = tmp_path / "messages"
     msg_dir.mkdir()
     staged = tmp_path / "staged"
-    out_dir = tmp_path / "cdc_out"
+    out_dir = tmp_path / "out"
 
     # --- stage 1: the serve loop — job messages drive plan compiles, job
     # output rows append into the staging area (itself a stream source)
@@ -71,14 +69,11 @@ def test_job_stream_cdc_idempotent_replay(spark, tmp_path):
     )
     serve_q.processAllAvailable()
 
-    # --- stage 2: CDC over the staged stream, exactly-once parquet sink.
+    # --- stage 2: the staged stream into an exactly-once parquet sink.
     # First run: crash AFTER the sink write, BEFORE the checkpoint commit —
     # the worst-case at-least-once window.
-    def cdc_stream():
-        stream = spark.readStream.schema(OUT_SCHEMA).json(str(staged))
-        return emit_changes(
-            stream, key="upc", value_cols=["qty", "price"], seq_col="version"
-        )
+    def staged_stream():
+        return spark.readStream.schema(OUT_SCHEMA).json(str(staged))
 
     writer = idempotent_batch_writer(str(out_dir))
     crashed = {"done": False}
@@ -89,8 +84,8 @@ def test_job_stream_cdc_idempotent_replay(spark, tmp_path):
             crashed["done"] = True
             raise RuntimeError("injected crash between sink write and commit")
 
-    ckpt = str(tmp_path / "cdc_ckpt")
-    q = cdc_stream().writeStream.foreachBatch(crash_after_write).option(
+    ckpt = str(tmp_path / "sink_ckpt")
+    q = staged_stream().writeStream.foreachBatch(crash_after_write).option(
         "checkpointLocation", ckpt
     ).start()
     try:
@@ -104,23 +99,19 @@ def test_job_stream_cdc_idempotent_replay(spark, tmp_path):
 
     # restart on the SAME checkpoint: batch 0 replays with the same batch_id;
     # the partition overwrite makes the replay byte-idempotent
-    q = cdc_stream().writeStream.foreachBatch(writer).option(
+    q = staged_stream().writeStream.foreachBatch(writer).option(
         "checkpointLocation", ckpt
     ).start()
     q.processAllAvailable()
 
     replayed = spark.read.parquet(str(out_dir))
     assert replayed.count() == 3  # no duplicates from the replay
-    first = {(r.upc, r.qty, r.price, r.change) for r in replayed.collect()}
-    assert first == {
-        ("a", 5, 10.0, "insert"),
-        ("b", 2, 5.0, "insert"),
-        ("c", 9, 7.5, "insert"),
-    }
+    first = {(r.upc, r.qty, r.price, r.version) for r in replayed.collect()}
+    assert first == {("a", 5, 10.0, 1), ("b", 2, 5.0, 1), ("c", 9, 7.5, 1)}
     assert {r.batch_id for r in replayed.collect()} == {0}
 
-    # --- stage 3: a second feed version arrives — only real changes flow
-    # through (b's price moved, d is new; a and c replay unchanged)
+    # --- stage 3: a second feed version arrives — its job output flows
+    # through as one new batch (b's price moved, d is new)
     feed2 = tmp_path / "feed_v2.csv"
     _write_feed(feed2, [("a", 5, 10.0), ("b", 2, 6.0), ("c", 9, 7.5), ("d", 1, 2.0)])
     (msg_dir / "m2.jsonl").write_text(_job_msg(feed2, 2) + "\n")
@@ -131,9 +122,12 @@ def test_job_stream_cdc_idempotent_replay(spark, tmp_path):
     q.stop()
 
     final = spark.read.parquet(str(out_dir))
-    got = {(r.upc, r.qty, r.price, r.change) for r in final.collect()}
-    assert got == first | {("b", 2, 6.0, "update"), ("d", 1, 2.0, "insert")}
-    assert final.count() == 5  # still exactly once — no replays, no dupes
-    # each key appears exactly once per actual change
-    per_key = final.groupBy("upc", "change").agg(F.count(F.lit(1)).alias("n"))
+    got = {(r.upc, r.qty, r.price, r.version) for r in final.collect()}
+    assert got == first | {
+        ("a", 5, 10.0, 2), ("b", 2, 6.0, 2), ("c", 9, 7.5, 2), ("d", 1, 2.0, 2)
+    }
+    assert final.count() == 7  # still exactly once — no replays, no dupes
+    assert {r.batch_id for r in final.collect()} == {0, 1}
+    # each key appears exactly once per job version
+    per_key = final.groupBy("upc", "version").agg(F.count(F.lit(1)).alias("n"))
     assert per_key.filter(F.col("n") > 1).count() == 0

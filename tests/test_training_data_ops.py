@@ -1120,118 +1120,6 @@ def test_bigram_empty_fit_split_fails_fast(spark):
         bigram_cross_entropy(df, fit_pct=0).collect()
 
 
-def _luhn_ok(digits: str) -> bool:
-    s = 0
-    for i, ch in enumerate(reversed(digits)):
-        v = int(ch)
-        if i % 2 == 1:
-            v *= 2
-            if v > 9:
-                v -= 9
-        s += v
-    return s % 10 == 0
-
-
-def test_credit_card_scrub_luhn_validated(spark):
-    from etl_edi_data_scrapper_spark.functions.text import (
-        credit_card_matches,
-        scrub_credit_cards,
-    )
-
-    rows = [
-        (0, "pay 4111 1111 1111 1111 now"),            # valid visa, spaced
-        (1, "pay 4111 1111 1111 1112 now"),            # candidate, Luhn-invalid
-        (2, "amex 378282246310005 works"),             # valid 15-digit
-        (3, "id 1234567890123 is not a card"),         # 13 digits, invalid
-        (4, "card 4012-8888-8888-1881 dashed"),        # valid, dashed
-        (5, "no digits at all here"),
-        (6, "double 4111 1111 1111 1111 and 378282246310005 both"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n, r.clean)
-        for r in df.select(
-            "doc_id",
-            F.size(credit_card_matches("text")).alias("n"),
-            scrub_credit_cards("text").alias("clean"),
-        ).collect()
-    }
-    assert got[0] == (1, "pay [CARD] now")
-    assert got[1] == (0, "pay 4111 1111 1111 1112 now")  # invalid: untouched
-    assert got[2] == (1, "amex [CARD] works")
-    assert got[3] == (0, "id 1234567890123 is not a card")
-    assert got[4] == (1, "card [CARD] dashed")
-    assert got[5] == (0, "no digits at all here")
-    assert got[6] == (2, "double [CARD] and [CARD] both")
-
-
-def test_credit_card_scrub_position_aware(spark):
-    """A valid card's exact digits appearing INSIDE a longer, unmatched
-    digit run elsewhere must not be rewritten (the r8 global-literal
-    replace corrupted such runs to e.g. '9[CARD]90')."""
-    from etl_edi_data_scrapper_spark.functions.text import scrub_credit_cards
-
-    rows = [
-        # 20-digit run (matches nothing: \b fails mid-run) containing the
-        # valid card's digits as a substring
-        (0, "pay 4111111111111111 ref 94111111111111111190 end"),
-        # substring case with the long run FIRST
-        (1, "ref 94111111111111111190 then pay 4111111111111111 end"),
-        # the valid card twice plus the long run
-        (2, "4111111111111111 mid 94111111111111111190 mid 4111111111111111"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: r.clean
-        for r in df.select(
-            "doc_id", scrub_credit_cards("text").alias("clean")
-        ).collect()
-    }
-    assert got[0] == "pay [CARD] ref 94111111111111111190 end"
-    assert got[1] == "ref 94111111111111111190 then pay [CARD] end"
-    assert got[2] == "[CARD] mid 94111111111111111190 mid [CARD]"
-
-
-def test_credit_card_matches_python_model_randomized(spark):
-    import random
-    import re
-
-    from etl_edi_data_scrapper_spark.functions.text import (
-        CC_CANDIDATE_RE,
-        credit_card_matches,
-    )
-
-    rng = random.Random(41)
-
-    def rand_doc():
-        parts = []
-        for _ in range(rng.randint(1, 5)):
-            kind = rng.random()
-            if kind < 0.4:
-                parts.append(rng.choice(["plain", "words", "here", "x9y"]))
-            else:
-                n = rng.randint(11, 21)
-                sep = rng.choice(["", " ", "-"])
-                parts.append(sep.join(str(rng.randint(0, 9)) for _ in range(n)))
-        return " ".join(parts)
-
-    docs = [(i, rand_doc()) for i in range(120)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        r.doc_id: list(r.m)
-        for r in df.select(
-            "doc_id", credit_card_matches("text").alias("m")
-        ).collect()
-    }
-    for i, text in docs:
-        want = [
-            c
-            for c in (m.group(0) for m in re.finditer(CC_CANDIDATE_RE, text))
-            if _luhn_ok(re.sub(r"[ -]", "", c))
-        ]
-        assert got[i] == want, f"doc {i}: {text!r}"
-
-
 # --- audio: live stdlib PCM-WAV kernel (r11) ---------------------------------
 
 
