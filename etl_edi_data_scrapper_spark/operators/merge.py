@@ -19,9 +19,8 @@ Spark-first restatement:
     = last-write-wins; ``min``/``max`` direct; ``addArray`` =
     ``array_sort(collect_list(struct(_seq, col)))`` then field-extract
     (exact arrival order, deterministic under any partitioning).
-  * enrichment legs are typically small (supplier dimension feeds) →
-    broadcast-joinable; AQE promotes them at runtime, or pass
-    ``broadcast=True`` to force.
+  * enrichment legs are typically small (supplier dimension feeds), so
+    ``enrich`` always broadcasts the deduped leg.
 
 Every aggregate, filter and projection here is parsed SQL text: the rule →
 aggregate mapping is one table (``_RULES``) that the plain, salted and
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
 
 SEQ_COL = "_seq"
+_SEQ = sql_ident(SEQ_COL)
 
 # rule -> SQL templates (one-stage aggregate, salted stage-1 partial, salted
 # stage-2 final) over {c}, the quoted column, and {s}, the quoted seq column;
@@ -46,7 +46,7 @@ SEQ_COL = "_seq"
 # last-write-wins are the reference's rules (`DataSetCollection::applyRules`); sum/first/count are
 # natural generalizations this engine adds (all still one-shuffle
 # aggregates). addArray's templates give (seq, value) pairs; ``_aggs``
-# bounds and projects them.
+# projects their values.
 _PAIRS = "collect_list(struct({s} AS s, {c} AS v))"
 _RULES = {
     None: ("max_by({c}, {s})", "max_by({c}, {s})", "max_by({c}, __max_seq)"),
@@ -118,20 +118,14 @@ def _keyed(df: DataFrame, key: str) -> DataFrame:
     return df.filter(f"{k} IS NOT NULL AND CAST({k} AS STRING) != ''")
 
 
-def _aggs(
-    cols: list[str], merge_rules: dict[str, str], seq_col: str, stage: int,
-    max_array_elements: int | None = None,
-) -> list[Column]:
+def _aggs(cols: list[str], merge_rules: dict[str, str], stage: int) -> list[Column]:
     """One parsed aggregate per column from ``_RULES[rule][stage]``; stages
-    0 and 2 sort addArray pairs and keep their values, the first
-    ``max_array_elements`` when given."""
-    out, s = [], sql_ident(seq_col)
+    0 and 2 sort addArray pairs and keep their values."""
+    out = []
     for c in cols:
         rule, q = merge_rules.get(c), sql_ident(c)
-        agg = _RULES[rule][stage].format(c=q, s=s)
+        agg = _RULES[rule][stage].format(c=q, s=_SEQ)
         if rule == "addArray" and stage != 1:
-            if max_array_elements is not None:
-                agg = f"slice({agg}, 1, {int(max_array_elements)})"
             agg = f"transform({agg}, x -> x.v)"
         out.append(F.expr(f"{agg} AS {q}"))
     return out
@@ -141,30 +135,23 @@ def keyed_merge(
     df: DataFrame,
     key: str,
     merge_rules: dict[str, str] | None = None,
-    seq_col: str = SEQ_COL,
     drop_seq: bool = True,
-    max_array_elements: int | None = None,
 ) -> DataFrame:
     """Group by ``key`` applying per-column merge rules (§2.4 of SURVEY.md).
 
-    Columns without a rule get last-write-wins by ``seq_col``. Null/empty
-    keys are dropped before the shuffle (filter is pushed to the scan).
-
-    ``max_array_elements`` bounds every ``addArray`` column to the FIRST N
-    values in arrival order — the knob for hot keys at scale, where an
-    unbounded per-key array is the one growth term the merge otherwise has
-    (SCALE.md §keyed_merge). The aggregation state itself still collects
-    before slicing; for keys hot enough that even that is a problem,
-    ``keyed_merge_salted`` splits the collection across salt buckets.
+    Columns without a rule get last-write-wins by ``_seq`` (attached by
+    ``with_seq`` when the frame has none). Null/empty keys are dropped
+    before the shuffle (filter is pushed to the scan). For a key so hot
+    that one reducer's ``addArray`` state is the problem,
+    ``keyed_merge_salted`` gives the same rows from a two-stage plan.
     """
     merge_rules = _checked(merge_rules)
-    if seq_col not in df.columns:
+    if SEQ_COL not in df.columns:
         df = with_seq(df)
-        seq_col = SEQ_COL
-    cols = [c for c in df.columns if c not in (key, seq_col)]
-    aggs = _aggs(cols, merge_rules, seq_col, 0, max_array_elements)
+    cols = [c for c in df.columns if c not in (key, SEQ_COL)]
+    aggs = _aggs(cols, merge_rules, 0)
     if not drop_seq:
-        aggs.append(F.expr(f"max({sql_ident(seq_col)}) AS {sql_ident(seq_col)}"))
+        aggs.append(F.expr(f"max({_SEQ}) AS {_SEQ}"))
     return _keyed(df, key).groupBy(sql_ident(key)).agg(*aggs)
 
 
@@ -174,8 +161,6 @@ def enrich(
     base_key: str,
     leg_key: str,
     fields: list[str],
-    seq_col: str = SEQ_COL,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Left-join enrichment (`DataSetCollection::addFieldsFromCollection`).
 
@@ -193,14 +178,12 @@ def enrich(
     leg_proj = leg.selectExpr(
         f"{sql_ident(leg_key)} AS __leg_key",
         *map(sql_ident, fields),
-        *([sql_ident(seq_col)] if seq_col in leg.columns else []),
+        *([_SEQ] if SEQ_COL in leg.columns else []),
     )
-    leg_last = keyed_merge(leg_proj, "__leg_key", {}, seq_col=seq_col)
-    renamed = leg_last.selectExpr(
+    leg_last = keyed_merge(leg_proj, "__leg_key", {})
+    renamed = F.broadcast(leg_last.selectExpr(
         "__leg_key", *[f"{sql_ident(f)} AS {legged[f]}" for f in fields]
-    )
-    if broadcast:
-        renamed = F.broadcast(renamed)
+    ))
 
     joined = base.join(renamed, F.expr(f"{sql_ident(base_key)} = __leg_key"), "left")
     out_cols = []
@@ -218,9 +201,7 @@ def keyed_merge_salted(
     df: DataFrame,
     key: str,
     merge_rules: dict[str, str] | None = None,
-    seq_col: str = SEQ_COL,
     salt_buckets: int = 16,
-    max_array_elements: int | None = None,
 ) -> DataFrame:
     """Skew-proof ``keyed_merge``: two-stage aggregation over a salt.
 
@@ -237,111 +218,12 @@ def keyed_merge_salted(
     the AGGREGATION side, which AQE does not re-split.
     """
     merge_rules = _checked(merge_rules)
-    if seq_col not in df.columns:
+    if SEQ_COL not in df.columns:
         df = with_seq(df)
-        seq_col = SEQ_COL
-    cols = [c for c in df.columns if c not in (key, seq_col)]
-    s = sql_ident(seq_col)
-    salted = _keyed(df, key).withColumn("__salt", F.expr(f"pmod({s}, {int(salt_buckets)})"))
-    partial = _aggs(cols, merge_rules, seq_col, 1)
-    partial += [F.expr(f"max({s}) AS __max_seq"), F.expr(f"min({s}) AS __min_seq")]
+    cols = [c for c in df.columns if c not in (key, SEQ_COL)]
+    salted = _keyed(df, key).withColumn("__salt", F.expr(f"pmod({_SEQ}, {int(salt_buckets)})"))
+    partial = _aggs(cols, merge_rules, 1)
+    partial += [F.expr(f"max({_SEQ}) AS __max_seq"), F.expr(f"min({_SEQ}) AS __min_seq")]
     staged = salted.groupBy(sql_ident(key), "__salt").agg(*partial)
-    final = _aggs(cols, merge_rules, seq_col, 2, max_array_elements)
+    final = _aggs(cols, merge_rules, 2)
     return staged.groupBy(sql_ident(key)).agg(*final)
-
-
-def keyed_merge_auto(
-    df: DataFrame,
-    key: str,
-    merge_rules: dict[str, str] | None = None,
-    seq_col: str = SEQ_COL,
-    salt_buckets: int | str = "auto",
-    max_array_elements: int | None = None,
-    salt_above: int = 1_000_000,
-) -> tuple[DataFrame, dict]:
-    """Measured-auto plain-vs-salted ``keyed_merge`` (r14 — the
-    `jaccard_pairs` auto-strategy discipline applied to the reference's
-    core operator). Returns ``(result, decision)``; the result is
-    byte-identical whichever strategy fires (pinned by the salted
-    equivalence tests).
-
-    The decision rule follows where skew can actually hurt this
-    aggregation: every rule EXCEPT ``addArray`` keeps constant-size
-    per-key state with map-side partials (a hot key costs one partial
-    row per task — plain groupBy is already skew-safe), so
-    (a) with no ``addArray`` rule the plain merge ships WITHOUT any
-        probe job;
-    (b) with one, the hot-key mass is MEASURED first: one
-        ``groupBy(key).count() → max`` probe — itself constant-state,
-        so the probe cannot hit the skew it is probing for — and the
-        salted two-stage fires only when the hottest key's row count
-        reaches ``salt_above`` (default 1M: ~the per-task row volume
-        where a single reducer's collect_list state becomes a
-        straggler/OOM term at 100 TB; size it to executor memory /
-        expected element width).
-
-    ``salt_buckets="auto"`` sizes the salt from the SAME measurement:
-    ⌈max_key_rows / salt_above⌉ buckets (clamped to [2, 256]) caps each
-    per-(key, salt) partial's collect state at ~``salt_above`` rows —
-    the bucket count scales with the measured hot mass instead of a
-    fixed 16 that over-salts mild skew and under-salts a monster key.
-
-    The probe is one linear pass over the input — measured at factor
-    300 (SCALE.md): 313 s against the merge's own 792 s, because the
-    probe re-pays the input SCAN, the dominant term of both jobs. It is
-    skew-immune but not free: probe a NEW feed once, record the
-    decision, and pin `merge_strategy` for reruns — the decision dict
-    (strategy, max_key_rows, salt_above, salt_buckets, probed) is
-    returned for exactly that, the opq_train_auto convention."""
-    merge_rules = _checked(merge_rules)
-    decision: dict = {"salt_above": int(salt_above), "probed": False,
-                      "max_key_rows": None}
-    if "addArray" not in merge_rules.values():
-        decision["strategy"] = "plain"
-        decision["reason"] = (
-            "no addArray rule: per-key aggregation state is constant "
-            "(map-side partials), plain groupBy is skew-safe"
-        )
-        return (
-            keyed_merge(
-                df, key, merge_rules, seq_col=seq_col,
-                max_array_elements=max_array_elements,
-            ),
-            decision,
-        )
-    hot = _keyed(df, key).groupBy(sql_ident(key)).count().selectExpr("max(count)").first()[0]
-    decision["probed"] = True
-    decision["max_key_rows"] = int(hot or 0)
-    if decision["max_key_rows"] >= salt_above:
-        if salt_buckets == "auto":
-            salt_buckets = min(
-                256, max(2, -(-decision["max_key_rows"] // salt_above))
-            )
-        decision["strategy"] = "salted"
-        decision["salt_buckets"] = int(salt_buckets)
-        decision["reason"] = (
-            f"hottest key carries {decision['max_key_rows']} rows "
-            f">= salt_above={salt_above}: addArray collect state on one "
-            "reducer would be the straggler/OOM term"
-        )
-        return (
-            keyed_merge_salted(
-                df, key, merge_rules, seq_col=seq_col,
-                salt_buckets=int(salt_buckets),
-                max_array_elements=max_array_elements,
-            ),
-            decision,
-        )
-    decision["strategy"] = "plain"
-    decision["reason"] = (
-        f"hottest key carries {decision['max_key_rows']} rows < "
-        f"salt_above={salt_above}: one-stage merge is cheaper (no "
-        "second shuffle)"
-    )
-    return (
-        keyed_merge(
-            df, key, merge_rules, seq_col=seq_col,
-            max_array_elements=max_array_elements,
-        ),
-        decision,
-    )

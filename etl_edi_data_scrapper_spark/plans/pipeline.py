@@ -27,7 +27,7 @@ from etl_edi_data_scrapper_spark.operators.merge import (
     keyed_merge,
     with_seq,
 )
-from etl_edi_data_scrapper_spark.plans.config import InputConfig
+from etl_edi_data_scrapper_spark.plans.config import InputConfig, InvalidConfigError
 
 # reader signature: (spark, source, range) -> DataFrame
 Reader = Callable[[SparkSession, str, "str | None"], DataFrame]
@@ -53,6 +53,12 @@ def aggregate(
     # Optional config key "repartition": widen coarse scans (single-file
     # inputs split at row-group granularity) before CPU-heavy map stages.
     repartition_n = cfg.extra.get("repartition")
+    n_legs = len(cfg.source) if cfg.is_multi_source else 1
+    if isinstance(seq_exprs, (list, tuple)) and len(seq_exprs) != n_legs:
+        raise InvalidConfigError(
+            f"seq_expr lists {len(seq_exprs)} expressions for a job with "
+            f"{n_legs} legs; give one per leg or a single string"
+        )
 
     def _seq_for(leg_idx: int):
         if seq_exprs is None:
@@ -82,42 +88,6 @@ def aggregate(
     mapped, merge_rules = map_columns(
         df, cfg.column_map_rules, cfg.supplier_id, cfg.version, keep=[SEQ_COL]
     )
-    # Optional config key "merge_strategy": "plain" (default — the
-    # reference's shape), "salted" (force the two-stage skew path), or
-    # "auto" (r14: measure the hottest key's row count and salt only
-    # when addArray state on one reducer would be the straggler term;
-    # byte-identical results either way). "salt_above"/"salt_buckets"
-    # tune the auto/salted paths.
-    strategy = cfg.extra.get("merge_strategy", "plain")
-    if strategy == "salted":
-        from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
-        return keyed_merge_salted(
-            mapped, cfg.unique_index, merge_rules,
-            salt_buckets=int(cfg.extra.get("salt_buckets", 16)),
-        )
-    if strategy == "auto":
-        from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_auto
-
-        sb = cfg.extra.get("salt_buckets", "auto")
-        out, dec = keyed_merge_auto(
-            mapped, cfg.unique_index, merge_rules,
-            salt_buckets=sb if sb == "auto" else int(sb),
-            salt_above=int(cfg.extra.get("salt_above", 1_000_000)),
-        )
-        print(
-            f"STAGE: merge_strategy auto: {dec['strategy']} "
-            f"(max_key_rows={dec['max_key_rows']}, "
-            f"salt_above={dec['salt_above']}"
-            + (f", salt_buckets={dec['salt_buckets']}"
-               if "salt_buckets" in dec else "")
-            + ")"
-        )
-        return out
-    if strategy != "plain":
-        raise ValueError(
-            f"unknown merge_strategy {strategy!r} (plain|salted|auto)"
-        )
     return keyed_merge(mapped, cfg.unique_index, merge_rules)
 
 

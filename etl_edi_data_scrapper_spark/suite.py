@@ -3945,17 +3945,35 @@ _MORRIS_FIXTURE = """<root>
 )
 def q_morris_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morris XML scan: one row per <available>, per-field casts
-    (`MorrisXmlSftpInputHandler.php:21-62`)."""
-    import os
-    import tempfile
-
+    (`MorrisXmlSftpInputHandler.php:21-62`). The scan reads the file
+    lazily, so the constant fixture is staged once per process
+    (``_morris_fixture_path``) rather than once per plan build."""
     from etl_edi_data_scrapper_spark.sources.files import read_morris_xml
 
-    stage = tempfile.mkdtemp(prefix="etl_xml_q_")
-    path = os.path.join(stage, "morris.xml")
-    with open(path, "w") as f:
-        f.write(_MORRIS_FIXTURE)
-    return read_morris_xml(spark, path)
+    return read_morris_xml(spark, _morris_fixture_path())
+
+
+_MORRIS_FIXTURE_PATH: str | None = None
+
+
+def _morris_fixture_path() -> str:
+    """Stage ``_MORRIS_FIXTURE`` once per process in a private temp
+    directory removed at process exit (the ``_ship_package`` discipline);
+    restaged if something removed it meanwhile."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    global _MORRIS_FIXTURE_PATH
+    if _MORRIS_FIXTURE_PATH is None or not os.path.exists(_MORRIS_FIXTURE_PATH):
+        stage = tempfile.mkdtemp(prefix="etl_xml_q_")
+        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+        path = os.path.join(stage, "morris.xml")
+        with open(path, "w") as f:
+            f.write(_MORRIS_FIXTURE)
+        _MORRIS_FIXTURE_PATH = path
+    return _MORRIS_FIXTURE_PATH
 
 
 @register(
@@ -4600,8 +4618,11 @@ def q_excel_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     portal HTML table export, a SYLK ``.slk`` (semicolon records) and a
     gzipped Gnumeric workbook — the COMPLETE IOFactory auto-detect matrix
     — through the same ``read_excel`` dispatch-on-magic path (multi-file
-    glob union = `ExcelInputHandler.php:44-49`)."""
+    glob union = `ExcelInputHandler.php:44-49`). ``read_excel`` decodes
+    every format on the driver into a local relation, so the staged files
+    are removed as soon as it returns."""
     import os
+    import shutil
     import tempfile
     import zipfile
 
@@ -4700,7 +4721,10 @@ def q_excel_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             ["0092", "1", None],
         ],
     )
-    return read_excel(spark, os.path.join(stage, "*.*"))
+    try:
+        return read_excel(spark, os.path.join(stage, "*.*"))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def _ann_ivf_oracle(n_centroids: int = 16, nprobe: int = 4, k: int = 5) -> str:

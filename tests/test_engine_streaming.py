@@ -1,11 +1,13 @@
 """Engine facade + Structured Streaming windowed aggregation."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.engine import Engine
+from etl_edi_data_scrapper_spark.plans.config import InvalidConfigError
 
 
 JOB = lambda sf_dir: {  # noqa: E731
@@ -854,27 +856,40 @@ def test_cli_curate_url_idna_flag_and_stage_dir_fingerprint(
     assert "--url-idna needs the urls stage" in capsys.readouterr().err
 
 
-def test_run_job_merge_strategy_knob(spark, sf_dir, capsys):
-    """r14: config key merge_strategy plain|salted|auto — identical
-    results on all three; 'auto' records its measured decision (STAGE
-    line) and probes only when an addArray rule exists."""
-    eng = Engine(spark)
-    base = JOB(sf_dir)
-    jobs = {
-        name: {**base, "column_map_rules": {
-            **base["column_map_rules"], "status": ["l_returnflag", "addArray"],
-        }, "merge_strategy": name}
-        for name in ("plain", "salted", "auto")
-    }
-    outs = {}
-    for name, job in jobs.items():
-        rows = eng.run_job(job, sink="collect")
-        outs[name] = sorted(tuple(r) for r in rows)
-    assert outs["plain"] == outs["salted"] == outs["auto"]
-    printed = capsys.readouterr().out
-    assert "STAGE: merge_strategy auto:" in printed
-    # the sf lineitem feed has no 1M-row key: auto must measure + stay plain
-    assert "auto: plain" in printed and "max_key_rows=" in printed
+def _plan_text(df) -> str:
+    return re.sub(r"#\d+L?", "", df._jdf.queryExecution().optimizedPlan().toString())
 
-    with pytest.raises(ValueError, match="merge_strategy"):
-        eng.run_job({**base, "merge_strategy": "bogus"})
+
+def test_removed_merge_keys_compile_to_the_plain_plan(spark, tmp_path):
+    """Job messages that still carry the retired `merge_strategy` /
+    `salt_buckets` / `salt_above` keys land in `InputConfig.extra` like any
+    unknown key: the job compiles to the one keyed-merge plan."""
+    feed = tmp_path / "feed.csv"
+    feed.write_text("UPC,Qty,Status\n1,5,a\n1,3,b\n2,7,c\n")
+    job = {
+        "supplier_id": 4, "type_id": 2, "source": str(feed), "version": 1,
+        "column_map_rules": {
+            "upc": "UPC", "qty": ["Qty", "min"], "status": ["Status", "addArray"],
+        },
+    }
+    eng = Engine(spark)
+    plain = _plan_text(eng.compile(job))
+    for keys in ({"merge_strategy": "salted", "salt_buckets": 4},
+                 {"merge_strategy": "auto", "salt_buckets": 4, "salt_above": 1}):
+        assert _plan_text(eng.compile({**job, **keys})) == plain, keys
+
+
+def test_seq_expr_list_needs_one_entry_per_leg(spark):
+    """A per-leg `seq_expr` list must name one expression per leg: a short
+    list would index past its end, a long one would be silently cut."""
+    job = {
+        "supplier_id": 4, "version": 1, "type_id": None,
+        "column_map_rules": {"upc": "upc"},
+        "source": [
+            {"type_id": 2, "filename": "base.csv", "key": "upc", "fields": ["qty"]},
+            {"type_id": 2, "filename": "leg.csv", "key": "sku", "fields": ["name"]},
+        ],
+        "seq_expr": ["CAST(upc AS BIGINT)"],
+    }
+    with pytest.raises(InvalidConfigError, match="seq_expr"):
+        Engine(spark).compile(job)

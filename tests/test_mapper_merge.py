@@ -130,21 +130,6 @@ def test_enrich_null_leg_value_overwrites_on_match(spark):
     assert rows["77"].name == "keep"     # unmatched → base survives
 
 
-def test_keyed_merge_max_array_elements(spark):
-    from etl_edi_data_scrapper_spark.operators.merge import keyed_merge_salted
-
-    df = spark.createDataFrame(
-        [(i, "k", f"v{i}") for i in range(1, 8)],
-        "_seq long, key string, status string",
-    )
-    out = keyed_merge(df, "key", {"status": "addArray"}, max_array_elements=3).first()
-    assert out.status == ["v1", "v2", "v3"]  # FIRST N in arrival order
-    salted = keyed_merge_salted(
-        df, "key", {"status": "addArray"}, salt_buckets=3, max_array_elements=3
-    ).first()
-    assert salted.status == ["v1", "v2", "v3"]
-
-
 def test_salted_merge_equals_plain(spark, sf_dir):
     """keyed_merge_salted must produce byte-identical results to keyed_merge
     on the flagship feed shape (all four rule kinds + LWW)."""
@@ -241,68 +226,6 @@ def test_salted_merge_equals_plain_property(spark):
             for r in keyed_merge_salted(df, "key", rules, salt_buckets=buckets).collect()
         }
         assert salted == plain, f"salt_buckets={buckets}"
-
-
-def test_keyed_merge_auto_decision_and_equivalence(spark):
-    """r14 measured-auto plain-vs-salted: no addArray → plain without a
-    probe (constant-state partials are already skew-safe); addArray +
-    measured hot key ≥ salt_above → salted; below → plain. Results are
-    identical to the direct calls in every branch."""
-    from etl_edi_data_scrapper_spark.operators.merge import (
-        keyed_merge_auto,
-        keyed_merge_salted,
-    )
-
-    rows = [(i, "hot" if i % 10 else f"cold{i}", f"v{i}", i % 7)
-            for i in range(300)]
-    df = spark.createDataFrame(rows, "_seq long, key string, st string, q long")
-
-    # (a) no addArray: plain, unprobed
-    out, dec = keyed_merge_auto(df, "key", {"q": "min"})
-    assert dec["strategy"] == "plain" and dec["probed"] is False
-    assert dec["max_key_rows"] is None
-    plain = {r.key: tuple(r) for r in keyed_merge(df, "key", {"q": "min"}).collect()}
-    assert {r.key: tuple(r) for r in out.collect()} == plain
-
-    # (b) addArray + hot key above the bar: salted, probed (hot = 270 rows)
-    rules = {"st": "addArray"}
-    out, dec = keyed_merge_auto(df, "key", rules, salt_above=100,
-                                salt_buckets=5)
-    assert dec["strategy"] == "salted" and dec["probed"] is True
-    assert dec["max_key_rows"] == 270
-    salted = {
-        r.key: tuple(r)
-        for r in keyed_merge_salted(df, "key", rules, salt_buckets=5).collect()
-    }
-    assert {r.key: tuple(r) for r in out.collect()} == salted
-
-    # (b2) salt_buckets="auto" sizes the salt from the measured hot mass:
-    # ceil(270 / 100) = 3 buckets, still byte-identical
-    out, dec = keyed_merge_auto(df, "key", rules, salt_above=100)
-    assert dec["strategy"] == "salted" and dec["salt_buckets"] == 3
-    salted3 = {
-        r.key: tuple(r)
-        for r in keyed_merge_salted(df, "key", rules, salt_buckets=3).collect()
-    }
-    assert {r.key: tuple(r) for r in out.collect()} == salted3
-
-    # (c) addArray but no key reaches the bar: plain, probed
-    out, dec = keyed_merge_auto(df, "key", rules, salt_above=1000)
-    assert dec["strategy"] == "plain" and dec["probed"] is True
-    assert dec["max_key_rows"] == 270
-    plain = {r.key: tuple(r) for r in keyed_merge(df, "key", rules).collect()}
-    assert {r.key: tuple(r) for r in out.collect()} == plain
-
-    # null/empty keys don't count toward the probe
-    rows2 = rows + [(1000 + i, None, "x", 0) for i in range(500)]
-    df2 = spark.createDataFrame(rows2, "_seq long, key string, st string, q long")
-    _, dec = keyed_merge_auto(df2, "key", rules, salt_above=400)
-    assert dec["max_key_rows"] == 270 and dec["strategy"] == "plain"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        keyed_merge_auto(df, "key", {"q": "bogus"})
 
 
 # Names that would break or rewrite a Column-DSL or unquoted SQL builder: a

@@ -552,3 +552,22 @@ def test_job_stream_message_flood_trips_guard(spark, tmp_path, monkeypatch):
         q.processAllAvailable()
         q.awaitTermination(10)
     q.stop()
+
+
+# --- suite fixture staging ------------------------------------------------------
+
+
+def test_suite_fixture_queries_leave_no_staging(spark, sf_dir, tmp_path, monkeypatch):
+    """`excel_scan` decodes its staged workbooks on the driver and removes
+    them before returning; `morris_xml` scans lazily, so its constant
+    fixture is staged at most once per process, however often it is built."""
+    import tempfile
+
+    from etl_edi_data_scrapper_spark.suite import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for _ in range(2):
+        assert len(QUERIES["excel_scan"](spark, sf_dir).collect()) == 14
+        assert len(QUERIES["morris_xml"](spark, sf_dir).collect()) == 3
+    assert not list(tmp_path.glob("etl_xlsx_q_*"))
+    assert len(list(tmp_path.glob("etl_xml_q_*"))) <= 1
