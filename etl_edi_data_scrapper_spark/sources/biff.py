@@ -29,8 +29,10 @@ _FATSECT = 0xFFFFFFFD
 OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
 
-class _Unsupported(ValueError):
-    """Internal marker; re-raised as sources.files.UnsupportedFormatError."""
+class UnsupportedFormatError(ValueError):
+    """A staged file is in a format the engine recognizes but cannot parse
+    (e.g. BIFF5 ``.xls``). Crisp by design: the alternative is an opaque
+    ``struct.error`` or ``zipfile.BadZipFile`` from three layers down."""
 
 
 # --- OLE2 compound document -------------------------------------------------
@@ -47,7 +49,7 @@ def _chain(fat: list[int], start: int) -> list[int]:
         out.append(s)
         s = fat[s]
         if len(out) > len(fat) + 1:
-            raise _Unsupported("cyclic FAT chain (corrupt OLE2 container)")
+            raise UnsupportedFormatError("cyclic FAT chain (corrupt OLE2 container)")
     return out
 
 
@@ -57,7 +59,7 @@ def ole2_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     mini cutoff, normally 4096 B) and the miniFAT path small streams live in.
     """
     if data[:8] != OLE2_MAGIC:
-        raise _Unsupported("not an OLE2 compound document")
+        raise UnsupportedFormatError("not an OLE2 compound document")
     sect_shift = struct.unpack_from("<H", data, 30)[0]
     mini_shift = struct.unpack_from("<H", data, 32)[0]
     sect_size, mini_size = 1 << sect_shift, 1 << mini_shift
@@ -76,7 +78,7 @@ def ole2_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     seen_difat: set[int] = set()
     while s not in (_ENDOFCHAIN, _FREESECT):
         if s in seen_difat or s >= n_sectors:
-            raise _Unsupported("cyclic or out-of-bounds DIFAT chain (corrupt OLE2 container)")
+            raise UnsupportedFormatError("cyclic or out-of-bounds DIFAT chain (corrupt OLE2 container)")
         seen_difat.add(s)
         sec = _sector(data, s, sect_size)
         entries = struct.unpack(f"<{sect_size // 4}I", sec)
@@ -85,7 +87,7 @@ def ole2_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     fat: list[int] = []
     for fs in difat[:n_fat]:
         if fs >= n_sectors:
-            raise _Unsupported("FAT sector pointer out of bounds (corrupt OLE2 container)")
+            raise UnsupportedFormatError("FAT sector pointer out of bounds (corrupt OLE2 container)")
         fat.extend(struct.unpack(f"<{sect_size // 4}I", _sector(data, fs, sect_size)))
 
     dir_raw = b"".join(_sector(data, s, sect_size) for s in _chain(fat, first_dir))
@@ -104,7 +106,7 @@ def ole2_stream(data: bytes, names: tuple[str, ...]) -> bytes:
     root = next((e for e in entries if e[1] == 5), None)
     target = next((e for e in entries if e[1] == 2 and e[0] in names), None)
     if root is None or target is None:
-        raise _Unsupported(
+        raise UnsupportedFormatError(
             f"OLE2 container has no {'/'.join(names)} stream (not an Excel workbook?)"
         )
     _, _, start, size = target
@@ -204,7 +206,7 @@ def read_biff8_grid(
             ver, dt = struct.unpack_from("<HH", payload, 0)
             if depth == 0:
                 if ver != 0x0600:
-                    raise _Unsupported(
+                    raise UnsupportedFormatError(
                         f"BIFF version 0x{ver:04x} (pre-BIFF8 .xls, e.g. Excel 5/95)"
                     )
                 biff8_seen = True
@@ -216,7 +218,7 @@ def read_biff8_grid(
             depth -= 1
             continue
         if op == _FILEPASS:
-            raise _Unsupported("encrypted .xls workbook (FilePass record)")
+            raise UnsupportedFormatError("encrypted .xls workbook (FilePass record)")
         if op == _BOUNDSHEET:
             cch = payload[6]
             grbit = payload[7]
@@ -234,7 +236,7 @@ def read_biff8_grid(
             off = 8
             for _ in range(unique):
                 if off >= len(payload):
-                    raise _Unsupported(
+                    raise UnsupportedFormatError(
                         "SST spills into CONTINUE records (workbook too large "
                         "for the minimal reader) — convert to .xlsx"
                     )
@@ -275,7 +277,7 @@ def read_biff8_grid(
             grid.setdefault(rw, {})[col] = s
 
     if not biff8_seen:
-        raise _Unsupported("no BIFF8 BOF record found in Workbook stream")
+        raise UnsupportedFormatError("no BIFF8 BOF record found in Workbook stream")
     if sheet_name is not None and want_idx is None:
         # workbook had no cell records, so the lazy resolve never ran —
         # still validate the requested name (parity with the XLSX path)
@@ -286,11 +288,19 @@ def read_biff8_grid(
 
 
 def read_xls_grid(path: str, sheet_name: str | None = None) -> dict[int, dict[int, str]]:
-    """.xls file → {row: {col: text}} (OLE2 unwrap + BIFF8 parse)."""
+    """.xls file → {row: {col: text}} (OLE2 unwrap + BIFF8 parse). A file
+    the minimal reader cannot parse (BIFF5, encrypted, CONTINUE-spilled,
+    corrupt or truncated) raises ``UnsupportedFormatError`` naming it."""
     with open(path, "rb") as fh:
         data = fh.read()
-    stream = ole2_stream(data, ("Workbook", "Book"))
-    return read_biff8_grid(stream, sheet_name)
+    try:
+        return read_biff8_grid(ole2_stream(data, ("Workbook", "Book")), sheet_name)
+    except UnsupportedFormatError as e:
+        raise UnsupportedFormatError(f"{path!r}: {e}") from e
+    except (struct.error, IndexError) as e:
+        raise UnsupportedFormatError(
+            f"{path!r}: corrupt or truncated BIFF .xls / OLE2 container ({e})"
+        ) from e
 
 
 # --- minimal BIFF8 writer (test-fixture generator) --------------------------

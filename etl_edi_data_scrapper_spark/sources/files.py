@@ -7,11 +7,11 @@ Excel (`ExcelInputHandler.php:27-242`), Morris XML
 except Morris XML (typed: gtin string, qty long, price double) and REST
 (native JSON types).
 
-Spark-first: CSV/JSON/Parquet go through ``spark.read`` (distributed,
-pushdown-capable). Excel and Morris XML are driver-side parses to a staging
-DataFrame — correct at feed scale (supplier files are small dimension
-inputs); the 100 TB path is the spark-xml / spark-excel DataSourceV2
-packages, noted inline.
+Spark-first: CSV/JSON/Parquet and Morris XML go through ``spark.read``
+(distributed, pushdown-capable; Morris XML is Spark's native XML scan).
+Excel is a driver-side parse to a staging DataFrame — correct at feed scale
+(supplier files are small dimension inputs); the 100 TB path is the
+spark-excel DataSourceV2 package, noted inline.
 
 A CSV feed that is one local file has its header line read on the driver
 and handed to ``spark.read`` as the schema Spark's inference would have
@@ -33,18 +33,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
-
-
-class UnsupportedFormatError(ValueError):
-    """A staged file is in a format the engine recognizes but cannot parse
-    (e.g. legacy BIFF ``.xls``). Crisp by design: the alternative is an
-    opaque ``zipfile.BadZipFile`` from three layers down."""
-
-
-# OLE2 compound-document magic — the container of legacy BIFF .xls
-# (PhpSpreadsheet reads both, `ExcelInputHandler.php:27-60`; this engine's
-# stdlib parser is XLSX-only, so BIFF gets an explicit error instead)
-_OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
+from etl_edi_data_scrapper_spark.sources.biff import (
+    OLE2_MAGIC,
+    UnsupportedFormatError,
+    read_xls_grid,
+)
+from etl_edi_data_scrapper_spark.sources.gnumeric import GZIP_MAGIC, read_gnumeric_grid
+from etl_edi_data_scrapper_spark.sources.html_table import (
+    looks_like_html_table,
+    read_html_grid,
+)
+from etl_edi_data_scrapper_spark.sources.ods import is_ods_zip, read_ods_grid
+from etl_edi_data_scrapper_spark.sources.sylk import looks_like_sylk, read_sylk_grid
 
 
 def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
@@ -173,25 +173,9 @@ def read_json(spark: SparkSession, source: str, range_: str | None = None) -> Da
     return spark.read.json(source)
 
 
-MORRIS_SCHEMA = T.StructType(
-    [
-        T.StructField("gtin", T.StringType(), True),
-        T.StructField("qty", T.LongType(), True),
-        T.StructField("price", T.DoubleType(), True),
-    ]
-)
-
-
 _MORRIS_XML_SCHEMA = (
     "gtin STRING, qty BIGINT, detail STRUCT<price: DOUBLE>"
 )
-
-
-def _is_missing_xml_source(e: Exception) -> bool:
-    """True only for the missing-data-source signatures (the rule of
-    ``sinks._is_missing_kafka_jar``)."""
-    msg = str(e)
-    return "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find data source: xml" in msg
 
 
 def read_morris_xml(spark: SparkSession, source: str, range_: str | None = None) -> DataFrame:
@@ -201,39 +185,17 @@ def read_morris_xml(spark: SparkSession, source: str, range_: str | None = None)
     gtin → string (explicit schema — inference would drop leading zeros),
     qty → long, detail/price → double. Multi-file union = `:54-59`.
 
-    Primary path: Spark's native XML source (``rowTag="available"``) — a
-    distributed scan that splits across files. ElementTree fallback only for
-    builds without the XML source; any other reader error (missing path,
-    bad file) is Spark's to raise.
+    Spark's native XML source (``rowTag="available"``): a distributed scan
+    that splits across files. Reader errors (missing path, bad file) are
+    Spark's to raise.
     """
-    try:
-        df = (
-            spark.read.format("xml")
-            .option("rowTag", "available")
-            .schema(_MORRIS_XML_SCHEMA)
-            .load(source)
-        )
-        return df.selectExpr("gtin", "qty", "detail.price AS price")
-    except Exception as e:
-        if not _is_missing_xml_source(e):
-            raise
-
-    paths = sorted(glob.glob(source)) if any(ch in source for ch in "*?[") else [source]
-    rows: list[tuple[str | None, int | None, float | None]] = []
-    for path in paths:
-        root = ET.parse(path).getroot()
-        for el in root.iter("available"):
-            gtin = el.findtext("gtin")
-            qty = el.findtext("qty")
-            price = el.findtext("detail/price")
-            rows.append(
-                (
-                    str(gtin) if gtin is not None else None,
-                    int(qty) if qty not in (None, "") else None,
-                    float(price) if price not in (None, "") else None,
-                )
-            )
-    return local_df(spark, rows, MORRIS_SCHEMA)
+    df = (
+        spark.read.format("xml")
+        .option("rowTag", "available")
+        .schema(_MORRIS_XML_SCHEMA)
+        .load(source)
+    )
+    return df.selectExpr("gtin", "qty", "detail.price AS price")
 
 
 # --- Excel ------------------------------------------------------------------
@@ -283,12 +245,11 @@ def _parse_cell_ref(ref: str) -> tuple[int, int]:
 _XLSX_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
 
-def _read_xlsx_stdlib(path: str, range_: str | None) -> tuple[list[str], list[list]]:
-    """Minimal XLSX parser on stdlib zipfile+ElementTree (no openpyxl):
-    shared strings, inline strings, numeric cells as their literal text —
-    matching the reference's all-strings contract. Returns (header, rows)
-    after first-row-header + short-row padding (`ExcelInputHandler.php:168-172`)
-    and A1-range filtering (:203-240 via normalize_excel_range)."""
+def _xlsx_grid(path: str, sheet_name: str | None) -> dict[int, dict[int, str]]:
+    """Minimal XLSX reader on stdlib zipfile+ElementTree (no openpyxl): one
+    sheet (named, else the first) → {row: {col: text}}. Shared strings,
+    inline strings, numeric cells as their literal text — matching the
+    reference's all-strings contract."""
     import zipfile
 
     try:
@@ -298,10 +259,6 @@ def _read_xlsx_stdlib(path: str, range_: str | None) -> tuple[list[str], list[li
             f"{path!r} is not an XLSX (zip) file: {e}"
         ) from e
     with zf as z:
-        # sheet selection: named sheet from the range, else the first sheet
-        sheet_name, cells = (None, None)
-        if range_:
-            sheet_name, cells = normalize_excel_range(range_, max_row=2**20)
         wb = ET.fromstring(z.read("xl/workbook.xml"))
         rels = ET.fromstring(z.read("xl/_rels/workbook.xml.rels"))
         rel_ns = "{http://schemas.openxmlformats.org/package/2006/relationships}"
@@ -326,7 +283,7 @@ def _read_xlsx_stdlib(path: str, range_: str | None) -> tuple[list[str], list[li
             for si in sst.iter(f"{_XLSX_NS}si"):
                 shared.append("".join(t.text or "" for t in si.iter(f"{_XLSX_NS}t")))
 
-        sheet = ET.fromstring(z.read(f"xl/{target}" if not target.startswith("worksheets") else f"xl/{target}"))
+        sheet = ET.fromstring(z.read(f"xl/{target}"))
         grid: dict[int, dict[int, str]] = {}
         for row in sheet.iter(f"{_XLSX_NS}row"):
             for c in row.iter(f"{_XLSX_NS}c"):
@@ -342,15 +299,14 @@ def _read_xlsx_stdlib(path: str, range_: str | None) -> tuple[list[str], list[li
                     val = v.text if v is not None else None
                 if val is not None:
                     grid.setdefault(r_i, {})[c_i] = str(val)
-
-    return _grid_to_table(grid, cells)
+    return grid
 
 
 def _grid_to_table(
     grid: dict[int, dict[int, str]], cells: str | None
 ) -> tuple[list[str], list[list]]:
-    """Shared sheet post-processing (XLSX and BIFF8 paths): A1-range box
-    filter, first-row-header, short-row null padding
+    """Sheet post-processing shared by every decoder: A1-range box filter,
+    first-row-header, short-row null padding
     (`ExcelInputHandler.php:168-172, :203-240`)."""
     if cells:
         (r0, c0) = _parse_cell_ref(cells.split(":")[0])
@@ -370,34 +326,9 @@ def _grid_to_table(
     return header, rows
 
 
-def _read_xls_biff8(path: str, range_: str | None) -> tuple[list[str], list[str]]:
-    """Legacy ``.xls``: OLE2 unwrap + minimal BIFF8 record parse
-    (``sources/biff.py``); same header/range/padding contract as the XLSX
-    path. BIFF5 / encrypted / CONTINUE-spilled workbooks surface as
-    ``UnsupportedFormatError`` (reference parity: PhpSpreadsheet reads all
-    of these, `ExcelInputHandler.php:27-60` — the minimal reader covers the
-    BIFF8 majority and stays crisp about the rest)."""
-    from etl_edi_data_scrapper_spark.sources import biff
-
-    sheet_name, cells = (None, None)
-    if range_:
-        sheet_name, cells = normalize_excel_range(range_, max_row=2**20)
-    import struct
-
-    try:
-        grid = biff.read_xls_grid(path, sheet_name)
-    except biff._Unsupported as e:
-        raise UnsupportedFormatError(f"{path!r}: {e}") from e
-    except (struct.error, IndexError) as e:
-        raise UnsupportedFormatError(
-            f"{path!r}: corrupt or truncated BIFF .xls / OLE2 container ({e})"
-        ) from e
-    return _grid_to_table(grid, cells)
-
-
 def _csv_grid(path: str) -> dict[int, dict[int, str]]:
-    """CSV file → sheet-style grid (driver-side), for ranged reads through
-    the spreadsheet handler — the reference's Csv reader loads into a
+    """CSV file → sheet-style grid (driver-side), for reads through the
+    spreadsheet handler — the reference's Csv reader loads into a
     worksheet and the range slices it like any other sheet."""
     import csv as csvmod
 
@@ -410,113 +341,66 @@ def _csv_grid(path: str) -> dict[int, dict[int, str]]:
     return grid
 
 
-def _read_gnumeric(path: str, range_: str | None) -> tuple[list[str], list[list]]:
-    """Gnumeric workbook (``sources/gnumeric.py``); same header/range/padding
-    contract. Corrupt gzip or non-workbook XML surfaces as the module's
-    crisp ``UnsupportedFormatError``, matching the other format paths."""
-    import gzip
-
-    from etl_edi_data_scrapper_spark.sources.gnumeric import read_gnumeric_grid
-
-    sheet_name, cells = (None, None)
-    if range_:
-        sheet_name, cells = normalize_excel_range(range_, max_row=2**20)
-    import zlib
-
-    try:
-        grid = read_gnumeric_grid(path, sheet_name)
-    except (gzip.BadGzipFile, EOFError, zlib.error, ET.ParseError) as e:
-        # format-level failures only — a genuine I/O error (permissions,
-        # disk) propagates as what it is instead of "bad supplier file"
+def _sheet_grid(path: str, sheet_name: str | None) -> dict[int, dict[int, str]]:
+    """One spreadsheet file → {row: {col: text}} from the decoder its
+    leading bytes name, the way PhpSpreadsheet's IOFactory auto-detects
+    (`ExcelInputHandler.php:108-116`): OLE2 → BIFF8 ``.xls``, gzip →
+    Gnumeric, a zip laid out as ODS → ODS, other binary → XLSX, and plain
+    text → SYLK, an HTML table, or CSV. Each decoder raises its own
+    ``UnsupportedFormatError`` for a file it cannot parse."""
+    with open(path, "rb") as fh:
+        # 64 KB sniff window: HTML exports bury the <table> behind
+        # kilobytes of <head>/<style> boilerplate
+        head = fh.read(65536)
+    if not head.strip():
         raise UnsupportedFormatError(
-            f"{path!r}: gzip container is not a Gnumeric workbook ({e})"
-        ) from e
-    return _grid_to_table(grid, cells)
-
-
-def _read_ods(path: str, range_: str | None) -> tuple[list[str], list[list]]:
-    """OpenDocument spreadsheet (``sources/ods.py``); same header/range/
-    padding contract as the XLSX/BIFF8 paths. The reference accepts ODS via
-    PhpSpreadsheet's auto-detecting loader (`ExcelInputHandler.php:108-116`)."""
-    from etl_edi_data_scrapper_spark.sources import ods
-
-    sheet_name, cells = (None, None)
-    if range_:
-        sheet_name, cells = normalize_excel_range(range_, max_row=2**20)
-    grid = ods.read_ods_grid(path, sheet_name)
-    return _grid_to_table(grid, cells)
+            f"{path!r} is empty — failed download or truncated staging?"
+        )
+    if head.startswith(OLE2_MAGIC):
+        return read_xls_grid(path, sheet_name)
+    if head.startswith(GZIP_MAGIC):
+        return read_gnumeric_grid(path, sheet_name)
+    if head.startswith(b"PK") and is_ods_zip(path):
+        return read_ods_grid(path, sheet_name)
+    if head.startswith(b"PK") or b"\x00" in head:
+        return _xlsx_grid(path, sheet_name)
+    if sheet_name is not None:
+        # CSV/HTML/SYLK have no sheets — a sheet-qualified range here is a
+        # typo'd job config; applying only the box filter would return data
+        # where the sheeted formats raise "sheet not found"
+        raise ValueError(
+            f"sheet {sheet_name!r} in range but {path!r} is a sheetless "
+            "format (CSV/HTML/SYLK)"
+        )
+    if looks_like_sylk(head):
+        return read_sylk_grid(path)
+    if looks_like_html_table(head):
+        return read_html_grid(path)
+    # CSV through the spreadsheet handler always takes the grid path: the
+    # reference loads CSV into a worksheet (padding short rows) whether or
+    # not a range then slices it — read_csv's DROPMALFORMED would drop
+    # those rows instead, making the row set depend on the range
+    return _csv_grid(path)
 
 
 def read_excel(spark: SparkSession, source: str, range_: str | None = None) -> DataFrame:
     """Excel scan; unions all matched files (`ExcelInputHandler.php:38-50`).
 
-    First row = header, short rows padded with null (:168-172); optional
-    ``Sheet!A1:D`` range (:126-139, :203-240). Stdlib XLSX parser + minimal
-    BIFF8 ``.xls`` parser + ODS parser, dispatched on the file magic/zip
-    layout the way PhpSpreadsheet's IOFactory auto-detects (driver-side —
-    supplier feeds are small); the 100 TB path is the spark-excel
+    One path for every format: the optional ``Sheet!A1:D`` range is parsed
+    once (:126-139, :203-240), each file's decoder is picked by its leading
+    bytes (``_sheet_grid``: XLSX, BIFF8 ``.xls``, ODS, Gnumeric, SYLK, HTML
+    table, CSV), and one ``_grid_to_table`` applies the box filter, the
+    first-row header and short-row null padding (:168-172). Driver-side by
+    design — supplier feeds are small; the 100 TB path is the spark-excel
     DataSourceV2 package on a real cluster.
     """
-    from etl_edi_data_scrapper_spark.sources.ods import is_ods_zip
-
+    sheet_name, cells = (
+        normalize_excel_range(range_, max_row=2**20) if range_ else (None, None)
+    )
     paths = sorted(glob.glob(source)) if any(ch in source for ch in "*?[") else [source]
     frames = []
     for path in paths:
-        with open(path, "rb") as fh:
-            # 64 KB sniff window: HTML exports bury the <table> behind
-            # kilobytes of <head>/<style> boilerplate
-            head = fh.read(65536)
-        magic = head[:8]
-        if not head.strip():
-            raise UnsupportedFormatError(
-                f"{path!r} is empty — failed download or truncated staging?"
-            )
-        if magic == _OLE2_MAGIC:
-            header, rows = _read_xls_biff8(path, range_)
-        elif magic[:2] == b"PK" and is_ods_zip(path):
-            header, rows = _read_ods(path, range_)
-        elif magic[:2] == b"\x1f\x8b":
-            header, rows = _read_gnumeric(path, range_)
-        elif magic[:2] != b"PK" and b"\x00" not in head:
-            # plain text through the spreadsheet handler: PhpSpreadsheet's
-            # IOFactory tries an Html reader (supplier-portal "download as
-            # spreadsheet" exports) and falls back to Csv for .csv feeds —
-            # delegate accordingly (same all-strings/header contract)
-            from etl_edi_data_scrapper_spark.sources.html_table import (
-                looks_like_html_table,
-                read_html_grid,
-            )
-
-            from etl_edi_data_scrapper_spark.sources.sylk import (
-                looks_like_sylk,
-                read_sylk_grid,
-            )
-
-            cells = None
-            if range_:
-                _sheet, cells = normalize_excel_range(range_, max_row=2**20)
-                if _sheet is not None:
-                    # CSV/HTML/SYLK have no sheets — a sheet-qualified range
-                    # here is a typo'd job config; silently applying only the
-                    # box filter would return data where the XLSX/ODS/
-                    # Gnumeric paths raise "sheet not found"
-                    raise ValueError(
-                        f"sheet {_sheet!r} in range {range_!r} but {path!r} "
-                        "is a sheetless format (CSV/HTML/SYLK)"
-                    )
-            if looks_like_sylk(head):
-                header, rows = _grid_to_table(read_sylk_grid(path), cells)
-            elif looks_like_html_table(head):
-                header, rows = _grid_to_table(read_html_grid(path), cells)
-            else:
-                # CSV through the spreadsheet handler ALWAYS takes the grid
-                # path: the reference loads CSV into a worksheet (padding
-                # short rows) whether or not a range then slices it —
-                # read_csv's DROPMALFORMED would drop those rows instead,
-                # making the row set depend on the presence of a range
-                header, rows = _grid_to_table(_csv_grid(path), cells)
-        else:
-            header, rows = _read_xlsx_stdlib(path, range_)
+        header, rows = _grid_to_table(_sheet_grid(path, sheet_name), cells)
         if not header:
             continue
         schema = ", ".join(f"{sql_ident(h)} string" for h in header)

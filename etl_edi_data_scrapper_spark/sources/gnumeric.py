@@ -12,8 +12,9 @@ from __future__ import annotations
 
 import gzip
 import xml.etree.ElementTree as ET
+import zlib
 
-from etl_edi_data_scrapper_spark.sources.biff import _fmt_num
+from etl_edi_data_scrapper_spark.sources.biff import UnsupportedFormatError, _fmt_num
 
 _GNM = "{http://www.gnumeric.org/v10.dtd}"
 
@@ -21,9 +22,18 @@ GZIP_MAGIC = b"\x1f\x8b"
 
 
 def read_gnumeric_grid(path: str, sheet_name: str | None = None) -> dict[int, dict[int, str]]:
-    """.gnumeric file → {row: {col: text}} for one sheet (named, else first)."""
-    with gzip.open(path, "rb") as fh:
-        root = ET.fromstring(fh.read())
+    """.gnumeric file → {row: {col: text}} for one sheet (named, else first).
+    A gzip file that does not hold workbook XML raises
+    ``UnsupportedFormatError``."""
+    try:
+        with gzip.open(path, "rb") as fh:
+            root = ET.fromstring(fh.read())
+    except (gzip.BadGzipFile, EOFError, zlib.error, ET.ParseError) as e:
+        # format-level failures only — a genuine I/O error (permissions,
+        # disk) propagates as what it is instead of "bad supplier file"
+        raise UnsupportedFormatError(
+            f"{path!r}: gzip container is not a Gnumeric workbook ({e})"
+        ) from e
     sheets = list(root.iter(f"{_GNM}Sheet"))
     if not sheets:
         raise ValueError(f"no sheets in {path!r}")

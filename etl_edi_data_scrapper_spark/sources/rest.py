@@ -8,9 +8,8 @@ Reference semantics (`src/Service/InputHandler/RestApiInputHandler.php:24-119`):
 JWT (`src/Service/Auth/*`): token POST once, cached per supplier with a
 +24 h synthetic expiry for raw-string tokens; Bearer header on every page.
 
-Spark-first: the paginator is a driver-side generator writing JSONL to a
-staging dir, then ONE ``spark.read.json`` over it (schema inference on the
-staged files, distributed parse). At scale, page fetch parallelizes with
+Spark-first: the paginator is a driver-side loop whose rows go, as JSON
+lines, into ONE ``spark.read.json`` (schema inference, distributed parse). At scale, page fetch parallelizes with
 ``spark.range(n_pages).mapInPandas(fetch)`` once ``meta.last_page`` is known
 from page 1 — same page contract, fan-out in executors.
 """
@@ -138,22 +137,13 @@ def read_rest_api(
     fetch: Fetch | None = None,
     jwt: JwtManager | None = None,
     page_size: int = 100,
-    staging_dir: str | None = None,
 ) -> DataFrame:
-    """Paginated fetch → staged JSONL → one distributed ``spark.read.json``."""
+    """Paginated fetch → one ``spark.read.json`` over the rows' JSON lines
+    (schema inference as for a JSONL file; no pages → ``struct<>``, 0 rows).
+    The rows are already in driver memory, so nothing is staged on disk."""
     if fetch is None:
         headers = {"Authorization": f"Bearer {jwt.token()}"} if jwt else {}
         fetch = lambda url: _default_fetch(url, headers)  # noqa: E731
     pages = paginate(base_url, fetch, page_size=page_size)
-    staging_dir = staging_dir or tempfile.mkdtemp(prefix="etl_rest_")
-    os.makedirs(staging_dir, exist_ok=True)
-    path = os.path.join(staging_dir, "pages.jsonl")
-    with open(path, "w") as f:
-        for rows in pages:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-    if not pages:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType([]))
-    return spark.read.json(path)
+    lines = [json.dumps(r) for rows in pages for r in rows]
+    return spark.read.json(spark.sparkContext.parallelize(lines))

@@ -27,7 +27,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from etl_edi_data_scrapper_spark.plans.config import InputConfig, InvalidConfigError
+from etl_edi_data_scrapper_spark.plans.config import InputConfig
 from etl_edi_data_scrapper_spark.plans.pipeline import Reader, aggregate
 
 MESSAGE_SCHEMA = T.StructType([T.StructField("value", T.StringType(), True)])
@@ -81,7 +81,7 @@ def process_messages(
                         **obs.get,
                     }
                 )
-        except (InvalidConfigError, Exception) as e:  # noqa: BLE001
+        except Exception as e:  # noqa: BLE001
             if on_error:
                 on_error(msg, e)
             else:

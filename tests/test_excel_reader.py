@@ -154,10 +154,25 @@ def test_xlsx_multi_file_union(spark, tmp_path):
     assert sorted(r.k for r in df.collect()) == ["1", "2"]
 
 
-def test_xlsx_missing_sheet_raises(spark, tmp_path):
-    p = tmp_path / "one.xlsx"
-    make_xlsx(p, {"S": [["k"], ["1"]]})
-    with pytest.raises(ValueError):
+def _write_one_sheet(fmt, path, rows):
+    from etl_edi_data_scrapper_spark.sources.biff import write_minimal_biff8
+    from etl_edi_data_scrapper_spark.sources.gnumeric import write_minimal_gnumeric
+    from etl_edi_data_scrapper_spark.sources.ods import write_minimal_ods
+
+    if fmt == "xlsx":
+        make_xlsx(path, {"S": rows})
+    else:
+        writer = {"xls": write_minimal_biff8, "ods": write_minimal_ods,
+                  "gnumeric": write_minimal_gnumeric}[fmt]
+        writer(path, rows, sheet_name="S")
+
+
+@pytest.mark.parametrize("fmt", ["xlsx", "xls", "ods", "gnumeric"])
+def test_missing_sheet_raises(spark, tmp_path, fmt):
+    p = tmp_path / f"one.{fmt}"
+    _write_one_sheet(fmt, p, [["k"], ["1"]])
+    assert read_excel(spark, str(p), range_="S!A1:A").collect()[0].k == "1"
+    with pytest.raises(ValueError, match="sheet 'Nope' not found"):
         read_excel(spark, str(p), range_="Nope!A1:B")
 
 
@@ -266,7 +281,7 @@ def test_cyclic_difat_crisp_error(tmp_path):
     struct.pack_into("<I", data, 68, 0)
     struct.pack_into("<I", data, 512 + 512 - 4, 0)
     p.write_bytes(bytes(data))
-    with pytest.raises(biff._Unsupported, match="DIFAT"):
+    with pytest.raises(biff.UnsupportedFormatError, match="DIFAT"):
         biff.read_xls_grid(str(p))
 
 

@@ -157,22 +157,6 @@ def test_morris_xml_reader_errors_propagate(spark, tmp_path):
         fmod.read_morris_xml(spark, str(tmp_path / "missing.xml"))
 
 
-def test_morris_xml_falls_back_without_xml_source(spark, tmp_path, monkeypatch):
-    from pyspark.errors import AnalysisException
-    from pyspark.sql.readwriter import DataFrameReader
-
-    def no_xml_source(self, *args, **kwargs):
-        raise AnalysisException(
-            "[DATA_SOURCE_NOT_FOUND] Failed to find the data source: xml."
-        )
-
-    p = tmp_path / "morris.xml"
-    p.write_text(MORRIS_XML)
-    monkeypatch.setattr(DataFrameReader, "load", no_xml_source)
-    rows = {r.gtin: r for r in fmod.read_morris_xml(spark, str(p)).collect()}
-    assert rows["0042323456789"].qty == 15 and rows["0099999999999"].price == 7.25
-
-
 # --- Excel range dialect -------------------------------------------------------
 
 
@@ -367,13 +351,31 @@ def test_paginate_transport_bug_propagates():
         paginate("u", fetch)
 
 
-def test_read_rest_api_dataframe(spark, tmp_path):
+def test_read_rest_api_dataframe(spark):
     df = read_rest_api(
-        spark, "https://api.example.com/v1/products", fetch=fake_api(2, 3),
-        staging_dir=str(tmp_path),
+        spark, "https://api.example.com/v1/products", fetch=fake_api(2, 3)
     )
     assert df.count() == 6
     assert set(df.columns) == {"barcode", "stock_quantity"}
+
+
+def test_rest_job_stages_nothing_in_temp_dir(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    from etl_edi_data_scrapper_spark.engine import Engine
+    from etl_edi_data_scrapper_spark.sources.registry import build_registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    job = {
+        "supplier_id": 8,
+        "type_id": 8,
+        "source": "https://api.example.com/v1/products",
+        "column_map_rules": {"upc": "barcode", "qty": ["stock_quantity", "max"]},
+        "version": 1,
+    }
+    eng = Engine(spark, readers=build_registry(rest_fetch=fake_api(2, 3)))
+    assert len(eng.run_job(job, sink="collect")) == 6
+    assert not list(tmp_path.glob("etl_rest_*"))
 
 
 def test_jwt_cache_roundtrip(tmp_path):
