@@ -404,7 +404,7 @@ def main(argv: list[str] | None = None, engine=None) -> int:
         "quality is corpus-dependent: measured −14%% recall isotropic / "
         "+25–48%% anisotropic, ANN_QUALITY_r13). The decision + both "
         "MSEs land in _meta.json (see store-info); the rotation rides "
-        "_meta.json, so ann-query and appends apply it automatically",
+        "_meta.json, so ann-query applies it automatically",
     )
 
     pn = sub.add_parser(
@@ -452,7 +452,7 @@ def main(argv: list[str] | None = None, engine=None) -> int:
     pp2 = sub.add_parser(
         "ann-compact",
         help="offline file-layout compaction for a persisted ann-index's "
-        "code store (one file per cell); run with appenders/queries "
+        "code store (one file per cell); run with writers/queries "
         "STOPPED, like compact-store",
     )
     pp2.add_argument("--index", required=True, help="ann-index dir")
@@ -460,7 +460,7 @@ def main(argv: list[str] | None = None, engine=None) -> int:
     psi = sub.add_parser(
         "store-info",
         help="identify and audit a persisted store (ivfpq-index, "
-        "ivf-index, neardup-store, fit artifacts): prints the sidecar(s) "
+        "neardup-store, fit artifacts): prints the sidecar(s) "
         "+ row/file counts as one JSON object; refuses unknown layouts",
     )
     psi.add_argument("--store", required=True, help="store dir or model file")
@@ -693,9 +693,8 @@ def main(argv: list[str] | None = None, engine=None) -> int:
             meta["opq"] = opq_info
         if rotation is not None:
             meta["opq_rotation"] = rotation
-        # train-time quantization-error baseline (r13 verdict #5): appends
-        # against the frozen quantizers record their own MSE next to this,
-        # and store-info reports the drift ratio + a retrain advisory
+        # train-time quantization-error baseline (r13 verdict #5), recorded
+        # in _meta.json, which store-info prints
         from etl_edi_data_scrapper_spark.functions.similarity import (
             index_quant_mse,
         )
@@ -749,26 +748,6 @@ def main(argv: list[str] | None = None, engine=None) -> int:
         )
 
         meta = load_ivfpq_meta(engine.spark, args.index)
-        # staleness advisory (r14): the index records per-append
-        # quantization MSE against its train baseline; warn the operator
-        # at query time too, not only in store-info — drifted appends
-        # degrade THESE results silently
-        qm = meta.get("quant_mse")
-        if isinstance(qm, dict) and qm.get("train") and isinstance(
-            qm.get("appended"), dict
-        ):
-            from etl_edi_data_scrapper_spark.functions.similarity import (
-                RETRAIN_MSE_RATIO,
-            )
-
-            ratio = float(qm["appended"]["mse"]) / float(qm["train"])
-            if ratio > RETRAIN_MSE_RATIO:
-                print(
-                    f"WARN: appended-batch quantization MSE is {ratio:.2f}x "
-                    f"the train baseline (> {RETRAIN_MSE_RATIO}) — appended "
-                    "vectors rank through stretched cells; rebuild with "
-                    "ann-index (see store-info)"
-                )
         centroids, enc, cbs = load_ivfpq_index(engine.spark, args.index)
         queries = engine.spark.read.parquet(args.queries).select(
             F.col(args.id_col).alias("q_id"),

@@ -105,15 +105,6 @@ def _spread_small_scan(
     return df.repartition(sc.defaultParallelism)
 
 
-def _sqdist(vec: Column, centroid: list[float]) -> Column:
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _dlit(x: float) -> str:
     """SQL double-literal text that parses back to the same IEEE double:
     repr() is the shortest round-trip decimal and Java's parseDouble is
@@ -130,12 +121,14 @@ def _dlit(x: float) -> str:
 
 
 def _sqdist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """`_sqdist` as SQL text (`prototype_prune`'s distance column).
-    Building the centroid literal through the Column DSL costs one py4j
-    round trip PER ELEMENT (64-dim × k centroids measured at seconds of
-    pure driver chatter); one parsed expression string is ~100× cheaper
-    and yields the identical Catalyst tree (same zip_with/aggregate fold,
-    same cast discipline — value parity is pinned by test)."""
+    """Squared L2 distance from an array column to one centroid as SQL
+    text (`prototype_prune`'s distance column): per-dimension
+    (a−b)·(a−b) accumulated in index order — a sequential left fold in
+    doubles. Building the centroid literal through the Column DSL cost
+    one py4j round trip PER ELEMENT (64-dim × k centroids measured at
+    seconds of pure driver chatter); one parsed expression string is
+    ~100× cheaper (value parity with a sequential Python fold is pinned
+    by test)."""
     arr = "array(" + ",".join(_dlit(x) for x in centroid) + ")"
     return (
         f"aggregate(zip_with({vec_sql}, {arr}, "
@@ -155,7 +148,7 @@ def assign_clusters(
     that does not grow with k (an expression unrolled per centroid made
     the per-iteration plan build dominate `kmeans_fit` at FAISS-sized k,
     and its folds ran interpreted). Distances are `_np_fold_sqdist`'s
-    sequential left fold — the doubles of `_sqdist` and of the DuckDB
+    sequential left fold — the doubles of `_sqdist_sql` and of the DuckDB
     oracles — and argmin returns the first minimum, i.e. the lowest
     centroid id on ties."""
     import numpy as np
@@ -203,7 +196,7 @@ def _np_folds():
         return x
 
     def fold_sqdist(x, cen):
-        """(rows, k) squared distances with `_sqdist`'s exact float
+        """(rows, k) squared distances with `_sqdist_sql`'s exact float
         discipline: per-dimension (a−b)·(a−b) accumulated in index order
         (a sequential left fold), so the kernels agree with the Spark SQL
         fold and the DuckDB oracles to the last ulp. Intermediate stays
@@ -944,19 +937,13 @@ def cross_shard_bridge_pairs(
     return out.groupBy("a", "b").agg(F.max("cosine").alias("cosine"))
 
 
-def hyperplane_signature(vec, n_planes: int, dim: int, plane_offset: int = 0):
-    """Re-export of `similarity.hyperplane_signature` (the probe and the
-    bridge share the exact plane derivation with the ANN operators)."""
-    from etl_edi_data_scrapper_spark.functions.similarity import (
-        hyperplane_signature as _sig,
-    )
-
-    return _sig(vec, n_planes, dim, plane_offset)
-
-
 def hyperplane_signature_table(vec, n_planes: int, dim: int, table: int):
     """Table t draws planes [t·n_planes, (t+1)·n_planes) — disjoint from
     every other table's set, so table misses are independent."""
+    from etl_edi_data_scrapper_spark.functions.similarity import (
+        hyperplane_signature,
+    )
+
     return hyperplane_signature(vec, n_planes, dim, plane_offset=table * n_planes)
 
 

@@ -20,7 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.hashing import HEX as _HEX
-from etl_edi_data_scrapper_spark.functions.hashing import hex_word as _hex_word
 from etl_edi_data_scrapper_spark.functions.hashing import (
     hex_word_sql as _hex_word_sql,
 )
@@ -456,7 +455,7 @@ def simhash_bit_sums(
     groupBy with `bits` conditional-sum aggregates — one shuffle, map-side
     partials. The sums for bit i do not depend on the total width, so one
     64-bit sums pass feeds BOTH a ≤52-bit single-long signature and the
-    64-bit hi/lo signature (`simhash_from_sums` / `simhash64_from_sums`).
+    64-bit hi/lo signature (`simhash_combined_from_sums`).
 
     Bits come from md5 hex chars via instr arithmetic, so an external SQL
     oracle computes the identical signature. Pre-explode hash-repartition
@@ -544,7 +543,8 @@ def simhash_from_sums(
         raise ValueError(
             f"bits={bits}: single-long signatures above 52 bits lose exactness "
             "under the portable floor/division piece arithmetic (and bit 63 "
-            "overflows a signed long) — use simhash64() for 64-bit signatures"
+            "overflows a signed long) — 64-bit signatures are two 32-bit halves "
+            "(simhash_combined_from_sums, simhash_pairs_multi)"
         )
     return sums.select(F.col(id_col), _sign_bits_long(0, bits).alias("simhash"))
 
@@ -554,90 +554,9 @@ def simhash(
 ) -> DataFrame:
     """SimHash signature: bit_i = sign of Σ_tokens (±1 by bit i of
     md5(token)). See `simhash_bit_sums` for the kernel and scale notes;
-    `simhash_from_sums` rejects widths above 52 bits (use `simhash64`)."""
+    `simhash_from_sums` rejects widths above 52 bits (the 64-bit signature
+    is two 32-bit halves: `simhash_combined_from_sums`)."""
     return simhash_from_sums(simhash_bit_sums(df, id_col, text_col, bits), id_col, bits)
-
-
-def simhash_near_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    bits: int = 32,
-    n_pieces: int | None = None,
-    max_block: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by Hamming distance via multi-piece blocking (the
-    64-bit-fingerprint scheme of Manku/Jain/Sarma, WWW'07 — here on the
-    32-bit demo signature): split the signature into `n_pieces` disjoint
-    bit-pieces and block on every (piece_index, piece_value). By
-    pigeonhole, a pair with hamming < n_pieces leaves at least one piece
-    untouched and MUST collide in that piece's block — so recall is
-    structurally complete for ``max_hamming <= n_pieces - 1`` (the default
-    ``n_pieces = max_hamming + 1``), closing the single-prefix-block recall
-    hole (a pair differing only in a HIGH bit is now caught by the piece
-    that excludes it). A pair may collide in several blocks; pairs are
-    deduped exactly once at the end.
-
-    Per-block pairing (groupBy + local pair explosion carrying the
-    signatures), not a self-join: a self-join would run the 32-aggregate
-    simhash pipeline twice — see `bucket_pairs`. Block occupancy bounds the
-    local quadratic work; signatures are one long each, and the piece
-    explode multiplies the (id, simhash) frame — never the corpus text —
-    by n_pieces. Scale note: block count is 2^(bits/n_pieces) per piece;
-    production near-dup at h≤3 wants 64-bit signatures (4 pieces × 16 bits
-    = 65k blocks/piece) — see `simhash64_near_pairs` for that path."""
-    if bits > 52:
-        raise ValueError(
-            f"bits={bits}: floor(simhash / 2^shift) is only exact for "
-            "signatures < 2^53 — silent recall loss above that. Use "
-            "simhash64()/simhash64_near_pairs() for 64-bit signatures"
-        )
-    if n_pieces is None:
-        n_pieces = max_hamming + 1
-    width = bits // n_pieces  # low pieces get `width`, the top piece the rest
-    pieced = sig.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(F.array(*[F.lit(p) for p in range(n_pieces)])).alias("p"),
-    )
-    # piece p covers bits [p*width, (p+1)*width) (top piece runs to `bits`):
-    # value = floor(simhash / 2^(p*width)) % 2^piece_width. Division of a
-    # non-negative long by a power of two is exact in doubles up to 2^52,
-    # so floor + modulo replicate bit-shifts portably (same text works in
-    # the SQL oracle, which has no shift operators on all engines).
-    piece_width = F.when(
-        F.col("p") < n_pieces - 1, F.lit(width)
-    ).otherwise(F.lit(bits - width * (n_pieces - 1)))
-    shifted = F.floor(
-        F.col("simhash") / F.pow(F.lit(2.0), F.col("p") * width)
-    ).cast("long")
-    pieced = pieced.withColumn(
-        "blk", shifted % F.pow(F.lit(2.0), piece_width).cast("long")
-    )
-    grp = (
-        pieced.groupBy("p", "blk")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("s")))
-            ).alias("m")
-        )
-        .filter(F.size("m") > 1)
-    )
-    return _block_pairs(
-        grp,
-        lambda x, y: F.bit_count(x["s"].bitwiseXOR(y["s"])),
-        max_hamming,
-        max_block=max_block,
-    )
-
-
-def simhash64_from_sums(sums: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, b0..b63) bit sums → 64-bit signature as two 32-bit halves."""
-    return sums.select(
-        F.col(id_col),
-        _sign_bits_long(32, 32).alias("simhash_hi"),
-        _sign_bits_long(0, 32).alias("simhash_lo"),
-    )
 
 
 def simhash_combined_from_sums(
@@ -654,64 +573,6 @@ def simhash_combined_from_sums(
         _sign_bits_long(32, 32).alias("simhash_hi"),
         _sign_bits_long(0, 32).alias("simhash_lo"),
     )
-
-
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash signature as TWO 32-bit halves (simhash_hi carries
-    bits 32-63, simhash_lo bits 0-31). The split keeps every value < 2^32,
-    so the portable floor/division piece arithmetic stays exact in doubles
-    (a single 64-bit long would corrupt low pieces past 2^53 and overflow
-    the sign bit at 2^63) and the identical SQL reproduces it in any
-    engine. Same one-shuffle shape as `simhash`: explode tokens, one
-    groupBy(id) with 64 conditional-sum partials."""
-    return simhash64_from_sums(simhash_bit_sums(df, id_col, text_col, 64), id_col)
-
-
-def simhash64_near_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_block: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs on 64-bit signatures — the production operating point
-    of Manku/Jain/Sarma WWW'07: 4 disjoint 16-bit pieces (65k blocks per
-    piece), pigeonhole-complete recall for hamming ≤ 3. Pieces 0-1 come
-    from the low half, 2-3 from the high half, so block extraction is
-    exact-double floor/mod on values < 2^32. Hamming distance is the sum
-    of the two halves' xor popcounts. Same blocked groupBy + local pair
-    explosion as `simhash_near_pairs` — the corpus text is never shuffled,
-    only (id, hi, lo) longs, and block occupancy bounds the quadratic
-    pairing work."""
-    pieced = sig.select(
-        F.col(id_col),
-        "simhash_hi",
-        "simhash_lo",
-        F.explode(F.array(*[F.lit(p) for p in range(4)])).alias("p"),
-    )
-    src = F.when(F.col("p") < 2, F.col("simhash_lo")).otherwise(F.col("simhash_hi"))
-    shift = (F.col("p") % 2) * 16
-    blk = (F.floor(src / F.pow(F.lit(2.0), shift)).cast("long") % F.lit(65536)).alias(
-        "blk"
-    )
-    pieced = pieced.withColumn("blk", blk)
-    grp = (
-        pieced.groupBy("p", "blk")
-        .agg(
-            F.sort_array(
-                F.collect_set(
-                    F.struct(
-                        F.col(id_col).alias("i"),
-                        F.col("simhash_hi").alias("sh"),
-                        F.col("simhash_lo").alias("sl"),
-                    )
-                )
-            ).alias("m")
-        )
-        .filter(F.size("m") > 1)
-    )
-    return _block_pairs(grp, _hamming64, max_hamming, max_block=max_block)
 
 
 def _hamming64(x, y) -> Column:
@@ -1024,12 +885,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
     )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    """Cosine of two float-array columns. For joins, precompute norms per
-    ROW (norm_expr) instead — recomputing them per PAIR triples the work."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def embedding_near_pairs(

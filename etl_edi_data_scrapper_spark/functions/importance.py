@@ -148,7 +148,7 @@ def fit_dsir_ratios(
     Xie 2023's deploy shape both distributions are FIXED references
     (target = curated text, source = a raw-pool sample), so the ratio
     table is fit once and every pool shard scores against it
-    (:func:`dsir_score`); persist with :func:`save_dsir_ratios`."""
+    (:func:`dsir_score`)."""
     src_counts = _bucket_counts(source, id_col, text_col, n_buckets)
     tgt_counts = _bucket_counts(target, id_col, text_col, n_buckets)
     # outer join: a bucket can be observed in only one corpus; the absent
@@ -191,11 +191,10 @@ def dsir_score(
     text_col: str = "text",
     n_buckets: int = 4096,
 ) -> DataFrame:
-    """Score documents under an already-fit (possibly loaded) DSIR
-    ratio table: featurize + one broadcast join + one aggregate, zero
-    fitting jobs. ``n_buckets`` MUST be the table's recorded geometry
-    (`load_dsir_ratios` returns it) — a mismatched hash space scores
-    garbage silently, which is why the artifact carries it. Note: a
+    """Score documents under an already-fit DSIR ratio table: featurize +
+    one broadcast join + one aggregate, zero fitting jobs. ``n_buckets``
+    MUST be the geometry the table was fit with — a mismatched hash space
+    scores garbage silently. Note: a
     bucket unseen in BOTH fit corpora has no ratio row and its grams
     drop from the sum (inner join) — identical to `dsir_log_weights`,
     where such buckets cannot occur in the scored corpus by
@@ -209,56 +208,6 @@ def dsir_score(
             F.sum("tf").cast("long").alias("n_grams"),
             F.sum(F.col("tf") * F.col("ratio_micro")).cast("long").alias("logw_sum_micro"),
         )
-    )
-
-
-def save_dsir_ratios(
-    spark, ratios: DataFrame, path: str, n_buckets: int, smoothing: int = 1
-) -> None:
-    """Persist a DSIR ratio table: parquet + a `_meta.json` sidecar
-    recording the featurization geometry (kind, n_buckets, smoothing) —
-    scoring under the wrong hash space must be impossible to do
-    silently."""
-    import json
-
-    from etl_edi_data_scrapper_spark.fsutil import write_text_atomic
-
-    ratios.select(
-        F.col("bucket").cast("int"), F.col("ratio_micro").cast("long")
-    ).write.mode("overwrite").parquet(f"{path}/ratios")
-    write_text_atomic(spark, f"{path}/_meta.json", json.dumps({
-        "kind": "dsir_ratios_v1",
-        "n_buckets": int(n_buckets),
-        "smoothing": int(smoothing),
-    }, sort_keys=True))
-
-
-def load_dsir_ratios(spark, path: str):
-    """(ratios, n_buckets) from `save_dsir_ratios`; loud refusal on a
-    missing/foreign sidecar or wrong schema."""
-    import json
-
-    from etl_edi_data_scrapper_spark.fsutil import read_text
-
-    raw = read_text(spark, f"{path}/_meta.json")
-    if raw is None:
-        raise FileNotFoundError(f"no DSIR ratio table at {path}")
-    meta = json.loads(raw)
-    if meta.get("kind") != "dsir_ratios_v1":
-        raise ValueError(
-            f"{path}: expected kind 'dsir_ratios_v1', got {meta.get('kind')!r}"
-        )
-    ratios = spark.read.parquet(f"{path}/ratios")
-    missing = {"bucket", "ratio_micro"} - set(ratios.columns)
-    if missing:
-        raise ValueError(
-            f"{path}: ratio table missing columns {sorted(missing)}"
-        )
-    return (
-        ratios.select(
-            F.col("bucket").cast("int"), F.col("ratio_micro").cast("long")
-        ),
-        int(meta["n_buckets"]),
     )
 
 

@@ -7,93 +7,37 @@ Public method, Spark-first shape:
 
   * features are hashed CHARACTER TRIGRAM bucket counts (char n-grams
     are the standard lid feature family — they see morphology and
-    diacritics where a token dictionary sees only exact stopwords),
-    densified to a fixed-length array per document by the same
-    explode + per-doc-groupBy convention as `quality_classifier.featurize`;
+    diacritics where a token dictionary sees only exact stopwords), as
+    sparse (id, bucket, tf) rows (`char_trigram_bucket_counts`);
   * the model is a MULTICLASS integer perceptron (Crammer/Singer-style
     mistake-driven update: predict by argmax, on a mistake add the
     feature vector to the true class and subtract it from the predicted
-    class);
-  * scoring and training are RELATIONAL: the feature array posexplodes
-    ONCE into (id, pos, count) rows (bias riding a constant-1 slot at
-    position B, persisted across epochs), each epoch broadcast-joins the
-    K·(B+1)-row weight frame, hash-aggregates per-(doc, class) scores,
-    argmaxes with a min-struct((−s), class) — (score desc, class asc)
-    ties, bit-identical to the SQL oracle's row_number — and reduces the
-    mistake gradient to ≤ K·(B+1) driver rows. One job and three small
-    hash-agg shuffles per epoch, zero Python, zero higher-order
-    expressions (a literal zip_with fold evaluated interpreted and
-    ~3×/row under CollapseProject; an unrolled 64-term sum blew up
-    codegen/JIT — measured 3.3 s and 9+ s per epoch respectively vs
-    ~0.3 s relational at sf0.1).
+    class), fit driver-resident in numpy (`np_multiclass_fit`) on a
+    bounded, deterministic labeled sample;
+  * scoring is ONE hash aggregate over the corpus grams
+    (`_score_corpus_grouped`): each gram adds its bucket's per-class
+    weight, and the argmax breaks ties by (score desc, class asc) —
+    bit-identical to the SQL oracle's row_number.
 
 Everything is INTEGER arithmetic (counts are longs, updates add/subtract
 counts) — bit-exact across engines and partitionings, so the epochs
 unroll into plain SQL for the DuckDB oracle exactly like
 `quality_classifier`'s binary perceptron (`suite._clf_ctes`), with a
-class dimension added (`suite._lang_clf_ctes`). At 100 TB:
-featurization is one explode shuffle over the corpus, each epoch's
-shuffles carry at most corpus-nnz rows into bounded hash aggregates,
-and the model state at the driver is K·(B+1) ints. A real deployment
-fits on a labeled SAMPLE (labels come from annotation or an upstream
-model) and scores the corpus — the fit input is whatever labeled frame
-the caller passes, nothing here scans more than it is given.
+class dimension added (`suite._lang_clf_ctes`). At 100 TB: the fit
+featurizes only its bounded sample, scoring is one explode + one hash
+aggregate over the corpus, and the model state at the driver is
+K·(B+1) ints. A real deployment fits on a labeled SAMPLE (labels come
+from annotation or an upstream model) and scores the corpus — the fit
+input is whatever labeled frame the caller passes, nothing here scans
+more than it is given.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.importance import hashed_bucket
-
-
-def char_trigram_featurize(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """(id, features) — dense length-``n_buckets`` array of hashed char
-    ``n``-gram counts over the RAW text (spaces included: token
-    boundaries are themselves a language signal). Texts shorter than
-    ``n`` contribute themselves as their single (short) gram, and NULL
-    text contributes the '' gram — every doc gets a feature row (absent
-    rows would silently drop docs through downstream inner joins)."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1)))
-    grams = docs.select(
-        F.col(id_col),
-        F.explode(F.transform(idx, lambda i: t.substr(i, F.lit(n)))).alias(
-            "gram"
-        ),
-    )
-    counts = (
-        grams.select(
-            id_col, hashed_bucket(F.col("gram"), n_buckets).alias("bucket")
-        )
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    return (
-        counts.groupBy(id_col)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("bucket", "tf"))
-            ).alias("__m")
-        )
-        .select(
-            id_col,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_buckets - 1)),
-                lambda i: F.coalesce(
-                    F.element_at(F.col("__m"), i.cast("long")),
-                    F.lit(0).cast("long"),
-                ),
-            ).alias("features"),
-        )
-    )
 
 
 def char_trigram_bucket_counts(
@@ -104,15 +48,13 @@ def char_trigram_bucket_counts(
     n_buckets: int = 64,
     extra: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id[, *extra], bucket, tf) — the SPARSE form of
-    `char_trigram_featurize`: same grams, same hash, same counts, without
-    the dense-array build (map_from_entries + a 64-slot element_at
-    transform per doc measured ~2.5 s of the featurize wall at sf0.1 —
-    the r14 optimization round removed it from the fit/score hot path;
-    the dense form remains for the distributed trainer). Zero-count
-    buckets are absent, which is exactly `_exploded_counts`'s c != 0
-    contract. Every doc yields at least one gram row (NULL text counts
-    the '' gram), so no doc is lost downstream."""
+    """(id[, *extra], bucket, tf) — hashed char ``n``-gram counts over
+    the RAW text (spaces included: token boundaries are themselves a
+    language signal), sparse: zero-count buckets are absent (a dense
+    per-doc array measured ~2.5 s of the featurize wall at sf0.1). Texts
+    shorter than ``n`` contribute themselves as their single (short)
+    gram, and NULL text counts the '' gram — every doc yields at least
+    one row, so no doc is lost downstream."""
     t = F.coalesce(F.col(text_col), F.lit(""))
     idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1)))
     grams = docs.select(
@@ -149,11 +91,10 @@ def _score_corpus_grouped(
     computes), summed per doc with the per-class weight vector inlined
     as an element_at over a literal array (codegen, no join, no K-way
     row blowup), bias added as a literal, argmax by array_sort of
-    (−score, class) structs — (score desc, class asc) ties, identical
-    to `_argmax`. Replaces [posexplode → broadcast join ×K → two hash
-    aggregates] with [explode → one hash aggregate]: 5.9 s → 0.8 s at
-    sf0.1 for the full featurize+score pipeline, result-identical
-    (pinned by test)."""
+    (−score, class) structs — (score desc, class asc) ties, the SQL
+    oracle's row_number order. Replaced [posexplode → broadcast join ×K
+    → two hash aggregates] with [explode → one hash aggregate]: 5.9 s →
+    0.8 s at sf0.1 for the full featurize+score pipeline."""
     langs = sorted(w)
     n_buckets = len(w[langs[0]]) if langs else 0
     t = F.coalesce(F.col(text_col), F.lit(""))
@@ -166,8 +107,7 @@ def _score_corpus_grouped(
     ).select(id_col, hashed_bucket(F.col("gram"), n_buckets).alias("bucket"))
     # one parsed expression per class: the per-element F.lit loop cost a
     # py4j round trip per weight (K×64 per plan build) — the parsed tree
-    # is identical (same element_at over a long-array literal; parity
-    # pinned by the sparse==dense test)
+    # is identical (same element_at over a long-array literal)
     aggs = [
         F.expr(
             "sum(element_at(array("
@@ -195,154 +135,16 @@ def _score_corpus_grouped(
     )
 
 
-def _exploded_counts(feat: DataFrame, id_col: str, *extra: str) -> DataFrame:
-    """(id, [*extra,] pos, c) — the dense feature array posexploded with
-    the constant-1 bias slot appended at position B; zero counts dropped
-    (they contribute 0 to every integer sum — exact). The relational
-    currency of both training and scoring."""
-    return feat.select(
-        F.col(id_col),
-        *[F.col(c) for c in extra],
-        F.posexplode(
-            F.array_append("features", F.lit(1).cast("long"))
-        ).alias("pos", "c"),
-    ).filter(F.col("c") != 0)
-
-
-def _weights_df(spark, w: dict[str, list[int]], b: dict[str, int]):
-    """The model as a dense K·(B+1)-row (cls, pos, w) frame (bias at
-    pos B). DENSE on purpose: the scoring inner-join must produce a row
-    for every (doc, class) — the all-zero epoch-1 model still has to
-    score every class 0, identically to the SQL unroll."""
-    rows = []
-    for cls in sorted(w):
-        for pos, wv in enumerate(w[cls]):
-            rows.append((cls, pos, int(wv)))
-        rows.append((cls, len(w[cls]), int(b[cls])))
-    return spark.createDataFrame(rows, "cls string, pos int, w long")
-
-
-def _scores(exploded: DataFrame, w_df: DataFrame, id_col: str) -> DataFrame:
-    """(id, cls, s): per-(doc, class) integer scores — one broadcast
-    join + one hash aggregate; every doc gets all K classes because the
-    weight frame is dense and every doc carries the bias slot."""
-    return (
-        exploded.join(F.broadcast(w_df), "pos")
-        .groupBy(id_col, "cls")
-        .agg(F.sum(F.col("c") * F.col("w")).alias("s"))
-    )
-
-
-def _argmax(scores: DataFrame, id_col: str) -> DataFrame:
-    """(id, pred, best): argmax class with (score desc, class asc) ties
-    — min of struct(−s, cls), the aggregate form of the oracle's
-    row_number ORDER BY s DESC, cls ASC."""
-    m = F.min(F.struct((-F.col("s")).alias("ns"), F.col("cls"))).alias("m")
-    return scores.groupBy(id_col).agg(m).select(
-        id_col,
-        F.col("m.cls").alias("pred"),
-        (-F.col("m.ns")).cast("long").alias("best"),
-    )
-
-
-def multiclass_perceptron_fit(
-    feat: DataFrame,
-    langs: list[str],
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    n_epochs: int = 2,
-) -> tuple[dict[str, list[int]], dict[str, int]]:
-    """Multiclass (Crammer/Singer-style) integer perceptron over
-    (id, features, label) rows: per epoch every doc is scored for all K
-    classes, predicted by argmax (ties → language code asc — all-zero
-    epoch-1 scores predict the first code for everyone, which IS the
-    algorithm, identically in the SQL unroll), and every mistake
-    contributes +counts to its true class and −counts to the predicted
-    class (bias rides the constant-1 slot). One collect job per epoch,
-    ≤ K·(B+1) rows to the driver. Returns ({lang: weights},
-    {lang: bias}) — Python ints, bit-exact.
-
-    Rows whose label is not in ``langs`` are excluded from the fit (the
-    oracle's replica excludes them identically)."""
-    spark = feat.sparkSession
-    exploded = _exploded_counts(
-        feat.filter(F.col(label_col).isin(list(langs))), id_col, label_col
-    ).persist()
-    w = {lg: [0] * n_buckets for lg in langs}
-    b = {lg: 0 for lg in langs}
-    labels = exploded.select(id_col, label_col).distinct()
-    for _ in range(int(n_epochs)):
-        pred = _argmax(
-            _scores(exploded.select(id_col, "pos", "c"), _weights_df(spark, w, b), id_col),
-            id_col,
-        )
-        mis = pred.join(labels, id_col).filter(
-            F.col(label_col) != F.col("pred")
-        )
-        deltas = mis.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(label_col).alias("cls"),
-                        F.lit(1).cast("long").alias("sign"),
-                    ),
-                    F.struct(
-                        F.col("pred").alias("cls"),
-                        F.lit(-1).cast("long").alias("sign"),
-                    ),
-                )
-            ).alias("u"),
-        ).select(id_col, "u.cls", "u.sign")
-        grad = (
-            deltas.join(exploded.select(id_col, "pos", "c"), id_col)
-            .groupBy("cls", "pos")
-            .agg(F.sum(F.col("sign") * F.col("c")).alias("g"))
-            .collect()
-        )
-        for r in grad:
-            if r["pos"] == n_buckets:
-                b[r["cls"]] += int(r["g"])
-            else:
-                w[r["cls"]][r["pos"]] += int(r["g"])
-    exploded.unpersist()
-    return w, b
-
-
-def multiclass_classify(
-    feat: DataFrame,
-    w: dict[str, list[int]],
-    b: dict[str, int],
-    id_col: str = "doc_id",
-    pred_col: str = "lang_clf_pred",
-    score_col: str = "lang_clf_score",
-) -> DataFrame:
-    """(id, pred, winning integer score — the perceptron margin
-    surrogate, same convention as `quality_classifier.classify`'s
-    `clf_score`) for EVERY row of ``feat``, labeled or not. Broadcast
-    join + two hash aggregates; the corpus text never moves."""
-    spark = feat.sparkSession
-    exploded = _exploded_counts(feat, id_col)
-    out = _argmax(_scores(exploded, _weights_df(spark, w, b), id_col), id_col)
-    return out.select(
-        F.col(id_col),
-        F.col("pred").alias(pred_col),
-        F.col("best").alias(score_col),
-    )
-
-
 def np_multiclass_fit(
     x, y_idx, langs: list[str], n_epochs: int = 2
 ) -> tuple[dict[str, list[int]], dict[str, int]]:
-    """The SAME batch multiclass perceptron as
-    `multiclass_perceptron_fit`, run driver-resident on an int64 numpy
-    matrix (``x`` (n, B+1) WITH the constant-1 bias column appended;
+    """The batch multiclass perceptron, run driver-resident on an int64
+    numpy matrix (``x`` (n, B+1) WITH the constant-1 bias column appended;
     ``y_idx`` indexes into lang-asc ``langs``). Integer matmul and
     scatter-adds are exact, np.argmax takes the FIRST maximum — with
     columns in lang-asc order that is precisely the (score desc, class
-    asc) tiebreak — so the returned model is bit-identical to the
-    distributed fit and to the SQL unroll (pinned by test). This is the
+    asc) tiebreak — so the returned model is bit-identical to the SQL
+    unroll (pinned by test). This is the
     `kmeans_fit`/`opq_train` bounded-driver-model discipline: the fit
     input is a capped sample, never the corpus."""
     import numpy as np
@@ -416,7 +218,7 @@ def fit_lang_classifier(
     # numpy op. Row mapping is pandas.factorize's first-occurrence order
     # — the same assignment the old dict loop made — and the batch
     # perceptron is row-order independent regardless, so the model is
-    # bit-identical (pinned by the sparse==dense parity test).
+    # bit-identical (pinned by the pure-Python reference test).
     trip = char_trigram_bucket_counts(
         docs.select(F.col(id_col), F.col(text_col)).join(
             F.broadcast(sample_ids), on=id_col
@@ -505,8 +307,7 @@ def classify_lang_corpus(
     """Score RAW documents with an already-trained (possibly loaded)
     language model: featurize under the model's recorded geometry +
     classify, zero training jobs — via `_score_corpus_grouped`'s single
-    hash aggregate (result-identical to the dense
-    featurize + `multiclass_classify` path, pinned by test). Returns
+    hash aggregate. Returns
     (id, lang_clf_pred, lang_clf_score). ``n_buckets`` is taken from the
     model's weight vectors; the argument is kept for signature
     compatibility and cross-checked."""

@@ -21,7 +21,6 @@ from typing import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -126,10 +125,8 @@ def _decode_video(content: bytes, dim: int) -> list[float] | None:
     grayscale it, block-mean it down to the same 2×(dim//2) thumbnail
     grid as the image kernel, emit ``dim`` values in [0, 1]. First-frame-
     only by design: the feature exists for dedup/triage, and a corpus
-    pass must not transcode every video — per-frame work goes through
-    `sample_frames`' exploded plan instead. Corrupt/undecodable bytes →
-    ``None`` (NULL feature), never a task-killing exception; keyframe
-    statistics live in :func:`video_keyframe_count`."""
+    pass must not transcode every video. Corrupt/undecodable bytes →
+    ``None`` (NULL feature), never a task-killing exception."""
     av = _import_av()
     import io
 
@@ -155,29 +152,6 @@ def _decode_video(content: bytes, dim: int) -> list[float] | None:
         for r in range(2)
         for c in range(cols)
     ]
-
-
-def video_keyframe_count(content: bytes) -> int | None:
-    """Keyframe count of the first video stream WITHOUT decoding frames
-    (demux only — packet headers carry the flag), the cheap triage stat
-    a video curation pass keys on (0 keyframes = unseekable/corrupt;
-    keyframes/duration = GOP density). PyAV-gated like `_decode_video`;
-    corrupt containers → None."""
-    av = _import_av()
-    import io
-
-    if content is None:
-        return None
-    try:
-        with av.open(io.BytesIO(content)) as container:
-            stream = next(
-                s for s in container.streams if s.type == "video"
-            )
-            return sum(
-                1 for p in container.demux(stream) if p.is_keyframe
-            )
-    except Exception:
-        return None
 
 
 def _decode_wav(content: bytes, dim: int) -> list[float] | None:
@@ -257,8 +231,7 @@ def extract_features(
     """Arrow-batched feature extraction over media rows.
 
     mapInPandas keeps the binary column inside Arrow buffers; each batch is
-    processed vectorized-per-partition. At 100 TB the stage is preceded by
-    a size-aware repartition (see ``repartition_by_bytes``).
+    processed vectorized-per-partition.
 
     Per-row ``DecoderUnavailable`` degrades to a NULL feature here — a
     mixed corpus with one MP3 among a million WAVs must not abort the
@@ -297,28 +270,3 @@ def extract_features(
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def repartition_by_bytes(df: DataFrame, target_bytes: int = 128 << 20, size_col: str | None = None) -> DataFrame:
-    """Partition media rows by cumulative byte budget, not row count — a
-    128 MB batch of 4 MB images is 32 rows, not thousands. Uses the metadata
-    size when present (no decode), else length(content)."""
-    size = F.col(size_col) if size_col else F.length("content").cast("long")
-    total = df.agg(F.sum(size)).first()[0] or 0
-    n = max(1, int(total / target_bytes) + 1)
-    return df.repartition(n)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling *plan*: expands each video row into frame
-    timestamps (decode stub per frame). Spark-side explode keeps the row
-    explosion distributed; the decoder kernel is swapped in like above."""
-    n_frames = (F.coalesce(F.col("meta.duration_ms"), F.lit(0)) / every_ms).cast("int")
-    return (
-        df.filter(F.col("kind") == "video")
-        .withColumn("frame_idx", F.explode(F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)))))
-        .select(
-            "media_id",
-            (F.col("frame_idx") * every_ms).alias("frame_ts_ms"),
-            "content",
-            "meta",
-        )
-    )

@@ -365,29 +365,6 @@ def _dropped_window_runs(
     )
 
 
-def exact_substr_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 8,
-) -> DataFrame:
-    """MAXIMAL duplicated substrings, reported per non-first occurrence —
-    the ExactSubstr artifact (Lee et al. 2022 §4.1 at fixed token
-    granularity): every maximal run of ≥ ``min_len`` tokens that also
-    appears earlier in the corpus (any document, any offset) yields one
-    (doc, start, length) row. ``min_len`` is the VARIABLE knob the fixed-
-    width sliding pass lacks: set it to the shortest match worth cutting.
-
-    Returns (id_col, span_start, span_len) with span_len ≥ min_len;
-    span_start is a 0-based token index."""
-    runs = _dropped_window_runs(docs, id_col, text_col, min_len)
-    return runs.select(
-        F.col(id_col),
-        F.col("span_start").cast("long").alias("span_start"),
-        (F.col("n_windows") + F.lit(min_len - 1)).cast("long").alias("span_len"),
-    )
-
-
 def exact_substr_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -403,9 +380,7 @@ def exact_substr_dedup(
     the per-document cut list is one (start, end) struct per maximal
     run instead of one entry per window position: for boilerplate-heavy
     documents at 100 TB that is the difference between an O(dropped
-    tokens) and an O(shared passages) array riding the text join — and
-    the spans themselves are the reportable artifact
-    (:func:`exact_substr_spans`).
+    tokens) and an O(shared passages) array riding the text join.
 
     Returns (id_col, n_tokens, n_spans_cut, n_tokens_cut, clean_text).
     """

@@ -35,22 +35,11 @@ def tokens(c: Column | str) -> Column:
     return F.split(c, " ")
 
 
-def stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
-    """# tokens found in a dictionary — the building block for both quality
-    scoring and language ID. array_contains-free: filter + size (codegen'd).
-    The word array parses from SQL text (r14): one py4j round trip per
-    word across 5 languages was ~0.1 s of plan build per lang_scores."""
-    from etl_edi_data_scrapper_spark.functions.hashing import str_array_sql
-
-    arr = F.expr(str_array_sql(words))
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-
 def _stopword_hits_sql(toks_sql: str, words: tuple[str, ...]) -> str:
-    """`stopword_hits` as SQL text over a token-array SQL fragment —
-    identical tree (filter + array_contains + size), zero py4j round
-    trips per word/lambda (r15 construction sweep; parity pinned by
-    test)."""
+    """# tokens found in a dictionary, as SQL text over a token-array SQL
+    fragment — the building block for both quality scoring and language
+    ID. array_contains-free filter + size (codegen'd); parsed text costs
+    zero py4j round trips per word/lambda (r15 construction sweep)."""
     from etl_edi_data_scrapper_spark.functions.hashing import str_array_sql
 
     return (
@@ -59,115 +48,70 @@ def _stopword_hits_sql(toks_sql: str, words: tuple[str, ...]) -> str:
     )
 
 
-def quality_features(text: Column | str) -> dict[str, Column]:
+def quality_features(text: str) -> dict[str, Column]:
     """Per-document quality signals (length, token stats, stopword ratio,
-    lexical diversity). Ratios are double divisions of exact ints —
-    deterministic across engines.
-
-    Pass ``text`` as a COLUMN NAME where possible (r15): the name form
-    builds each feature as one parsed expression — the Column-DSL
-    construction costs ~25 py4j round trips per call (~60 ms of plan
-    build, paid inside every timed fn()); the parsed trees are
-    identical, value parity pinned by test."""
-    if isinstance(text, str):
-        c = sql_ident(text)
-        t = f"split({c}, ' ')"
-        stop = _stopword_hits_sql(t, EN_STOPWORDS)
-        return {
-            "n_chars": F.expr(f"CAST(length({c}) AS BIGINT)"),
-            "n_tokens": F.expr(f"CAST(size({t}) AS BIGINT)"),
-            "avg_token_len": F.expr(
-                f"CAST(length({c}) - (size({t}) - 1) AS DOUBLE)"
-                f" / CAST(size({t}) AS DOUBLE)"
-            ),
-            "stopword_ratio": F.expr(
-                f"CAST({stop} AS DOUBLE) / CAST(size({t}) AS DOUBLE)"
-            ),
-            "uniq_ratio": F.expr(
-                f"CAST(size(array_distinct({t})) AS DOUBLE)"
-                f" / CAST(size({t}) AS DOUBLE)"
-            ),
-        }
-    toks = tokens(text)
-    n_tokens = F.size(toks)
-    n_chars = F.length(text)
-    n_uniq = F.size(F.array_distinct(toks))
-    n_stop = stopword_hits(toks, EN_STOPWORDS)
-    avg_token_len = (
-        (n_chars - (n_tokens - F.lit(1))).cast("double") / n_tokens.cast("double")
-    )
-    stopword_ratio = n_stop.cast("double") / n_tokens.cast("double")
-    uniq_ratio = n_uniq.cast("double") / n_tokens.cast("double")
+    lexical diversity) of the column named ``text``. Ratios are double
+    divisions of exact ints — deterministic across engines. Each feature
+    is one parsed expression (r15): Column-DSL construction cost ~25 py4j
+    round trips per call (~60 ms of plan build, paid inside every timed
+    fn())."""
+    c = sql_ident(text)
+    t = f"split({c}, ' ')"
+    stop = _stopword_hits_sql(t, EN_STOPWORDS)
     return {
-        "n_chars": n_chars.cast("long"),
-        "n_tokens": n_tokens.cast("long"),
-        "avg_token_len": avg_token_len,
-        "stopword_ratio": stopword_ratio,
-        "uniq_ratio": uniq_ratio,
+        "n_chars": F.expr(f"CAST(length({c}) AS BIGINT)"),
+        "n_tokens": F.expr(f"CAST(size({t}) AS BIGINT)"),
+        "avg_token_len": F.expr(
+            f"CAST(length({c}) - (size({t}) - 1) AS DOUBLE)"
+            f" / CAST(size({t}) AS DOUBLE)"
+        ),
+        "stopword_ratio": F.expr(
+            f"CAST({stop} AS DOUBLE) / CAST(size({t}) AS DOUBLE)"
+        ),
+        "uniq_ratio": F.expr(
+            f"CAST(size(array_distinct({t})) AS DOUBLE)"
+            f" / CAST(size({t}) AS DOUBLE)"
+        ),
     }
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1]-ish score: favors mid-length docs with some stopwords
-    and diverse vocabulary (the usual heuristic pre-filter before expensive
-    model-based scoring). Column-NAME input takes the parsed-SQL path
-    (identical tree — see quality_features)."""
-    if isinstance(text, str):
-        c = sql_ident(text)
-        t = f"split({c}, ' ')"
-        stop = _stopword_hits_sql(t, EN_STOPWORDS)
-        ratio = f"CAST({stop} AS DOUBLE) / CAST(size({t}) AS DOUBLE)"
-        uniq = (
-            f"CAST(size(array_distinct({t})) AS DOUBLE)"
-            f" / CAST(size({t}) AS DOUBLE)"
-        )
-        return F.expr(
-            f"0.4D * least(CAST(CAST(size({t}) AS BIGINT) AS DOUBLE) / 100.0D, 1.0D)"
-            f" + 0.3D * least(({ratio}) * 4, 1.0D)"
-            f" + 0.3D * ({uniq})"
-        )
-    f = quality_features(text)
-    length_term = F.least(f["n_tokens"].cast("double") / F.lit(100.0), F.lit(1.0))
-    return (
-        F.lit(0.4) * length_term
-        + F.lit(0.3) * F.least(f["stopword_ratio"] * 4, F.lit(1.0))
-        + F.lit(0.3) * f["uniq_ratio"]
+def quality_score(text: str) -> Column:
+    """Composite [0,1]-ish score of the column named ``text``: favors
+    mid-length docs with some stopwords and diverse vocabulary (the usual
+    heuristic pre-filter before expensive model-based scoring). One
+    parsed expression (see quality_features)."""
+    c = sql_ident(text)
+    t = f"split({c}, ' ')"
+    stop = _stopword_hits_sql(t, EN_STOPWORDS)
+    ratio = f"CAST({stop} AS DOUBLE) / CAST(size({t}) AS DOUBLE)"
+    uniq = (
+        f"CAST(size(array_distinct({t})) AS DOUBLE)"
+        f" / CAST(size({t}) AS DOUBLE)"
+    )
+    return F.expr(
+        f"0.4D * least(CAST(CAST(size({t}) AS BIGINT) AS DOUBLE) / 100.0D, 1.0D)"
+        f" + 0.3D * least(({ratio}) * 4, 1.0D)"
+        f" + 0.3D * ({uniq})"
     )
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language stopword-hit counts."""
-    toks = tokens(text)
-    return {lang: stopword_hits(toks, words) for lang, words in LANG_STOPWORDS.items()}
-
-
-def lang_id(text: Column | str) -> Column:
-    """argmax language with deterministic tiebreak (language code ascending);
-    all-zero scores → 'und' (undetermined).
+def lang_id(text: str) -> Column:
+    """argmax language of the column named ``text`` by stopword hits, with
+    deterministic tiebreak (language code ascending); all-zero scores →
+    'und' (undetermined).
 
     Linear form — ``greatest`` + first-match CASE — not a pairwise fold: a
     fold embeds every prior branch twice per level (exponential expression
-    growth, measured 8× slower at 5k docs).
-
-    Column-NAME input takes the parsed-SQL path (one F.expr instead of
-    ~30 py4j round trips; identical tree, value parity pinned by test)."""
+    growth, measured 8× slower at 5k docs). One parsed expression instead
+    of ~30 py4j round trips."""
     langs = sorted(LANG_STOPWORDS)
-    if isinstance(text, str):
-        t = f"split({sql_ident(text)}, ' ')"
-        s = {lg: _stopword_hits_sql(t, LANG_STOPWORDS[lg]) for lg in langs}
-        mx = "greatest(" + ", ".join(s[lg] for lg in langs) + ")"
-        whens = [f"WHEN {mx} = 0 THEN 'und'"] + [
-            f"WHEN {s[lg]} = {mx} THEN '{lg}'" for lg in langs[:-1]
-        ]
-        return F.expr(
-            "CASE " + " ".join(whens) + f" ELSE '{langs[-1]}' END"
-        )
-    scores = lang_scores(text)
-    mx = F.greatest(*[scores[lg] for lg in langs])
-    expr = F.when(mx == 0, F.lit("und"))
-    for lg in langs[:-1]:
-        expr = expr.when(scores[lg] == mx, F.lit(lg))
-    return expr.otherwise(F.lit(langs[-1]))
+    t = f"split({sql_ident(text)}, ' ')"
+    s = {lg: _stopword_hits_sql(t, LANG_STOPWORDS[lg]) for lg in langs}
+    mx = "greatest(" + ", ".join(s[lg] for lg in langs) + ")"
+    whens = [f"WHEN {mx} = 0 THEN 'und'"] + [
+        f"WHEN {s[lg]} = {mx} THEN '{lg}'" for lg in langs[:-1]
+    ]
+    return F.expr("CASE " + " ".join(whens) + f" ELSE '{langs[-1]}' END")
 
 
 # GPT-2-style pre-tokenizer, restricted to RE2-safe syntax (no lookahead)

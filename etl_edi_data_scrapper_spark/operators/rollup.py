@@ -44,8 +44,8 @@ def merge_daily_rollup(
     Schema of the maintained table: (day date [partition], *keys,
     n long, total decimal(28,10)). Idempotence caveat: this is
     at-least-once on replay (re-merging the same batch double-counts) —
-    pair with an upstream exactly-once sink (`sinks.idempotent_batch_writer`)
-    or CDC dedup when the feed can replay.
+    use `merge_daily_rollup_idempotent`, or pair with an upstream
+    exactly-once sink or CDC dedup, when the feed can replay.
     """
     delta = (
         batch.withColumn("day", F.col(ts_col).cast("date"))
@@ -124,8 +124,8 @@ def full_rollup(
 # atomic on a plain object store (crash between the two loses or doubles a
 # batch either way). The idempotent form stores PER-BATCH partials instead:
 # each batch writes its own (day, batch_id) partitions with dynamic
-# overwrite — the same discipline as `sinks.idempotent_batch_writer` — so a
-# replay overwrites exactly its own partitions and can never double-count.
+# overwrite, so a replay overwrites exactly its own partitions and can
+# never double-count.
 # Readers aggregate the partials (O(batches-per-day rows), not O(events));
 # `compact_rollup` folds history into one partial per day so read cost
 # stays bounded on long-running tables. Compact only past the replay

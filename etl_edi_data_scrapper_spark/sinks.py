@@ -14,7 +14,6 @@ in this container, so the writer is gated with a clear error; the JSON shaping
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
 
@@ -87,34 +86,3 @@ def collect_rows(df: DataFrame) -> list[dict]:
     return [row.asDict(recursive=True) for row in df.collect()]
 
 
-def idempotent_batch_writer(base_path: str, partition_source: str | None = None):
-    """foreachBatch sink with exactly-once RESTART semantics.
-
-    Structured Streaming's foreachBatch is at-least-once: after a crash
-    between sink write and checkpoint commit, the batch is REPLAYED with the
-    same batch_id. Writing each batch to ``base_path/batch_id=N`` with
-    dynamic partition overwrite makes the replay idempotent — the re-run
-    overwrites exactly its own partition, never appends duplicates and never
-    touches other batches' output. (The same batch-id-keyed discipline
-    applies to any transactional sink: JDBC upsert on (batch_id, key),
-    Kafka transactional producer keyed by batch, etc.)
-
-    Use as: ``stream.writeStream.foreachBatch(idempotent_batch_writer(path))``.
-    """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out = batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            cols = ["batch_id"] + ([partition_source] if partition_source else [])
-            (
-                out.write.mode("overwrite")
-                .partitionBy(*cols)
-                .parquet(base_path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    return write

@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import stat
 import tempfile
 import time
 import urllib.error
@@ -54,8 +55,22 @@ class JwtManager:
     _now: Callable[[], float] = field(default=time.time)
 
     def _cache_path(self) -> str:
+        """The token file path, in a directory only this user can enter.
+        Bearer tokens must not sit in a shared temp dir readable by others,
+        and a directory someone else owns or can write is refused: they
+        could read the tokens or plant a file or link at the token path."""
         d = self.cache_dir or os.path.join(tempfile.gettempdir(), "etl_jwt_cache")
-        os.makedirs(d, exist_ok=True)
+        os.makedirs(d, mode=0o700, exist_ok=True)
+        st = os.lstat(d)
+        if (
+            not stat.S_ISDIR(st.st_mode)
+            or st.st_uid != os.getuid()
+            or st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
+        ):
+            raise PermissionError(
+                f"JWT cache dir {d!r} must be a directory owned by this user "
+                "and writable by no one else"
+            )
         return os.path.join(d, f"token_{self.supplier_id}.json")
 
     def token(self) -> str:
@@ -72,7 +87,11 @@ class JwtManager:
             ttl = int(parsed.get("expires_in", self.default_ttl_s))
         except (json.JSONDecodeError, AttributeError):
             tok, ttl = body.strip(), self.default_ttl_s
-        with open(path, "w") as f:
+        # owner-only, and never through a link planted at the token path
+        flags = os.O_WRONLY | os.O_CREAT | os.O_TRUNC | os.O_NOFOLLOW
+        fd = os.open(path, flags, 0o600)
+        os.fchmod(fd, 0o600)  # a file left by an older writer keeps its mode
+        with os.fdopen(fd, "w") as f:
             json.dump({"token": tok, "expires_at": self._now() + ttl}, f)
         return tok
 

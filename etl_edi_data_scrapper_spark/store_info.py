@@ -1,12 +1,12 @@
 """Operational audit for persisted store layouts (r12 verdict #7).
 
-The persisted ANN indexes (``_meta.json`` encoding flags), the near-dup
-store and the r14 fit artifacts (classifier / language models, DSIR ratio
-tables, unigram / bigram reference LMs) each carry their own layout
-contract. ``describe_store`` is the one audit surface over all of them:
-it identifies the layout, reads the sidecar(s), and counts rows/files,
-so operational drift (a stranded compaction, a drifted quantizer) is
-visible from the CLI (``store-info``). Unknown layouts REFUSE (a crisp
+The persisted ANN index (``_meta.json`` encoding flags), the near-dup
+store and the r14 fit artifacts (classifier / language models, unigram /
+bigram reference LMs) each carry their own layout contract.
+``describe_store`` is the one audit surface over all of them: it
+identifies the layout, reads the sidecar(s), and counts rows/files, so
+operational drift (a stranded compaction) is visible from the CLI
+(``store-info``). Unknown layouts REFUSE (a crisp
 error beats a half-parsed report that normalizes guessing).
 
 Detection is by the stores' own contracts, not path names:
@@ -14,14 +14,11 @@ Detection is by the stores' own contracts, not path names:
 - ``ivfpq-index``: `_meta.json` beside `centroids/` + `codes/` +
   `codebooks/` (`save_ivfpq_index` layout). Extras: cell count, codes
   per cell min/max, leftover compaction dirs (`codes__precompact` /
-  `codes__compacting` — a crashed `ann-compact`), quantizer drift.
+  `codes__compacting` — a crashed `ann-compact`).
 - ``classifier-model`` / ``lang-classifier-model``: a JSON model file
   with its ``kind``.
-- ``dsir-ratios``: `_meta.json` kind + `ratios/`.
 - ``bigram-lm``: `uni/` + `big/` count tables; ``unigram-lm``: parquet
   of exactly (`term`, `cnt`).
-- ``ivf-index``: `centroids/` + `assigned/` and no `codes/`
-  (`save_ivf_index` layout).
 - ``neardup-store``: parquet with `band`/`band_key`/doc-id columns
   (`dedup_batch_against_store`). Extras: band count, docs.
 
@@ -129,26 +126,6 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
         ).first()
         out["codebook_geometry"] = {"m_sub": agg["m"], "n_codes": agg["n"]}
         out["code_data_files"] = _data_files(spark, f"{path}/codes")
-        # quantizer staleness (r13 verdict #5): ann-index records the
-        # train-time quantization MSE and every append records its own;
-        # the ratio is the FAISS "monitor quantization error" signal —
-        # frozen centroids/codebooks degrade silently as appends drift,
-        # and past RETRAIN_MSE_RATIO the advisory says rebuild (ann-index
-        # again) rather than keep appending into stretched cells.
-        qm = out["meta"].get("quant_mse") if isinstance(out["meta"], dict) else None
-        if (
-            isinstance(qm, dict)
-            and qm.get("train")
-            and isinstance(qm.get("appended"), dict)
-        ):
-            from etl_edi_data_scrapper_spark.functions.similarity import (
-                RETRAIN_MSE_RATIO,
-            )
-
-            ratio = float(qm["appended"]["mse"]) / float(qm["train"])
-            out["quant_mse_ratio"] = ratio
-            out["retrain_advised"] = ratio > RETRAIN_MSE_RATIO
-            out["retrain_mse_ratio_threshold"] = RETRAIN_MSE_RATIO
         leftovers = [
             d
             for d in ("codes__precompact", "codes__compacting")
@@ -182,20 +159,6 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
             out["classes"] = sorted(file_meta["w"])
         return out
 
-    # DSIR ratio table: _meta.json kind + ratios/ parquet
-    dsir_meta = _read_json_sidecar(spark, f"{path}/_meta.json")
-    if (
-        isinstance(dsir_meta, dict)
-        and dsir_meta.get("kind") == "dsir_ratios_v1"
-        and _exists(spark, f"{path}/ratios")
-    ):
-        out["type"] = "dsir-ratios"
-        out["meta"] = dsir_meta
-        out["buckets_with_evidence"] = spark.read.parquet(
-            f"{path}/ratios"
-        ).count()
-        return out
-
     # bigram reference LM: uni/ + big/ count tables
     if _exists(spark, f"{path}/uni") and _exists(spark, f"{path}/big"):
         from pyspark.sql import functions as F
@@ -213,29 +176,13 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
             )
             return out
 
-    # --- ivf-flat index: centroids + assigned, no codes/meta ------------
-    if all(
-        _exists(spark, f"{path}/{d}") for d in ("centroids", "assigned")
-    ) and not _exists(spark, f"{path}/codes"):
-        out["type"] = "ivf-index"
-        assigned = spark.read.parquet(f"{path}/assigned")
-        out["rows"] = assigned.count()
-        out["cells"] = assigned.select("centroid_id").distinct().count()
-        out["centroid_rows"] = spark.read.parquet(
-            f"{path}/centroids"
-        ).count()
-        out["keeps_float_vectors"] = True  # vs the IVFPQ code store
-        out["data_files"] = _data_files(spark, f"{path}/assigned")
-        return out
-
     # --- parquet-backed stores, told apart by their contract columns ---
     df = _try_parquet(spark, path)
     if df is None:
         raise ValueError(
             f"{path!r} matches no known store layout (ivfpq-index, "
-            "ivf-index, neardup-store, classifier-model, "
-            "lang-classifier-model, dsir-ratios, unigram-lm, bigram-lm) "
-            "— refusing to guess."
+            "neardup-store, classifier-model, lang-classifier-model, "
+            "unigram-lm, bigram-lm) — refusing to guess."
         )
     cols = set(df.columns)
 

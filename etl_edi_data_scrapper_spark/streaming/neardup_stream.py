@@ -43,8 +43,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,8 +88,8 @@ def dedup_batch_against_store(
     checkpointed (materialized before the store append), so it is safe to
     evaluate any number of times.
 
-    Pure batch function so it is testable without a stream; the streaming
-    entry point `run_incremental_neardup` calls it per micro-batch."""
+    Pure batch function so it is testable without a stream; a streaming
+    pipeline calls it per micro-batch from ``foreachBatch``."""
     sig = minhash_signatures(batch, id_col, text_col, n_hashes)
     keys = lsh_band_keys(sig, id_col, n_hashes, bands)
     keyed = keys.join(sig, id_col).cache()  # (id, band, band_key, h0..)
@@ -275,37 +273,3 @@ def compact_neardup_store(spark: SparkSession, store_dir: str) -> tuple[int, int
     return before, after
 
 
-def run_incremental_neardup(
-    spark: SparkSession,
-    doc_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    on_batch: Callable[[DataFrame, int], None],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 12,
-    bands: int = 6,
-    threshold: float = 0.5,
-):
-    """Streaming entry point: each micro-batch is near-dedup'd against the
-    store and handed to ``on_batch(verdict_df, epoch_id)`` (sink the
-    verdicts wherever the pipeline needs them). Returns the StreamingQuery."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        verdict = dedup_batch_against_store(
-            spark,
-            batch_df,
-            store_dir,
-            id_col=id_col,
-            text_col=text_col,
-            n_hashes=n_hashes,
-            bands=bands,
-            threshold=threshold,
-        )
-        on_batch(verdict, epoch_id)
-
-    return (
-        doc_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

@@ -719,7 +719,7 @@ def _sql_shingles(t: str, n: int = 3) -> str:
 
 
 _SQL_SHINGLES = _sql_shingles("{t}", 3)
-# DuckDB replica of functions.dedup.cosine_expr — bit-identical to Spark's
+# DuckDB replica of functions.dedup.dot_expr/norm_expr — bit-identical to Spark's
 # zip_with/aggregate (sequential double accumulation; the builtin
 # list_cosine_similarity computes in float32 and does NOT match)
 _SQL_DOT = "list_sum(list_transform(list_zip({a}, {b}), x -> x[1]::DOUBLE * x[2]::DOUBLE))"
@@ -1074,7 +1074,7 @@ def _sql_gopher_line_ctes() -> tuple[str, str, str]:
 
 
 def _sql_hex_word(h: str, start: int) -> str:
-    """SQL for _hex_word (functions/dedup.py): 8 hex chars → bigint via
+    """SQL for hex_word (functions/hashing.py): 8 hex chars → bigint via
     instr arithmetic — identical formula on both engines."""
     v = "CAST(0 AS BIGINT)"
     for k in range(8):
@@ -3667,7 +3667,7 @@ def _simhash_pairs_oracle(
     n_pieces: int | None = None,
     max_block: int | None = None,
 ) -> str:
-    # Replicates the engine's multi-piece blocking (dedup.simhash_near_pairs):
+    # Replicates the engine's multi-piece blocking (dedup.simhash_pairs_multi):
     # piece value = floor(sig / 2^(p*width)) % 2^piece_width — double division
     # of a non-negative value by a power of two is exact, floor == truncate.
     # ``max_block`` replicates _block_pairs' deterministic truncation guard:
@@ -3708,8 +3708,9 @@ def _simhash_pairs_oracle(
 
 def _simhash64_sig_ctes() -> str:
     """CTE chain ending in sig(doc_id, simhash_hi, simhash_lo) — the 64-bit
-    signature as two 32-bit halves, mirroring dedup.simhash64 (each half
-    < 2^32 keeps floor/division piece arithmetic exact in doubles)."""
+    signature as two 32-bit halves, mirroring
+    dedup.simhash_combined_from_sums (each half < 2^32 keeps
+    floor/division piece arithmetic exact in doubles)."""
     terms = []
     for i in range(64):
         pos, div = i // 4 + 1, 2 ** (3 - i % 4)
@@ -3731,8 +3732,8 @@ def _simhash64_sig_ctes() -> str:
 
 
 def _simhash64_pairs_oracle(max_hamming: int = 3, max_block: int | None = None) -> str:
-    # Replicates dedup.simhash64_near_pairs: 4 pieces × 16 bits, pieces 0-1
-    # from the low half, 2-3 from the high half; hamming = sum of the two
+    # Replicates the 64-bit leg of dedup.simhash_pairs_multi: 4 pieces × 16
+    # bits, pieces 0-1 from the low half, 2-3 from the high half; hamming = sum of the two
     # halves' xor popcounts. ``max_block`` replicates the deterministic
     # per-(piece, block) smallest-ids truncation, as in _simhash_pairs_oracle.
     pieced_core = """
@@ -4546,7 +4547,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     * 48-bit single-long signatures (12-bit pieces, 4096 blocks/piece) —
       the widest width where the portable floor/division piece arithmetic
       stays exact on one long (< 2^53).
-    * 64-bit production signatures (`simhash64`: two 32-bit halves, 16-bit
+    * 64-bit production signatures (two 32-bit halves, 16-bit
       pieces, 65k blocks/piece) — the Manku operating point for h ≤ 3;
       the hi/lo split keeps block extraction exact and sidesteps the
       signed-long bit-63 overflow.

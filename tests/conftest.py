@@ -16,4 +16,9 @@ def spark():
 
 @pytest.fixture(scope="session")
 def sf_dir():
-    return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+    """Directory of the generated sf0.001 tables (override with
+    SPARK_GRAFT_TEST_SF_DIR); tests that read them skip when it is absent."""
+    path = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+    if not os.path.isdir(path):
+        pytest.skip(f"generated test tables not found at {path}")
+    return path

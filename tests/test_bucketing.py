@@ -50,54 +50,3 @@ def test_bucketed_agg_has_no_shuffle(spark, warehouse):
     )
     plan = _physical(agg, spark)
     assert "Exchange hashpartitioning" not in plan
-
-
-# --- r10: persisted IVF index with a partition-pruned cell layout -----------
-
-
-def test_ivf_index_save_load_roundtrip(spark, sf_dir, tmp_path):
-    """A saved+loaded index answers identically to the in-memory one, and
-    the assignment lands partitioned by centroid_id so probed cells are a
-    pruned scan, not a corpus scan."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from etl_edi_data_scrapper_spark.functions.similarity import (
-        ivf_index,
-        ivf_topk,
-        load_ivf_index,
-        save_ivf_index,
-    )
-
-    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = corpus.limit(5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    centroids, assigned = ivf_index(corpus, n_centroids=8)
-    want = {
-        (r.q_id, r.rank): r.vec_id
-        for r in ivf_topk(queries, centroids, assigned, k=3, nprobe=2).collect()
-    }
-
-    idx = str(tmp_path / "ivf")
-    save_ivf_index(centroids, assigned, idx)
-    # cell layout on disk: one directory per centroid
-    cells = [d for d in os.listdir(f"{idx}/assigned") if d.startswith("centroid_id=")]
-    assert len(cells) == 8
-    c2, a2 = load_ivf_index(spark, idx)
-    got = {
-        (r.q_id, r.rank): r.vec_id
-        for r in ivf_topk(queries, c2, a2, k=3, nprobe=2).collect()
-    }
-    assert got == want and len(got) == 15
-
-    # a literal cell probe compiles to a pruned scan: the partition filter
-    # reaches the read, no post-scan Filter on centroid_id needed
-    plan = (
-        a2.filter(F.col("centroid_id") == 3)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [isnotnull(centroid_id" in plan

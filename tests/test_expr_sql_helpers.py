@@ -44,15 +44,17 @@ def test_hex_word_sql_matches_dsl_fold(spark):
         assert 0 <= r.n1 < 2**32
 
 
-def test_text_helpers_sql_match_dsl_bitexact(spark):
-    """r15: lang_id / quality_features / quality_score column-NAME forms
-    parse to value-identical expressions vs the Column-DSL forms —
-    including doubles compared bit-exactly and adversarial texts (empty,
-    single token, unicode stopwords, ties between language scores)."""
-    import math
+def test_text_helpers_sql_match_python_reference_bitexact(spark):
+    """r15: lang_id / quality_features / quality_score (one parsed
+    expression each) equal a pure-Python reference — split on ' ',
+    integer counts, float division in the same order — with doubles
+    compared bit-exactly, on adversarial texts (empty, single token,
+    unicode stopwords, ties between language scores)."""
     import struct
 
     from etl_edi_data_scrapper_spark.functions.text import (
+        EN_STOPWORDS,
+        LANG_STOPWORDS,
         lang_id,
         quality_features,
         quality_score,
@@ -68,27 +70,51 @@ def test_text_helpers_sql_match_dsl_bitexact(spark):
         "的 是 在 了 和 有 我 不",
         "x " * 500,
     ]
+
+    def py_features(text):
+        t = text.split(" ")
+        n = len(t)
+        stop = sum(1 for w in t if w in EN_STOPWORDS)
+        return {
+            "n_chars": len(text),
+            "n_tokens": n,
+            "avg_token_len": float(len(text) - (n - 1)) / float(n),
+            "stopword_ratio": float(stop) / float(n),
+            "uniq_ratio": float(len(set(t))) / float(n),
+        }
+
+    def py_score(text):
+        f = py_features(text)
+        return (
+            0.4 * min(float(f["n_tokens"]) / 100.0, 1.0)
+            + 0.3 * min(f["stopword_ratio"] * 4, 1.0)
+            + 0.3 * f["uniq_ratio"]
+        )
+
+    def py_lang(text):
+        t = text.split(" ")
+        langs = sorted(LANG_STOPWORDS)
+        s = {lg: sum(1 for w in t if w in LANG_STOPWORDS[lg]) for lg in langs}
+        mx = max(s.values())
+        return "und" if mx == 0 else next(lg for lg in langs if s[lg] == mx)
+
     df = spark.createDataFrame([(t,) for t in texts], "text string")
-    fd = quality_features(F.col("text"))
     fs = quality_features("text")
     rows = df.select(
-        lang_id(F.col("text")).alias("l_dsl"),
-        lang_id("text").alias("l_sql"),
-        quality_score(F.col("text")).alias("q_dsl"),
-        quality_score("text").alias("q_sql"),
-        *[fd[k].alias(f"d_{k}") for k in fd],
-        *[fs[k].alias(f"s_{k}") for k in fs],
+        "text",
+        lang_id("text").alias("lang"),
+        quality_score("text").alias("score"),
+        *[fs[k].alias(k) for k in fs],
     ).collect()
 
     def bits(x):
-        if x is None:
-            return None
-        if isinstance(x, float):
-            return struct.pack("<d", x)
-        return x
+        return struct.pack("<d", x) if isinstance(x, float) else x
 
+    assert sorted(r.text for r in rows) == sorted(texts)
     for r in rows:
-        assert r.l_dsl == r.l_sql
-        assert bits(r.q_dsl) == bits(r.q_sql)
-        for k in fd:
-            assert bits(r[f"d_{k}"]) == bits(r[f"s_{k}"]), k
+        assert r.lang == py_lang(r.text), r.text
+        assert bits(r.score) == bits(py_score(r.text)), r.text
+        want = py_features(r.text)
+        assert set(fs) == set(want)
+        for k in fs:
+            assert bits(r[k]) == bits(want[k]), (k, r.text)

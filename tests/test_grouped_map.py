@@ -105,10 +105,9 @@ def test_multi_column_keys(spark):
 
 
 def test_cogroup_batched_matches_per_key(spark):
-    # batched (bucketed) cogroup must reproduce per-key cogroup_apply
-    # exactly, including full-outer key semantics (keys on one side only)
+    # batched (bucketed) cogroup must reproduce a per-key cogroup exactly,
+    # including full-outer key semantics (keys on one side only)
     from etl_edi_data_scrapper_spark.operators.cogrouped import (
-        cogroup_apply,
         cogroup_apply_batched,
     )
 
@@ -137,10 +136,16 @@ def test_cogroup_batched_matches_per_key(spark):
         m["lv"] = m["lv"].astype(object).where(pd.notna(m["lv"]), None)
         return m[["k", "lv", "n_r"]]
 
-    want = {
-        (r.k, r.lv, r.n_r)
-        for r in cogroup_apply(left, right, ["k"], per_key, schema).collect()
-    }
+    # the per-key reference: per_key on each key's two groups, full outer
+    lp, rp = left.toPandas(), right.toPandas()
+    want = set()
+    for k in set(lp.k) | set(rp.k):
+        out = per_key((k,), lp[lp.k == k], rp[rp.k == k])
+        want |= {
+            (int(r.k), None if pd.isna(r.lv) else float(r.lv), int(r.n_r))
+            for r in out.itertuples()
+        }
+    assert len(want) == 30
     for nb in (1, 4, 64):  # fewer, equal, and more buckets than keys
         got = {
             (r.k, r.lv, r.n_r)

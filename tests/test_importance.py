@@ -180,19 +180,13 @@ def test_dsir_resample_n_keep_exceeding_corpus_keeps_all(spark):
     assert all(r["dsir_keep"] for r in rows)
 
 
-def test_dsir_ratio_table_persistence_and_score_parity(spark, tmp_path):
+def test_dsir_ratio_table_score_parity(spark):
     """r14: fit_dsir_ratios + dsir_score reproduce dsir_log_weights
-    exactly (the refactor is a pure factoring); the ratio table
-    round-trips through its parquet+meta artifact and the load returns
-    the recorded hash-space geometry; foreign/missing sidecars refuse."""
-    import pytest
-
+    exactly (the refactor is a pure factoring)."""
     from etl_edi_data_scrapper_spark.functions.importance import (
         dsir_log_weights,
         dsir_score,
         fit_dsir_ratios,
-        load_dsir_ratios,
-        save_dsir_ratios,
     )
 
     src = spark.createDataFrame(
@@ -211,17 +205,6 @@ def test_dsir_ratio_table_persistence_and_score_parity(spark, tmp_path):
     got = {r.doc_id: (r.n_grams, r.logw_sum_micro)
            for r in dsir_score(src, ratios, n_buckets=B).collect()}
     assert got == want
-
-    path = str(tmp_path / "dsir")
-    save_dsir_ratios(spark, ratios, path, n_buckets=B)
-    loaded, nb = load_dsir_ratios(spark, path)
-    assert nb == B
-    got2 = {r.doc_id: (r.n_grams, r.logw_sum_micro)
-            for r in dsir_score(src, loaded, n_buckets=nb).collect()}
-    assert got2 == want
-
-    with pytest.raises(FileNotFoundError):
-        load_dsir_ratios(spark, str(tmp_path / "absent"))
 
 
 def test_domain_mixture_dsir_thread_inherits_job_group_and_never_leaks(

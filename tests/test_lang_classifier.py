@@ -1,7 +1,8 @@
 """functions/lang_classifier.py — trained language ID (r13 verdict #4).
 
-Covers: bit-exact parity of the Spark multiclass-perceptron fit against
-an independent pure-Python reference (same algorithm, no Spark), the
+Covers: bit-exact parity of the Spark featurization, the numpy
+multiclass-perceptron fit and the grouped scorer against an independent
+pure-Python reference (same algorithm, no Spark), the
 confusable-language case the stopword-dictionary argmax provably
 mislabels (pt vs es — 'pt' has no dictionary and shares 'la'/'un'/'en'
 hits, so `text.lang_id` calls every Portuguese doc Spanish; the trained
@@ -13,13 +14,15 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.lang_classifier import (
-    char_trigram_featurize,
+    _score_corpus_grouped,
+    char_trigram_bucket_counts,
+    classify_lang_corpus,
     fit_lang_classifier,
-    multiclass_classify,
-    multiclass_perceptron_fit,
+    np_multiclass_fit,
 )
 
 N_BUCKETS = 64
@@ -75,6 +78,13 @@ def _py_fit(rows, langs, n_epochs=2):
     return w, b, pred
 
 
+def _np_fit(feats, labels, langs, n_epochs=2):
+    """`np_multiclass_fit` over dense features (bias column appended)."""
+    x = np.asarray([f + [1] for f in feats], dtype=np.int64)
+    y = np.asarray([langs.index(lg) for lg in labels], dtype=np.int64)
+    return np_multiclass_fit(x, y, langs, n_epochs=n_epochs)
+
+
 # pt-flavored docs carry the es dictionary's stopwords ('la', 'un', 'en')
 # but pt-characteristic trigrams (ção/ões/ã); es docs carry ción/ón.
 _ES = [
@@ -101,18 +111,15 @@ def _confusable_docs():
 def test_fit_matches_pure_python_reference(spark):
     docs = _confusable_docs()
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    feat = char_trigram_featurize(df).join(
-        df.select("doc_id", "lang"), "doc_id"
-    )
     langs = ["es", "pt"]
-    w, b = multiclass_perceptron_fit(feat, langs, n_epochs=2)
+    w, b = _np_fit([_py_features(t) for _, t, _ in docs], [lg for *_, lg in docs], langs)
     rows = [(lang, _py_features(text)) for _, text, lang in docs]
     w_ref, b_ref, pred_ref = _py_fit(rows, langs, n_epochs=2)
     assert w == w_ref and b == b_ref
-    # and the scored frame agrees with the reference argmax per doc
+    # and the grouped scorer agrees with the reference argmax per doc
     got = {
         r.doc_id: (r.lang_clf_pred, r.lang_clf_score)
-        for r in multiclass_classify(feat, w, b).collect()
+        for r in _score_corpus_grouped(df, w, b).collect()
     }
     for doc_id, text, _lang in docs:
         p, s = pred_ref(_py_features(text))
@@ -132,7 +139,7 @@ def test_confusable_pair_dictionary_fails_classifier_succeeds(spark):
 
     dict_pred = {
         r.doc_id: r.p
-        for r in df.select("doc_id", lang_id(F.col("text")).alias("p")).collect()
+        for r in df.select("doc_id", lang_id("text").alias("p")).collect()
     }
     truth = {doc_id: lang for doc_id, _, lang in docs}
     pt_ids = [d for d in truth if truth[d] == "pt"]
@@ -140,14 +147,12 @@ def test_confusable_pair_dictionary_fails_classifier_succeeds(spark):
 
     # ids interleave es (even) / pt (odd), so split by RANGE: the first
     # 16 ids (8 of each class) train, the last 8 are held out
-    feat_all = char_trigram_featurize(df).join(
-        df.select("doc_id", "lang"), "doc_id"
+    _, (w, b) = fit_lang_classifier(
+        df.filter(F.col("doc_id") < 16), ["es", "pt"], n_epochs=3, return_model=True
     )
-    feat_train = feat_all.filter(F.col("doc_id") < 16)
-    w, b = multiclass_perceptron_fit(feat_train, ["es", "pt"], n_epochs=3)
     got = {
         r.doc_id: r.lang_clf_pred
-        for r in multiclass_classify(feat_all, w, b).collect()
+        for r in classify_lang_corpus(df, w, b, N_BUCKETS).collect()
     }
     held_out = [d for d in truth if d >= 16]
     assert held_out and all(got[d] == truth[d] for d in held_out)
@@ -159,42 +164,35 @@ def test_degenerate_texts_get_rows_and_verdicts(spark):
         [(0, "abc", "aa"), (1, "", "bb"), (2, None, "aa"), (3, "xy", "bb")],
         "doc_id long, text string, lang string",
     )
-    feat = char_trigram_featurize(df)
-    assert feat.count() == 4
-    fmap = {r.doc_id: list(r.features) for r in feat.collect()}
-    assert sum(fmap[0]) == 1  # 'abc' -> one trigram
-    assert sum(fmap[1]) == 1  # '' -> the '' gram
+    fmap: dict[int, dict[int, int]] = {}
+    for r in char_trigram_bucket_counts(df).collect():
+        fmap.setdefault(r.doc_id, {})[r.bucket] = r.tf
+    assert sorted(fmap) == [0, 1, 2, 3]
+    assert sum(fmap[0].values()) == 1  # 'abc' -> one trigram
+    assert sum(fmap[1].values()) == 1  # '' -> the '' gram
     assert fmap[1] == fmap[2]  # NULL coalesces to ''
-    assert sum(fmap[3]) == 1  # short text -> itself
+    assert sum(fmap[3].values()) == 1  # short text -> itself
     out = fit_lang_classifier(df, langs=["aa", "bb"])
     assert out.count() == 4 and {c for c in out.columns} == {
         "doc_id", "lang_clf_pred", "lang_clf_score",
     }
 
 
-def test_driver_numpy_fit_equals_distributed_fit(spark):
+def test_driver_numpy_fit_equals_pure_python_fit():
     """`fit_lang_classifier` fits driver-resident (np_multiclass_fit on
-    the bounded sample); the distributed `multiclass_perceptron_fit` is
-    the same algorithm. On a corpus under the cap the two must produce
-    bit-identical models."""
-    import numpy as np
-
-    from etl_edi_data_scrapper_spark.functions.lang_classifier import (
-        np_multiclass_fit,
-    )
-
-    docs = _confusable_docs()
-    df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
-    feat = char_trigram_featurize(df).join(
-        df.select("doc_id", "lang"), "doc_id"
-    )
-    langs = ["es", "pt"]
-    w_d, b_d = multiclass_perceptron_fit(feat, langs, n_epochs=2)
-    rows = feat.select("lang", "features").collect()
-    x = np.asarray([list(r[1]) + [1] for r in rows], dtype=np.int64)
-    y = np.asarray([langs.index(r[0]) for r in rows], dtype=np.int64)
-    w_n, b_n = np_multiclass_fit(x, y, langs, n_epochs=2)
-    assert w_d == w_n and b_d == b_n
+    the bounded sample): integer matmul, first-maximum argmax. Over
+    epochs, with all-zero first-epoch ties and a three-class model, it
+    must produce the reference perceptron's model bit for bit."""
+    docs = _confusable_docs() + [(100, "xyz xyz xyz", "zz"), (101, "", "zz")]
+    langs = ["es", "pt", "zz"]
+    for n_epochs in (1, 2, 4):
+        w_n, b_n = _np_fit(
+            [_py_features(t) for _, t, _ in docs], [lg for *_, lg in docs],
+            langs, n_epochs,
+        )
+        rows = [(lang, _py_features(text)) for _, text, lang in docs]
+        w_ref, b_ref, _ = _py_fit(rows, langs, n_epochs=n_epochs)
+        assert w_n == w_ref and b_n == b_ref
 
 
 def test_lang_model_persistence_roundtrip_bit_exact(spark, tmp_path):
@@ -292,55 +290,29 @@ def test_cli_fit_langid_and_score(spark, tmp_path, capsys):
 
 
 def test_sparse_fit_and_grouped_scoring_match_dense_path(spark):
-    """r14 optimization parity: `fit_lang_classifier` now featurizes the
-    fit sample as sparse (id, bucket, tf) triplets and scores with
+    """r14 optimization parity: `fit_lang_classifier` featurizes the fit
+    sample as sparse (id, bucket, tf) triplets and scores with
     `_score_corpus_grouped`'s single hash aggregate. Both must be
-    result-identical to the dense path (`char_trigram_featurize` +
-    `multiclass_classify`) — same model, same predictions, same scores."""
-    from etl_edi_data_scrapper_spark.functions.lang_classifier import (
-        char_trigram_bucket_counts,
-    )
-
+    result-identical to the dense pure-Python path (`_py_features` +
+    the reference argmax) — same model, same predictions, same scores."""
     docs = _confusable_docs() + [(100, "", "es"), (101, None, "pt")]
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
     scored, (w, b) = fit_lang_classifier(
         df, langs=["es", "pt"], n_epochs=2, return_model=True
     )
     # the sparse triplets are exactly the dense features' nonzero entries
-    dense = {
-        r.doc_id: list(r.features)
-        for r in char_trigram_featurize(df).collect()
-    }
-    trip = char_trigram_bucket_counts(df).collect()
+    dense = {d: _py_features(t) for d, t, _ in docs}
     sparse: dict[int, list[int]] = {d: [0] * N_BUCKETS for d in dense}
-    for r in trip:
+    for r in char_trigram_bucket_counts(df).collect():
         sparse[r[0]][r[1]] = r[2]
     assert sparse == dense
-    # the model equals a dense-featurized numpy fit over the same sample
-    import numpy as np
-
-    from etl_edi_data_scrapper_spark.functions.lang_classifier import (
-        np_multiclass_fit,
-    )
-
-    rows = sorted(
-        (hashlib.md5(str(d).encode()).hexdigest(), d) for d, _, _ in docs
-    )
-    x = np.asarray([dense[d] + [1] for _, d in rows], dtype=np.int64)
-    y = np.asarray(
-        [["es", "pt"].index(dict((d, lg) for d, _, lg in docs)[d]) for _, d in rows],
-        dtype=np.int64,
-    )
-    w_ref, b_ref = np_multiclass_fit(x, y, ["es", "pt"], n_epochs=2)
+    # the model equals the reference fit over the same (uncapped) sample
+    rows = [(lg, dense[d]) for d, _, lg in docs]
+    w_ref, b_ref, pred_ref = _py_fit(rows, ["es", "pt"], n_epochs=2)
     assert w == w_ref and b == b_ref
-    # and the grouped scorer equals the dense classifier under that model
-    feat = char_trigram_featurize(df)
-    want = {
-        r.doc_id: (r.lang_clf_pred, r.lang_clf_score)
-        for r in multiclass_classify(feat, w, b).collect()
-    }
+    # and the grouped scorer equals the reference argmax under that model
     got = {
         r.doc_id: (r.lang_clf_pred, r.lang_clf_score)
         for r in scored.collect()
     }
-    assert got == want
+    assert got == {d: pred_ref(f) for d, f in dense.items()}

@@ -21,8 +21,6 @@ ALLOWED = {
         1, "per-row image decode: a corrupt blob is a NULL feature row, not a failed stage"),
     ("functions/multimodal.py", "_decode_video"): (
         1, "per-row video decode: a corrupt or streamless blob is a NULL feature row"),
-    ("functions/multimodal.py", "video_keyframe_count"): (
-        1, "per-row demux: a corrupt container is a NULL keyframe count"),
     ("functions/multimodal.py", "_decode_wav"): (
         2, "per-row WAV decode (container, then samples): corrupt PCM is a NULL feature row"),
 }

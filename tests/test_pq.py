@@ -489,80 +489,6 @@ def test_cli_ann_index_and_query_roundtrip(spark, sf_dir, tmp_path, capsys):
     assert self_top3 >= int(n_q * 0.7)
 
 
-def test_append_to_ivfpq_index_incremental_and_idempotent(spark, tmp_path):
-    """FAISS's train-once/add-forever: build the index on the cluster
-    exemplars, append their twins against FROZEN centroids+codebooks —
-    appended ids become queryable (and, with exactly-representable
-    residuals, rank themselves first); re-appending the same batch adds
-    ZERO rows (replay idempotence by identity, the streaming-store
-    discipline)."""
-    from etl_edi_data_scrapper_spark.functions.similarity import (
-        append_to_ivfpq_index,
-        ivfpq_residual_index,
-        ivfpq_topk,
-        load_ivfpq_index,
-        save_ivfpq_index,
-    )
-
-    corpus, vecs = _clustered_corpus(spark)
-    base = corpus.filter(F.col("vec_id") < 4)  # one exemplar per cluster
-    twins = corpus.filter(F.col("vec_id") >= 4)
-    # codebooks must know the twin residual (0.25): train them on the full
-    # corpus's residual range the way a production build would — here via
-    # kmeans over base+twins residuals, then REBUILD the stored index from
-    # base only so the append is a true incremental add
-    centroids, enc_full, cbs = ivfpq_residual_index(
-        corpus, n_centroids=4, m_sub=2, n_codes=2, dim=4, train="kmeans"
-    )
-    idx = str(tmp_path / "inc")
-    save_ivfpq_index(
-        centroids,
-        enc_full.join(base.select("vec_id"), "vec_id"),
-        cbs,
-        idx,
-        meta={"residual": True, "id_col": "vec_id"},
-    )
-    assert append_to_ivfpq_index(spark, twins, idx) == 4
-    assert append_to_ivfpq_index(spark, twins, idx) == 0  # replay: no-op
-    # appended rows answer queries: every twin retrieves itself at rank 1
-    c2, e2, cb2 = load_ivfpq_index(spark, idx)
-    assert e2.count() == 8
-    queries = twins.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    top1 = {
-        r.q_id: r.vec_id
-        for r in ivfpq_topk(
-            queries, c2, e2, cb2, k=1, nprobe=4, residual=True
-        ).collect()
-    }
-    assert top1 == {i: i for i in range(4, 8)}
-
-
-def test_append_refuses_wrong_dimension_batch(spark, tmp_path):
-    """A wrong-dim batch would encode NULL codes (slices past the array
-    end) and the id anti-join would make the corruption PERMANENT — so
-    the append validates against the codebooks' m_sub × d_sub and
-    refuses loudly (r11 review)."""
-    from etl_edi_data_scrapper_spark.functions.similarity import (
-        append_to_ivfpq_index,
-        ivfpq_residual_index,
-        save_ivfpq_index,
-    )
-
-    corpus, _ = _clustered_corpus(spark)
-    centroids, enc, cbs = ivfpq_residual_index(
-        corpus, n_centroids=4, m_sub=2, n_codes=2, dim=4
-    )
-    idx = str(tmp_path / "dimchk")
-    save_ivfpq_index(centroids, enc, cbs, idx, meta={"residual": True})
-    short = spark.createDataFrame(
-        [(100, [1.0, 2.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="dimension"):
-        append_to_ivfpq_index(spark, short, idx)
-
-
 def test_ivfpq_rerank_recovers_exact_ranking_in_probed_cells(spark):
     """The refinement tier: ADC shortlists k x k_factor, float originals
     re-rank exactly — with every cell probed and a shortlist as large as
@@ -639,13 +565,11 @@ def test_cli_ann_query_rerank_tier(spark, sf_dir, tmp_path, capsys):
 def test_meta_sidecar_always_written_and_flag_refusals(spark, tmp_path):
     """r12 hardening (ADVICE r11): `save_ivfpq_index` writes `_meta.json`
     even when called without one (legal pre-r12, and exactly the call that
-    used to strand a residual index as assumed-raw); `append_to_ivfpq_index`
-    and the CLI refuse LOUDLY when the residual flag is unknowable instead
-    of guessing — a raw/residual mix-up ranks silently wrong, never errors.
-    An explicit residual= overrides for legacy indexes."""
+    used to strand a residual index as assumed-raw); a sidecar-less index
+    reads back as an EMPTY meta — no residual flag — which readers refuse
+    instead of guessing."""
     from etl_edi_data_scrapper_spark import fsutil
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        append_to_ivfpq_index,
         ivfpq_residual_index,
         load_ivfpq_meta,
         save_ivfpq_index,
@@ -663,13 +587,6 @@ def test_meta_sidecar_always_written_and_flag_refusals(spark, tmp_path):
     fs, p = fsutil._fs(spark, f"{idx}/_meta.json")
     fs.delete(p, False)
     assert load_ivfpq_meta(spark, idx) == {}
-    batch = spark.createDataFrame(
-        [(100, [9.0, 9.0, 9.0, 9.0])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="residual"):
-        append_to_ivfpq_index(spark, batch, idx)
-    # explicit flag unblocks the legacy index
-    assert append_to_ivfpq_index(spark, batch, idx, residual=True) == 1
 
 
 def test_cli_ann_query_residual_flag_and_rerank_cols(
@@ -877,8 +794,8 @@ def test_kernels_run_on_workers_that_cannot_import_the_package(tmp_path):
 def test_ann_compact_bounds_files_and_preserves_answers(
     spark, tmp_path, capsys
 ):
-    """r12 (r11 verdict #3): `append_to_ivfpq_index` appends one file per
-    batch per touched cell forever; `compact_ivfpq_codes` (CLI
+    """r12 (r11 verdict #3): a partitioned write lands one file per
+    writing task per touched cell; `compact_ivfpq_codes` (CLI
     `ann-compact`) rewrites the code store to ONE file per cell via the
     temp-write + Hadoop-FS swap discipline. Query answers are
     byte-identical pre/post (same rows, same codes — it is purely a
@@ -887,7 +804,6 @@ def test_ann_compact_bounds_files_and_preserves_answers(
     from etl_edi_data_scrapper_spark.__main__ import main
     from etl_edi_data_scrapper_spark.engine import Engine
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        append_to_ivfpq_index,
         compact_ivfpq_codes,
         ivfpq_residual_index,
         ivfpq_topk,
@@ -897,25 +813,19 @@ def test_ann_compact_bounds_files_and_preserves_answers(
     )
 
     corpus, vecs = _clustered_corpus(spark)
-    base = corpus.filter(F.col("vec_id") < 4)
     centroids, enc_full, cbs = ivfpq_residual_index(
         corpus, n_centroids=4, m_sub=2, n_codes=2, dim=4, train="kmeans"
     )
     idx = str(tmp_path / "idx")
+    # two write tasks, ids 0-3 and their twins 4-7: each cell's pair is
+    # split across both, so every live cell holds two files
     save_ivfpq_index(
         centroids,
-        enc_full.join(base.select("vec_id"), "vec_id"),
+        enc_full.repartitionByRange(2, "vec_id"),
         cbs,
         idx,
         meta={"residual": True, "id_col": "vec_id"},
     )
-    # two appends -> extra files in every touched cell
-    assert append_to_ivfpq_index(
-        spark, corpus.filter((F.col("vec_id") >= 4) & (F.col("vec_id") < 6)), idx
-    ) == 2
-    assert append_to_ivfpq_index(
-        spark, corpus.filter(F.col("vec_id") >= 6), idx
-    ) == 2
 
     queries = corpus.select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -1244,24 +1154,23 @@ def test_apply_rotation_plan_is_zero_shuffle(spark, sf_dir):
     )
     assert "Exchange" not in plan
 
-def test_cli_ann_index_opq_roundtrip_and_append(spark, tmp_path, capsys):
+def test_cli_ann_index_opq_roundtrip(spark, tmp_path, capsys):
     """r13: `ann-index --opq` builds the whole index in OPQ-rotated
-    space and stores the rotation in _meta.json; `ann-query` and
-    `append_to_ivfpq_index` apply it automatically (an unrotated batch
-    against rotated quantizers would encode silently wrong). With full
-    nprobe + exact rerank, every query's own vector must come back at
-    rank 1 with d == 0 — rotation or not."""
+    space and stores the rotation in _meta.json; `ann-query` applies it
+    automatically (unrotated queries against rotated quantizers would
+    score silently wrong). With full nprobe + exact rerank, every
+    query's own vector must come back at rank 1 with d == 0 — rotation
+    or not."""
     import numpy as np
 
     from etl_edi_data_scrapper_spark.__main__ import main
     from etl_edi_data_scrapper_spark.engine import Engine
     from etl_edi_data_scrapper_spark.functions.similarity import (
-        append_to_ivfpq_index,
         load_ivfpq_meta,
     )
 
     rng = np.random.default_rng(5)
-    x = rng.normal(0, 3.0, size=(40, 8))
+    x = rng.normal(0, 3.0, size=(32, 8))
     emb = str(tmp_path / "emb")
     spark.createDataFrame(
         [(i, [float(v) for v in x[i]]) for i in range(32)],
@@ -1279,16 +1188,9 @@ def test_cli_ann_index_opq_roundtrip_and_append(spark, tmp_path, capsys):
     R = np.asarray(meta["opq_rotation"])
     assert R.shape == (8, 8) and np.allclose(R @ R.T, np.eye(8), atol=1e-9)
 
-    # append UNROTATED vectors: the rotation must ride the meta
-    batch = spark.createDataFrame(
-        [(i, [float(v) for v in x[i]]) for i in range(32, 40)],
-        "vec_id long, embedding array<float>",
-    )
-    assert append_to_ivfpq_index(spark, batch, idx) == 8
-
     qpath = str(tmp_path / "q")
     spark.createDataFrame(
-        [(i, [float(v) for v in x[i]]) for i in (3, 17, 35)],
+        [(i, [float(v) for v in x[i]]) for i in (3, 17)],
         "vec_id long, embedding array<float>",
     ).write.parquet(qpath)
     out = str(tmp_path / "res")
@@ -1304,17 +1206,6 @@ def test_cli_ann_index_opq_roundtrip_and_append(spark, tmp_path, capsys):
     for q in (3, 17):  # in the rerank corpus: exact self-match at rank 1
         vid, d = res[(q, 1)]
         assert vid == q and d == 0.0
-    # the appended vector is routed/encoded consistently: shortlist
-    # includes it for its own query (rerank corpus lacks id 35, so just
-    # assert the ADC tier finds it without rerank)
-    out2 = str(tmp_path / "res2")
-    assert main(
-        ["ann-query", "--index", idx, "--queries", qpath, "--output", out2,
-         "--k", "1", "--nprobe", "2"],
-        engine=eng,
-    ) == 0
-    got = {r.q_id: r.vec_id for r in spark.read.parquet(out2).collect()}
-    assert got[35] == 35
 
 
 def test_opq_auto_decision_is_measured_and_held_out(spark):
@@ -1453,91 +1344,6 @@ def test_cli_ann_index_opq_auto_records_decision(spark, tmp_path, capsys):
         capsys.readouterr()
         got = {r.q_id: r.vec_id for r in spark.read.parquet(out).collect()}
         assert got[3] == 3 and got[17] == 17
-
-
-def test_append_drift_tracked_and_store_info_advises_retrain(
-    spark, tmp_path, capsys
-):
-    """r14 (r13 verdict #5): frozen quantizers degrade silently as
-    appended data drifts. ann-index records the train-time quantization
-    MSE; every append records its batch MSE (row-weighted running mean);
-    store-info reports the ratio and advises retrain past
-    RETRAIN_MSE_RATIO. A same-distribution append must NOT advise; a
-    shifted-distribution append must."""
-    import numpy as np
-
-    from etl_edi_data_scrapper_spark.__main__ import main
-    from etl_edi_data_scrapper_spark.engine import Engine
-    from etl_edi_data_scrapper_spark.functions.similarity import (
-        append_to_ivfpq_index,
-        load_ivfpq_meta,
-    )
-    from etl_edi_data_scrapper_spark.store_info import describe_store
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(0, 1.0, size=(200, 8))
-    emb = str(tmp_path / "emb")
-    spark.createDataFrame(
-        [(i, [float(v) for v in base[i]]) for i in range(200)],
-        "vec_id long, embedding array<float>",
-    ).write.parquet(emb)
-    idx = str(tmp_path / "idx")
-    eng = Engine(spark=spark)
-    assert main(
-        ["ann-index", "--embeddings", emb, "--output", idx,
-         "--dim", "8", "--n-centroids", "2", "--m-sub", "4",
-         "--n-codes", "8"],
-        engine=eng,
-    ) == 0
-    capsys.readouterr()
-    train_mse = load_ivfpq_meta(spark, idx)["quant_mse"]["train"]
-    assert train_mse > 0.0
-
-    # in-distribution append: ratio stays near 1, no advisory
-    b1 = rng.normal(0, 1.0, size=(50, 8))
-    batch1 = spark.createDataFrame(
-        [(1000 + i, [float(v) for v in b1[i]]) for i in range(50)],
-        "vec_id long, embedding array<float>",
-    )
-    assert append_to_ivfpq_index(spark, batch1, idx) == 50
-    qm1 = load_ivfpq_meta(spark, idx)["quant_mse"]
-    assert qm1["appended"]["rows"] == 50
-    m1 = qm1["last_append_mse"]
-    assert qm1["appended"]["mse"] == pytest.approx(m1)
-    info = describe_store(spark, idx)
-    assert info["retrain_advised"] is False
-
-    # drifted append (×20 scale): quantization error explodes
-    b2 = rng.normal(0, 20.0, size=(30, 8))
-    batch2 = spark.createDataFrame(
-        [(2000 + i, [float(v) for v in b2[i]]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    assert append_to_ivfpq_index(spark, batch2, idx) == 30
-    qm2 = load_ivfpq_meta(spark, idx)["quant_mse"]
-    m2 = qm2["last_append_mse"]
-    assert m2 > m1
-    # row-weighted running mean, pinned exactly
-    assert qm2["appended"]["rows"] == 80
-    assert qm2["appended"]["mse"] == pytest.approx((50 * m1 + 30 * m2) / 80)
-    info2 = describe_store(spark, idx)
-    assert info2["quant_mse_ratio"] > info2["retrain_mse_ratio_threshold"]
-    assert info2["retrain_advised"] is True
-
-    # the advisory also reaches ann-query operators, not just store-info
-    qpath = str(tmp_path / "q")
-    spark.createDataFrame(
-        [(0, [float(v) for v in base[0]])],
-        "vec_id long, embedding array<float>",
-    ).write.parquet(qpath)
-    out = str(tmp_path / "res")
-    assert main(
-        ["ann-query", "--index", idx, "--queries", qpath, "--output", out,
-         "--k", "1", "--nprobe", "1"],
-        engine=eng,
-    ) == 0
-    printed = capsys.readouterr().out
-    assert "WARN" in printed and "quantization MSE" in printed
 
 
 def test_pq_fit_recon_thread_parallel_is_deterministic():

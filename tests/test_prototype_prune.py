@@ -185,19 +185,18 @@ def test_assign_clusters_ivf_keeps_user_column_named_like_internal(spark):
     }
 
 
-def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
+def test_expr_string_sqdist_matches_python_fold_bitexact(spark):
     """r14 optimization: prototype_prune builds its centroid-distance
     expression as ONE parsed SQL string (construction was one py4j round
-    trip per centroid element — seconds of driver chatter). The parsed
-    tree must equal the Column-DSL fold (`_sqdist`) to the last ulp; and
-    `assign_clusters`' Arrow kernel must pick the same argmin as a
-    DSL-built reference on the same adversarial centroids, tie rule
-    included."""
+    trip per centroid element — seconds of driver chatter). Its doubles
+    must equal a sequential Python left fold of (a−b)·(a−b) to the last
+    ulp; and `assign_clusters`' Arrow kernel must pick the same argmin
+    as that fold on the same adversarial centroids, tie rule (lowest
+    id) included."""
     import hashlib
 
     from etl_edi_data_scrapper_spark.functions.clustering import (
         _dlit,
-        _sqdist,
         _sqdist_sql,
         assign_clusters,
     )
@@ -205,6 +204,12 @@ def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
     def h(i, d):
         return (int(hashlib.md5(f"{i}:{d}".encode()).hexdigest()[:4], 16)
                 / 32768.0) - 1.0
+
+    def py_sqdist(vec, cen):
+        acc = 0.0
+        for a, b in zip(vec, cen):
+            acc += (a - b) * (a - b)
+        return acc
 
     # adversarial doubles in the centroids: repr round-trip must be exact
     cents = [[10.0 * h(100 + i, d) for d in range(8)] for i in range(5)]
@@ -214,23 +219,21 @@ def test_expr_string_sqdist_matches_dsl_reference_bitexact(spark):
     vecs = [(i, [h(i, d) for d in range(8)]) for i in range(200)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
 
-    # per-centroid distance doubles: bit-exact (exact float equality)
-    dsl = [_sqdist(F.col("embedding"), c).alias(f"o{i}") for i, c in enumerate(cents)]
+    # per-centroid distance doubles: bit-exact (exact float equality) with
+    # the fold over the stored float32 values widened to double
     sql = [F.expr(_sqdist_sql("embedding", c)).alias(f"n{i}") for i, c in enumerate(cents)]
-    for r in df.select(*dsl, *sql).collect():
-        for i in range(len(cents)):
-            assert r[f"o{i}"] == r[f"n{i}"]
+    want_cluster = {}
+    for r in df.select("vec_id", "embedding", *sql).collect():
+        want = [py_sqdist(r.embedding, c) for c in cents]
+        assert [r[f"n{i}"] for i in range(len(cents))] == want
+        want_cluster[r.vec_id] = min(range(len(cents)), key=lambda i: (want[i], i))
 
-    # the Arrow argmin kernel vs a DSL-built reference argmin
-    ref = F.array_sort(
-        F.array(*[
-            F.struct(_sqdist(F.col("embedding"), c).alias("d"), F.lit(i).alias("c"))
-            for i, c in enumerate(cents)
-        ])
-    )[0]["c"]
-    got = assign_clusters(df, "embedding", cents)
-    mism = got.withColumn("ref", ref).filter("cluster <> ref").count()
-    assert mism == 0
+    # the Arrow argmin kernel vs the fold's argmin
+    got = {
+        r.vec_id: r.cluster
+        for r in assign_clusters(df, "embedding", cents).collect()
+    }
+    assert got == want_cluster
 
     # _dlit special values survive the parse
     row = spark.sql(

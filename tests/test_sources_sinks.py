@@ -405,6 +405,35 @@ def test_jwt_raw_string_token_gets_synthetic_expiry(tmp_path):
     assert cached["expires_at"] > time.time() + 23 * 3600
 
 
+def test_jwt_cache_is_owner_only_and_refuses_shared_dirs(tmp_path):
+    import stat
+
+    d = tmp_path / "cache"
+    mgr = JwtManager("u", {}, cache_dir=str(d), supplier_id=9,
+                     fetch_post=lambda u, c: "tok")
+    assert mgr.token() == "tok"
+    assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
+    assert stat.S_IMODE(os.stat(d / "token_9.json").st_mode) == 0o600
+
+    # a directory others can write is refused before any token lands
+    shared = tmp_path / "shared"
+    shared.mkdir()
+    shared.chmod(0o777)
+    with pytest.raises(PermissionError, match="writable by no one else"):
+        JwtManager("u", {}, cache_dir=str(shared), supplier_id=9,
+                   fetch_post=lambda u, c: "tok").token()
+    assert not list(shared.iterdir())
+
+    # a link at the token path is not followed: its target is untouched
+    victim = tmp_path / "victim.json"
+    victim.write_text(json.dumps({"token": "old", "expires_at": 0}))
+    (d / "token_10.json").symlink_to(victim)
+    with pytest.raises(OSError):
+        JwtManager("u", {}, cache_dir=str(d), supplier_id=10,
+                   fetch_post=lambda u, c: "tok").token()
+    assert json.loads(victim.read_text())["token"] == "old"
+
+
 # --- sinks ----------------------------------------------------------------------
 
 
@@ -511,23 +540,6 @@ def test_job_stream_bad_message_reported_not_fatal(spark, tmp_path, sf_dir):
     )
     assert n == 1 and done == [5]
     assert errors == ["InvalidConfigError", "InvalidConfigError"]
-
-
-def test_idempotent_batch_writer_replay_safe(spark, tmp_path):
-    """Replaying a batch (same batch_id) must overwrite, not duplicate;
-    other batches' output must survive."""
-    from etl_edi_data_scrapper_spark import sinks
-
-    out = str(tmp_path / "out")
-    writer = sinks.idempotent_batch_writer(out)
-    b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    b1 = spark.createDataFrame([(3, "c")], "id long, v string")
-    writer(b0, 0)
-    writer(b1, 1)
-    # crash-replay of batch 0 with different (corrected) content
-    writer(spark.createDataFrame([(1, "a2"), (2, "b2")], "id long, v string"), 0)
-    got = {(r.id, r.v, r.batch_id) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "a2", 0), (2, "b2", 0), (3, "c", 1)}
 
 
 def test_job_stream_message_flood_trips_guard(spark, tmp_path, monkeypatch):

@@ -641,10 +641,23 @@ def _model_exact_substr(docs, min_len: int):
     return out, spans
 
 
+def _exact_substr_spans(df, min_len):
+    """(doc_id, span_start, span_len) per maximal duplicated run — the
+    runs `exact_substr_dedup` cuts as units (span_start 0-based)."""
+    from etl_edi_data_scrapper_spark.functions.span_dedup import (
+        _dropped_window_runs,
+    )
+
+    return _dropped_window_runs(df, "doc_id", "text", min_len).select(
+        "doc_id",
+        F.col("span_start").cast("long").alias("span_start"),
+        (F.col("n_windows") + min_len - 1).cast("long").alias("span_len"),
+    )
+
+
 def test_exact_substr_matches_python_model(spark):
     from etl_edi_data_scrapper_spark.functions.span_dedup import (
         exact_substr_dedup,
-        exact_substr_spans,
     )
 
     corpus = CROSS_RESIDUE + CORPUS + SHIFTED
@@ -656,7 +669,7 @@ def test_exact_substr_matches_python_model(spark):
     }
     assert got == want
     got_spans = {}
-    for r in exact_substr_spans(df, min_len=4).collect():
+    for r in _exact_substr_spans(df, min_len=4).collect():
         got_spans.setdefault(r.doc_id, []).append((r.span_start, r.span_len))
     for d in got_spans:
         got_spans[d].sort()
@@ -707,7 +720,6 @@ def test_exact_substr_never_cuts_sub_min_len_docs(spark):
     reported span_len=8 on a 3-token document)."""
     from etl_edi_data_scrapper_spark.functions.span_dedup import (
         exact_substr_dedup,
-        exact_substr_spans,
     )
 
     corpus = [(1, "tiny dup doc"), (2, "tiny dup doc"), (3, "other words")]
@@ -718,7 +730,7 @@ def test_exact_substr_never_cuts_sub_min_len_docs(spark):
     }
     assert got == {1: (0, "tiny dup doc"), 2: (0, "tiny dup doc"),
                    3: (0, "other words")}
-    assert exact_substr_spans(df, min_len=8).count() == 0
+    assert _exact_substr_spans(df, min_len=8).count() == 0
 
 
 def test_exact_substr_catches_short_end_passage_sliding_misses(spark):
@@ -728,7 +740,6 @@ def test_exact_substr_catches_short_end_passage_sliding_misses(spark):
     from etl_edi_data_scrapper_spark.functions.span_dedup import (
         dedup_spans_sliding,
         exact_substr_dedup,
-        exact_substr_spans,
     )
 
     quote = "to be or not be"  # 5 tokens
@@ -752,17 +763,13 @@ def test_exact_substr_catches_short_end_passage_sliding_misses(spark):
     assert got[2][0] == 5
     assert got[2][1] == "a later document ends quoting"
     assert got[3] == (0, corpus[2][1])
-    spans = exact_substr_spans(df, min_len=5).collect()
+    spans = _exact_substr_spans(df, min_len=5).collect()
     assert [(r.doc_id, r.span_start, r.span_len) for r in spans] == [(2, 5, 5)]
 
 
 def test_exact_substr_reports_maximal_run_not_windows(spark):
     """A 12-token shared passage at min_len=8 is 5 overlapping duplicated
     windows but must report as ONE (start, 12) span."""
-    from etl_edi_data_scrapper_spark.functions.span_dedup import (
-        exact_substr_spans,
-    )
-
     passage = " ".join(f"p{i}" for i in range(12))
     corpus = [
         (1, f"{passage} trailing words of the first doc"),
@@ -771,7 +778,7 @@ def test_exact_substr_reports_maximal_run_not_windows(spark):
     df = spark.createDataFrame(corpus, "doc_id long, text string")
     spans = [
         (r.doc_id, r.span_start, r.span_len)
-        for r in exact_substr_spans(df, min_len=8).collect()
+        for r in _exact_substr_spans(df, min_len=8).collect()
     ]
     assert spans == [(2, 5, 12)]
 

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import functions as F
-
 
 def _cli(spark, argv, capsys):
     from etl_edi_data_scrapper_spark.__main__ import main
@@ -86,38 +84,11 @@ def test_store_info_unknown_and_absent_refusal(spark, tmp_path, capsys):
     assert rc == 1
 
 
-def test_store_info_ivf_flat_index(spark, tmp_path, capsys):
-    from etl_edi_data_scrapper_spark.functions.similarity import (
-        ivf_index,
-        save_ivf_index,
-    )
-
-    corpus = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(8)]) for i in range(10)],
-        "vec_id long, embedding array<float>",
-    )
-    centroids, assigned = ivf_index(corpus, n_centroids=2)
-    idx = str(tmp_path / "ivf")
-    save_ivf_index(centroids, assigned, idx)
-    rc, out = _cli(spark, ["store-info", "--store", idx], capsys)
-    assert rc == 0
-    info = json.loads(out)
-    assert info["type"] == "ivf-index"
-    assert info["rows"] == 10 and info["cells"] == 2
-    assert info["keeps_float_vectors"] is True
-
-
 def test_store_info_fit_artifacts(spark, tmp_path, capsys):
     """r14: the fit artifacts are store-info-auditable — classifier and
-    language models (kind-carrying JSON files), the DSIR ratio table
-    (kind sidecar + ratios/), unigram and bigram reference LMs — each
-    built through its OWN write path, never hand-crafted."""
-    from pyspark.sql import functions as F
-
-    from etl_edi_data_scrapper_spark.functions.importance import (
-        fit_dsir_ratios,
-        save_dsir_ratios,
-    )
+    language models (kind-carrying JSON files), unigram and bigram
+    reference LMs — each built through its OWN write path, never
+    hand-crafted."""
     from etl_edi_data_scrapper_spark.functions.lang_classifier import (
         save_lang_model,
     )
@@ -150,16 +121,6 @@ def test_store_info_fit_artifacts(spark, tmp_path, capsys):
     info = json.loads(out)
     assert rc == 0 and info["type"] == "lang-classifier-model"
     assert info["classes"] == ["en", "es"]
-
-    dsir = str(tmp_path / "dsir")
-    save_dsir_ratios(
-        spark, fit_dsir_ratios(docs, docs, n_buckets=64), dsir, n_buckets=64
-    )
-    rc, out = _cli(spark, ["store-info", "--store", dsir], capsys)
-    info = json.loads(out)
-    assert rc == 0 and info["type"] == "dsir-ratios"
-    assert info["meta"]["n_buckets"] == 64
-    assert info["buckets_with_evidence"] > 0
 
     ulm = str(tmp_path / "ulm")
     save_unigram_lm(fit_unigram_lm(docs), ulm)

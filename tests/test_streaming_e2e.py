@@ -1,18 +1,15 @@
-"""End-to-end streaming composition (the full production loop in one test):
+"""End-to-end streaming composition (the serve loop in one test):
 
     job-config messages (serve loop, `streaming/consumer.run_job_stream`)
-      → per-batch plan compile + keyed merge → staged row stream
-      → exactly-once parquet (`sinks.idempotent_batch_writer`)
+      → per-batch plan compile + keyed merge → staged row output
 
-with REPLAY SAFETY asserted the hard way: the staged-stream sink is crashed
-after its write but before the checkpoint commit, the stream is restarted on
-the same checkpoint, and Structured Streaming replays the batch with the
-same batch_id — the batch-id-partition overwrite must leave zero duplicates.
+with RESTART SAFETY asserted: the serve loop is stopped and restarted on
+the same checkpoint, and an already-committed job message must not run
+again — the staged output gains no duplicates. A second feed version then
+flows through as one new job.
 """
 
 import json
-
-from pyspark.sql import functions as F
 
 
 def _write_feed(path, rows):
@@ -42,92 +39,54 @@ OUT_SCHEMA = "upc string, qty bigint, price double, supplier_id bigint, version 
 
 
 def test_job_stream_staged_sink_idempotent_replay(spark, tmp_path):
-    from etl_edi_data_scrapper_spark.sinks import idempotent_batch_writer
     from etl_edi_data_scrapper_spark.sources.registry import read_local
     from etl_edi_data_scrapper_spark.streaming.consumer import run_job_stream
 
     msg_dir = tmp_path / "messages"
     msg_dir.mkdir()
     staged = tmp_path / "staged"
-    out_dir = tmp_path / "out"
 
-    # --- stage 1: the serve loop — job messages drive plan compiles, job
-    # output rows append into the staging area (itself a stream source)
+    # job messages drive plan compiles; job output rows append into the
+    # staging area
     def job_sink(df, cfg):
         df.write.mode("append").json(str(staged))
+
+    def serve():
+        return run_job_stream(
+            spark,
+            {3: read_local},
+            job_sink,
+            source_path=str(msg_dir),
+            checkpoint_dir=str(tmp_path / "serve_ckpt"),
+        )
+
+    def staged_rows():
+        df = spark.read.schema(OUT_SCHEMA).json(str(staged))
+        return sorted((r.upc, r.qty, r.price, r.version) for r in df.collect())
 
     feed1 = tmp_path / "feed_v1.csv"
     _write_feed(feed1, [("a", 5, 10.0), ("b", 2, 5.0), ("c", 9, 7.5)])
     (msg_dir / "m1.jsonl").write_text(_job_msg(feed1, 1) + "\n")
 
-    serve_q = run_job_stream(
-        spark,
-        {3: read_local},
-        job_sink,
-        source_path=str(msg_dir),
-        checkpoint_dir=str(tmp_path / "serve_ckpt"),
-    )
+    serve_q = serve()
     serve_q.processAllAvailable()
+    serve_q.stop()
+    first = [("a", 5, 10.0, 1), ("b", 2, 5.0, 1), ("c", 9, 7.5, 1)]
+    assert staged_rows() == first
 
-    # --- stage 2: the staged stream into an exactly-once parquet sink.
-    # First run: crash AFTER the sink write, BEFORE the checkpoint commit —
-    # the worst-case at-least-once window.
-    def staged_stream():
-        return spark.readStream.schema(OUT_SCHEMA).json(str(staged))
+    # restart on the SAME checkpoint: the committed message does not replay
+    serve_q = serve()
+    serve_q.processAllAvailable()
+    assert staged_rows() == first
 
-    writer = idempotent_batch_writer(str(out_dir))
-    crashed = {"done": False}
-
-    def crash_after_write(batch_df, batch_id):
-        writer(batch_df, batch_id)
-        if not crashed["done"]:
-            crashed["done"] = True
-            raise RuntimeError("injected crash between sink write and commit")
-
-    ckpt = str(tmp_path / "sink_ckpt")
-    q = staged_stream().writeStream.foreachBatch(crash_after_write).option(
-        "checkpointLocation", ckpt
-    ).start()
-    try:
-        q.processAllAvailable()
-    except Exception:
-        pass  # the injected crash surfaces here
-    q.stop()
-    assert crashed["done"], "the injected crash must have fired"
-    # data landed but the batch is uncommitted — the dangerous half-state
-    assert spark.read.parquet(str(out_dir)).count() == 3
-
-    # restart on the SAME checkpoint: batch 0 replays with the same batch_id;
-    # the partition overwrite makes the replay byte-idempotent
-    q = staged_stream().writeStream.foreachBatch(writer).option(
-        "checkpointLocation", ckpt
-    ).start()
-    q.processAllAvailable()
-
-    replayed = spark.read.parquet(str(out_dir))
-    assert replayed.count() == 3  # no duplicates from the replay
-    first = {(r.upc, r.qty, r.price, r.version) for r in replayed.collect()}
-    assert first == {("a", 5, 10.0, 1), ("b", 2, 5.0, 1), ("c", 9, 7.5, 1)}
-    assert {r.batch_id for r in replayed.collect()} == {0}
-
-    # --- stage 3: a second feed version arrives — its job output flows
-    # through as one new batch (b's price moved, d is new)
+    # a second feed version arrives — its job output flows through once
+    # (b's price moved, d is new)
     feed2 = tmp_path / "feed_v2.csv"
     _write_feed(feed2, [("a", 5, 10.0), ("b", 2, 6.0), ("c", 9, 7.5), ("d", 1, 2.0)])
     (msg_dir / "m2.jsonl").write_text(_job_msg(feed2, 2) + "\n")
     serve_q.processAllAvailable()
     serve_q.stop()
-
-    q.processAllAvailable()
-    q.stop()
-
-    final = spark.read.parquet(str(out_dir))
-    got = {(r.upc, r.qty, r.price, r.version) for r in final.collect()}
-    assert got == first | {
+    # each key exactly once per job version
+    assert staged_rows() == sorted(first + [
         ("a", 5, 10.0, 2), ("b", 2, 6.0, 2), ("c", 9, 7.5, 2), ("d", 1, 2.0, 2)
-    }
-    assert final.count() == 7  # still exactly once — no replays, no dupes
-    assert {r.batch_id for r in final.collect()} == {0, 1}
-    # each key appears exactly once per job version
-    per_key = final.groupBy("upc", "version").agg(F.count(F.lit(1)).alias("n"))
-    assert per_key.filter(F.col("n") > 1).count() == 0
+    ])

@@ -2,19 +2,10 @@
 store): batch-2 near-copies of batch-1 docs must be flagged with the
 original's id; fresh docs must be admitted and extend the store."""
 
-import json
-
-
 DOC_A = "the quick brown fox jumps over the lazy dog again and again today"
 DOC_A_NEAR = "the quick brown fox jumps over the lazy dog again and again tonight"
 DOC_B = "completely different content about training data pipelines at scale"
 DOC_C = "yet another unrelated document mentioning spark catalyst and tungsten"
-
-
-def _write_batch(src, name, rows):
-    with open(src / name, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
 
 
 def test_batch_function_intra_and_store(spark, tmp_path):
@@ -42,44 +33,6 @@ def test_batch_function_intra_and_store(spark, tmp_path):
     b3 = spark.createDataFrame([(20, DOC_C)], "doc_id long, text string")
     v3 = {r.doc_id: r.dup_of for r in dedup_batch_against_store(spark, b3, store).collect()}
     assert v3[20] == 11
-
-
-def test_streaming_incremental_neardup(spark, tmp_path):
-    from etl_edi_data_scrapper_spark.streaming.neardup_stream import (
-        run_incremental_neardup,
-    )
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    _write_batch(src, "b1.jsonl", [
-        {"doc_id": 1, "text": DOC_A},
-        {"doc_id": 2, "text": DOC_B},
-    ])
-    results: dict[int, int | None] = {}
-
-    def sink(df, epoch):
-        for r in df.collect():
-            results[r.doc_id] = r.dup_of
-
-    stream = spark.readStream.schema("doc_id long, text string").json(str(src))
-    q = run_incremental_neardup(
-        spark, stream,
-        store_dir=str(tmp_path / "store"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        on_batch=sink,
-    )
-    try:
-        q.processAllAvailable()
-        assert results == {1: None, 2: None}
-
-        _write_batch(src, "b2.jsonl", [
-            {"doc_id": 10, "text": DOC_A_NEAR},   # near-dup of streamed doc 1
-            {"doc_id": 11, "text": DOC_C},        # fresh
-        ])
-        q.processAllAvailable()
-        assert results[10] == 1 and results[11] is None
-    finally:
-        q.stop()
 
 
 def test_replayed_batch_never_self_dups(spark, tmp_path):
