@@ -868,6 +868,44 @@ def test_chunk_and_shuffle_match_pure_python_model(spark):
     assert got_shuffle == expect_pos
 
 
+def test_simhash_pairs_max_block_guard(spark):
+    """max_block truncates degenerate blocks (e.g. many byte-identical
+    docs → identical signatures → one giant block) to bound the local
+    quadratic pairing work, keeping the smallest ids. Checked on the
+    single-width `simhash` signature, blocked on its whole value, through
+    the `_block_pairs` guard that `simhash_pairs_multi` pairs with."""
+    from etl_edi_data_scrapper_spark.functions.dedup import _block_pairs, simhash
+
+    docs = spark.createDataFrame(
+        [(i, "identical text body repeated many times over and over") for i in range(20)]
+        + [(100, "a completely different document about other things entirely")],
+        "doc_id long, text string",
+    )
+    grp = (
+        simhash(docs)
+        .groupBy("simhash")
+        .agg(
+            F.sort_array(
+                F.collect_set(
+                    F.struct(F.col("doc_id").alias("i"), F.col("simhash").alias("s"))
+                )
+            ).alias("m")
+        )
+        .filter(F.size("m") > 1)
+    )
+
+    def hamming(x, y):
+        return F.bit_count(x["s"].bitwiseXOR(y["s"]))
+
+    full = _block_pairs(grp, hamming, max_hamming=0).collect()
+    assert len(full) == 20 * 19 // 2  # the 20-clone family, all pairs
+
+    capped = _block_pairs(grp, hamming, max_hamming=0, max_block=5).collect()
+    # truncated to the 5 smallest ids -> exactly C(5,2) pairs, ids 0-4
+    assert len(capped) == 10
+    assert {x for r in capped for x in (r.a, r.b)} == {0, 1, 2, 3, 4}
+
+
 def test_simhash_pairs_multi_max_block_guard(spark):
     """r6: the guard is threaded through the two-width composite path too
     (the unguarded 48-bit leg OOM'ed a 30x replication's pair explosion).
