@@ -731,7 +731,7 @@ def main(argv: list[str] | None = None, engine=None) -> int:
 
         try:
             info = describe_store(engine.spark, args.store)
-        except ValueError as e:
+        except (ValueError, IOError) as e:
             print(f"ERROR: {e}")
             return 1
         print(json.dumps(info, indent=1, sort_keys=True, default=str))

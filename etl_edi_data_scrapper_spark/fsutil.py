@@ -1,24 +1,35 @@
-"""Tiny text-file I/O through the Hadoop FileSystem API.
+"""The one module that talks to the Hadoop FileSystem API.
 
-Sidecar files that live NEXT TO Spark-written data (an index's
-`_meta.json`, a DSIR table's kind marker) and the JSON model files must
-share the data's filesystem: driver-local ``open()`` silently diverges
-the moment the path is ``hdfs://`` / ``s3a://`` — the sidecar lands on
-the driver's local disk while the data goes remote, decoupling their
-lifecycles. These helpers route through ``Path.getFileSystem`` (the same
-py4j surface `streaming/neardup_stream.py` and `operators/rollup.py`
-already use for renames), so local paths behave exactly as before and
+Text files that live NEXT TO Spark-written data (an index's
+`_meta.json`, a model file, a curate stage dir's `_config.json`) and the
+stores themselves (the near-dup band-key store, the IVF-PQ codes, the
+daily rollup) must share the data's filesystem: driver-local ``open()``
+or ``os.path`` silently diverges the moment the path is ``hdfs://`` /
+``s3a://`` / ``file://``. Everything here goes through
+``Path.getFileSystem``, so local paths behave exactly as before and
 remote paths follow the data.
 
 ``write_text_atomic`` is write-tmp → delete-dst → rename: rename is
 atomic per filesystem; the delete+rename pair is the standard HDFS
 approximation (rename refuses an existing destination there). A crash
-between the two leaves NO sidecar — for every caller here the missing-
+between the two leaves NO file — for every caller here the missing-
 file direction is the safe one (a missing meta is a loud/default
 read, never a stale one).
+
+Stores follow one replacement protocol. A rewrite (compaction) writes
+``<dir>__compacting``, then `replace_dir` renames the live ``<dir>``
+aside to ``<dir>__precompact``, renames the rewrite in, and deletes the
+aside copy; a failed rename-in renames the original back. At every
+instant the live data is at ``<dir>`` or at ``<dir>__precompact``, and
+`read_store` refuses to treat a missing ``<dir>`` as "no store yet"
+while either working directory survives: a reader that started a fresh
+store there would silently drop the history.
 """
 
 from __future__ import annotations
+
+PRECOMPACT = "__precompact"
+COMPACTING = "__compacting"
 
 
 def _fs(spark, path: str):
@@ -99,3 +110,91 @@ def write_text_atomic(spark, path: str, text: str) -> None:
                 else ""
             )
         )
+
+
+def exists(spark, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def data_files(spark, path: str) -> int:
+    """Data files under ``path``, recursively; names starting with '_'
+    or '.' are bookkeeping (``_SUCCESS``, checksums), not data. 0 when
+    ``path`` is absent."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return 0
+    n = 0
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        if not it.next().getPath().getName().startswith(("_", ".")):
+            n += 1
+    return n
+
+
+def read_store(spark, path: str):
+    """The parquet store at ``path``, or None when there is no store yet
+    (the path is missing, or is an empty directory). Any other analysis
+    failure (corrupt footer, permissions) raises, and so does a missing
+    ``path`` whose ``__precompact`` / ``__compacting`` working directory
+    survives a compaction that died mid-swap: the IOError names the
+    survivor to rename back."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        df = spark.read.parquet(path)
+        df.schema  # force analysis inside the try
+        return df
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" in str(e):
+            return None
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        path = path.rstrip("/")
+        for leftover in (path + PRECOMPACT, path + COMPACTING):
+            if exists(spark, leftover):
+                raise IOError(
+                    f"{path!r} is missing but {leftover!r} survives a "
+                    "compaction that died mid-swap; rename it back to "
+                    f"{path!r} to recover"
+                ) from e
+        return None
+
+
+def replace_dir(spark, path: str) -> None:
+    """Swap the rewrite at ``<path>__compacting`` in for the live
+    directory ``path``: rename the live one aside to ``<path>__precompact``,
+    rename the rewrite in, then delete the aside copy. A failed rename-in
+    renames the original back before raising. Nothing is ever renamed
+    onto an existing directory (Hadoop would move the source INSIDE it),
+    so a stale aside copy from an earlier crash is deleted first — the
+    live directory exists, so that copy is not the only one. NOT atomic:
+    run with every writer and reader of the store stopped."""
+    path = path.rstrip("/")
+    fs, live = _fs(spark, path)
+    _, aside = _fs(spark, path + PRECOMPACT)
+    _, tmp = _fs(spark, path + COMPACTING)
+    if not fs.exists(live):
+        raise IOError(f"no store at {path!r} to replace")
+    fs.delete(aside, True)
+    if not fs.rename(live, aside):
+        raise IOError(
+            f"could not move {path!r} aside to {path + PRECOMPACT!r}; "
+            f"store untouched, rewrite at {path + COMPACTING!r}"
+        )
+    try:
+        moved_in = fs.rename(tmp, live)
+    except Exception:
+        fs.rename(aside, live)
+        raise
+    if not moved_in:
+        restored = fs.rename(aside, live)
+        raise IOError(
+            f"could not rename {path + COMPACTING!r} in over {path!r}; "
+            + (
+                "original restored"
+                if restored
+                else f"original at {path + PRECOMPACT!r}"
+            )
+        )
+    fs.delete(aside, True)

@@ -51,8 +51,6 @@ POLICY_PHRASES = (
     "use of cookies",
 )
 
-C4_FEATURE_COLS = ("c4_n_lines", "c4_n_kept", "c4_keep", "c4_clean_text")
-
 # PLACEHOLDER blocklist for the paper's bad-words page rule (Raffel 2020
 # §2.2 drops any page containing a word from the published "List of
 # Dirty, Naughty, Obscene or Otherwise Bad Words"). The list itself IS

@@ -78,15 +78,6 @@ from pyspark.sql import functions as F
 TOP_NGRAM_MAX_MICRO = {2: 200_000, 3: 180_000, 4: 160_000}
 DUP_NGRAM_MAX_MICRO = {5: 150_000, 6: 140_000, 7: 130_000, 8: 120_000, 9: 110_000, 10: 100_000}
 
-GOPHER_FEATURE_COLS = (
-    "top2_frac_micro",
-    "top3_frac_micro",
-    "top4_frac_micro",
-    "dup5_cov_micro",
-    "dup10_cov_micro",
-    "gopher_keep",
-)
-
 # published line/paragraph duplicate thresholds (Rae 2021 table A1), micro
 DUP_LINE_FRAC_MAX_MICRO = 300_000
 DUP_PARA_FRAC_MAX_MICRO = 300_000

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from etl_edi_data_scrapper_spark import fsutil
 from etl_edi_data_scrapper_spark.functions.clustering import (
     _np_fold_cosine,
     _np_fold_sqdist,
@@ -337,8 +338,6 @@ def save_ivfpq_index(
     )
     import json
 
-    from etl_edi_data_scrapper_spark import fsutil
-
     meta = dict(meta) if meta else {}
     if residual is not None:
         meta.setdefault("residual", bool(residual))
@@ -360,23 +359,13 @@ def load_ivfpq_index(
 
     If ``codes`` is missing but a `compact_ivfpq_codes` working dir
     survives (``codes__precompact`` = the originals moved aside,
-    ``codes__compacting`` = the rewritten layout), the error names the
-    recoverable directory instead of a bare path-not-found."""
+    ``codes__compacting`` = the rewritten layout), `fsutil.read_store`
+    raises an IOError naming the recoverable directory instead of a bare
+    path-not-found."""
     codes = f"{path}/codes"
-    try:
-        codes_df = spark.read.parquet(codes)
-    except Exception as e:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path
-        fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        for leftover in (codes + "__precompact", codes + "__compacting"):
-            if fs.exists(jpath(leftover)):
-                raise IOError(
-                    f"{codes!r} is missing but a compaction working dir "
-                    f"survives at {leftover!r} — a `compact_ivfpq_codes` "
-                    f"run died mid-swap; rename it back to 'codes' to "
-                    f"recover (row sets are identical)."
-                ) from e
-        raise
+    codes_df = fsutil.read_store(spark, codes)
+    if codes_df is None:
+        raise FileNotFoundError(f"no IVF-PQ codes at {codes!r}")
     return (
         spark.read.parquet(f"{path}/centroids"),
         codes_df,
@@ -1342,8 +1331,6 @@ def load_ivfpq_meta(spark, path: str) -> dict:
     the index path's OWN filesystem — a remote index's meta is remote."""
     import json
 
-    from etl_edi_data_scrapper_spark import fsutil
-
     text = fsutil.read_text(spark, f"{path}/_meta.json")
     return json.loads(text) if text else {}
 
@@ -1557,73 +1544,30 @@ def compact_ivfpq_codes(spark, path: str) -> tuple[int, int]:
     cell, so a code store written by many tasks (or by several jobs into
     the same layout) turns every centroid_id directory into many small
     files, and the routed probe's pruning win drowns in listing + footer
-    overhead. Same discipline as
-    `compact_neardup_store` / `rollup-compact`: rewrite `{path}/codes`
-    with one task (→ one file) per cell via ``repartition("centroid_id")``
-    to a sibling temp dir, then swap through the Hadoop FileSystem API
-    (HDFS/S3A/local alike). Row set is unchanged (this is purely a
-    file-layout rewrite); centroids, codebooks, and `_meta.json` are
-    not touched. The swap is rename-aside → rename-in → delete-old, NOT
-    atomic: run with writers and queries STOPPED. But every crash
-    window is recoverable without reading this source: the live codes
-    are at exactly one of ``codes`` / ``codes__precompact`` at all
-    times, and `load_ivfpq_index` names the survivor when ``codes`` is
-    missing. Returns (files_before, files_after) counted over the codes
-    tree's parquet data files."""
+    overhead. Same protocol as `compact_neardup_store` /
+    `compact_rollup`: rewrite `{path}/codes` with one task (→ one file)
+    per cell via ``repartition("centroid_id")`` to
+    ``codes__compacting``, check its row count, then `fsutil.replace_dir`
+    swaps it in. Row set is unchanged (this is purely a file-layout
+    rewrite); centroids, codebooks, and `_meta.json` are not touched. The
+    swap is NOT atomic: run with writers and queries STOPPED; a crash
+    mid-swap leaves the codes at ``codes__precompact``, which
+    `load_ivfpq_index` names. Returns (files_before, files_after)
+    counted over the codes tree's parquet data files."""
     codes_dir = f"{path}/codes"
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    dst = jpath(codes_dir)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _n_files(p) -> int:
-        n = 0
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            f = it.next()
-            name = f.getPath().getName()
-            if not name.startswith(("_", ".")):
-                n += 1
-        return n
-
     before_df = spark.read.parquet(codes_dir)
     rows = before_df.count()
-    files_before = _n_files(dst)
-    tmp = codes_dir.rstrip("/") + "__compacting"
+    files_before = fsutil.data_files(spark, codes_dir)
+    tmp = codes_dir + fsutil.COMPACTING
     (
         before_df.repartition("centroid_id")
         .write.mode("overwrite")
         .partitionBy("centroid_id")
         .parquet(tmp)
     )
-    src = jpath(tmp)
     if spark.read.parquet(tmp).count() != rows:
         raise IOError(
             f"compaction row-count mismatch at {tmp!r}; original untouched"
         )
-    # rename the live codes ASIDE first (never delete before the new
-    # layout is in place): a driver death mid-swap leaves the original
-    # intact at __precompact instead of stranding the data at the temp
-    # dir with {path}/codes simply gone
-    old_dir = codes_dir.rstrip("/") + "__precompact"
-    old = jpath(old_dir)
-    if fs.exists(old):
-        fs.delete(old, True)  # leftover from a prior crashed compaction
-    if not fs.rename(dst, old):
-        raise IOError(
-            f"compaction could not move the old codes aside to "
-            f"{old_dir!r}; original untouched at {codes_dir!r}"
-        )
-    if not fs.rename(src, dst):
-        # roll back so the index stays loadable
-        restored = fs.rename(old, dst)
-        raise IOError(
-            f"compaction wrote {tmp!r} but could not rename it over "
-            f"{codes_dir!r} — compacted codes intact at the temp path; "
-            + (
-                "original codes restored"
-                if restored
-                else f"original codes at {old_dir!r}"
-            )
-        )
-    fs.delete(old, True)
-    return files_before, _n_files(dst)
+    fsutil.replace_dir(spark, codes_dir)
+    return files_before, fsutil.data_files(spark, codes_dir)

@@ -28,7 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
+
+from etl_edi_data_scrapper_spark import fsutil
 
 
 def merge_daily_rollup(
@@ -56,21 +57,12 @@ def merge_daily_rollup(
         )
     )
 
-    # Only PATH_NOT_FOUND / empty-dir mean "first merge" — any OTHER
-    # failure (permissions, transient FS error, corrupt footer) must
+    # Only a missing / empty dir means "first merge" — any OTHER failure
+    # (permissions, corrupt footer, a compaction that died mid-swap) must
     # raise: merging as first-write would dynamic-overwrite the touched
     # day partitions with batch-only counts and silently lose history.
-    # Same probe discipline as streaming/neardup_stream.py's store read.
-    try:
-        existing = spark.read.parquet(rollup_dir)
-        existing.schema  # force analysis inside the try
-        have_existing = True
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        have_existing = False
-
-    if have_existing:
+    existing = fsutil.read_store(spark, rollup_dir)
+    if existing is not None:
         touched = delta.select("day").distinct()
         old = existing.join(touched, "day", "left_semi")
         merged = (
@@ -187,10 +179,10 @@ def compact_rollup(
     spark: SparkSession, rollup_dir: str, keys: Sequence[str] = ("event_type",)
 ) -> tuple[int, int]:
     """Fold all batch partials into one ``batch_id=-1`` partial per day
-    (temp-write + Hadoop-FS swap, same discipline as
-    `streaming.neardup_stream.compact_neardup_store`). OFFLINE only —
-    stop the merging stream first, and compact only batches past the
-    replay horizon. Returns (rows_before, rows_after)."""
+    (written to ``<rollup>__compacting``, swapped in by
+    `fsutil.replace_dir`). OFFLINE only — stop the merging stream first,
+    and compact only batches past the replay horizon. Returns
+    (rows_before, rows_after)."""
     before_df = spark.read.parquet(rollup_dir)
     before = before_df.count()
     compacted = (
@@ -201,28 +193,8 @@ def compact_rollup(
         )
         .withColumn("batch_id", F.lit(-1))
     )
-    tmp = rollup_dir.rstrip("/") + "__compacting"
-    bak = rollup_dir.rstrip("/") + "__backup"
+    tmp = rollup_dir.rstrip("/") + fsutil.COMPACTING
     compacted.write.mode("overwrite").partitionBy("day", "batch_id").parquet(tmp)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    src, dst, bkp = jpath(tmp), jpath(rollup_dir), jpath(bak)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
     after = spark.read.parquet(tmp).count()
-    # swap via a backup rename, never a delete-then-rename: a crash
-    # between the two renames leaves the live data at __backup (recover by
-    # renaming it back), and the no-rollup-path window shrinks from a full
-    # recursive delete to one atomic-on-HDFS rename
-    fs.delete(bkp, True)  # stale backup from a prior crashed compaction
-    if not fs.rename(dst, bkp):
-        raise IOError(
-            f"compaction could not move the live rollup {rollup_dir!r} "
-            f"aside to {bak!r} — store untouched, compacted data at {tmp!r}"
-        )
-    if not fs.rename(src, dst):
-        fs.rename(bkp, dst)  # restore the live store before failing
-        raise IOError(
-            f"compaction wrote {tmp!r} but could not rename it over "
-            f"{rollup_dir!r} — original store restored from backup"
-        )
-    fs.delete(bkp, True)
+    fsutil.replace_dir(spark, rollup_dir)
     return before, after

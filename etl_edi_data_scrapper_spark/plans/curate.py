@@ -97,6 +97,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from etl_edi_data_scrapper_spark import fsutil
+
 ALL_STAGES = (
     "quality", "gopher", "c4", "xent", "bxent", "exact", "minhash", "spans",
     "linedup",
@@ -138,31 +140,26 @@ def _psl_fingerprint(psl) -> str | None:
     return "dict:" + hashlib.md5(blob.encode()).hexdigest()
 
 
-def _check_stage_config(stage_dir: str, config: dict) -> None:
+def _check_stage_config(spark: SparkSession, stage_dir: str, config: dict) -> None:
     """Write-or-verify the stage dir's parameter fingerprint: resuming
     into a dir whose completed stages were computed under DIFFERENT
     parameters would silently mix verdict regimes — refuse instead. The
-    input corpus itself is not fingerprinted (module docstring caveat)."""
+    input corpus itself is not fingerprinted (module docstring caveat).
+    Read and written through `fsutil`, on the stage dir's own
+    filesystem (``file://`` / ``hdfs://`` included)."""
     import json
-    import os
 
-    os.makedirs(stage_dir, exist_ok=True)
-    path = os.path.join(stage_dir, "_config.json")
+    path = f"{stage_dir.rstrip('/')}/_config.json"
     blob = json.dumps(config, sort_keys=True)
-    if os.path.exists(path):
-        with open(path, encoding="utf-8") as fh:
-            prior = fh.read()
-        if prior != blob:
-            raise ValueError(
-                f"stage_dir {stage_dir!r} was built under different "
-                f"parameters; use a fresh dir or delete it.\n"
-                f"  prior: {prior}\n  now:   {blob}"
-            )
-        return
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(blob)
-    os.replace(tmp, path)
+    prior = fsutil.read_text(spark, path)
+    if prior is None:
+        fsutil.write_text_atomic(spark, path, blob)
+    elif prior != blob:
+        raise ValueError(
+            f"stage_dir {stage_dir!r} was built under different "
+            f"parameters; use a fresh dir or delete it.\n"
+            f"  prior: {prior}\n  now:   {blob}"
+        )
 
 
 def curate_corpus(
@@ -242,6 +239,7 @@ def curate_corpus(
         )
     if stage_dir is not None:
         _check_stage_config(
+            spark,
             stage_dir,
             {
                 "stages": sorted(stages),
@@ -298,10 +296,8 @@ def curate_corpus(
         resumed run would."""
         if stage_dir is None:
             return build()
-        import os
-
-        path = os.path.join(stage_dir, f"{name}.parquet")
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
+        path = f"{stage_dir.rstrip('/')}/{name}.parquet"
+        if fsutil.exists(spark, f"{path}/_SUCCESS"):
             return spark.read.parquet(path)
         build().write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)

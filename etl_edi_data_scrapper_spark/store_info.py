@@ -22,9 +22,9 @@ Detection is by the stores' own contracts, not path names:
 - ``neardup-store``: parquet with `band`/`band_key`/doc-id columns
   (`dedup_batch_against_store`). Extras: band count, docs.
 
-Everything reads through the Hadoop FileSystem API (the `fsutil`
-discipline) so `hdfs://`/`s3a://` stores audit identically to local
-paths.
+Everything reads through `fsutil` (the Hadoop FileSystem API) so
+`hdfs://`/`s3a://` stores audit identically to local paths, and a store
+whose compaction died mid-swap is named, not reported as unknown.
 """
 
 from __future__ import annotations
@@ -34,33 +34,6 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from etl_edi_data_scrapper_spark import fsutil
-
-
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs(spark, path)
-    return bool(fs.exists(p))
-
-
-def _data_files(spark: SparkSession, path: str) -> int:
-    """Non-hidden data files under ``path``, recursively (the same
-    convention as `compact_ivfpq_codes`: names starting with '_' or '.'
-    are bookkeeping, not data)."""
-    fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return 0
-    n = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if not name.startswith(("_", ".")):
-            n += 1
-    return n
 
 
 def _is_file(spark: SparkSession, path: str) -> bool:
@@ -75,29 +48,17 @@ def _read_json_sidecar(spark: SparkSession, path: str) -> dict | None:
     return json.loads(text) if text else None
 
 
-def _try_parquet(spark: SparkSession, path: str):
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force analysis inside the try
-        return df
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return None
-        raise
-
-
 def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
     """One dict describing whatever store lives at ``path`` (see module
     docstring for the families); raises ValueError for layouts none of
-    the store contracts match."""
+    the store contracts match, IOError for a parquet store whose
+    compaction died mid-swap (`fsutil.read_store`)."""
     path = path.rstrip("/")
     out: dict[str, Any] = {"path": path}
 
     # --- ivfpq index: sidecar + three component dirs -------------------
-    if _exists(spark, f"{path}/_meta.json") and all(
-        _exists(spark, f"{path}/{d}") for d in ("centroids", "codes", "codebooks")
+    if fsutil.exists(spark, f"{path}/_meta.json") and all(
+        fsutil.exists(spark, f"{path}/{d}") for d in ("centroids", "codes", "codebooks")
     ):
         from pyspark.sql import functions as F
 
@@ -125,11 +86,11 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
             F.countDistinct("code_id").alias("n"),
         ).first()
         out["codebook_geometry"] = {"m_sub": agg["m"], "n_codes": agg["n"]}
-        out["code_data_files"] = _data_files(spark, f"{path}/codes")
+        out["code_data_files"] = fsutil.data_files(spark, f"{path}/codes")
         leftovers = [
             d
-            for d in ("codes__precompact", "codes__compacting")
-            if _exists(spark, f"{path}/{d}")
+            for d in ("codes" + fsutil.PRECOMPACT, "codes" + fsutil.COMPACTING)
+            if fsutil.exists(spark, f"{path}/{d}")
         ]
         if leftovers:
             out["crashed_compaction_dirs"] = leftovers
@@ -160,7 +121,7 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
         return out
 
     # bigram reference LM: uni/ + big/ count tables
-    if _exists(spark, f"{path}/uni") and _exists(spark, f"{path}/big"):
+    if fsutil.exists(spark, f"{path}/uni") and fsutil.exists(spark, f"{path}/big"):
         from pyspark.sql import functions as F
 
         uni = spark.read.parquet(f"{path}/uni")
@@ -177,7 +138,7 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
             return out
 
     # --- parquet-backed stores, told apart by their contract columns ---
-    df = _try_parquet(spark, path)
+    df = fsutil.read_store(spark, path)
     if df is None:
         raise ValueError(
             f"{path!r} matches no known store layout (ivfpq-index, "
@@ -196,7 +157,7 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
         out["bands"] = df.select("band").distinct().count()
         if id_cols:
             out["docs"] = df.select(id_cols[0]).distinct().count()
-        out["data_files"] = _data_files(spark, path)
+        out["data_files"] = fsutil.data_files(spark, path)
         return out
 
     if cols == {"term", "cnt"}:
@@ -205,7 +166,7 @@ def describe_store(spark: SparkSession, path: str) -> dict[str, Any]:
         out["total_tokens"] = int(
             df.agg(F.sum("cnt").alias("t")).first()["t"] or 0
         )
-        out["data_files"] = _data_files(spark, path)
+        out["data_files"] = fsutil.data_files(spark, path)
         return out
 
     raise ValueError(

@@ -31,10 +31,10 @@ Scale notes:
     ``partitionBy("band")`` so a band's files prune on read;
   * the store grows O(accepted docs); at 10⁹ docs it is ~12 longs + keys
     per doc — a compacted parquet table;
-  * the store is read with an EXPLICIT schema pinned to the batch's key
-    frame, so the path works on any Hadoop filesystem (no driver-local
-    existence probe) and an empty store directory cannot wedge the stream
-    on schema inference;
+  * the store is read through `fsutil.read_store` (any Hadoop
+    filesystem, no driver-local existence probe; an empty store directory
+    reads as "no store yet") and its schema must equal the batch's key
+    frame;
   * delivery is at-least-once: a replayed batch re-checks against the
     store (a doc never matches itself) and re-appends its accepted rows —
     verdicts stay correct (dup_of takes a MIN over candidates); duplicate
@@ -43,10 +43,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_edi_data_scrapper_spark import fsutil
 from etl_edi_data_scrapper_spark.functions.dedup import (
     connected_components,
     lsh_band_keys,
@@ -130,25 +130,20 @@ def dedup_batch_against_store(
         with_cluster = batch.withColumn("cluster_id", F.lit(None).cast(id_type))
 
     # --- against the accumulated store (band equi-join, candidates only).
-    # ONE read serves both the drift probe and the join (on object stores a
+    # ONE read serves both the drift check and the join (on object stores a
     # second `spark.read...parquet` is a second directory listing per
-    # micro-batch): only PATH_NOT_FOUND / empty-dir mean "no store yet" —
-    # any OTHER analysis failure (corrupt store, wrong path type,
-    # permissions) raises instead of silently dropping the dedup history —
-    # and a store written under different settings (n_hashes/bands drift
-    # changes the columns; a band dtype change breaks the equi-join) fails
-    # loudly instead of null-filling signature columns and silently
-    # missing matches. The select() below only reorders columns (the
-    # partition column `band` lists last on read) — no second listing.
-    try:
-        probe = spark.read.parquet(store_dir)
-        probe.schema  # force analysis inside the try
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        store = None  # first increment (or empty store): nothing accepted yet
-    else:
-        actual = {f.name: f.dataType for f in probe.schema.fields}
+    # micro-batch): `fsutil.read_store` says "no store yet" only for a
+    # missing or empty store — any OTHER failure (corrupt store, a
+    # compaction that died mid-swap) raises instead of silently dropping
+    # the dedup history — and a store written under different settings
+    # (n_hashes/bands drift changes the columns; a band dtype change
+    # breaks the equi-join) fails loudly instead of null-filling
+    # signature columns and silently missing matches. The select() below
+    # only reorders columns (the partition column `band` lists last on
+    # read) — no second listing.
+    store = fsutil.read_store(spark, store_dir)
+    if store is not None:
+        actual = {f.name: f.dataType for f in store.schema.fields}
         wanted = {f.name: f.dataType for f in keyed.schema.fields}
         if actual != wanted:
             raise ValueError(
@@ -158,7 +153,7 @@ def dedup_batch_against_store(
                 " — n_hashes/bands drift? Use the store's original settings "
                 "or rebuild it."
             )
-        store = probe.select(*keyed.schema.names)
+        store = store.select(*keyed.schema.names)
     if store is not None:
         hist = (
             keyed.join(
@@ -241,17 +236,16 @@ def compact_neardup_store(spark: SparkSession, store_dir: str) -> tuple[int, int
     rows — id, band, band_key and signature longs are all deterministic
     functions of the document) plus a ``repartition("band")`` so each band
     partition lands in exactly one task → ONE file per band, written
-    ``partitionBy("band")`` like the live store. The rewrite goes to a
-    sibling temp directory first, then swaps via the Hadoop FileSystem API
-    (works on HDFS/S3A/local alike). The swap is delete-then-rename, NOT
-    atomic: run compaction with the stream STOPPED (between deployments /
-    from a maintenance job), never concurrently with an appending batch.
+    ``partitionBy("band")`` like the live store. The rewrite goes to
+    ``<store>__compacting`` and `fsutil.replace_dir` swaps it in (NOT
+    atomic: run compaction with the stream STOPPED, between deployments /
+    from a maintenance job, never concurrently with an appending batch).
 
     Returns ``(rows_before, rows_after)``.
     """
     before_df = spark.read.parquet(store_dir)
     before = before_df.count()
-    tmp = store_dir.rstrip("/") + "__compacting"
+    tmp = store_dir.rstrip("/") + fsutil.COMPACTING
     (
         before_df.dropDuplicates()
         .repartition("band")
@@ -259,17 +253,8 @@ def compact_neardup_store(spark: SparkSession, store_dir: str) -> tuple[int, int
         .partitionBy("band")
         .parquet(tmp)
     )
-    jpath = spark._jvm.org.apache.hadoop.fs.Path
-    src, dst = jpath(tmp), jpath(store_dir)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
     after = spark.read.parquet(tmp).count()  # footer-stats count, cheap
-    if not fs.delete(dst, True):
-        raise IOError(f"compaction could not remove the old store at {store_dir!r}")
-    if not fs.rename(src, dst):
-        raise IOError(
-            f"compaction wrote {tmp!r} but could not rename it over "
-            f"{store_dir!r} — the compacted store is intact at the temp path"
-        )
+    fsutil.replace_dir(spark, store_dir)
     return before, after
 
 

@@ -3948,33 +3948,35 @@ def q_morris_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morris XML scan: one row per <available>, per-field casts
     (`MorrisXmlSftpInputHandler.php:21-62`). The scan reads the file
     lazily, so the constant fixture is staged once per process
-    (``_morris_fixture_path``) rather than once per plan build."""
+    (``_fixture_dir``) rather than once per plan build."""
     from etl_edi_data_scrapper_spark.sources.files import read_morris_xml
 
-    return read_morris_xml(spark, _morris_fixture_path())
+    stage = _fixture_dir("etl_xml_q_", {"morris.xml": _MORRIS_FIXTURE})
+    return read_morris_xml(spark, f"{stage}/morris.xml")
 
 
-_MORRIS_FIXTURE_PATH: str | None = None
+_FIXTURE_DIRS: dict[str, str] = {}
 
 
-def _morris_fixture_path() -> str:
-    """Stage ``_MORRIS_FIXTURE`` once per process in a private temp
-    directory removed at process exit (the ``_ship_package`` discipline);
-    restaged if something removed it meanwhile."""
+def _fixture_dir(prefix: str, files: dict[str, str]) -> str:
+    """Stage constant fixture ``files`` (name → text) once per process in
+    a private temp directory removed at process exit (the
+    ``_ship_package`` discipline); restaged if something removed it
+    meanwhile. For queries whose scan reads the files lazily."""
     import atexit
     import os
     import shutil
     import tempfile
 
-    global _MORRIS_FIXTURE_PATH
-    if _MORRIS_FIXTURE_PATH is None or not os.path.exists(_MORRIS_FIXTURE_PATH):
-        stage = tempfile.mkdtemp(prefix="etl_xml_q_")
+    stage = _FIXTURE_DIRS.get(prefix)
+    if stage is None or not os.path.isdir(stage):
+        stage = tempfile.mkdtemp(prefix=prefix)
         atexit.register(shutil.rmtree, stage, ignore_errors=True)
-        path = os.path.join(stage, "morris.xml")
-        with open(path, "w") as f:
-            f.write(_MORRIS_FIXTURE)
-        _MORRIS_FIXTURE_PATH = path
-    return _MORRIS_FIXTURE_PATH
+        for name, text in files.items():
+            with open(os.path.join(stage, name), "w") as f:
+                f.write(text)
+        _FIXTURE_DIRS[prefix] = stage
+    return stage
 
 
 @register(
@@ -4002,10 +4004,7 @@ def q_rest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         exercise the identical protocol, JSON parse stays in the plan
         (from_json).
     [r3 consolidation: absorbs the former `rest_scan_distributed` query.]"""
-    import hashlib as _hl
     import json as jsonmod
-    import os
-    import tempfile
 
     from etl_edi_data_scrapper_spark.sources.rest import read_rest_api
     from etl_edi_data_scrapper_spark.sources.rest_datasource import RestDataSource
@@ -4025,23 +4024,19 @@ def q_rest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.lit("driver").alias("src"), "barcode", "stock_quantity")
 
     spark.dataSource.register(RestDataSource)
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_rest_ds_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    os.makedirs(stage, exist_ok=True)
-    for p in range(1, 5):
-        with open(os.path.join(stage, f"page_{p}.json"), "w") as f:
-            jsonmod.dump(
-                {
-                    "data": [
-                        {"barcode": f"d{p}-{i}", "stock_quantity": p * 10 + i}
-                        for i in range(2)
-                    ],
-                    "meta": {"last_page": 4},
-                },
-                f,
-            )
+    pages = {
+        f"page_{p}.json": jsonmod.dumps(
+            {
+                "data": [
+                    {"barcode": f"d{p}-{i}", "stock_quantity": p * 10 + i}
+                    for i in range(2)
+                ],
+                "meta": {"last_page": 4},
+            }
+        )
+        for p in range(1, 5)
+    }
+    stage = _fixture_dir("etl_rest_ds_", pages)
     raw = (
         spark.read.format("edi_rest")
         .option("url", f"file://{stage}")

@@ -151,7 +151,7 @@ def test_distributed_counts_match_driver_side(spark, merges_file):
         assert got[i] == bpe_count_text(t, ranks), (i, t)
 
 
-def test_exact_count_bounds_the_jvm_approximation(spark, merges_file):
+def test_exact_count_bounds_the_jvm_approximation(spark, sf_dir, merges_file):
     """The JVM fast path counts pre-tokenizer segments; the merge stage
     only splits WITHIN segments, so exact >= approximate, always."""
     from pyspark.sql import functions as F
@@ -159,7 +159,7 @@ def test_exact_count_bounds_the_jvm_approximation(spark, merges_file):
     from etl_edi_data_scrapper_spark.functions.bpe import bpe_token_count_exact
     from etl_edi_data_scrapper_spark.functions.text import bpe_token_count
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     both = bpe_token_count_exact(docs, merges=merges_file).withColumn(
@@ -224,7 +224,7 @@ def test_pretokenizer_keeps_last_space_glued_to_word():
     assert re.findall(_PRETOKEN_RE, "a  ") == ["a", "  "]
 
 
-def test_gate_vocab_closed_form_matches_merge_loop(spark):
+def test_gate_vocab_closed_form_matches_merge_loop(spark, sf_dir):
     """The pack_sequences oracle counts PACK_GATE_BPE_RANKS merges in
     closed form (bytes - n('er') - n(' t') - n('ers')); that identity
     holds only on a [a-z ]-only corpus with disjoint occurrence sets —
@@ -234,7 +234,7 @@ def test_gate_vocab_closed_form_matches_merge_loop(spark):
     from etl_edi_data_scrapper_spark.functions.bpe import bpe_count_text
     from etl_edi_data_scrapper_spark.suite import PACK_GATE_BPE_RANKS
 
-    rows = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+    rows = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "text"
     ).collect()
     assert rows

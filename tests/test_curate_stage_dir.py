@@ -7,11 +7,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
 
-
-def _docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+def _docs(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
 
 
 def _collect(df):
@@ -19,16 +17,32 @@ def _collect(df):
     return [tuple(r) for r in rows]
 
 
-def test_crash_between_stages_resumes_byte_identical(spark, tmp_path, monkeypatch):
+def test_crash_between_stages_resumes_byte_identical(spark, sf_dir, tmp_path, monkeypatch):
     """Kill the run between stages (the exact stage's fingerprint raises
     after quality persisted), rerun, and the verdicts equal a fresh
     unstaged run row for row — with the quality stage's parquet untouched
     (mtime proof it was read, not recomputed)."""
+    _crash_then_resume(spark, sf_dir, tmp_path, monkeypatch, scheme="")
+
+
+def test_crash_between_stages_resumes_from_file_uri_stage_dir(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The same crash and resume with a ``file://`` stage dir: its
+    ``_config.json`` and ``_SUCCESS`` checks go through the Hadoop
+    FileSystem, so it resumes, and nothing lands in a driver-local
+    directory named after the URI."""
+    _crash_then_resume(spark, sf_dir, tmp_path, monkeypatch, scheme="file://")
+
+
+def _crash_then_resume(spark, sf_dir, tmp_path, monkeypatch, scheme):
     from etl_edi_data_scrapper_spark.functions import text as text_mod
     from etl_edi_data_scrapper_spark.plans.curate import curate_corpus
 
-    stage_dir = str(tmp_path / "stages")
-    docs = _docs(spark)
+    local_dir = str(tmp_path / "stages")
+    stage_dir = scheme + local_dir
+    monkeypatch.chdir(tmp_path)  # a path misread as relative lands here
+    docs = _docs(spark, sf_dir)
     stages = ("quality", "exact")
 
     real_fp = text_mod.fingerprint
@@ -40,9 +54,11 @@ def test_crash_between_stages_resumes_byte_identical(spark, tmp_path, monkeypatc
     with pytest.raises(RuntimeError, match="simulated crash"):
         curate_corpus(spark, docs, stages=stages, stage_dir=stage_dir).collect()
     # stage 1 completed and persisted before the crash
-    q_success = os.path.join(stage_dir, "quality.parquet", "_SUCCESS")
+    q_success = os.path.join(local_dir, "quality.parquet", "_SUCCESS")
     assert os.path.exists(q_success)
-    assert not os.path.exists(os.path.join(stage_dir, "exact.parquet", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(local_dir, "exact.parquet", "_SUCCESS"))
+    assert os.path.exists(os.path.join(local_dir, "_config.json"))
+    assert sorted(os.listdir(tmp_path)) == ["stages"]
     mtime_before = os.path.getmtime(q_success)
 
     monkeypatch.setattr(text_mod, "fingerprint", real_fp)
@@ -53,13 +69,13 @@ def test_crash_between_stages_resumes_byte_identical(spark, tmp_path, monkeypatc
     assert os.path.getmtime(q_success) == mtime_before
 
 
-def test_completed_run_rerun_recomputes_nothing(spark, tmp_path):
+def test_completed_run_rerun_recomputes_nothing(spark, sf_dir, tmp_path):
     """A second invocation over a fully-staged dir rewrites no stage
     parquet at all (every stage resumes) and returns identical rows."""
     from etl_edi_data_scrapper_spark.plans.curate import curate_corpus
 
     stage_dir = str(tmp_path / "stages")
-    docs = _docs(spark)
+    docs = _docs(spark, sf_dir)
     stages = ("quality", "gopher", "exact")
     first = _collect(curate_corpus(spark, docs, stages=stages, stage_dir=stage_dir))
     marks = {
@@ -75,13 +91,13 @@ def test_completed_run_rerun_recomputes_nothing(spark, tmp_path):
         ), f"stage {s} was re-executed"
 
 
-def test_stage_dir_config_mismatch_raises(spark, tmp_path):
+def test_stage_dir_config_mismatch_raises(spark, sf_dir, tmp_path):
     """Resuming into a stage dir built under different parameters mixes
     verdict regimes — it must refuse loudly."""
     from etl_edi_data_scrapper_spark.plans.curate import curate_corpus
 
     stage_dir = str(tmp_path / "stages")
-    docs = _docs(spark)
+    docs = _docs(spark, sf_dir)
     curate_corpus(spark, docs, stages=("quality",), stage_dir=stage_dir).collect()
     with pytest.raises(ValueError, match="different parameters"):
         curate_corpus(
@@ -89,13 +105,13 @@ def test_stage_dir_config_mismatch_raises(spark, tmp_path):
         )
 
 
-def test_two_tier_decon_resumes_from_staged_bloom(spark, tmp_path):
+def test_two_tier_decon_resumes_from_staged_bloom(spark, sf_dir, tmp_path):
     """The bloom screen's staged parquet feeds the decon gate on resume:
     crash after bloom, rerun, decon verdicts match the unstaged run."""
     from etl_edi_data_scrapper_spark.functions import span_dedup as sd_mod
     from etl_edi_data_scrapper_spark.plans.curate import curate_corpus
 
-    docs = _docs(spark).limit(60)
+    docs = _docs(spark, sf_dir).limit(60)
     bench = docs.filter(F.col("doc_id") < 3).select("text")
     stage_dir = str(tmp_path / "stages")
     kw = dict(stages=("bloom", "decon"), benchmark=bench)
@@ -171,7 +187,7 @@ def test_psl_fingerprint_normalizes_unsortable_values():
     assert _psl_fingerprint({"rules": {"com"}}) != a
 
 
-def test_minhash_bands_auto_equals_planned_explicit(spark):
+def test_minhash_bands_auto_equals_planned_explicit(spark, sf_dir):
     """r14: curate's minhash stage plans (b, r) from the verify
     threshold when minhash_bands="auto" — verdicts equal the explicitly
     planned banding, and differ from a deliberately mis-sized one only
@@ -180,7 +196,7 @@ def test_minhash_bands_auto_equals_planned_explicit(spark):
     from etl_edi_data_scrapper_spark.functions.dedup import plan_lsh_bands
     from etl_edi_data_scrapper_spark.plans.curate import curate_corpus
 
-    docs = _docs(spark)
+    docs = _docs(spark, sf_dir)
     planned = plan_lsh_bands(12, 0.7)["bands"]
     auto = _collect(curate_corpus(
         spark, docs, stages=("minhash",), minhash_bands="auto",
@@ -193,7 +209,7 @@ def test_minhash_bands_auto_equals_planned_explicit(spark):
     assert auto == explicit and len(auto) == 500
 
 
-def test_xent_reference_lm_stage(spark, tmp_path):
+def test_xent_reference_lm_stage(spark, sf_dir, tmp_path):
     """r14: curate's xent stage under a reference LM (fit on the same
     corpus) produces identical verdicts to self-fit; the LM path joins
     the stage-dir fingerprint."""
@@ -204,7 +220,7 @@ def test_xent_reference_lm_stage(spark, tmp_path):
     )
     from etl_edi_data_scrapper_spark.plans.curate import curate_corpus
 
-    docs = _docs(spark)
+    docs = _docs(spark, sf_dir)
     path = str(tmp_path / "lm")
     save_unigram_lm(fit_unigram_lm(docs), path)
     with_lm = _collect(curate_corpus(

@@ -5,6 +5,11 @@ and silently returning success would hand callers old sidecar content
 (the exact staleness the atomic writer exists to prevent). The genuine
 lost-race case (a concurrent writer's FRESH file occupies dst) stays
 tolerated.
+
+The store-replacement protocol: `read_store` says "no store yet" only for
+a missing or empty directory (the crash leftovers are checked through its
+callers in test_rollup.py and test_streaming_neardup.py); `replace_dir`
+rolls back when the rename-in fails and never runs without a live store.
 """
 
 from __future__ import annotations
@@ -39,7 +44,7 @@ class _FsProxy:
         return self._real.delete(p, recursive)
 
     def rename(self, src, dst):
-        if dst.toString() == self._dst and self._fail_rename:
+        if self._fail_rename and self._dst in (src.toString(), dst.toString()):
             return False
         return self._real.rename(src, dst)
 
@@ -98,3 +103,47 @@ def test_lost_race_to_concurrent_writer_is_tolerated(
     import os
 
     assert [f for f in os.listdir(tmp_path) if ".tmp." in f] == []
+
+
+def _write(spark, path, n):
+    spark.range(n).write.mode("overwrite").parquet(path)
+
+
+def _ids(spark, path):
+    return sorted(r.id for r in spark.read.parquet(path).collect())
+
+
+def test_read_store_no_store_yet(spark, tmp_path):
+    live = str(tmp_path / "store")
+    assert fsutil.read_store(spark, live) is None  # missing
+    (tmp_path / "store").mkdir()
+    assert fsutil.read_store(spark, live) is None  # empty dir
+    # a rewrite that never swapped in does not hide a live store
+    _write(spark, live, 3)
+    _write(spark, live + fsutil.COMPACTING, 5)
+    assert fsutil.read_store(spark, live).count() == 3
+
+
+def test_replace_dir_failed_rename_in_leaves_original(spark, tmp_path, monkeypatch):
+    live = str(tmp_path / "store")
+    _write(spark, live, 3)
+    _write(spark, live + fsutil.COMPACTING, 5)
+    tmp_str = fsutil._fs(spark, live + fsutil.COMPACTING)[1].toString()
+    _patch(monkeypatch, spark, tmp_str, fail_rename=True)
+    with pytest.raises(IOError, match="original restored"):
+        fsutil.replace_dir(spark, live)
+    monkeypatch.undo()
+    assert _ids(spark, live) == [0, 1, 2]  # the original, at its path
+    assert not (tmp_path / f"store{fsutil.PRECOMPACT}").exists()
+    assert _ids(spark, live + fsutil.COMPACTING) == [0, 1, 2, 3, 4]
+
+
+def test_replace_dir_refuses_without_a_live_store(spark, tmp_path):
+    # the live data may then be at the aside path: deleting it as "stale"
+    # would lose the only copy
+    live = str(tmp_path / "store")
+    _write(spark, live + fsutil.PRECOMPACT, 3)
+    _write(spark, live + fsutil.COMPACTING, 3)
+    with pytest.raises(IOError, match="no store at"):
+        fsutil.replace_dir(spark, live)
+    assert _ids(spark, live + fsutil.PRECOMPACT) == [0, 1, 2]

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from etl_edi_data_scrapper_spark.functions.gopher import (
     DUP_NGRAM_MAX_MICRO,
-    GOPHER_FEATURE_COLS,
     TOP_NGRAM_MAX_MICRO,
     add_gopher_features,
 )
@@ -115,7 +114,16 @@ def test_gopher_keep_thresholds(spark):
 def test_features_compile_to_zero_shuffle_projection(spark):
     df = spark.createDataFrame([(1, "a b c a b c")], ["doc_id", "text"])
     out = add_gopher_features(df)
-    assert list(out.columns) == ["doc_id", "text", *GOPHER_FEATURE_COLS]
+    assert list(out.columns) == [
+        "doc_id",
+        "text",
+        "top2_frac_micro",
+        "top3_frac_micro",
+        "top4_frac_micro",
+        "dup5_cov_micro",
+        "dup10_cov_micro",
+        "gopher_keep",
+    ]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan

@@ -12,9 +12,11 @@ resolved, parent packages included, since importing ``a.b.c`` runs
 The closure is sound only while the package never imports by name at run
 time, so that is checked too.
 
-Functions: a name-level call graph over the top-level ``def``s and
-``class``es of the package. The roots are the module-level code of every
-package module (decorators, default arguments and base classes included),
+Definitions: a name-level call graph over the top-level ``def``s,
+``class``es and constants of the package (a constant is a top-level
+assignment to plain, non-dunder names; its value is its body). The roots
+are the rest of the module-level code of every package module
+(decorators, default arguments and base classes included),
 ``__main__.main``, ``engine.Engine``, ``__init__``'s ``get_spark`` and
 ``__getattr__``, every registered ``suite`` query, and the repo's own
 programs (``tools/*.py``, ``perfbench/*.py``, ``bench.py``,
@@ -49,6 +51,23 @@ DYNAMIC = {"importlib", "import_module", "__import__"}
 DEF_ROOTS = ("main", "Engine", "get_spark", "__getattr__")
 
 DEF_TYPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _defined(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines: a ``def``/``class`` name, or
+    the targets of a constant assignment (plain, non-dunder names only;
+    anything else, such as ``__all__`` or a tuple unpack, stays a root)."""
+    if isinstance(node, DEF_TYPES):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    if all(isinstance(t, ast.Name) and not t.id.startswith("__") for t in targets):
+        return [t.id for t in targets]
+    return []
 
 # "module:name" -> reason
 ALLOWED_DEFS: dict[str, str] = {
@@ -249,18 +268,22 @@ def unreached_defs(
     programs: tuple[str, ...] = PROGRAMS,
     kept: tuple[str, ...] = (),
 ) -> set[str]:
-    """``module:name`` of every top-level def/class outside the closure from
-    the contracts plus the ``kept`` definitions."""
+    """``module:name`` of every top-level def/class/constant outside the
+    closure from the contracts plus the ``kept`` definitions."""
     defs: dict[str, list[str]] = {}
     bodies: dict[str, list[ast.stmt]] = {}
     todo = [*DEF_ROOTS, *(q.partition(":")[2] for q in kept)]
     for mod, path in package_modules(root).items():
         for node in ast.parse(path.read_text(encoding="utf-8")).body:
-            if not isinstance(node, DEF_TYPES):
+            names = _defined(node)
+            if not names:
                 todo.extend(_mentions([node]))
                 continue
-            defs.setdefault(node.name, []).append(mod)
-            bodies.setdefault(node.name, []).append(node)
+            for name in names:
+                defs.setdefault(name, []).append(mod)
+                bodies.setdefault(name, []).append(node)
+            if not isinstance(node, DEF_TYPES):
+                continue
             todo.extend(_mentions(_import_time_parts(node)))
             if mod == "suite" and _is_query(node):
                 todo.append(node.name)
@@ -279,7 +302,7 @@ def unreached_defs(
 def test_every_top_level_definition_is_reachable_from_a_contract():
     unreached = sorted(unreached_defs(kept=tuple(ALLOWED_DEFS)))
     assert not unreached, (
-        "package functions/classes that no contract reaches, only tests or "
+        "package functions/classes/constants that no contract reaches, only tests or "
         "docstrings (delete them with their tests, or allowlist them with a "
         f"reason): {unreached}"
     )
@@ -300,7 +323,10 @@ def test_def_closure_follows_names_aliases_strings_and_programs(tmp_path):
     files = {
         "__init__.py": "from .session import get_spark\n",
         "session.py": (
-            "def get_spark():\n    return _conf()\n\n"
+            "LIVE = 1\nDEAD = _make_dead()\nTYPED: int = 2\n"
+            "__all__ = ['get_spark']\nA, B = 3, 4\n\n"
+            "def _make_dead():\n    return 0\n\n"
+            "def get_spark():\n    return _conf() + LIVE\n\n"
             "def _conf():\n    return 1\n\n"
             "def orphan():\n    return _dead()\n\n"
             "def _dead():\n    return 0\n"
@@ -339,6 +365,9 @@ def test_def_closure_follows_names_aliases_strings_and_programs(tmp_path):
     (tmp_path / "tools" / "t.py").write_text("from pkg.sub.x import tool_only\n")
     programs = ("tools/*.py",)
     dead = {
+        "session:DEAD",
+        "session:_make_dead",
+        "session:TYPED",
         "session:orphan",
         "session:_dead",
         "engine:decorated",

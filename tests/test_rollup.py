@@ -298,9 +298,9 @@ def test_serve_loop_rollup_crash_replay_e2e(spark, tmp_path):
 
 
 def test_compact_rollup_cleans_stale_backup_from_prior_crash(spark, tmp_path):
-    """A crash between the two swap renames leaves the live data at
-    __backup; a later compaction must clear any stale backup and still
-    swap correctly (and the view must be unchanged by compaction)."""
+    """A crash after the rewrite renamed in leaves a stale aside copy at
+    __precompact; a later compaction must clear it and still swap
+    correctly (and the view must be unchanged by compaction)."""
     from etl_edi_data_scrapper_spark.operators.rollup import (
         compact_rollup,
         merge_daily_rollup_idempotent,
@@ -318,8 +318,8 @@ def test_compact_rollup_cleans_stale_backup_from_prior_crash(spark, tmp_path):
         (str(r.day), r.event_type, r.n, float(r.total))
         for r in read_rollup(spark, out).collect()
     }
-    # plant a stale backup (what a crash between the renames leaves behind)
-    stale = tmp_path / "rollup__backup"
+    # plant a stale aside copy (what a crash before its delete leaves behind)
+    stale = tmp_path / "rollup__precompact"
     stale.mkdir()
     (stale / "junk.txt").write_text("leftover from a crashed compaction")
 
@@ -331,3 +331,27 @@ def test_compact_rollup_cleans_stale_backup_from_prior_crash(spark, tmp_path):
         for r in read_rollup(spark, out).collect()
     }
     assert after_view == before_view
+
+
+def test_rollup_missing_after_crashed_compaction_raises(spark, tmp_path):
+    """A compaction that died mid-swap leaves the rollup at
+    rollup__precompact (or only the rewrite at rollup__compacting). A merge
+    that took the missing table for a first merge would start a fresh
+    table of batch-only counts; it must refuse and name the survivor."""
+    import shutil
+
+    import pytest
+
+    from etl_edi_data_scrapper_spark.operators.rollup import merge_daily_rollup
+
+    out = str(tmp_path / "rollup")
+    merge_daily_rollup(spark, out, _batch(spark, [(1, 1, "view", 1.0)]))
+    for suffix in ("__precompact", "__compacting"):
+        shutil.move(out, out + suffix)
+        with pytest.raises(IOError, match=f"rollup{suffix}"):
+            merge_daily_rollup(spark, out, _batch(spark, [(1, 2, "view", 2.0)]))
+        assert not os.path.exists(out)  # no fresh table started
+        shutil.move(out + suffix, out)
+    merge_daily_rollup(spark, out, _batch(spark, [(1, 2, "view", 2.0)]))
+    [row] = spark.read.parquet(out).collect()
+    assert (row.n, float(row.total)) == (2, 3.0)  # history kept

@@ -573,15 +573,21 @@ def test_job_stream_message_flood_trips_guard(spark, tmp_path, monkeypatch):
 
 def test_suite_fixture_queries_leave_no_staging(spark, sf_dir, tmp_path, monkeypatch):
     """`excel_scan` decodes its staged workbooks on the driver and removes
-    them before returning; `morris_xml` scans lazily, so its constant
-    fixture is staged at most once per process, however often it is built."""
+    them before returning; `morris_xml` and `rest_scan` scan lazily, so
+    their constant fixtures are staged at most once per process, however
+    often they are built, each in a private (0o700) temp directory."""
+    import os
     import tempfile
 
-    from etl_edi_data_scrapper_spark.suite import QUERIES
+    from etl_edi_data_scrapper_spark.suite import _FIXTURE_DIRS, QUERIES
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     for _ in range(2):
         assert len(QUERIES["excel_scan"](spark, sf_dir).collect()) == 14
         assert len(QUERIES["morris_xml"](spark, sf_dir).collect()) == 3
+        assert len(QUERIES["rest_scan"](spark, sf_dir).collect()) == 14
     assert not list(tmp_path.glob("etl_xlsx_q_*"))
     assert len(list(tmp_path.glob("etl_xml_q_*"))) <= 1
+    assert len(list(tmp_path.glob("etl_rest_ds_*"))) <= 1
+    assert sorted(_FIXTURE_DIRS) == ["etl_rest_ds_", "etl_xml_q_"]
+    assert all(os.stat(d).st_mode & 0o777 == 0o700 for d in _FIXTURE_DIRS.values())

@@ -69,6 +69,13 @@ def test_store_info_neardup_store(spark, tmp_path, capsys):
     assert info["type"] == "neardup-store"
     assert info["docs"] == 2 and info["bands"] >= 1
 
+    # a compaction that died mid-swap is named, not reported as unknown
+    import shutil
+
+    shutil.move(store, store + "__precompact")
+    rc, out = _cli(spark, ["store-info", "--store", store], capsys)
+    assert rc == 1 and "nd__precompact" in out and "rename it back" in out
+
 
 def test_store_info_unknown_and_absent_refusal(spark, tmp_path, capsys):
     # unknown parquet layout refuses rather than guesses

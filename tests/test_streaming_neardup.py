@@ -167,3 +167,30 @@ def test_compacted_store_yields_identical_verdicts(spark, tmp_path):
         )
 
     assert run(store) == run(frozen) == [(10, 1), (11, 3), (12, None)]
+
+
+def test_store_missing_after_crashed_compaction_raises(spark, tmp_path):
+    # a compaction that died mid-swap leaves the store at <store>__precompact
+    # (or only the rewrite at <store>__compacting): reading that as "no
+    # store yet" would admit every document again — it must refuse and
+    # name the survivor instead
+    import shutil
+
+    import pytest
+
+    from etl_edi_data_scrapper_spark.streaming.neardup_stream import (
+        dedup_batch_against_store,
+    )
+
+    store = str(tmp_path / "store")
+    b1 = spark.createDataFrame([(1, DOC_A), (2, DOC_B)], "doc_id long, text string")
+    dedup_batch_against_store(spark, b1, store)
+    probe = spark.createDataFrame([(10, DOC_A_NEAR)], "doc_id long, text string")
+    for suffix in ("__precompact", "__compacting"):
+        shutil.move(store, store + suffix)
+        with pytest.raises(IOError, match=f"store{suffix}"):
+            dedup_batch_against_store(spark, probe, store)
+        assert not (tmp_path / "store").exists()  # nothing started afresh
+        shutil.move(store + suffix, store)
+    got = {r.doc_id: r.dup_of for r in dedup_batch_against_store(spark, probe, store).collect()}
+    assert got == {10: 1}  # renamed back: the history is intact

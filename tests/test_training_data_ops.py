@@ -7,6 +7,7 @@ import random
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_edi_data_scrapper_spark.functions import dedup, multimodal, similarity, text
 
@@ -198,6 +199,27 @@ def test_quality_score_bounds(spark, sf_dir):
 
 # --- multimodal plumbing (decode kernel stubbed; Arrow path real) -----------
 
+# the input shape the multimodal kernels read: opaque bytes + a typed meta struct
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),  # image|audio|video
+        T.StructField("content", T.BinaryType(), True),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [
+                    T.StructField("mime", T.StringType(), True),
+                    T.StructField("width", T.IntegerType(), True),
+                    T.StructField("height", T.IntegerType(), True),
+                    T.StructField("duration_ms", T.LongType(), True),
+                ]
+            ),
+            True,
+        ),
+    ]
+)
+
 
 def media(spark):
     rows = [
@@ -206,7 +228,7 @@ def media(spark):
         (3, "video", b"\x00\x00ftyp fake mp4", ("video/mp4", 320, 240, 3_500)),
         (4, "image", None, ("image/png", 0, 0, None)),
     ]
-    return spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
 
 
 def test_extract_features_fake_kernel(spark):
@@ -251,7 +273,7 @@ def test_real_kernel_decodes_images_when_pillow_present(spark):
         (3, "image", None, ("image/png", 0, 0, None)),
         (4, "image", b"not a real image blob", ("image/png", 0, 0, None)),
     ]
-    df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     out = {
         r.media_id: r
         for r in multimodal.extract_features(
@@ -1170,7 +1192,7 @@ def test_real_kernel_audio_through_arrow_path(spark):
         (2, "audio", None, ("audio/wav", None, None, 0)),
         (3, "audio", _wav_bytes()[:30], ("audio/wav", None, None, 0)),
     ]
-    df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     out = {
         r.media_id: r
         for r in multimodal.extract_features(
@@ -1212,7 +1234,7 @@ def test_extract_features_mixed_corpus_nulls_codec_bound_rows(spark):
         (2, "audio", b"ID3\x03 mp3-ish bytes", ("audio/mpeg", None, None, 2_000)),
         (3, "audio", adpcm, ("audio/adpcm", None, None, 2_000)),
     ]
-    df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     out = {
         r.media_id: r
         for r in multimodal.extract_features(
@@ -1282,7 +1304,7 @@ def test_video_kernel_decodes_when_pyav_present(spark):
         (3, "video", None, ("video/mp4", 0, 0, None)),
         (4, "video", b"not a video blob", ("video/mp4", 0, 0, None)),
     ]
-    df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+    df = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
     out = {
         r.media_id: r
         for r in multimodal.extract_features(
@@ -1296,7 +1318,7 @@ def test_video_kernel_decodes_when_pyav_present(spark):
     assert out[4].feature is None  # corrupt bytes → NULL row
 
 
-def test_reference_lm_xent_and_persistence(spark, tmp_path):
+def test_reference_lm_xent_and_persistence(spark, sf_dir, tmp_path):
     """r14 (CCNet deploy shape): unigram_cross_entropy(lm=) scores
     against a persisted reference LM. Fit on the SAME corpus, results
     are IDENTICAL to self-fit (no OOV, same counts); an OOV-bearing doc
@@ -1352,14 +1374,14 @@ def test_reference_lm_xent_and_persistence(spark, tmp_path):
     out_lm = str(tmp_path / "cli_lm")
     eng = Engine(spark=spark)
     assert main(
-        ["fit-lm", "--docs", f"/root/testdata/sf0.001/documents.parquet",
+        ["fit-lm", "--docs", f"{sf_dir}/documents.parquet",
          "--output", out_lm],
         engine=eng,
     ) == 0
     assert load_unigram_lm(spark, out_lm).count() == 31  # synthetic vocab
 
 
-def test_bigram_reference_lm_and_persistence(spark, tmp_path):
+def test_bigram_reference_lm_and_persistence(spark, sf_dir, tmp_path):
     """r14: bigram_cross_entropy(lm=) under a model fit on the SAME
     md5-half split reproduces the self-fit results exactly (the deploy
     shape generalizes the sandboxed self-fit); the two-table artifact
@@ -1405,7 +1427,7 @@ def test_bigram_reference_lm_and_persistence(spark, tmp_path):
     out_lm = str(tmp_path / "cli_blm")
     eng = Engine(spark=spark)
     assert main(
-        ["fit-lm", "--docs", "/root/testdata/sf0.001/documents.parquet",
+        ["fit-lm", "--docs", f"{sf_dir}/documents.parquet",
          "--output", out_lm, "--bigram"],
         engine=eng,
     ) == 0
