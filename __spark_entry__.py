@@ -18,10 +18,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, "/root/repo")
-# Executor-side Python workers inherit the driver's PYTHONPATH; two queries
-# ship package functions to workers (rest_scan's Python DataSource,
-# multimodal's mapInPandas kernel), which must be importable there even when
-# the harness launches from another cwd. Set it before the JVM/daemon forks;
+# Executor-side Python workers inherit the driver's PYTHONPATH; one query
+# ships package functions to workers (multimodal's mapInPandas kernel),
+# which must be importable there even when the harness launches from
+# another cwd. Set it before the JVM/daemon forks;
 # suite._ship_package covers sessions created before this import.
 _pp = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
 if "/root/repo" not in _pp:

@@ -21,9 +21,10 @@ Stores follow one replacement protocol. A rewrite (compaction) writes
 aside to ``<dir>__precompact``, renames the rewrite in, and deletes the
 aside copy; a failed rename-in renames the original back. At every
 instant the live data is at ``<dir>`` or at ``<dir>__precompact``, and
-`read_store` refuses to treat a missing ``<dir>`` as "no store yet"
-while either working directory survives: a reader that started a fresh
-store there would silently drop the history.
+`read_store` (through `refuse_crashed_swap`, which a blind writer calls
+directly) refuses to treat a missing ``<dir>`` as "no store yet" while
+either working directory survives: a writer that started a fresh store
+there would silently drop the history.
 """
 
 from __future__ import annotations
@@ -150,15 +151,23 @@ def read_store(spark, path: str):
             return None
         if "PATH_NOT_FOUND" not in str(e):
             raise
-        path = path.rstrip("/")
-        for leftover in (path + PRECOMPACT, path + COMPACTING):
-            if exists(spark, leftover):
-                raise IOError(
-                    f"{path!r} is missing but {leftover!r} survives a "
-                    "compaction that died mid-swap; rename it back to "
-                    f"{path!r} to recover"
-                ) from e
+        refuse_crashed_swap(spark, path)
         return None
+
+
+def refuse_crashed_swap(spark, path: str) -> None:
+    """For a missing store ``path``: raise an IOError naming its
+    ``__precompact`` / ``__compacting`` working directory when one survives
+    a compaction that died mid-swap, so no writer starts a fresh store
+    there and drops the history."""
+    path = path.rstrip("/")
+    for leftover in (path + PRECOMPACT, path + COMPACTING):
+        if exists(spark, leftover):
+            raise IOError(
+                f"{path!r} is missing but {leftover!r} survives a "
+                "compaction that died mid-swap; rename it back to "
+                f"{path!r} to recover"
+            )
 
 
 def replace_dir(spark, path: str) -> None:

@@ -150,6 +150,10 @@ def merge_daily_rollup_idempotent(
         )
         .withColumn("batch_id", F.lit(int(batch_id)))
     )
+    # a missing store is a first merge unless a compaction died mid-swap:
+    # a fresh table there would hide the history from `read_rollup`
+    if not fsutil.exists(spark, rollup_dir):
+        fsutil.refuse_crashed_swap(spark, rollup_dir)
     # per-write dynamic mode (writer option overrides session conf): safe
     # under the advertised concurrent foreachBatch wiring — no session-
     # global toggle to race or leak

@@ -64,9 +64,10 @@ def with_retry(fn: Callable[[], list], attempts: int = 10, backoff_s: float = 5.
 
 
 def sheets_values_to_rows(values: list[list]) -> tuple[list[str], list[list]]:
-    """Header/pad/trim/skip semantics shared by Sheets (and Excel):
-    first non-empty row = trimmed header; empty rows dropped; short rows
-    padded with None; over-long rows skipped (header-combine failure)."""
+    """Sheets header/pad/trim/skip semantics: first non-empty row =
+    trimmed header; empty rows dropped; short rows padded with None;
+    over-long rows skipped (header-combine failure). Excel applies its
+    own rules in ``files._grid_to_table``."""
     rows = [r for r in values if any(str(c).strip() for c in r)]
     if not rows:
         return [], []

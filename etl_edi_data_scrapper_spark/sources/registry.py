@@ -18,9 +18,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_edi_data_scrapper_spark.plans.pipeline import Reader
 from etl_edi_data_scrapper_spark.sources import files as fmod
-
-Reader = Callable[[SparkSession, str, "str | None"], DataFrame]
 
 _EXT_READERS: dict[str, Reader] = {
     ".parquet": fmod.read_parquet,

@@ -6,12 +6,13 @@ Reference semantics (`src/Service/InputHandler/RestApiInputHandler.php:24-119`):
   * stop when ``meta.last_page`` reached or ``links.next`` absent (:52-66);
   * 404 → empty page; ≥400 → log + stop (:69-107).
 JWT (`src/Service/Auth/*`): token POST once, cached per supplier with a
-+24 h synthetic expiry for raw-string tokens; Bearer header on every page.
++24 h synthetic expiry for raw-string tokens; `JwtManager.fetch` sends the
+Bearer header on every page (a deployment passes
+``build_registry(rest_fetch=mgr.fetch)``).
 
-Spark-first: the paginator is a driver-side loop whose rows go, as JSON
-lines, into ONE ``spark.read.json`` (schema inference, distributed parse). At scale, page fetch parallelizes with
-``spark.range(n_pages).mapInPandas(fetch)`` once ``meta.last_page`` is known
-from page 1 — same page contract, fan-out in executors.
+The paginator is a driver-side loop whose rows go, as JSON lines, into ONE
+``spark.read.json`` (schema inference, distributed parse). This module is
+the only place that knows the page protocol.
 """
 
 from __future__ import annotations
@@ -33,8 +34,11 @@ Fetch = Callable[[str], str]  # url -> response body (JSON text)
 
 log = logging.getLogger(__name__)
 
+PAGE_PARAM, SIZE_PARAM, PAGE_SIZE = "page", "per_page", 100
+MAX_PAGES = 100_000  # stops a server that always answers links.next
 
-def _default_fetch(url: str, headers: dict[str, str] | None = None) -> str:
+
+def _get(url: str, headers: dict[str, str] | None = None) -> str:
     req = urllib.request.Request(url, headers=headers or {})
     with urllib.request.urlopen(req) as resp:
         return resp.read().decode("utf-8")
@@ -95,6 +99,11 @@ class JwtManager:
             json.dump({"token": tok, "expires_at": self._now() + ttl}, f)
         return tok
 
+    def fetch(self, url: str) -> str:
+        """One page GET with ``Bearer {token()}``, the token looked up per
+        page as the reference's Bearer middleware does per request."""
+        return _get(url, {"Authorization": f"Bearer {self.token()}"})
+
     @staticmethod
     def _post(url: str, payload: dict[str, str]) -> str:
         data = json.dumps(payload).encode()
@@ -105,14 +114,7 @@ class JwtManager:
             return resp.read().decode("utf-8")
 
 
-def paginate(
-    base_url: str,
-    fetch: Fetch,
-    page_size: int = 100,
-    page_param: str = "page",
-    size_param: str = "per_page",
-    max_pages: int = 100_000,
-) -> list[list[dict[str, Any]]]:
+def paginate(base_url: str, fetch: Fetch) -> list[list[dict[str, Any]]]:
     """Drive the page loop; returns row batches. Stop conditions mirror the
     reference: meta.last_page reached, links.next absent, or empty data.
     An HTTP error status or a body that is not JSON stops the loop with a
@@ -120,10 +122,9 @@ def paginate(
     failure propagates, so a transport bug never publishes a silently
     truncated feed."""
     pages = []
-    page = 1
-    while page <= max_pages:
-        sep = "&" if "?" in base_url else "?"
-        url = f"{base_url}{sep}{page_param}={page}&{size_param}={page_size}"
+    sep = "&" if "?" in base_url else "?"
+    for page in range(1, MAX_PAGES + 1):
+        url = f"{base_url}{sep}{PAGE_PARAM}={page}&{SIZE_PARAM}={PAGE_SIZE}"
         try:
             body = fetch(url)
         except urllib.error.HTTPError as e:
@@ -146,23 +147,17 @@ def paginate(
             break
         if "last_page" not in meta and not links.get("next"):
             break
-        page += 1
     return pages
 
 
 def read_rest_api(
-    spark: SparkSession,
-    base_url: str,
-    fetch: Fetch | None = None,
-    jwt: JwtManager | None = None,
-    page_size: int = 100,
+    spark: SparkSession, base_url: str, fetch: Fetch | None = None
 ) -> DataFrame:
     """Paginated fetch → one ``spark.read.json`` over the rows' JSON lines
     (schema inference as for a JSONL file; no pages → ``struct<>``, 0 rows).
-    The rows are already in driver memory, so nothing is staged on disk."""
-    if fetch is None:
-        headers = {"Authorization": f"Bearer {jwt.token()}"} if jwt else {}
-        fetch = lambda url: _default_fetch(url, headers)  # noqa: E731
-    pages = paginate(base_url, fetch, page_size=page_size)
+    The rows are already in driver memory, so nothing is staged on disk.
+    ``fetch`` defaults to an unauthenticated GET; pass `JwtManager.fetch`
+    for Bearer auth."""
+    pages = paginate(base_url, fetch or _get)
     lines = [json.dumps(r) for rows in pages for r in rows]
     return spark.read.json(spark.sparkContext.parallelize(lines))

@@ -56,10 +56,10 @@ _PKG_ZIP_PATH: str | None = None
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers regardless of
     the driver's launch cwd/PYTHONPATH: zip the package and addPyFile it.
-    Needed only by queries that serialize module-level functions to workers
-    (the REST Python DataSource, the multimodal mapInPandas kernel) —
-    everything else is pure JVM expressions. The zip is built fresh once per
-    PROCESS into a private temp file, removed at process exit (a fixed /tmp
+    Needed only by a query that serializes module-level functions to
+    workers (the multimodal mapInPandas kernel) — everything else is pure
+    JVM expressions. The zip is built fresh once per PROCESS into a
+    private temp file, removed at process exit (a fixed /tmp
     name could ship stale code after an edit, race a concurrent run's
     half-written zip, or be planted by another user); idempotence per
     session is keyed by applicationId (id() of a GC'd context can be
@@ -3896,17 +3896,10 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`CsvInputHandler.php:65-95`). Roundtrips lineitem through a staged CSV
     and aggregates — proves header/typing/row fidelity of the reader."""
     import hashlib as _hl
-    import os
-    import tempfile
 
     from etl_edi_data_scrapper_spark.sources.files import read_csv
 
-    # stage once per sf_dir (staging is transport work, not query work)
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        f"etl_csv_stage_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
+    def write(stage: str) -> None:
         (
             _t(spark, sf_dir, "lineitem")
             .select(
@@ -3914,11 +3907,15 @@ def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_partkey").cast("string"),
                 F.col("l_returnflag"),
             )
-            .write.mode("overwrite")
-            .option("header", True)
-            .csv(stage)
+            .write.option("header", True)
+            .csv(f"{stage}/lineitem")
         )
-    df = read_csv(spark, stage)
+
+    # staging is transport work, not query work: once per process and sf_dir
+    stage = _fixture_dir(
+        f"etl_csv_stage_{_hl.md5(sf_dir.encode()).hexdigest()[:8]}_", write
+    )
+    df = read_csv(spark, f"{stage}/lineitem")
     return df.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -3951,18 +3948,22 @@ def q_morris_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_fixture_dir``) rather than once per plan build."""
     from etl_edi_data_scrapper_spark.sources.files import read_morris_xml
 
-    stage = _fixture_dir("etl_xml_q_", {"morris.xml": _MORRIS_FIXTURE})
+    def write(stage: str) -> None:
+        with open(f"{stage}/morris.xml", "w") as f:
+            f.write(_MORRIS_FIXTURE)
+
+    stage = _fixture_dir("etl_xml_q_", write)
     return read_morris_xml(spark, f"{stage}/morris.xml")
 
 
 _FIXTURE_DIRS: dict[str, str] = {}
 
 
-def _fixture_dir(prefix: str, files: dict[str, str]) -> str:
-    """Stage constant fixture ``files`` (name → text) once per process in
-    a private temp directory removed at process exit (the
-    ``_ship_package`` discipline); restaged if something removed it
-    meanwhile. For queries whose scan reads the files lazily."""
+def _fixture_dir(prefix: str, write: Callable[[str], None]) -> str:
+    """Stage a constant fixture once per process: ``write(dir)`` fills a
+    private temp directory removed at process exit (the ``_ship_package``
+    discipline); restaged if something removed it meanwhile. For queries
+    whose scan reads the files lazily."""
     import atexit
     import os
     import shutil
@@ -3972,9 +3973,7 @@ def _fixture_dir(prefix: str, files: dict[str, str]) -> str:
     if stage is None or not os.path.isdir(stage):
         stage = tempfile.mkdtemp(prefix=prefix)
         atexit.register(shutil.rmtree, stage, ignore_errors=True)
-        for name, text in files.items():
-            with open(os.path.join(stage, name), "w") as f:
-                f.write(text)
+        write(stage)
         _FIXTURE_DIRS[prefix] = stage
     return stage
 
@@ -3994,64 +3993,35 @@ def _fixture_dir(prefix: str, files: dict[str, str]) -> str:
     """,
 )
 def q_rest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REST scan through BOTH execution paths, tagged by `src`
-    (`RestApiInputHandler.php:24-119`):
-      * driver — paginated {data, meta.last_page, links.next} pages →
-        staged JSONL → one distributed spark.read.json;
-      * dist — the 100 TB path: native Python DataSource
-        (`sources/rest_datasource.py`), page ranges as input partitions so
-        EXECUTORS fetch pages concurrently; fixture pages over file://
-        exercise the identical protocol, JSON parse stays in the plan
-        (from_json).
+    """REST scan (`RestApiInputHandler.php:24-119`) through `read_rest_api`
+    over two in-memory fixture APIs, one per stop rule:
+      * driver — 3 pages that carry ``meta.last_page``;
+      * dist — 4 pages with no ``meta``, linked by ``links.next`` (absent
+        on the last page).
+    Both legs run the one paginator; `src` is only a label telling the
+    legs apart, so the oracle text stays as it was.
     [r3 consolidation: absorbs the former `rest_scan_distributed` query.]"""
     import json as jsonmod
 
     from etl_edi_data_scrapper_spark.sources.rest import read_rest_api
-    from etl_edi_data_scrapper_spark.sources.rest_datasource import RestDataSource
 
-    _ship_package(spark)  # DataSource class deserializes on executors
+    def leg(src: str, prefix: str, paging: Callable[[int], dict]) -> DataFrame:
+        def fetch(url: str) -> str:
+            page = int(url.split("page=")[1].split("&")[0])
+            rows = [
+                {"barcode": f"{prefix}{page}-{i}", "stock_quantity": page * 10 + i}
+                for i in range(2)
+            ]
+            return jsonmod.dumps({"data": rows, **paging(page)})
 
-    def fetch(url: str) -> str:
-        page = int(url.split("page=")[1].split("&")[0])
-        rows = [
-            {"barcode": f"b{page}-{i}", "stock_quantity": page * 10 + i}
-            for i in range(2)
-        ]
-        return jsonmod.dumps({"data": rows, "meta": {"last_page": 3}})
+        return read_rest_api(
+            spark, f"https://api.example.com/v1/{src}", fetch=fetch
+        ).select(F.lit(src).alias("src"), "barcode", "stock_quantity")
 
-    driver_df = read_rest_api(
-        spark, "https://api.example.com/v1/products", fetch=fetch
-    ).select(F.lit("driver").alias("src"), "barcode", "stock_quantity")
-
-    spark.dataSource.register(RestDataSource)
-    pages = {
-        f"page_{p}.json": jsonmod.dumps(
-            {
-                "data": [
-                    {"barcode": f"d{p}-{i}", "stock_quantity": p * 10 + i}
-                    for i in range(2)
-                ],
-                "meta": {"last_page": 4},
-            }
-        )
-        for p in range(1, 5)
-    }
-    stage = _fixture_dir("etl_rest_ds_", pages)
-    raw = (
-        spark.read.format("edi_rest")
-        .option("url", f"file://{stage}")
-        .option("pages_per_task", 1)
-        .load()
-    )
-    dist_df = (
-        raw.select(
-            F.from_json("value", "barcode string, stock_quantity long").alias("r")
-        )
-        .select(
-            F.lit("dist").alias("src"),
-            F.col("r.barcode").alias("barcode"),
-            F.col("r.stock_quantity").alias("stock_quantity"),
-        )
+    driver_df = leg("driver", "b", lambda page: {"meta": {"last_page": 3}})
+    dist_df = leg(
+        "dist", "d",
+        lambda page: {"links": {"next": f"?page={page + 1}"} if page < 4 else {}},
     )
     return driver_df.unionByName(dist_df)
 

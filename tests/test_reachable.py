@@ -83,6 +83,10 @@ ALLOWED_DEFS: dict[str, str] = {
         "production wiring: the SFTP transport a deployment passes to "
         "build_registry"
     ),
+    "sources.rest:JwtManager": (
+        "production wiring: the Bearer-auth page fetch a deployment passes "
+        "as build_registry(rest_fetch=mgr.fetch)"
+    ),
     "sources.google:OAuthTokenManager": (
         "production wiring: the OAuth token source for the Sheets reader"
     ),

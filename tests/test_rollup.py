@@ -337,21 +337,33 @@ def test_rollup_missing_after_crashed_compaction_raises(spark, tmp_path):
     """A compaction that died mid-swap leaves the rollup at
     rollup__precompact (or only the rewrite at rollup__compacting). A merge
     that took the missing table for a first merge would start a fresh
-    table of batch-only counts; it must refuse and name the survivor."""
+    table of batch-only counts; both merges must refuse and name the
+    survivor."""
     import shutil
 
     import pytest
 
-    from etl_edi_data_scrapper_spark.operators.rollup import merge_daily_rollup
+    from etl_edi_data_scrapper_spark.operators.rollup import (
+        merge_daily_rollup,
+        merge_daily_rollup_idempotent,
+        read_rollup,
+    )
 
-    out = str(tmp_path / "rollup")
-    merge_daily_rollup(spark, out, _batch(spark, [(1, 1, "view", 1.0)]))
-    for suffix in ("__precompact", "__compacting"):
-        shutil.move(out, out + suffix)
-        with pytest.raises(IOError, match=f"rollup{suffix}"):
-            merge_daily_rollup(spark, out, _batch(spark, [(1, 2, "view", 2.0)]))
-        assert not os.path.exists(out)  # no fresh table started
-        shutil.move(out + suffix, out)
-    merge_daily_rollup(spark, out, _batch(spark, [(1, 2, "view", 2.0)]))
-    [row] = spark.read.parquet(out).collect()
-    assert (row.n, float(row.total)) == (2, 3.0)  # history kept
+    merges = {
+        "merge": lambda out, batch, bid: merge_daily_rollup(spark, out, batch),
+        "idempotent": lambda out, batch, bid: merge_daily_rollup_idempotent(
+            spark, out, batch, bid
+        ),
+    }
+    for name, merge in merges.items():
+        out = str(tmp_path / name / "rollup")
+        merge(out, _batch(spark, [(1, 1, "view", 1.0)]), 0)
+        for suffix in ("__precompact", "__compacting"):
+            shutil.move(out, out + suffix)
+            with pytest.raises(IOError, match=f"rollup{suffix}"):
+                merge(out, _batch(spark, [(1, 2, "view", 2.0)]), 1)
+            assert not os.path.exists(out), name  # no fresh table started
+            shutil.move(out + suffix, out)
+        merge(out, _batch(spark, [(1, 2, "view", 2.0)]), 1)
+        [row] = read_rollup(spark, out).collect()
+        assert (row.n, float(row.total)) == (2, 3.0), name  # history kept

@@ -309,9 +309,30 @@ def fake_api(n_pages=3, per_page=2):
     return fetch
 
 
+def links_only_api(n_pages=3, per_page=2):
+    """Pages with no ``meta``: only ``links.next`` says another follows."""
+    with_meta = fake_api(n_pages, per_page)
+
+    def fetch(url: str) -> str:
+        doc = json.loads(with_meta(url))
+        doc.pop("meta", None)
+        return json.dumps(doc)
+
+    return fetch
+
+
 def test_paginate_stops_at_last_page():
-    pages = paginate("https://api.example.com/v1/products", fake_api(3, 2))
-    assert len(pages) == 3 and sum(len(p) for p in pages) == 6
+    for api in (fake_api(3, 2), links_only_api(3, 2)):
+        calls = []
+
+        def fetch(url, api=api):
+            calls.append(url)
+            return api(url)
+
+        pages = paginate("https://api.example.com/v1/products", fetch)
+        assert len(pages) == 3 and sum(len(p) for p in pages) == 6
+        assert len(calls) == 3  # page 4 is never requested
+        assert calls[0].endswith("/products?page=1&per_page=100")
 
 
 def test_paginate_skips_non_dict_rows():
@@ -378,7 +399,7 @@ def test_rest_job_stages_nothing_in_temp_dir(spark, tmp_path, monkeypatch):
     assert not list(tmp_path.glob("etl_rest_*"))
 
 
-def test_jwt_cache_roundtrip(tmp_path):
+def test_jwt_cache_roundtrip(tmp_path, monkeypatch):
     calls = []
 
     def fake_post(url, creds):
@@ -392,6 +413,19 @@ def test_jwt_cache_roundtrip(tmp_path):
     assert mgr.token() == "tok123"
     assert mgr.token() == "tok123"   # cached
     assert len(calls) == 1
+
+    # fetch sends the cached token as a Bearer header on every page
+    sent = []
+
+    def fake_get(url, headers=None):
+        sent.append((url, headers))
+        return "{}"
+
+    monkeypatch.setattr("etl_edi_data_scrapper_spark.sources.rest._get", fake_get)
+    assert mgr.fetch("https://api.example.com/p?page=1") == "{}"
+    mgr.fetch("https://api.example.com/p?page=2")
+    assert [h for _, h in sent] == [{"Authorization": "Bearer tok123"}] * 2
+    assert len(calls) == 1  # no second token POST
 
 
 def test_jwt_raw_string_token_gets_synthetic_expiry(tmp_path):
@@ -573,9 +607,10 @@ def test_job_stream_message_flood_trips_guard(spark, tmp_path, monkeypatch):
 
 def test_suite_fixture_queries_leave_no_staging(spark, sf_dir, tmp_path, monkeypatch):
     """`excel_scan` decodes its staged workbooks on the driver and removes
-    them before returning; `morris_xml` and `rest_scan` scan lazily, so
-    their constant fixtures are staged at most once per process, however
-    often they are built, each in a private (0o700) temp directory."""
+    them before returning; `rest_scan` reads in-memory pages; `morris_xml`
+    and `csv_scan` scan lazily, so their fixtures are staged at most once
+    per process (and sf_dir), however often they are built, each in a
+    private (0o700) temp directory."""
     import os
     import tempfile
 
@@ -586,8 +621,11 @@ def test_suite_fixture_queries_leave_no_staging(spark, sf_dir, tmp_path, monkeyp
         assert len(QUERIES["excel_scan"](spark, sf_dir).collect()) == 14
         assert len(QUERIES["morris_xml"](spark, sf_dir).collect()) == 3
         assert len(QUERIES["rest_scan"](spark, sf_dir).collect()) == 14
+        [row] = QUERIES["csv_scan"](spark, sf_dir).collect()
+        assert row.n > 0
     assert not list(tmp_path.glob("etl_xlsx_q_*"))
+    assert not list(tmp_path.glob("etl_rest_*"))
     assert len(list(tmp_path.glob("etl_xml_q_*"))) <= 1
-    assert len(list(tmp_path.glob("etl_rest_ds_*"))) <= 1
-    assert sorted(_FIXTURE_DIRS) == ["etl_rest_ds_", "etl_xml_q_"]
+    assert len(list(tmp_path.glob("etl_csv_stage_*"))) <= 1
+    assert {p.split("_")[1] for p in _FIXTURE_DIRS} == {"csv", "xml"}
     assert all(os.stat(d).st_mode & 0o777 == 0o700 for d in _FIXTURE_DIRS.values())
