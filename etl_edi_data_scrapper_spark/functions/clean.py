@@ -30,8 +30,6 @@ from etl_edi_data_scrapper_spark.functions.hashing import sql_str
 # PHP /[^a-zа-я\d.]/ui — explicit both-case classes so the Java regex needs no
 # flags and an ANSI-SQL oracle can use the identical class.
 _CLEAN_KEEP_RE = sql_str(r"[^a-zA-Zа-яА-Я0-9.]")
-# Leading-float extraction ≈ PHP floatval(): digits, optional dot, digits.
-_LEADING_FLOAT_RE = sql_str(r"^([0-9]*\.?[0-9]*)")
 
 
 def _s(c: str) -> str:
@@ -57,13 +55,14 @@ def clean_integer(c: str) -> str:
 def clean_float(c: str) -> str:
     """``,``→``.``, strip to ``[0-9.]``, parse leading float; empty → 0.0.
 
-    ``CAST(… AS DOUBLE)`` alone would turn multi-dot strings (``"1.2.3"``)
-    into NULL where PHP floatval yields 1.2 — hence the leading-float extract.
+    One regex for the reference's chain (``,``→``.``, ``cleanString``, strip
+    to ``[0-9.]``, ``floatval``): ``cleanString`` keeps a superset of
+    ``[0-9.]``, so the strip alone gives the same string; on digits and dots
+    ``floatval``'s leading float is all before the second dot
+    (``substring_index``): ``"1.2.3" → 1.2``, ``"..5" → "." → 0.0``.
     """
-    dotted = f"translate({_s(c)}, ',', '.')"
-    normalized = f"regexp_replace({clean_string(dotted)}, '[^0-9.]', '')"
-    leading = f"regexp_extract({normalized}, {_LEADING_FLOAT_RE}, 1)"
-    return f"coalesce(TRY_CAST({leading} AS DOUBLE), 0.0D)"
+    digits = f"regexp_replace(translate({_s(c)}, ',', '.'), '[^0-9.]', '')"
+    return f"coalesce(TRY_CAST(substring_index({digits}, '.', 2) AS DOUBLE), 0.0D)"
 
 
 def asin_validate(c: str) -> str:

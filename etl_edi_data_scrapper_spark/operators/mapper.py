@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 
 from etl_edi_data_scrapper_spark.functions.clean import clean_for_target
 from etl_edi_data_scrapper_spark.functions.hashing import sql_ident
+from etl_edi_data_scrapper_spark.operators.merge import SEQ_COL
 
 
 class MissingSourceColumnsError(ValueError):
@@ -68,12 +69,15 @@ def map_columns(
     column_map_rules: dict[str, str | list[str]],
     supplier_id: int,
     version: int,
-    keep: list[str] | None = None,
+    seq: str | None = None,
 ) -> tuple[DataFrame, dict[str, str]]:
     """Compile the rules to a single projection; return (df, merge_rules).
 
-    ``keep`` preserves engine bookkeeping columns (e.g. the ``_seq`` arrival
-    order column) through the projection.
+    ``seq`` is SQL text for the arrival-order column ``_seq``: an existing
+    column's name passes it through; ``merge.seq_sql`` has it born here,
+    where ``monotonically_increasing_id()`` stops Catalyst pushing the
+    keyed merge's key filter below this projection and re-running the key's
+    cleaning in it (3 cleanings a row): the filter reads the cleaned key.
     """
     col_map, merge_rules = parse_rules(column_map_rules)
 
@@ -85,5 +89,5 @@ def map_columns(
              for t, s in col_map.items()]
     exprs.append(f"CAST({int(supplier_id)} AS BIGINT) AS supplier_id")
     exprs.append(f"CAST({int(version)} AS BIGINT) AS version")
-    exprs += [sql_ident(extra) for extra in keep or []]
+    exprs += [f"{seq} AS {sql_ident(SEQ_COL)}"] if seq else []
     return df.selectExpr(*exprs), merge_rules

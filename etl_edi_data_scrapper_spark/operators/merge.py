@@ -67,41 +67,37 @@ VALID_RULES = set(_RULES) - {None}
 _LEG_SHIFT = 59
 
 
-def with_seq(df: DataFrame, leg: int = 0, seq_expr: str | None = None) -> DataFrame:
-    """Attach the explicit arrival-order column ``_seq``.
+def seq_sql(leg: int = 0, seq_expr: str | None = None) -> str:
+    """SQL text of the arrival-order column ``_seq`` (``with_seq`` attaches
+    it; single-source jobs project it in the mapper's ``selectExpr``).
 
-    Default: ``monotonically_increasing_id()`` encodes (partition, row
-    offset) — deterministic for a given file listing, which matches the
-    reference's file-order × row-order arrival contract without a shuffle or
-    a global sort. Callers with a real event-order column (the scalable
-    choice at 100 TB, and what correctness oracles use) pass ``seq_expr``
-    as SQL text, the form of the job config's ``seq_expr`` key (must stay
-    below 2^59 when combined with a non-zero ``leg``).
+    Default: ``monotonically_increasing_id()``, (partition, row offset).
+    Within one file that is row order: Spark cuts a file's splits at
+    ascending offsets and only the last is shorter, so the largest-first
+    sort of splits keeps them in order. A scan of several files (a
+    directory, a glob) orders splits by size, not by file, so a job that
+    needs order across files passes ``seq_expr``: SQL text for a real
+    event-order column (the scalable choice at 100 TB, and what correctness
+    oracles use), the form of the job config's ``seq_expr`` key.
     ``leg`` (0..15) offsets multi-source legs into disjoint ranges so later
     legs always win last-write-wins ties (legs are processed in config
-    order, `Aggregator.php:112-128`). With a non-zero leg the default seq is
-    overflow-guarded in-plan: a scan with ≥2^26 partitions raises instead of
-    silently corrupting tie-breaks.
+    order, `Aggregator.php:112-128`). A non-zero leg's seq must stay below
+    2^59, the leg bits; the guard is in-plan and raises when executed.
     """
     if not 0 <= int(leg) < 16:
         raise ValueError(f"leg must be in [0, 16): {leg}")
-    if seq_expr is not None:
-        seq = f"CAST(({seq_expr}) AS BIGINT)"
-    else:
-        seq = "monotonically_increasing_id()"
-        if leg and not df.isStreaming:
-            # plan-time guard (a per-row branch would knock the projection
-            # out of whole-stage codegen): mid's partition bits stay below
-            # the leg shift while partitions < 2^26; demand an explicit seq
-            # beyond 2^20 static partitions — 64x headroom for AQE re-splits
-            n = df.rdd.getNumPartitions()
-            if n >= (1 << 20):
-                raise ValueError(
-                    f"with_seq: {n} partitions risks overflowing the leg "
-                    "bits of monotonically_increasing_id — pass an explicit "
-                    "seq_expr for multi-leg jobs at this scale"
-                )
-    return df.withColumn(SEQ_COL, F.expr(f"{seq} + {int(leg) << _LEG_SHIFT}"))
+    seq = ("monotonically_increasing_id()" if seq_expr is None
+           else f"CAST(({seq_expr}) AS BIGINT)")
+    if not leg:
+        return seq
+    return (f"CASE WHEN {seq} >= {1 << _LEG_SHIFT} THEN raise_error('_seq of leg "
+            f"{int(leg)} reached 2^{_LEG_SHIFT}, the leg bits; pass a seq_expr below "
+            f"it') ELSE {seq} + {int(leg) << _LEG_SHIFT} END")
+
+
+def with_seq(df: DataFrame, leg: int = 0, seq_expr: str | None = None) -> DataFrame:
+    """Attach the explicit arrival-order column ``_seq`` (see ``seq_sql``)."""
+    return df.withColumn(SEQ_COL, F.expr(seq_sql(leg, seq_expr)))
 
 
 def _checked(merge_rules: dict[str, str] | None) -> dict[str, str]:
@@ -141,7 +137,7 @@ def keyed_merge(
 
     Columns without a rule get last-write-wins by ``_seq`` (attached by
     ``with_seq`` when the frame has none). Null/empty keys are dropped
-    before the shuffle (filter is pushed to the scan). For a key so hot
+    map-side, before the shuffle. For a key so hot
     that one reducer's ``addArray`` state is the problem,
     ``keyed_merge_salted`` gives the same rows from a two-stage plan.
     """

@@ -3,8 +3,10 @@
 Reference lifecycle (`src/Service/Aggregator/Aggregator.php:60-135`):
 config → (scan | multi-scan-join) → map/clean → keyed dedup → sink.
 Here the whole job compiles to ONE lazy DataFrame plan; Catalyst prunes
-columns into the scans, pushes the null-key filter down, broadcast-joins
-small enrichment legs, and partial-aggregates the keyed merge map-side.
+columns into the scans, broadcast-joins small enrichment legs, and
+partial-aggregates the keyed merge map-side. A single-source job's ``_seq``
+is born in the mapper's projection, so the null-key filter reads the
+cleaned key there instead of re-cleaning it (``map_columns``).
 
 Multi-source (`Aggregator::arraySourceProcessing` :107-135): leg 0 is the
 base (re-keyed, last-write-wins per key); each later leg left-join-enriches
@@ -25,6 +27,7 @@ from etl_edi_data_scrapper_spark.operators.merge import (
     SEQ_COL,
     enrich,
     keyed_merge,
+    seq_sql,
     with_seq,
 )
 from etl_edi_data_scrapper_spark.plans.config import InputConfig, InvalidConfigError
@@ -61,8 +64,6 @@ def aggregate(
         )
 
     def _seq_for(leg_idx: int):
-        if seq_exprs is None:
-            return None
         e = seq_exprs[leg_idx] if isinstance(seq_exprs, (list, tuple)) else seq_exprs
         return e or None
 
@@ -80,13 +81,13 @@ def aggregate(
             ldf = with_seq(ldf, leg=i, seq_expr=_seq_for(i))
             base = enrich(base, ldf, base_key=base_leg.key, leg_key=leg.key,
                           fields=list(leg.fields))
-        df = base
+        df, seq = base, SEQ_COL
     else:
         df = _read(spark, readers, cfg.type_id, cfg.source, cfg.range, repartition_n)
-        df = with_seq(df, leg=0, seq_expr=_seq_for(0))
+        seq = seq_sql(leg=0, seq_expr=_seq_for(0))
 
     mapped, merge_rules = map_columns(
-        df, cfg.column_map_rules, cfg.supplier_id, cfg.version, keep=[SEQ_COL]
+        df, cfg.column_map_rules, cfg.supplier_id, cfg.version, seq=seq
     )
     return keyed_merge(mapped, cfg.unique_index, merge_rules)
 

@@ -44,7 +44,9 @@ def get_spark(
     UTC session timezone is pinned so results are stable against external
     oracles; Arrow is enabled for any pandas-UDF path; AQE is on so runtime
     statistics re-plan joins (broadcast promotion, skew splitting, partition
-    coalescing) — the scale path for 100 TB inputs.
+    coalescing) — the scale path for 100 TB inputs. File scans open at a
+    1 MiB cost, so a mid-size feed file splits across every core while a
+    small one stays one partition (see the setting below).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
     if master is None:
@@ -85,6 +87,13 @@ def get_spark(
         # 5,000-row JSONL feed. A 32-core host was already past the
         # threshold, so this also makes the writer the same on every host.
         .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+        # split mid-size feed files across every core: a file scan's split
+        # size is min(maxPartitionBytes, max(openCost, (bytes + openCost) /
+        # cores)), so at the 4 MiB default a 5.8 MB CSV read as 2 tasks and
+        # a 3.1 MB one as 1 on 4 cores (now 4 and 3). 1 MiB is the smallest
+        # power of two that still reads every small feed of perfbench (the
+        # largest a 653 KB JSONL) as one partition; 512 KiB would split it.
+        .config("spark.sql.files.openCostInBytes", str(1 << 20))
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce CACHED plans too (off by default): the iterative
         # operators (connected components, k-means) persist small label /

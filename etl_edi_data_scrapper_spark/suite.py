@@ -257,7 +257,7 @@ def q_keyed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         supplier_id=102,
         version=1,
-        keep=[SEQ_COL],
+        seq=SEQ_COL,
     )
     merged = keyed_merge(mapped, "upc", merge_rules)
     return merged.withColumn("status", F.array_join("status", "|"))
@@ -3323,7 +3323,7 @@ def q_keyed_merge_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         supplier_id=102,
         version=1,
-        keep=[SEQ_COL],
+        seq=SEQ_COL,
     )
     merged = keyed_merge_salted(mapped, "upc", merge_rules, salt_buckets=8)
     return merged.withColumn("status", F.array_join("status", "|"))

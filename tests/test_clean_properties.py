@@ -71,3 +71,17 @@ def test_cleaning_matches_php_model(spark, corpus):
         assert i == php_clean_integer(v), f"clean_integer({v!r})"
         assert f == php_clean_float(v), f"clean_float({v!r})"
         assert a == php_asin(v), f"asin({v!r})"
+
+
+# clean_float's edge cases, pinned: multi-dot and dot-only strings, comma
+# decimals and thousands, no digits at all, Cyrillic around a number, the
+# empty string and NULL (PHP floatval of null is 0.0, like '').
+FLOAT_CASES = ["1.2.3", "..5", "1..2", ".", "5.", ",5", "1,200", "12,99", "n/a",
+               "Цена 3.5", "", None]
+
+
+def test_clean_float_edge_cases_match_php_model(spark):
+    got = _batch(spark, FLOAT_CASES, clean.clean_float)
+    want = [php_clean_float(v or "") for v in FLOAT_CASES]
+    assert got == want
+    assert want == [1.2, 0.0, 1.0, 0.0, 5.0, 0.5, 1.2, 12.99, 0.0, 3.5, 0.0, 0.0]

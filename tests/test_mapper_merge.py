@@ -38,7 +38,7 @@ RULES = {
 
 
 def test_map_columns_projects_and_stamps(spark):
-    out, merge_rules = map_columns(feed(spark), RULES, 9, 2, keep=["_seq"])
+    out, merge_rules = map_columns(feed(spark), RULES, 9, 2, seq="_seq")
     assert set(out.columns) == {"upc", "qty", "price", "status", "supplier_id", "version", "_seq"}
     assert merge_rules == {"qty": "min", "price": "max", "status": "addArray"}
     row = out.filter(F.col("_seq") == 2).first()
@@ -51,7 +51,7 @@ def test_map_columns_missing_source_raises(spark):
 
 
 def test_keyed_merge_rules_and_key_drop(spark):
-    mapped, merge_rules = map_columns(feed(spark), RULES, 9, 2, keep=["_seq"])
+    mapped, merge_rules = map_columns(feed(spark), RULES, 9, 2, seq="_seq")
     out = keyed_merge(mapped, "upc", merge_rules)
     rows = {r.upc: r for r in out.collect()}
     assert set(rows) == {"42", "77"}          # null/empty keys dropped
@@ -250,7 +250,7 @@ def test_odd_names_stay_names_end_to_end(spark):
     )
     rules = {KEY: "Item No.", "qty": ["it's `qty`", "min"], "price": ["price\\eur", "max"],
              "ст.атус": ["Статус опт", "addArray"], INJECT: "Статус опт"}
-    mapped, merge_rules = map_columns(feed_df, rules, 9, 2, keep=["_seq"])
+    mapped, merge_rules = map_columns(feed_df, rules, 9, 2, seq="_seq")
     assert mapped.columns == [*rules, "supplier_id", "version", "_seq"]
     merged = keyed_merge(mapped, KEY, merge_rules, drop_seq=False)
 
@@ -303,3 +303,63 @@ def test_job_plan_builds_in_few_py4j_round_trips(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert len(calls) <= 120, len(calls)
     assert [json.loads(r.value)["status"] for r in out.collect()] == [["a", "b"]]
+
+
+def _bulk_job(path):
+    return {"supplier_id": 1, "type_id": 2, "source": str(path), "version": 1,
+            "column_map_rules": {"upc": "UPC", "qty": ["Quantity", "min"],
+                                 "price": ["Wholesale", "max"], "status": "Status"}}
+
+
+def test_single_source_cleans_the_key_once(spark, tmp_path):
+    """The keyed merge's key filter reads the mapper's cleaned ``upc``: with
+    ``_seq`` born in the mapper projection, Catalyst cannot push the filter
+    below it and substitute the cleaning expression (which ran the key's
+    regex three times per row). The price cleaner is one regex, no extract."""
+    from etl_edi_data_scrapper_spark import Engine
+
+    p = tmp_path / "feed.csv"
+    p.write_text("UPC,Quantity,Wholesale,Status\n1-2,5,\"1,5\",a\n1 2,3,2.5,b\n,7,9,c\n")
+    df = Engine(spark).compile(_bulk_job(p))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("substring(regexp_replace(") == 1, plan
+    assert plan.count("regexp_replace(") == 3, plan  # upc, qty, price
+    assert "regexp_extract(" not in plan, plan
+    assert {(r.upc, r.qty, r.price, r.status) for r in df.collect()} == {("12", 3, 2.5, "b")}
+
+
+def test_with_seq_leg_guard_runs_in_plan(spark):
+    """A non-zero leg's guard is part of the projection: a seq that would
+    reach the leg bits raises when executed, and the default seq's two
+    references in the guard stay in lockstep on every row."""
+    df = spark.range(0, 600, numPartitions=3)
+    both = with_seq(with_seq(df, leg=0).withColumnRenamed("_seq", "s0"), leg=1)
+    assert both.filter(f"_seq - s0 != {1 << 59}").count() == 0
+    assert "*(" in both._jdf.queryExecution().executedPlan().toString()  # codegen'd
+    below = with_seq(df, leg=1, seq_expr=str((1 << 59) - 1)).first()._seq
+    assert below == (1 << 60) - 1
+    with pytest.raises(Exception, match="leg bits"):
+        with_seq(df, leg=1, seq_expr=str(1 << 59)).collect()
+
+
+def test_csv_split_across_cores_keeps_file_order(spark, tmp_path):
+    """A mid-size CSV reads as several splits under the session defaults,
+    and the default ``_seq`` keeps file order across them: the key's latest
+    row in the file wins. A file of at most 1 MiB stays one partition."""
+    from etl_edi_data_scrapper_spark import Engine
+    from etl_edi_data_scrapper_spark.sources.files import read_csv
+
+    filler = "".join(f"{100000 + i},1,1.0,{'x' * 40}\n" for i in range(22000))
+    head = "UPC,Quantity,Wholesale,Status\n"
+    big = tmp_path / "big.csv"
+    big.write_text(head + "".join(f"7,1,1.0,{s}\n{filler}" for s in ("a", "b", "c"))
+                   + "7,1,1.0,last\n")
+    assert big.stat().st_size > 3 << 20
+    assert read_csv(spark, str(big)).rdd.getNumPartitions() >= 3
+    rows = Engine(spark).compile(_bulk_job(big)).filter("upc = '7'").collect()
+    assert [r.status for r in rows] == ["last"]
+
+    small = tmp_path / "small.csv"
+    small.write_text(head + filler[: (1 << 20) - len(head) - 100])
+    assert small.stat().st_size <= 1 << 20
+    assert read_csv(spark, str(small)).rdd.getNumPartitions() == 1
