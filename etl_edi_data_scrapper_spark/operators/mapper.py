@@ -74,10 +74,10 @@ def map_columns(
     """Compile the rules to a single projection; return (df, merge_rules).
 
     ``seq`` is SQL text for the arrival-order column ``_seq``: an existing
-    column's name passes it through; ``merge.seq_sql`` has it born here,
-    where ``monotonically_increasing_id()`` stops Catalyst pushing the
-    keyed merge's key filter below this projection and re-running the key's
-    cleaning in it (3 cleanings a row): the filter reads the cleaned key.
+    column's name passes it through; ``merge.seq_sql`` has it born here. A
+    nondeterministic ``seq`` (``monotonically_increasing_id()``, a term in
+    ``spark_partition_id()``) stops Catalyst pushing the keyed merge's key
+    filter below this projection and re-running the key's cleaning (3 a row).
     """
     col_map, merge_rules = parse_rules(column_map_rules)
 

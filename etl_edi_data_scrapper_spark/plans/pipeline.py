@@ -4,9 +4,8 @@ Reference lifecycle (`src/Service/Aggregator/Aggregator.php:60-135`):
 config → (scan | multi-scan-join) → map/clean → keyed dedup → sink.
 Here the whole job compiles to ONE lazy DataFrame plan; Catalyst prunes
 columns into the scans, broadcast-joins small enrichment legs, and
-partial-aggregates the keyed merge map-side. A single-source job's ``_seq``
-is born in the mapper's projection, so the null-key filter reads the
-cleaned key there instead of re-cleaning it (``map_columns``).
+partial-aggregates the keyed merge map-side; a nondeterministic ``_seq`` in
+the mapper's projection keeps the null-key filter on the cleaned key.
 
 Multi-source (`Aggregator::arraySourceProcessing` :107-135): leg 0 is the
 base (re-keyed, last-write-wins per key); each later leg left-join-enriches
@@ -81,7 +80,8 @@ def aggregate(
             ldf = with_seq(ldf, leg=i, seq_expr=_seq_for(i))
             base = enrich(base, ldf, base_key=base_leg.key, leg_key=leg.key,
                           fields=list(leg.fields))
-        df, seq = base, SEQ_COL
+        # nondeterministic, never NULL: keeps the key filter above the mapper
+        df, seq = base, f"{SEQ_COL} + 0 * spark_partition_id()"
     else:
         df = _read(spark, readers, cfg.type_id, cfg.source, cfg.range, repartition_n)
         seq = seq_sql(leg=0, seq_expr=_seq_for(0))

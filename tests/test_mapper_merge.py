@@ -328,6 +328,29 @@ def test_single_source_cleans_the_key_once(spark, tmp_path):
     assert {(r.upc, r.qty, r.price, r.status) for r in df.collect()} == {("12", 3, 2.5, "b")}
 
 
+def test_multi_source_cleans_the_key_once(spark, tmp_path):
+    """A multi-source job's key filter reads the mapper's cleaned ``upc``
+    too: the ``spark_partition_id()`` term of its ``_seq`` stops Catalyst
+    pushing the filter through the mapper, the enrich join and the base
+    re-key, where it cleaned the key twice per base row and once per leg
+    row. A key that cleans to '' is still dropped."""
+    from etl_edi_data_scrapper_spark import Engine
+
+    base = tmp_path / "base.csv"
+    base.write_text("sku,Quantity\n1-2,5\n12,3\n--,7\n9,1\n")
+    leg = tmp_path / "leg.csv"
+    leg.write_text("ref,Brand\n12,acme\n--,none\n")
+    job = {"supplier_id": 1, "version": 1, "type_id": None,
+           "source": [{"type_id": 2, "filename": str(base), "key": "sku",
+                       "fields": ["sku", "Quantity"]},
+                      {"type_id": 2, "filename": str(leg), "key": "ref", "fields": ["Brand"]}],
+           "column_map_rules": {"upc": "sku", "qty": ["Quantity", "min"], "brand": "Brand"}}
+    df = Engine(spark).compile(job)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("substring(regexp_replace(") == 1, plan
+    assert {(r.upc, r.qty, r.brand) for r in df.collect()} == {("12", 3, "acme"), ("9", 1, None)}
+
+
 def test_with_seq_leg_guard_runs_in_plan(spark):
     """A non-zero leg's guard is part of the projection: a seq that would
     reach the leg bits raises when executed, and the default seq's two
